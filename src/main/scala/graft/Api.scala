@@ -35,9 +35,10 @@ final class Api(
     * bucket-swap MERGE and index-partition swaps. Reentrant (JVM monitor),
     * so gated paths may call each other. The lock is PER WAREHOUSE, not
     * per Api instance — streaming compaction and any second Api handle
-    * over the same warehouse serialize against the same monitor.
+    * over the same warehouse serialize against the same monitor, and
+    * share its serving snapshot (graft.catalog.WarehouseMonitor).
     */
-  private val writeLock = graft.catalog.WriteLocks.forWarehouse(warehouseDir)
+  private val writeLock = catalog.monitor
 
   // ---- validation (vector_api.py §2.4) ----
 
@@ -102,7 +103,7 @@ final class Api(
   def createCollection(
       name: String,
       overwrite: Boolean = false,
-      documents: Option[DataFrame] = None): OpStatus = {
+      documents: Option[DataFrame] = None): OpStatus = writeLock {
     val phys = physical(name)
     catalog.createCollection(phys, embedder.dimension, overwrite)
     val added = documents match {
@@ -120,7 +121,7 @@ final class Api(
   def getCollection(name: String): graft.model.CollectionEntry =
     catalog.getCollection(physical(name))
 
-  def deleteCollection(name: String, confirm: Boolean): OpStatus = writeLock.synchronized {
+  def deleteCollection(name: String, confirm: Boolean): OpStatus = writeLock {
     if (!confirm) throw new GraftException(ErrorCodes.DeleteConfirmationRequired)
     catalog.deleteCollection(physical(name))
     OpStatus("deleted", name, 0)
@@ -146,7 +147,7 @@ final class Api(
   def insertDocuments(name: String, batch: DataFrame): Long =
     writeDocuments(name, batch, upsert = false)
 
-  private def writeDocuments(name: String, batch: DataFrame, upsert: Boolean): Long = writeLock.synchronized {
+  private def writeDocuments(name: String, batch: DataFrame, upsert: Boolean): Long = writeLock {
     val entry = catalog.getCollection(physical(name))
     val prepared =
       if (upsert) Ingest.prepare(batch)
@@ -206,7 +207,7 @@ final class Api(
   def addDocumentsDedup(
       name: String,
       batch: DataFrame,
-      cosineThreshold: Double): (Long, Long) = invoke { writeLock.synchronized {
+      cosineThreshold: Double): (Long, Long) = invoke { writeLock {
     val entry = catalog.getCollection(physical(validCollection(name)))
     // governed index check BEFORE any embedding work
     graft.ann.SignLshIndex.requireMeta(spark, catalog, entry)
@@ -229,7 +230,7 @@ final class Api(
     } finally embedded.unpersist()
   } }
 
-  def deleteDocuments(name: String, ids: Seq[String]): Unit = writeLock.synchronized {
+  def deleteDocuments(name: String, ids: Seq[String]): Unit = writeLock {
     // governed BEFORE any expression references ids: `isin(ids: _*)` on a
     // null Seq NPEs eagerly while the filter is built
     if (ids == null || ids.isEmpty)
@@ -297,7 +298,7 @@ final class Api(
       pred: org.apache.spark.sql.Column,
       confirm: Boolean = false,
       maxBatch: Int = Limits.MaxDocuments,
-      resolveOnce: Boolean = false): Long = writeLock.synchronized {
+      resolveOnce: Boolean = false): Long = writeLock {
     if (!confirm) throw new GraftException(ErrorCodes.DeleteConfirmationRequired)
     require(maxBatch >= 1 && maxBatch <= Limits.MaxDocuments,
       s"maxBatch $maxBatch out of range")
@@ -462,7 +463,7 @@ final class Api(
     */
   def buildChunkIndex(name: String,
       maxTokens: Int = graft.search.ChunkIndex.DefaultMaxTokens): Long =
-    writeLock.synchronized {
+    writeLock {
       val entry = catalog.getCollection(physical(validCollection(name)))
       // the chunk-level IVF derives FROM these rows: a re-chunk must
       // re-derive it (auto routing prefers it, and maintenance computes
@@ -527,7 +528,7 @@ final class Api(
       trainOn: String = "doc",
       nClusters: Int = 64,
       kmeansIters: Int = 2,
-      trainFraction: Double = 1.0): Long = writeLock.synchronized {
+      trainFraction: Double = 1.0): Long = writeLock {
     require(Set("doc", "chunks").contains(trainOn),
       s"trainOn '$trainOn' not in {doc, chunks}")
     val entry = catalog.getCollection(physical(validCollection(name)))
@@ -569,7 +570,7 @@ final class Api(
       m: Int = 8,
       k: Int = 16,
       iters: Int = 2,
-      trainFraction: Double = 1.0): Long = writeLock.synchronized {
+      trainFraction: Double = 1.0): Long = writeLock {
     val entry = catalog.getCollection(physical(validCollection(name)))
     def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
     if (!exists(graft.search.ChunkIndex.indexPath(catalog, entry)) ||
@@ -710,7 +711,7 @@ final class Api(
     */
   def buildAnnIndex(
       name: String, nClusters: Int, kmeansIters: Int = 0,
-      trainFraction: Double = 1.0): DataFrame = writeLock.synchronized {
+      trainFraction: Double = 1.0): DataFrame = writeLock {
     val entry = catalog.getCollection(physical(name))
     // a DOC-ALIGNED chunk-level IVF keys its partitions on the centroids
     // this build replaces: invalidate it BEFORE the new quantizer lands,
@@ -796,10 +797,8 @@ final class Api(
         graft.ann.IvfIndex.loadCentroids(spark, catalog, entry),
         qs, k, numCandidates)
     val assigned = graft.ann.IvfIndex.loadIndex(spark, catalog, entry)
-    val clusterSizes = assigned.groupBy("cluster_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val centroidRows = graft.ann.IvfIndex.loadCentroids(spark, catalog, entry)
-      .select("centroid_id", "centroid", "centroid_norm").collect()
+    val clusterSizes = graft.ann.IvfIndex.clusterSizes(spark, catalog, entry)
+    val centroidRows = graft.ann.IvfIndex.centroidRows(spark, catalog, entry)
     val results = qs.map { case (qIdx, qVec) =>
         val qNorm = math.sqrt(qVec.map(v => v.toDouble * v.toDouble).sum)
         val ranked = centroidRows.map { r =>
@@ -862,7 +861,7 @@ final class Api(
     * (graft.ann.SignLshIndex) — the angular-hash alternative to the IVF
     * layout, partitioned by (table, key) for probe-time pruning.
     */
-  def buildLshIndex(name: String, bits: Int = 8, tables: Int = 8): DataFrame = writeLock.synchronized {
+  def buildLshIndex(name: String, bits: Int = 8, tables: Int = 8): DataFrame = writeLock {
     val entry = catalog.getCollection(physical(name))
     graft.ann.SignLshIndex.build(spark, catalog, entry, embedder.dimension, bits, tables)
   }
@@ -873,7 +872,7 @@ final class Api(
     * like the other derived indexes.
     */
   def buildMinHashIndex(name: String, bands: Int = 16, shingleN: Int = 3): DataFrame =
-    writeLock.synchronized {
+    writeLock {
       val entry = catalog.getCollection(physical(name))
       graft.dedup.MinHashIndex.build(spark, catalog, entry, bands, shingleN)
     }
@@ -894,7 +893,7 @@ final class Api(
   def addDocumentsDedupContent(
       name: String,
       batch: DataFrame,
-      jaccardThreshold: Double): (Long, Long) = invoke { writeLock.synchronized {
+      jaccardThreshold: Double): (Long, Long) = invoke { writeLock {
     val entry = catalog.getCollection(physical(validCollection(name)))
     // governed index check BEFORE any pipeline work
     graft.dedup.MinHashIndex.requireMeta(spark, catalog, entry)
@@ -948,7 +947,7 @@ final class Api(
     */
   def buildPqIndex(
       name: String, m: Int = 8, k: Int = 16, iters: Int = 3,
-      residual: Boolean = false, trainFraction: Double = 1.0): Unit = writeLock.synchronized {
+      residual: Boolean = false, trainFraction: Double = 1.0): Unit = writeLock {
     val entry = catalog.getCollection(physical(name))
     graft.ann.PqIndex.build(
       spark, catalog, entry, embedder.dimension, m, k, iters, residual, trainFraction)
@@ -980,7 +979,7 @@ final class Api(
     * term-bucket-partitioned postings (graft.search.LexIndex), the durable
     * analog of the reference's GIN index (postgres.py:189-196).
     */
-  def buildLexicalIndex(name: String): DataFrame = writeLock.synchronized {
+  def buildLexicalIndex(name: String): DataFrame = writeLock {
     val entry = catalog.getCollection(physical(name))
     graft.search.LexIndex.build(spark, catalog, entry)
   }
@@ -994,7 +993,7 @@ final class Api(
     * (table-or-index name -> partitions compacted). Runs under the write
     * lock like any other physical rewrite.
     */
-  def compactStorage(name: String, maxFiles: Int = 4): Map[String, Int] = writeLock.synchronized {
+  def compactStorage(name: String, maxFiles: Int = 4): Map[String, Int] = writeLock {
     val entry = catalog.getCollection(physical(name))
     import graft.catalog.PartitionedTable.compactPartitions
     def ifExists(path: String, partCols: Seq[String], sortCol: Option[String]) =
@@ -1028,7 +1027,7 @@ final class Api(
     * rebuild to reclaim fpp headroom after heavy churn. Returns the number
     * of ids sketched.
     */
-  def buildBloomGate(name: String, fpp: Double = 0.01): Long = writeLock.synchronized {
+  def buildBloomGate(name: String, fpp: Double = 0.01): Long = writeLock {
     val entry = catalog.getCollection(physical(name))
     ingest.BloomGate.buildIndex(spark, catalog, entry, fpp = fpp)
   }
@@ -1059,8 +1058,7 @@ final class Api(
     val k = validLimit(nResults)
     val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
     val entry = catalog.getCollection(physical(name))
-    val index = graft.search.LexIndex.load(spark, catalog, entry)
-    val hits = graft.search.LexIndex.searchBm25(index, qs, k)
+    val hits = bm25Hits(entry, qs, k)
     val payload = hits.alias("f")
       .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
       .select(col("f.query_idx"), col("f.id"), col("d.content"),
@@ -1080,6 +1078,16 @@ final class Api(
     serialize(Lexical.searchBm25Many(docs(name), qs, k,
       payload = Seq("content", "metadata")))
   }
+
+  /** BM25 hits (query_idx, id, score) from the persistent lexical index,
+    * scored with the serving snapshot's (N, avgdl).
+    */
+  private def bm25Hits(
+      entry: graft.model.CollectionEntry,
+      qs: Seq[(Int, String)],
+      k: Int): DataFrame =
+    graft.search.LexIndex.searchBm25(graft.search.LexIndex.load(spark, catalog, entry), qs, k,
+      stats = Some(graft.search.LexIndex.stats(spark, catalog, entry)))
 
   /** Sign-LSH hits (query_idx, id, score) for prepared query vectors —
     * layout from the persisted sidecar meta; governed error when the
@@ -1270,8 +1278,7 @@ final class Api(
       case "bm25" => Lexical.searchBm25Many(docs(name), Seq((0, safeQ)), limit)
       case "indexed" => graft.search.LexIndex.searchTf(
         graft.search.LexIndex.load(spark, catalog, entry), Seq((0, safeQ)), limit)
-      case "bm25_indexed" => graft.search.LexIndex.searchBm25(
-        graft.search.LexIndex.load(spark, catalog, entry), Seq((0, safeQ)), limit)
+      case "bm25_indexed" => bm25Hits(entry, Seq((0, safeQ)), limit)
       case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
     })
     val fused = Hybrid.rrf(sem, lex, semanticWeight, lexicalWeight, rrfK, limit)
@@ -1368,8 +1375,7 @@ final class Api(
       case "bm25" => Lexical.searchBm25Many(docs(name), qs, limit)
       case "indexed" => graft.search.LexIndex.searchTf(
         graft.search.LexIndex.load(spark, catalog, entry), qs, limit)
-      case "bm25_indexed" => graft.search.LexIndex.searchBm25(
-        graft.search.LexIndex.load(spark, catalog, entry), qs, limit)
+      case "bm25_indexed" => bm25Hits(entry, qs, limit)
       case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
     })
     val fused = Hybrid.rrf(sem, lex, semanticWeight, lexicalWeight, rrfK, limit)

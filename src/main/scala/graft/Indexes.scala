@@ -207,7 +207,7 @@ object Indexes {
       entry: CollectionEntry,
       pending: Option[Pending],
       newRows: DataFrame,
-      embedder: graft.ingest.Embedder): Unit = pending.foreach { p =>
+      embedder: graft.ingest.Embedder): Unit = catalog.monitor { pending.foreach { p =>
     val fresh = newRows.select(DeltaCols.map(col): _*)
     p.lexBuckets.foreach { buckets =>
       val idx = LexIndex.load(spark, catalog, entry)
@@ -370,7 +370,7 @@ object Indexes {
       GraphIndex.delete(spark, catalog, entry, goneIds ++ preExisting, gm.k, gm.buckets)
       GraphIndex.upsert(spark, catalog, entry, presentIds, gm.k, gm.buckets)
     }
-  }
+  } }
 
   private def replacePartitions(
       replacement: DataFrame,

@@ -161,7 +161,11 @@ final class McpServer(
           "semantic_weight" -> Map("type" -> "number"),
           "lexical_weight" -> Map("type" -> "number"),
           "rrf_k" -> Map("type" -> "integer"),
-          "db_type" -> Map("type" -> "string")),
+          "db_type" -> Map("type" -> "string"),
+          "semantic_mode" -> Map("type" -> "string",
+            "description" -> "exact (default) | approx | lsh | pq | diverse | maxsim"),
+          "lexical_mode" -> Map("type" -> "string",
+            "description" -> "scan (default) | indexed | bm25 | bm25_indexed | phrase")),
         "required" -> Seq("action", "collection_name", "question"))))
 
   private def callTool(name: String, args: JsonNode): Map[String, Any] = {
@@ -192,7 +196,9 @@ final class McpServer(
             question = s("question"), numberResults = i("number_results", 10),
             semanticWeight = d("semantic_weight", 0.5),
             lexicalWeight = d("lexical_weight", 0.5),
-            rrfK = i("rrf_k", 60), dbType = s("db_type"))
+            rrfK = i("rrf_k", 60), dbType = s("db_type"),
+            semanticMode = Option(s("semantic_mode")).getOrElse("exact"),
+            lexicalMode = Option(s("lexical_mode")).getOrElse("scan"))
         case _ => // unreachable: dispatch rejects unknown tools with -32602
           throw new GraftException(ErrorCodes.CollectionActionInvalid)
       }

@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.functions.VectorFunctions
@@ -41,7 +41,7 @@ object IvfIndex {
       entry: CollectionEntry,
       nClusters: Int,
       kmeansIters: Int = 0,
-      trainFraction: Double = 1.0): DataFrame = {
+      trainFraction: Double = 1.0): DataFrame = catalog.monitor {
     require(trainFraction > 0 && trainFraction <= 1,
       s"trainFraction $trainFraction out of (0,1]")
     val docs = catalog.readDocuments(entry)
@@ -74,7 +74,8 @@ object IvfIndex {
     * rebuild). Called by [[build]] and by the write path's derived-index
     * refresh.
     */
-  def reassign(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = {
+  def reassign(
+      spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = catalog.monitor {
     val docs = catalog.readDocuments(entry)
       .select(col("id"), col("embedding"), col("norm"))
     // invalidate-first for the health sidecar: a crash between the index
@@ -102,7 +103,27 @@ object IvfIndex {
 
   /** The persisted centroid table of the last [[build]]. */
   def loadCentroids(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.parquet(centroidsPath(catalog, entry))
+    catalog.snapshot("relation", centroidsPath(catalog, entry)) {
+      spark.read.parquet(centroidsPath(catalog, entry))
+    }
+
+  /** The centroid rows (centroid_id, centroid, centroid_norm) on the
+    * driver, for probe ranking.
+    */
+  def centroidRows(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): IndexedSeq[Row] =
+    catalog.snapshot("centroid rows", centroidsPath(catalog, entry)) {
+      loadCentroids(spark, catalog, entry)
+        .select("centroid_id", "centroid", "centroid_norm").collect().toIndexedSeq
+    }
+
+  /** Rows per cluster of the persisted assignments (the adaptive probe
+    * pool sizes).
+    */
+  def clusterSizes(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Map[Long, Long] =
+    catalog.snapshot("cluster sizes", indexPath(catalog, entry)) {
+      loadIndex(spark, catalog, entry).groupBy("cluster_id").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
 
   /** Schema the assignments are read back under. Spelling it out (instead
     * of inference) pins `cluster_id` to Long: partition-column inference
@@ -122,7 +143,9 @@ object IvfIndex {
 
   /** The persisted assignments with `cluster_id: Long` (see [[IndexSchema]]). */
   def loadIndex(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
+    catalog.snapshot("relation", indexPath(catalog, entry)) {
+      spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
+    }
 
   /** Adaptive probe selection: the smallest prefix of distance-ranked
     * clusters whose cumulative size reaches `numCandidates` (the

@@ -27,6 +27,18 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
 
   private val catalogDir = s"$warehouseDir/_catalog"
 
+  /** The warehouse's write monitor ([[WarehouseMonitor]]): every mutator
+    * of this warehouse's files runs inside it, and reads memoize their
+    * file-derived state through [[snapshot]].
+    */
+  val monitor: WarehouseMonitor = WriteLocks.forWarehouse(warehouseDir)
+
+  /** Memoize `compute` — a pure function of the files under `path` — in
+    * the warehouse's serving snapshot, per session.
+    */
+  def snapshot[T](kind: String, path: String)(compute: => T): T =
+    monitor.snapshot((kind, path, spark))(compute)
+
   private def sha256Hex(s: String): String =
     MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -66,11 +78,13 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
   def physicalName(tenant: String, logical: String): String =
     s"t_${sha256Hex(tenant).take(16)}_$logical"
 
-  def entries(): Seq[CollectionEntry] = {
-    if (!Files.exists(Paths.get(catalogDir))) return Seq.empty
-    import spark.implicits._
-    spark.read.schema(Schemas.catalog).parquet(catalogDir)
-      .as[CollectionEntry].collect().toSeq
+  def entries(): Seq[CollectionEntry] = snapshot("entries", catalogDir) {
+    if (!Files.exists(Paths.get(catalogDir))) Seq.empty
+    else {
+      import spark.implicits._
+      spark.read.schema(Schemas.catalog).parquet(catalogDir)
+        .as[CollectionEntry].collect().toSeq
+    }
   }
 
   private def writeEntries(es: Seq[CollectionEntry]): Unit = {
@@ -97,7 +111,7 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
       name: String,
       dimension: Int,
       overwrite: Boolean = false,
-      getOrCreate: Boolean = true): CollectionEntry = {
+      getOrCreate: Boolean = true): CollectionEntry = monitor {
     if (dimension <= 0) throw new GraftException(ErrorCodes.EmbeddingInvalid)
     val es = entries()
     es.find(_.collection_name == name) match {
@@ -140,7 +154,7 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
   }
 
   /** Drop table dir + derived indexes + catalog row (postgres.py:225-239). */
-  def deleteCollection(name: String): Unit = {
+  def deleteCollection(name: String): Unit = monitor {
     val es = entries()
     val entry = es.find(_.collection_name == name)
       .getOrElse(throw new GraftException(ErrorCodes.CollectionNotFound))
@@ -157,7 +171,9 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
     * writers doing partition-level merges and readers that prune buckets.
     */
   def readDocumentsPhysical(entry: CollectionEntry): DataFrame =
-    spark.read.schema(Schemas.documentsPhysical).parquet(tablePath(entry))
+    snapshot("relation", tablePath(entry)) {
+      spark.read.schema(Schemas.documentsPhysical).parquet(tablePath(entry))
+    }
 
   /** Point lookups with physical bucket pruning: ids map driver-side to
     * their buckets, the scan skips every other partition dir. The missing-

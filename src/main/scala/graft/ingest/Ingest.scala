@@ -1,8 +1,6 @@
 package graft.ingest
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.functions.{TextFunctions, VectorFunctions}
@@ -238,20 +236,6 @@ object Ingest {
     (d(0) & 0xff) % NumDocBuckets
   }
 
-  /** Swap-write a FULL table image into a collection's table dir,
-    * id-bucket-partitioned (initial loads, explicit rebuilds). Incremental
-    * writes go through [[mergeUpsert]]/[[mergeDelete]] instead.
-    */
-  def rewrite(spark: SparkSession, catalog: Catalog, entry: CollectionEntry, df: DataFrame): Unit = {
-    val path = catalog.tablePath(entry)
-    val tmp = s"$path.staging"
-    df.withColumn("bucket", idBucket(col("id")))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(tmp)
-    deleteDir(Paths.get(path))
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /** MERGE a prepared batch into the table by rewriting ONLY the id
     * buckets the batch touches: surviving rows of those buckets (anti-join
     * on batch ids) plus the batch. An old and new version of an id share a
@@ -265,7 +249,7 @@ object Ingest {
 
   def mergeUpsert(
       spark: SparkSession, catalog: Catalog, entry: CollectionEntry,
-      batch: DataFrame, bucketsHint: Option[Seq[Int]] = None): Unit = {
+      batch: DataFrame, bucketsHint: Option[Seq[Int]] = None): Unit = catalog.monitor {
     val cols = Seq("id", "content", "metadata", "embedding", "norm")
     val withBucket = batch.select(cols.map(col): _*)
       .withColumn("bucket", idBucket(col("id")))
@@ -285,7 +269,7 @@ object Ingest {
     */
   def mergeDelete(
       spark: SparkSession, catalog: Catalog, entry: CollectionEntry,
-      ids: Seq[String]): Unit = {
+      ids: Seq[String]): Unit = catalog.monitor {
     if (ids == null || ids.isEmpty)
       throw new GraftException(ErrorCodes.DocumentIdsRequired)
     val buckets = ids.map(idBucketScala).distinct
@@ -297,9 +281,4 @@ object Ingest {
       Seq("bucket"), sortCol = None,
       affectedDirs = buckets.map(b => s"bucket=$b"))
   }
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
 }

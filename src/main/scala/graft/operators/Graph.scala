@@ -49,10 +49,16 @@ object Graph {
     * this gate too rather than OOM on a forced ~150 MB hash relation.
     */
   val RankBroadcastMaxRowsDefault = 2000000L
-  def rankBroadcastMaxRows(df: DataFrame): Long =
-    df.sparkSession.conf
-      .getOption("graft.graph.rankBroadcastMaxRows")
-      .map(_.toLong).getOrElse(RankBroadcastMaxRowsDefault)
+  def rankBroadcastMaxRows(df: DataFrame): Long = {
+    val key = "graft.graph.rankBroadcastMaxRows"
+    df.sparkSession.conf.getOption(key).fold(RankBroadcastMaxRowsDefault) { v =>
+      try v.toLong
+      catch {
+        case e: NumberFormatException =>
+          throw new IllegalArgumentException(s"$key must be a row count (a long), got '$v'", e)
+      }
+    }
+  }
 
   /** Mutual-kNN graph: keep a directed kNN edge only when its REVERSE
     * edge also exists — the standard sparsifier that turns a noisy kNN

@@ -51,7 +51,8 @@ object LexIndex {
       .withColumn("bucket", bucketOf(col("term")))
 
   /** Build (or rebuild) the index from the collection's documents table. */
-  def build(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = {
+  def build(
+      spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = catalog.monitor {
     val docs = catalog.readDocuments(entry).select(col("id"), col("content"))
     indexRows(docs)
       // one writer per bucket, rows sorted by term inside each file so
@@ -79,7 +80,32 @@ object LexIndex {
   }
 
   def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
+    catalog.snapshot("relation", indexPath(catalog, entry)) {
+      spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
+    }
+
+  /** BM25 document statistics: N documents, mean document length. */
+  final case class DocStats(n: Double, avgdl: Double)
+
+  /** [[DocStats]] of a postings frame — one distinct aggregate over its
+    * (id, dl) projection. An empty index (every document deleted since
+    * the build) aggregates avg(dl) to NULL; any non-zero stand-in is
+    * fine there, its pruned slice is empty so no row is ever scored.
+    */
+  def docStats(index: DataFrame): DocStats = {
+    val r = index.select("id", "dl").distinct()
+      .agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
+      .collect()(0)
+    DocStats(r.getLong(0).toDouble, if (r.isNullAt(1)) 1.0 else r.getDouble(1))
+  }
+
+  /** The persisted index's [[DocStats]], from the warehouse's serving
+    * snapshot: derived once per write generation, not once per query.
+    */
+  def stats(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DocStats =
+    catalog.snapshot("bm25 stats", indexPath(catalog, entry)) {
+      docStats(load(spark, catalog, entry))
+    }
 
   /** The bucket-pruned, term-filtered postings slice for a term list: the
     * bucket IN (...) predicate prunes partitions physically, term IN (...)
@@ -111,34 +137,25 @@ object LexIndex {
       Lexical.searchIndexed(index.select("id", "dl", "term", "tf"), Seq(0 -> ""), k).limit(0))
   }
 
-  /** BM25 top-k through the persistent index. Doc stats (N, avgdl) are a
-    * small distinct aggregate over (id, dl); everything term-wise runs on
-    * the pruned slice only. Scores are bit-identical to
-    * [[Lexical.searchBm25Indexed]] (same literal-ordered term sum).
+  /** BM25 top-k through the persistent index. Everything term-wise runs on
+    * the pruned slice only; the whole-population stats (N, avgdl) come
+    * from `stats` — the serving snapshot's [[stats]] for a served index —
+    * or, when absent, one [[docStats]] aggregate over `index`. Scores are
+    * bit-identical to [[Lexical.searchBm25Indexed]] (same literal-ordered
+    * term sum).
     */
   def searchBm25(
       index: DataFrame,
       queries: Seq[(Int, String)],
       k: Int,
       k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
+      b: Double = 0.75,
+      stats: Option[DocStats] = None): DataFrame = {
     val allTerms = queries.flatMap { case (_, q) => Lexical.tokenizeQuery(q) }.distinct
     val sliced = prunedPostings(index, allTerms)
       .select("id", "dl", "term", "tf")
-    // stats still need the WHOLE doc population (N, avgdl) — one tiny
-    // aggregate over the (id, dl) projection; at 100 TB this is a cached
-    // scalar maintained at index build, re-derived here for simplicity
     val full = index.select("id", "dl", "term", "tf")
-    val docStats = full.select("id", "dl").distinct()
-      .agg(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-      .collect()(0)
-    val n = docStats.getAs[Long]("n").toDouble
-    // empty index (e.g. every document deleted since the build): avg(dl)
-    // aggregates to NULL — any non-zero stand-in is fine, the pruned slice
-    // is empty so no row is ever scored with it
-    val avgdl =
-      if (docStats.isNullAt(docStats.fieldIndex("avgdl"))) 1.0
-      else docStats.getAs[Double]("avgdl")
+    val DocStats(n, avgdl) = stats.getOrElse(docStats(index))
     val dfByTerm: Map[String, Double] =
       if (allTerms.isEmpty) Map.empty
       else sliced.groupBy("term").agg(count(lit(1)).as("df"))

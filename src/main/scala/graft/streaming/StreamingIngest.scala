@@ -213,7 +213,7 @@ object StreamingIngest {
     // compaction mutates the same table + index dirs the Api write paths
     // do — it must hold the SAME per-warehouse monitor (WriteLocks), or a
     // concurrent add_documents races the bucket/partition swaps
-    try graft.catalog.WriteLocks.forWarehouse(catalog.warehouseDir).synchronized {
+    try catalog.monitor {
       val merged = embedded.count()
       val existing = catalog.readDocuments(entry)
       // compaction is a write like any other: persisted derived indexes

@@ -149,4 +149,19 @@ class GraphSpec extends SparkSpec {
     assert(m(20L) == (1L, 1000000L))
     assert(m(21L) == (1L, 1000000L))
   }
+
+  test("a malformed rankBroadcastMaxRows names its conf key and value") {
+    import spark.implicits._
+    val key = "graft.graph.rankBroadcastMaxRows"
+    val df = Seq(1L).toDF("a")
+    spark.conf.set(key, "2M")
+    try {
+      val e = intercept[IllegalArgumentException](Graph.rankBroadcastMaxRows(df))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("'2M'"), e.getMessage)
+      assert(e.getCause.isInstanceOf[NumberFormatException])
+      spark.conf.set(key, "12345")
+      assert(Graph.rankBroadcastMaxRows(df) == 12345L)
+    } finally spark.conf.unset(key)
+    assert(Graph.rankBroadcastMaxRows(df) == Graph.RankBroadcastMaxRowsDefault)
+  }
 }

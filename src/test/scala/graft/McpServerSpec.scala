@@ -104,6 +104,45 @@ class McpServerSpec extends SparkSpec {
     }
   }
 
+  test("vector_search passes semantic_mode/lexical_mode through to the index routes") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-mcp-wh").toString
+    val api = new Api(spark, wh, new DeterministicHashEmbedder(16), "default")
+    val server = new McpServer(new McpSurface(api), spark)
+    val port = server.start()
+    try {
+      import spark.implicits._
+      api.createCollection("modes", documents = Some(Seq(
+        "spark is a distributed engine", "vectors live in collections",
+        "a spark of inspiration", "collections of stamps").toDF("content")))
+      api.buildLexicalIndex("modes")
+      def call(args: String): (Boolean, String) = toolResult(rpc(port,
+        s"""{"jsonrpc":"2.0","id":7,"method":"tools/call","params":{
+          |"name":"vector_search","arguments":{"collection_name":"modes",
+          |"question":"spark engine","number_results":3,$args}}}""".stripMargin)._2)
+      def hits(body: String): Seq[(String, Double)] = {
+        val rs = mapper.readTree(body).get("results")
+        (0 until rs.size()).map(i => rs.get(i).get("id").asText() -> rs.get(i).get("score").asDouble())
+      }
+      def direct(res: SearchResponse) = res.results.map(h => h.id -> h.score)
+      val (err, body) = call(""""action":"lexical_search","lexical_mode":"bm25_indexed"""")
+      assert(!err, body)
+      assert(hits(body).nonEmpty &&
+        hits(body) == direct(api.lexicalSearchBm25Indexed("modes", Seq("spark engine"), 3)))
+      // absent modes keep the defaults (exact / scan): TF scores, not BM25
+      val (_, dflt) = call(""""action":"lexical_search"""")
+      assert(hits(dflt) == direct(api.lexicalSearch("modes", Seq("spark engine"), 3)))
+      assert(hits(dflt) != hits(body))
+      // an unknown mode is governed like an unknown action
+      assert(call(""""action":"semantic_search","semantic_mode":"nope"""") ==
+        (true, graft.model.ErrorCodes.SearchActionInvalid))
+      val (_, listed) = rpc(port, """{"jsonrpc":"2.0","id":8,"method":"tools/list"}""")
+      val search = listed.get("result").get("tools").get(1)
+      assert(search.get("name").asText() == "vector_search")
+      val props = search.get("inputSchema").get("properties")
+      assert(props.has("semantic_mode") && props.has("lexical_mode"))
+    } finally server.stop()
+  }
+
   test("governed errors are isError tool results; protocol errors are JSON-RPC errors") {
     withServer { port =>
       // invalid action -> governed code in an isError result, not a crash
