@@ -1,9 +1,10 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import graft.functions.{VectorExpressions, VectorFunctions}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -84,44 +85,111 @@ object Ann {
       element_at(array(ids.toIndexedSeq: _*), idx + lit(1)).as("cluster_id"))
   }
 
-  /** Offline kNN self-join: every vector's top-k neighbors (excluding
-    * itself) — the workhorse of embedding-dedup and clustering pipelines.
+  /** Offline exact kNN self-join: every vector's top-k neighbors
+    * (excluding itself) as (qid, neighbor, rank, score) — the workhorse
+    * of mutual kNN, graph-index builds, triplet mining and semantic dedup.
     *
-    * v0 (exact): blocked self-join + group-limited row_number top-k
-    * (InferWindowGroupLimit prunes to k rows per qid per map partition
-    * before the one exchange). 100 TB path: restrict the self-join to IVF
-    * cluster neighborhoods (join on cluster_id from [[assign]]) — same
-    * shape, pruned pairs.
+    * Blocked top-k kernel, not an all-pairs join:
+    *   1. the candidate side is packed into about `defaultParallelism`
+    *      blocks — rows of `array<struct<id, embedding, norm>>`, one keyed
+    *      `collect_list` on an id hash — with more blocks when one would
+    *      pass [[BlockBytes]], judged from the optimizer's size estimate
+    *      (or, for a frame without statistics, one count job);
+    *   2. the spread query side joins the blocks, not the vectors: n*B
+    *      rows instead of n*(n-1). The blocks are broadcast while the
+    *      candidate side fits Spark's broadcast threshold, and joined as a
+    *      cartesian product of partitions above it;
+    *   3. per (query, block), [[VectorExpressions.BlockTopK]] scans the
+    *      block with [[VectorFunctions.dot]]'s arithmetic and returns its
+    *      best k, plus every candidate tied with the k-th score;
+    *   4. the candidates are exploded and ranked by the same
+    *      `row_number` window (score desc, id asc) as the join it
+    *      replaces, so the output is hash-identical. The window stays
+    *      because the kernel's ties are unresolved on purpose: the id
+    *      tie-break (Long or String ordering) happens in one place, and
+    *      any global top-k row is in its block's top k with ties.
+    *
+    * The candidate count is at most n * B * (k + ties), so the window
+    * sorts a few rows per query instead of n - 1.
     */
   def knnJoin(vectors: DataFrame, k: Int): DataFrame = {
-    // the probe side drives the nested-loop join's parallelism: a corpus
-    // read from one parquet file is ONE partition, which would run all
-    // n*n dot products in a single task (measured 4.6 s -> ~1 s at 2k
-    // vectors x 32 cores from this alone). The narrow n-row shuffle is
-    // noise next to the n*n scoring it parallelizes; already-spread
-    // inputs skip it.
-    val target = vectors.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (vectors.rdd.getNumPartitions >= target) vectors
-      else vectors.repartition(target)
-    val a = spread.select(col("id").as("qid"), col("embedding").as("qv"), col("norm").as("qn"))
-    val b = vectors.select(col("id"), col("embedding"), col("norm"))
-    val scored = a.join(b, col("qid") =!= col("id"))
-      .withColumn("score",
-        VectorFunctions.dot(col("qv"), col("embedding")) / (col("qn") * col("norm")))
-      // project BEFORE the window: the exchange otherwise carries both
-      // embedding arrays (~50x the bytes of (qid, id, score) at dim 64 —
-      // measured 6.9 -> ~3 s on the triplet-mining bench entry at sf0.1)
-      .select("qid", "id", "score")
+    val spark = vectors.sparkSession
+    // the query side drives the join's parallelism: a corpus read from
+    // one parquet file is ONE partition, which would scan every block in
+    // a single task. The narrow n-row shuffle is noise next to the
+    // scoring it parallelizes; already-spread inputs skip it.
+    val target = spark.sparkContext.defaultParallelism
+    val rows = vectors.select(col("id"), col("embedding"), col("norm"))
+    // both sides read this one frame: one scan, its exchange reused, and
+    // the block packing runs over the spread partitions too
+    val cands =
+      if (rows.rdd.getNumPartitions >= target) rows
+      else rows.repartition(target)
+    // the candidate side's bytes: the optimizer's estimate, free to read;
+    // a frame without statistics (RDD-backed) is measured by one job
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val estimate = cands.queryExecution.optimizedPlan.stats.sizeInBytes
+    val bytes =
+      if (estimate < conf.defaultSizeInBytes) estimate.toLong
+      else {
+        val r = cands.agg(count(lit(1)), max(size(col("embedding")))).head()
+        r.getLong(0) * candidateBytes(cands, if (r.isNullAt(1)) 0 else r.getInt(1))
+      }
+    // empty hash keys pack nothing, so at most n blocks exist
+    val nBlocks = math.max(target.toLong, (bytes + BlockBytes - 1) / BlockBytes)
+    val blocks = packBlocks(cands, nBlocks)
+    val side =
+      if (bytes <= conf.autoBroadcastJoinThreshold) broadcast(blocks)
+      else blocks.hint("shuffle_replicate_nl")
+    // the query side keeps the candidate side's names: a renaming
+    // projection would be pushed below the exchange and stop its reuse
+    val scored = cands.crossJoin(side.select(col("cands")))
+      .select(col("id").as("qid"), explode(VectorExpressions.blockTopK(
+        col("id"), col("embedding"), col("norm"), col("cands"), k)).as("c"))
+      .select(col("qid"), col("c.id").as("id"), col("c.score").as("score"))
     // ONE window, top-k pruned map-side: the rn <= k filter on a
-    // row_number window triggers InferWindowGroupLimit (SPARK-37099), so
-    // each map partition emits at most k rows per qid BEFORE the
-    // exchange — the same bound the old manual (qid, pid) local window
-    // enforced, without that window's extra n*n-row exchange + sort.
-    val globalW = Window.partitionBy("qid")
+    // row_number window triggers InferWindowGroupLimit (SPARK-37099)
+    rankCandidates(scored, Seq("qid"), k)
+  }
+
+  /** Upper bound on the bytes of one packed candidate block: one block is
+    * one row, scanned whole per query and held whole by its task.
+    */
+  private val BlockBytes: Long = 16L << 20
+
+  /** Approximate packed bytes of one (id, embedding, norm) candidate of
+    * `dim` elements: the struct's fixed part, id bytes and the array.
+    */
+  private def candidateBytes(cands: DataFrame, dim: Int): Long = {
+    val elem = cands.schema("embedding").dataType match {
+      case ArrayType(FloatType, _) => 4
+      case _ => 8
+    }
+    64L + dim.toLong * elem
+  }
+
+  /** One row per (grouping keys..., id hash mod `nBlocks`) with the
+    * block's candidates as `cands: array<struct<id, embedding, norm>>`.
+    */
+  private def packBlocks(rows: DataFrame, nBlocks: Long, keys: Column*): DataFrame = {
+    // the kernel reads float or double elements; other numeric types
+    // widen to double exactly as the dot product's own conversion does
+    val embedding = rows.schema("embedding").dataType match {
+      case ArrayType(FloatType | DoubleType, _) => col("embedding")
+      case _ => col("embedding").cast("array<double>").as("embedding")
+    }
+    rows.groupBy(keys :+ pmod(xxhash64(col("id")), lit(nBlocks)).as("block"): _*)
+      .agg(collect_list(struct(col("id"), embedding, col("norm"))).as("cands"))
+  }
+
+  /** Rank exploded (qid, id, score) candidates per `by` key: score desc,
+    * id asc, keep k.
+    */
+  private def rankCandidates(scored: DataFrame, by: Seq[String], k: Int): DataFrame = {
+    val w = Window.partitionBy(by.map(col): _*)
       .orderBy(col("score").desc, col("id").asc)
     scored
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= k)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("qid"), col("id").as("neighbor"), col("rn").as("rank"), col("score"))
   }
 
@@ -189,30 +257,38 @@ object Ann {
   }
 
   /** Within-cluster kNN over a MATERIALIZED assignment (cached, or read
-    * back from the cluster-partitioned index parquet). The only join is
-    * keyed on cluster_id.
+    * back from the cluster-partitioned index parquet): [[knnJoin]]'s
+    * kernel with the IVF clusters as the blocks. Each cluster is packed
+    * into one block row — into hash sub-blocks when the largest cluster
+    * would pass [[BlockBytes]] (sized by one small aggregate job) — and
+    * the queries join their cluster's blocks on cluster_id, the only
+    * join. Per query that is one kernel call per sub-block instead of
+    * |c| - 1 scored rows; ties, ranking and output are [[knnJoin]]'s, per
+    * (cluster_id, qid).
     */
   def knnJoinWithin(assigned: DataFrame, k: Int): DataFrame = {
-    val a = assigned.select(col("id").as("qid"), col("embedding").as("qv"),
-      col("norm").as("qn"), col("cluster_id"))
-    val b = assigned.select(col("id"), col("embedding"), col("norm"), col("cluster_id"))
-    val scored = a.join(b, Seq("cluster_id"))
-      .filter(col("qid") =!= col("id"))
-      .withColumn("score",
-        VectorFunctions.dot(col("qv"), col("embedding")) / (col("qn") * col("norm")))
-      // drop the embedding arrays before the window sort: the sort buffers
-      // whole rows, and (cluster_id, qid, id, score) is ~50x slimmer
-      .select("cluster_id", "qid", "id", "score")
+    val cands = assigned.select(col("id"), col("embedding"), col("norm"), col("cluster_id"))
+    // the largest cluster sets the sub-block count of every cluster: one,
+    // unless that cluster would pass BlockBytes as one block
+    val largest = cands.groupBy(col("cluster_id"))
+      .agg(count(lit(1)).as("n"), max(size(col("embedding"))).as("dim"))
+      .agg(max(col("n")), max(col("dim"))).head()
+    val bytes = if (largest.isNullAt(0)) 0L else largest.getLong(0) *
+      candidateBytes(cands, if (largest.isNullAt(1)) 0 else largest.getInt(1))
+    val blocks = packBlocks(cands, math.max(1L, (bytes + BlockBytes - 1) / BlockBytes),
+      col("cluster_id"))
+    val scored = cands
+      .select(col("cluster_id"), col("id").as("qid"), col("embedding").as("qv"),
+        col("norm").as("qn"))
+      .join(blocks, Seq("cluster_id"))
+      .select(col("cluster_id"), col("qid"), explode(VectorExpressions.blockTopK(
+        col("qid"), col("qv"), col("qn"), col("cands"), k)).as("c"))
+      .select(col("cluster_id"), col("qid"), col("c.id").as("id"), col("c.score").as("score"))
     // qid -> cluster_id is functional (each vector is assigned once), so
-    // ranking per (cluster_id, qid) equals ranking per qid — but the join
-    // output is ALREADY hash-distributed by cluster_id, which satisfies
-    // the (cluster_id, qid) clustering: the window needs only a
-    // within-partition sort, no second shuffle of the candidate pairs.
-    val w = Window.partitionBy("cluster_id", "qid")
-      .orderBy(col("score").desc, col("id").asc)
-    scored
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("id").as("neighbor"), col("rn").as("rank"), col("score"))
+    // ranking per (cluster_id, qid) equals ranking per qid — and a
+    // shuffled join's output is already distributed by cluster_id, so
+    // the window then needs no second shuffle
+    rankCandidates(scored, Seq("cluster_id", "qid"), k)
   }
 
   /** IVF search: probe the nprobe nearest centroids, exact top-k within the

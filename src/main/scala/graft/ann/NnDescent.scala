@@ -20,9 +20,10 @@ import graft.functions.VectorFunctions
   * (2k)^2 + 2k candidates per node, independent of corpus size. Every
   * stage is a keyed join or a per-node window: no all-pairs product, no
   * global sort, no driver-side state beyond the node count. Contrast
-  * [[Ann.knnJoin]] (exact, N^2 pairs) and [[Ann.knnJoinBlocked]] (pairs
-  * bounded by cluster sizes but blind across cluster boundaries):
-  * NN-descent routes around block boundaries through the graph itself.
+  * [[Ann.knnJoin]] (exact, all N^2 dot products) and
+  * [[Ann.knnJoinBlocked]] (pairs bounded by cluster sizes but blind across
+  * cluster boundaries): NN-descent routes around block boundaries through
+  * the graph itself.
   *
   * Determinism: the init ring is id-arithmetic, candidate sets are exact
   * DISTINCT sets, and every top-k tie-breaks (score desc, dst asc) — the

@@ -55,14 +55,6 @@ object SkewTools {
     case other => throw new IllegalArgumentException(s"unsupported agg $other")
   }
 
-  /** Salted distinct-count sketch-free exact pattern: (key, value) distinct
-    * first (spreads the hot key across reducers by value hash), then count
-    * per key.
-    */
-  def saltedCountDistinct(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    df.select(col(keyCol), col(valueCol)).distinct()
-      .groupBy(keyCol).agg(count(lit(1)).as(s"${valueCol}_distinct"))
-
   /** Salted equi-join for a skewed FACT side against a small-but-not-tiny
     * dimension (too big to broadcast, hot join keys on the fact side).
     * The fact side gets a per-row salt (any assignment works — salting only

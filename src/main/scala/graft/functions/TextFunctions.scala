@@ -85,30 +85,11 @@ object TextFunctions {
   def stableHash32b(s: Column): Column =
     conv(substring(md5(s), 9, 8), 16, 10).cast("long")
 
-  /** MinHash signature entry j for a shingle set: min over shingles of
+  /** MinHash modulus: signature entry j is min over shingles of
     * (a_j * h + b_j) mod p with h = stableHash32(shingle).
     * p = 1e9+7 keeps a*h < 2^63 (a,b < p, h < 2^32).
     */
   val MinHashP = 1000000007L
-
-  def minHashSig(shingleArr: Column, a: Long, b: Long): Column =
-    array_min(transform(shingleArr, s =>
-      (lit(a) * stableHash32(s) + lit(b)) % lit(MinHashP)))
-
-  /** 32-bit SimHash over the (repeating) token array: bit i of the
-    * fingerprint is 1 iff sum over tokens of (bit i of stableHash32(token)
-    * ? +1 : -1) > 0. Oracle-expressible (same md5-derived hash).
-    */
-  def simHash32(toks: Column): Column = {
-    val hashes = transform(toks, t => stableHash32(t))
-    val bitSums = transform(sequence(lit(0), lit(31)), i =>
-      aggregate(hashes, lit(0L), (acc, h) =>
-        acc + when(call_function("shiftright", h, i) % 2 === 1, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(bitSums, sequence(lit(0), lit(31)), (s, i) =>
-        when(s > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-  }
 
   /** Hamming distance between two simhash fingerprints. */
   def hamming(a: Column, b: Column): Column =

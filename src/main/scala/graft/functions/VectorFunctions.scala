@@ -47,19 +47,11 @@ object VectorFunctions {
   def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / (normA * normB)
 
-  /** Cosine distance (what pgvector's `<=>` returns). */
-  def cosineDistance(a: Column, b: Column): Column =
-    lit(1.0) - cosine(a, b)
-
   /** True iff every element of the vector is finite (no NaN/Inf).
     * Mirrors the embedding validation in base.py:64-75.
     */
   def allFinite(a: Column): Column =
     forall(a, x => !isnan(x.cast("double")) && abs(x.cast("double")) <= lit(Double.MaxValue))
-
-  /** Euclidean (L2) distance in double. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(VectorExpressions.l2DistanceSqNative(a, b))
 
   /** 0-based argmin index into a baked centroid matrix by cosine distance
     * (see [[VectorExpressions.NearestCentroidIndex]]); rows must pass

@@ -158,17 +158,6 @@ object Ingest {
     if (clash > 0) throw new GraftException(ErrorCodes.DocumentExists)
   }
 
-  /** MERGE: existing rows not in the batch + the batch (upsert, last wins).
-    * Equivalent to `INSERT ... ON CONFLICT (id) DO UPDATE`
-    * (postgres.py:262-276).
-    */
-  def upsertPlan(existing: DataFrame, batch: DataFrame): DataFrame = {
-    val cols = Seq("id", "content", "metadata", "embedding", "norm")
-    existing.select(cols.map(col): _*)
-      .join(batch.select("id"), Seq("id"), "left_anti")
-      .unionByName(batch.select(cols.map(col): _*))
-  }
-
   /** Delete by id list = anti-join rewrite (postgres.py:283-294). */
   def deletePlan(existing: DataFrame, ids: Seq[String]): DataFrame = {
     if (ids == null || ids.isEmpty)

@@ -68,16 +68,6 @@ object Loaders {
         map().cast("map<string,string>").as("metadata"))
   }
 
-  /** Binary payloads for the multimodal pipeline: (id, modality, data). */
-  def loadBinaryFiles(spark: SparkSession, dir: Path, modality: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(dir.toString)
-      .select(
-        abs(xxhash64(col("path"))).as("id"),
-        lit(modality).as("modality"),
-        col("content").as("data"))
-
   /** JSONL corpus — the standard training-data interchange shape: one
     * document per line, `{"content": "...", "metadata": {"k": "v", ...}}`.
     * Parsed with an EXPLICIT schema (no inference pass — at 100 TB a

@@ -393,8 +393,6 @@ object Flac {
     def align(): Unit = if (bit != 0) { bit = 0; byte += 1 }
     def aligned: Boolean = bit == 0
     def bytes: Array[Byte] = { require(bit == 0); java.util.Arrays.copyOf(buf, byte) }
-    def byteAt(i: Int): Byte = buf(i)
-    def patchByte(i: Int, v: Int): Unit = buf(i) = v.toByte
     def crc8Range(from: Int, until: Int): Int = crc8(buf, from, until)
     def crc16Range(from: Int, until: Int): Int = crc16(buf, from, until)
   }

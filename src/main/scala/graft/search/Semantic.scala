@@ -35,8 +35,12 @@ object Semantic {
     */
   def scoreAgainst(embedding: Column, norm: Column, query: Seq[Float]): Column = {
     val qNorm = math.sqrt(query.map(v => v.toDouble * v.toDouble).sum)
-    val qLit = array(query.map(v => lit(v.toDouble)): _*)
-    dot(embedding, qLit) / (norm * lit(qNorm))
+    // one literal for the whole vector: per-element `lit`s would each
+    // capture a stack trace and give the analyzer `dim` children to
+    // resolve and fold on every request, for the same folded plan. Not
+    // `typedLit`: it derives the type through Scala runtime reflection on
+    // every request
+    dot(embedding, lit(query.map(_.toDouble).toArray)) / (norm * lit(qNorm))
   }
 
   /** Multi-query exact top-k.

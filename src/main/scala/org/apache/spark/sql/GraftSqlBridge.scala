@@ -11,6 +11,10 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The DIVIDE_BY_ZERO error ANSI-mode `Divide` raises. */
+  def divideByZeroError(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Build a DataFrame from an InternalRow RDD without a Row conversion
     * pass (used by the mapPartitions-based embed step).
     */
