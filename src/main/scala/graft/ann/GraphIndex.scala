@@ -171,12 +171,20 @@ object GraphIndex {
       .agg(min(struct((-col("sc")).as("nsc"), col("id").as("id"))).as("m"))
       .select(col("cluster_id"), col("m.id").as("id"))
 
+  /** Declared read schemas: a delete that empties the collection leaves
+    * the adjacency and reverse tables without a data file to infer from.
+    */
+  private val IndexSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "qid STRING, neighbor STRING, rank INT, score DOUBLE, bucket INT")
+  private val ReverseSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "qid STRING, neighbor STRING, bucket INT")
+
   def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.parquet(indexPath(catalog, entry))
+    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
 
   def loadReverse(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[DataFrame] =
     if (!pathExists(reversePath(catalog, entry))) None
-    else Some(spark.read.parquet(reversePath(catalog, entry)))
+    else Some(spark.read.schema(ReverseSchema).parquet(reversePath(catalog, entry)))
 
   def loadMedoids(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[DataFrame] =
     if (!pathExists(medoidsPath(catalog, entry))) None

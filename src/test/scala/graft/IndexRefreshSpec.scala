@@ -5,13 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ann.{Ann, IvfIndex, PqIndex, SignLshIndex}
+import graft.ann.{Ann, GraphIndex, IvfIndex, PqIndex, SignLshIndex}
 import graft.ingest.DeterministicHashEmbedder
-import graft.search.LexIndex
+import graft.search.{ChunkIndex, ChunkIvfIndex, ChunkPqIndex, LexIndex}
 
 /** The incremental write-path refresh (Indexes.stage/applyPending) must be
   * row-equivalent to a full rebuild of every derived index — upserts,
-  * deletes, bucket-emptying deletes, and post-empty re-adds included.
+  * deletes, bucket-emptying deletes, and post-empty re-adds included —
+  * for all nine persisted index types on one collection.
   */
 class IndexRefreshSpec extends SparkSpec {
 
@@ -56,11 +57,38 @@ class IndexRefreshSpec extends SparkSpec {
       rows(graft.dedup.MinHashIndex.indexRows(docs.select("id", "content"), mhMeta),
         "id", "band", "key", "pbucket"),
       "minhash bands must equal a from-scratch build")
+
+    val chunkMeta = ChunkIndex.loadMeta(spark, api.catalog, entry).get
+    val chunks = ChunkIndex.indexRows(docs.select("id", "content"), Emb, chunkMeta.maxTokens)
+    assert(rows(ChunkIndex.load(spark, api.catalog, entry), "id", "chunk_idx", "vec", "bucket") ==
+      rows(chunks, "id", "chunk_idx", "vec", "bucket"),
+      "chunk vectors must equal a from-scratch build")
+
+    val civf = ChunkIvfIndex.load(spark, api.catalog, entry)
+    assert(rows(civf, "id", "embedding", "cluster_id") ==
+      rows(ChunkIvfIndex.indexRows(chunks, cents), "id", "embedding", "cluster_id"),
+      "doc-aligned chunk-IVF assignments must equal a from-scratch build")
+
+    val cpq = ChunkPqIndex.load(spark, api.catalog, entry)
+    assert(rows(cpq, "id", "codes", "cluster_id") ==
+      rows(ChunkPqIndex.encodeChunkRows(spark, api.catalog, entry, chunks,
+        ChunkPqIndex.loadCodebooks(spark, api.catalog, entry).get), "id", "codes", "cluster_id"),
+      "chunk-PQ codes must equal a from-scratch re-encode")
+
+    val graph = GraphIndex.load(spark, api.catalog, entry)
+    assert(rows(graph, "qid", "neighbor", "rank") ==
+      rows(Ann.knnJoin(docs.select("id", "embedding", "norm"), GraphK), "qid", "neighbor", "rank"),
+      "graph adjacency must equal a from-scratch build")
+    assert(rows(GraphIndex.loadReverse(spark, api.catalog, entry).get, "qid", "neighbor") ==
+      rows(graph, "qid", "neighbor"), "graph reverse sidecar must mirror the adjacency")
   }
+
+  private val Emb = new DeterministicHashEmbedder(32)
+  private val GraphK = 3
 
   test("incremental refresh == full rebuild across upsert / delete / empty / re-add") {
     val wh = Files.createTempDirectory("graft-wh").toString
-    val api = new Api(spark, wh, new DeterministicHashEmbedder(32))
+    val api = new Api(spark, wh, Emb)
     import spark.implicits._
 
     val docs = (0 until 60).map(i => s"alpha beta doc number $i").toDF("content")
@@ -70,6 +98,11 @@ class IndexRefreshSpec extends SparkSpec {
     api.buildPqIndex("inc", m = 4, k = 4, iters = 1)
     api.buildLshIndex("inc", bits = 4, tables = 2)
     api.buildMinHashIndex("inc", bands = 16, shingleN = 3)
+    api.buildChunkIndex("inc", maxTokens = 3)
+    api.buildChunkIvfIndex("inc")
+    api.buildChunkPqIndex("inc", m = 4, k = 4, iters = 1)
+    GraphIndex.build(spark, api.catalog,
+      api.catalog.getCollection(api.catalog.physicalName("default", "inc")), GraphK)
     assertIndexesMatchFullRebuild(api, "inc")
 
     // upsert: brand-new content plus re-sent existing content
@@ -105,6 +138,10 @@ class IndexRefreshSpec extends SparkSpec {
     assert(PqIndex.load(spark, api.catalog, entry).count() == 0)
     assert(SignLshIndex.load(spark, api.catalog, entry).count() == 0)
     assert(graft.dedup.MinHashIndex.load(spark, api.catalog, entry).count() == 0)
+    assert(ChunkIndex.load(spark, api.catalog, entry).count() == 0)
+    assert(ChunkIvfIndex.load(spark, api.catalog, entry).count() == 0)
+    assert(ChunkPqIndex.load(spark, api.catalog, entry).count() == 0)
+    assert(GraphIndex.load(spark, api.catalog, entry).count() == 0)
 
     // re-add after the emptying delete: rows must re-enter all indexes
     api.addDocuments("inc", Seq("zeta reborn alpha").toDF("content"))
@@ -112,6 +149,7 @@ class IndexRefreshSpec extends SparkSpec {
     assert(LexIndex.load(spark, api.catalog, entry).count() > 0)
     assert(SignLshIndex.load(spark, api.catalog, entry).count() > 0)
     assert(IvfIndex.loadIndex(spark, api.catalog, entry).count() > 0)
+    assert(ChunkPqIndex.load(spark, api.catalog, entry).count() > 0)
 
     api.deleteCollection("inc", confirm = true)
   }
