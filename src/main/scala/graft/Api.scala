@@ -182,7 +182,7 @@ final class Api(
         oldRows = replaced, newRows = embedded)
       // bucket-level MERGE: only the batch's id buckets are rewritten
       Ingest.mergeUpsert(spark, catalog, entry, embedded, Some(buckets))
-      Indexes.applyPending(spark, catalog, entry, pending, embedded, embedder)
+      Indexes.applyPending(pending, embedder)
       // bloom sidecar maintenance is O(batch) like the other indexes
       ingest.BloomGate.noteInserted(catalog, entry, embedded)
       added
@@ -243,8 +243,7 @@ final class Api(
       newRows = existing.limit(0))
     // bucket-level delete: touched buckets computed driver-side from ids
     Ingest.mergeDelete(spark, catalog, entry, ids)
-    Indexes.applyPending(spark, catalog, entry, pending,
-      catalog.readDocuments(entry).limit(0), embedder)
+    Indexes.applyPending(pending, embedder)
   }
 
   /** Predicate-scoped deletion — the retention/TTL/compliance sweep
@@ -465,37 +464,11 @@ final class Api(
       maxTokens: Int = graft.search.ChunkIndex.DefaultMaxTokens): Long =
     writeLock {
       val entry = catalog.getCollection(physical(validCollection(name)))
-      // the chunk-level IVF derives FROM these rows: a re-chunk must
-      // re-derive it (auto routing prefers it, and maintenance computes
-      // old clusters from the NEW chunk rows — a stale sidecar would
-      // desync permanently, the same hazard buildAnnIndex closes for PQ).
-      // Invalidate it BEFORE the parent rewrite: a crash anywhere between
-      // the new chunk index landing and the sidecar rebuild below then
-      // reads as index-absent (exists() demands _SUCCESS), never as a
-      // committed index keyed to the previous chunking
-      val hadChunkIvf = graft.search.ChunkIvfIndex.exists(catalog, entry)
-      if (hadChunkIvf) graft.search.ChunkIvfIndex.invalidate(catalog, entry)
-      // the residual-PQ codes derive from the same chunk rows: identical
-      // invalidate-first ordering, re-encode after the re-chunk lands
-      val hadCpq = graft.search.ChunkPqIndex.usable(catalog, entry)
-      if (hadCpq) graft.search.ChunkPqIndex.invalidate(catalog, entry)
-      val n = graft.search.ChunkIndex.build(spark, catalog, entry, embedder, maxTokens)
-        .count()
-      if (hadChunkIvf) {
-        if (graft.search.ChunkIvfIndex.quantizerExists(catalog, entry))
-          graft.search.ChunkIvfIndex.build(spark, catalog, entry)
-        else // orphaned sidecar (quantizer gone): unusable, drop it
-          graft.catalog.PartitionedTable.deleteDir(java.nio.file.Paths.get(
-            graft.search.ChunkIvfIndex.indexPath(catalog, entry)))
+      // the chunk-level IVF and the residual-PQ codes derive FROM these
+      // rows: a re-chunk re-derives them
+      Indexes.rebuildWithDependents(spark, catalog, entry, graft.search.ChunkIndex) {
+        graft.search.ChunkIndex.build(spark, catalog, entry, embedder, maxTokens).count()
       }
-      if (hadCpq) {
-        if (graft.search.ChunkIvfIndex.quantizerExists(catalog, entry))
-          graft.search.ChunkPqIndex.reencode(spark, catalog, entry)
-        else
-          graft.catalog.PartitionedTable.deleteDir(java.nio.file.Paths.get(
-            graft.search.ChunkPqIndex.codesPath(catalog, entry)))
-      }
-      n
     }
 
   /** Build (or rebuild) the chunk-level IVF candidate index — the PLAID
@@ -532,25 +505,17 @@ final class Api(
     require(Set("doc", "chunks").contains(trainOn),
       s"trainOn '$trainOn' not in {doc, chunks}")
     val entry = catalog.getCollection(physical(validCollection(name)))
-    def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-    if (!exists(graft.search.ChunkIndex.indexPath(catalog, entry)))
-      throw new GraftException(ErrorCodes.AnnIndexNotFound)
+    graft.search.ChunkIndex.requirePresent(catalog, entry)
+    if (trainOn == "doc") graft.ann.IvfIndex.requirePresent(catalog, entry)
     // residual-PQ codes key their partitions AND values on the quantizer
-    // this build may replace: invalidate BEFORE the rewrite so every
-    // crash window reads codes-absent, then re-encode under the new
-    // quantizer (frozen codebooks — the PqIndex/buildAnnIndex precedent)
-    val hadCpq = graft.search.ChunkPqIndex.usable(catalog, entry)
-    if (hadCpq) graft.search.ChunkPqIndex.invalidate(catalog, entry)
-    val n =
-      if (trainOn == "doc") {
-        if (!exists(graft.ann.IvfIndex.centroidsPath(catalog, entry)))
-          throw new GraftException(ErrorCodes.AnnIndexNotFound)
+    // this build may replace: re-encoded under the new one
+    Indexes.rebuildWithDependents(spark, catalog, entry, graft.search.ChunkIvfIndex) {
+      if (trainOn == "doc")
         graft.search.ChunkIvfIndex.buildDocAligned(spark, catalog, entry).count()
-      } else
+      else
         graft.search.ChunkIvfIndex.buildChunkTrained(
           spark, catalog, entry, nClusters, kmeansIters, trainFraction).count()
-    if (hadCpq) graft.search.ChunkPqIndex.reencode(spark, catalog, entry)
-    n
+    }
   }
 
   /** Build (or rebuild) the residual-PQ chunk-code index — PLAID's
@@ -572,9 +537,8 @@ final class Api(
       iters: Int = 2,
       trainFraction: Double = 1.0): Long = writeLock {
     val entry = catalog.getCollection(physical(validCollection(name)))
-    def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-    if (!exists(graft.search.ChunkIndex.indexPath(catalog, entry)) ||
-        !graft.search.ChunkIvfIndex.quantizerExists(catalog, entry))
+    graft.search.ChunkIndex.requirePresent(catalog, entry)
+    if (!graft.search.ChunkIvfIndex.quantizerExists(catalog, entry))
       throw new GraftException(ErrorCodes.AnnIndexNotFound)
     graft.search.ChunkPqIndex.build(spark, catalog, entry, m, k, iters, trainFraction)
   }
@@ -713,40 +677,12 @@ final class Api(
       name: String, nClusters: Int, kmeansIters: Int = 0,
       trainFraction: Double = 1.0): DataFrame = writeLock {
     val entry = catalog.getCollection(physical(name))
-    // a DOC-ALIGNED chunk-level IVF keys its partitions on the centroids
-    // this build replaces: invalidate it BEFORE the new quantizer lands,
-    // so a crash between the centroid rewrite and the re-assign below
-    // reads as index-absent instead of serving (and maintaining —
-    // Indexes.stage computes clusters under CURRENT centroids) a
-    // wrong-quantizer index. A CHUNK-TRAINED index owns its quantizer
-    // and is untouched by a doc-IVF rebuild.
-    val hadChunkIvf = graft.search.ChunkIvfIndex.exists(catalog, entry) &&
-      !graft.search.ChunkIvfIndex.hasOwnCentroids(catalog, entry)
-    if (hadChunkIvf) graft.search.ChunkIvfIndex.invalidate(catalog, entry)
-    // residual-PQ chunk codes keyed to the DOC centroids (no own
-    // chunk-trained sidecar) desync the same way: invalidate before the
-    // quantizer rewrite, re-encode after
-    val hadCpq = graft.search.ChunkPqIndex.usable(catalog, entry) &&
-      !graft.search.ChunkIvfIndex.hasOwnCentroids(catalog, entry)
-    if (hadCpq) graft.search.ChunkPqIndex.invalidate(catalog, entry)
-    val built = graft.ann.IvfIndex.build(
-      spark, catalog, entry, nClusters, kmeansIters, trainFraction)
-    // the PQ codes are physically partitioned (and, for residual indexes,
-    // VALUED) under the IVF quantizer: whenever the centroids change —
-    // first build after a flat PQ, or a rebuild with different clusters —
-    // an existing PQ index must re-encode under the new quantizer, or its
-    // maintenance/probing (keyed by CURRENT centroids) silently desyncs
-    // from the rows' actual partitions and stale codes survive writes
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(
-        graft.ann.PqIndex.indexPath(catalog, entry))))
-      graft.ann.PqIndex.reencode(spark, catalog, entry)
-    // a rebuilt quantizer must re-assign a doc-aligned chunk-level IVF
-    // for the same reason as PQ
-    if (hadChunkIvf)
-      graft.search.ChunkIvfIndex.build(spark, catalog, entry)
-    if (hadCpq)
-      graft.search.ChunkPqIndex.reencode(spark, catalog, entry)
-    built
+    // the PQ codes, and a DOC-ALIGNED chunk-level IVF and its residual-PQ
+    // codes, are partitioned (PQ residuals also VALUED) under the IVF
+    // quantizer this build replaces: each re-derives under the new one
+    Indexes.rebuildWithDependents(spark, catalog, entry, graft.ann.IvfIndex) {
+      graft.ann.IvfIndex.build(spark, catalog, entry, nClusters, kmeansIters, trainFraction)
+    }
   }
 
   /** Approximate semantic search through the ANN index, carrying the
@@ -995,29 +931,11 @@ final class Api(
     */
   def compactStorage(name: String, maxFiles: Int = 4): Map[String, Int] = writeLock {
     val entry = catalog.getCollection(physical(name))
-    import graft.catalog.PartitionedTable.compactPartitions
-    def ifExists(path: String, partCols: Seq[String], sortCol: Option[String]) =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-        compactPartitions(spark, path, partCols, sortCol, maxFiles).size
-      else 0
-    Map(
-      "documents" -> ifExists(catalog.tablePath(entry), Seq("bucket"), None),
-      "postings" -> ifExists(graft.search.LexIndex.indexPath(catalog, entry),
-        Seq("bucket"), Some("term")),
-      "ivf" -> ifExists(graft.ann.IvfIndex.indexPath(catalog, entry),
-        Seq("cluster_id"), None),
-      "pq" -> ifExists(graft.ann.PqIndex.indexPath(catalog, entry),
-        Seq("cluster_id"), None),
-      "signlsh" -> ifExists(graft.ann.SignLshIndex.indexPath(catalog, entry),
-        Seq("table", "key"), None),
-      "minhash" -> ifExists(graft.dedup.MinHashIndex.indexPath(catalog, entry),
-        Seq("pbucket"), Some("key")),
-      "chunkvecs" -> ifExists(graft.search.ChunkIndex.indexPath(catalog, entry),
-        Seq("bucket"), Some("id")),
-      "chunkivf" -> ifExists(graft.search.ChunkIvfIndex.indexPath(catalog, entry),
-        Seq("cluster_id"), Some("id")),
-      "chunkpq" -> ifExists(graft.search.ChunkPqIndex.codesPath(catalog, entry),
-        Seq("cluster_id"), Some("id")))
+    import graft.catalog.PartitionedTable.compact
+    Indexes.All.flatMap { ix =>
+      ix.compactKey.map(_ -> (if (!ix.exists(catalog, entry)) 0
+        else compact(spark, ix.indexPath(catalog, entry), ix.partCols, ix.sortCols, maxFiles).size))
+    }.toMap + ("documents" -> compact(spark, catalog.tablePath(entry), Seq("bucket"), Nil, maxFiles).size)
   }
 
   /** Build the bloom existence-prefilter sidecar: one corpus pass for the
@@ -1098,10 +1016,8 @@ final class Api(
       qs: Seq[(Int, Seq[Float])],
       k: Int,
       multiProbe: Int = 0): DataFrame = {
-    val meta = graft.ann.SignLshIndex
-      .metaOrDerive(spark, catalog, entry, embedder.dimension)
-      .getOrElse(throw new GraftException(ErrorCodes.AnnIndexNotFound))
     val index = graft.ann.SignLshIndex.load(spark, catalog, entry)
+    val meta = graft.ann.SignLshIndex.requireMeta(spark, catalog, entry)
     graft.ann.SignLshIndex.search(
       index, qs, k, meta.dim, meta.bits, meta.tables, meta.seed, multiProbe = multiProbe)
   }
@@ -1133,11 +1049,8 @@ final class Api(
       maxQueryTokens: Int = 16,
       candidateSource: String = "auto",
       where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-    if (!exists(graft.search.ChunkIndex.indexPath(catalog, entry)))
-      throw new GraftException(ErrorCodes.AnnIndexNotFound)
-    val hasIvf = exists(graft.ann.IvfIndex.indexPath(catalog, entry)) &&
-      exists(graft.ann.IvfIndex.centroidsPath(catalog, entry))
+    graft.search.ChunkIndex.requirePresent(catalog, entry)
+    val hasIvf = graft.ann.IvfIndex.exists(catalog, entry)
     val hasChunkIvf = graft.search.ChunkIvfIndex.exists(catalog, entry) &&
       graft.search.ChunkIvfIndex.quantizerExists(catalog, entry)
     val hasCpq = graft.search.ChunkPqIndex.usable(catalog, entry)
@@ -1311,13 +1224,9 @@ final class Api(
 
   private def indexHealthInner(name: String, index: String): Map[String, Any] = invoke {
     val entry = catalog.getCollection(physical(validCollection(name)))
-    def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
     import graft.ann.IndexHealth
     val (basePath, current) = index match {
       case "ivf" =>
-        if (!exists(graft.ann.IvfIndex.indexPath(catalog, entry)) ||
-            !exists(graft.ann.IvfIndex.centroidsPath(catalog, entry)))
-          throw new GraftException(ErrorCodes.AnnIndexNotFound)
         (IndexHealth.ivfBaselinePath(catalog, entry),
           IndexHealth.statsRow(
             graft.ann.IvfIndex.loadIndex(spark, catalog, entry),
@@ -1398,25 +1307,8 @@ final class Api(
     */
   def describeCollection(name: String): Map[String, Any] = invoke {
     val entry = catalog.getCollection(physical(validCollection(name)))
-    import java.nio.file.{Files, Paths}
-    def countIf(path: String): Option[Long] =
-      if (!Files.exists(Paths.get(path))) None
-      else
-        // an index a delete drained empty has no data files left to infer
-        // a schema from — that is a live (zero-row) index, not an error
-        try Some(spark.read.parquet(path).count())
-        catch { case _: org.apache.spark.sql.AnalysisException => Some(0L) }
-    val indexes = Seq(
-      "lexical" -> graft.search.LexIndex.indexPath(catalog, entry),
-      "ivf" -> graft.ann.IvfIndex.indexPath(catalog, entry),
-      "pq" -> graft.ann.PqIndex.indexPath(catalog, entry),
-      "lsh" -> graft.ann.SignLshIndex.indexPath(catalog, entry),
-      "minhash" -> graft.dedup.MinHashIndex.indexPath(catalog, entry),
-      "graph" -> graft.ann.GraphIndex.indexPath(catalog, entry),
-      "chunkvecs" -> graft.search.ChunkIndex.indexPath(catalog, entry),
-      "chunkivf" -> graft.search.ChunkIvfIndex.indexPath(catalog, entry),
-      "chunkpq" -> graft.search.ChunkPqIndex.codesPath(catalog, entry))
-      .flatMap { case (k, p) => countIf(p).map(k -> _) }.toMap
+    val indexes = Indexes.All.filter(_.exists(catalog, entry))
+      .map(ix => ix.key -> ix.load(spark, catalog, entry).count()).toMap
     Map(
       "collection" -> name,
       "documents" -> docs(name).count(),

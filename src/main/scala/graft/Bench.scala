@@ -1,25 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // JVM (not ICU) case mappings: avoids a minutes-long one-time ICU
-      // title-case table build in cold JVMs; identical results on ASCII data.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // long query sequences accumulate broadcast/shuffle metadata that only
-      // a JVM GC lets the ContextCleaner reclaim; default interval is 30min
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // 45+ queries x 2 reps generate far more than the default 100 cached
-      // codegen classes; evictions force janino recompiles on the second
-      // rep, which lands as seconds of phantom "query time" (static conf,
-      // must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local profiling loop)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ingest.DeterministicHashEmbedder
 
 /** Empirical cost probe for the persistent chunk-vector index — the
@@ -23,12 +22,7 @@ object ChunkIndexProbe {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

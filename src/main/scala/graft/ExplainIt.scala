@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev harness (not driver contract): dump `explain("formatted")` for the
@@ -16,12 +15,7 @@ object ExplainIt {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>

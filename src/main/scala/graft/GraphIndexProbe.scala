@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ann.GraphIndex
 import graft.ingest.DeterministicHashEmbedder
@@ -31,12 +30,7 @@ object GraphIndexProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

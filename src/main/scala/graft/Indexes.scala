@@ -2,76 +2,230 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.ann.{Ann, GraphIndex, IvfIndex, LshMeta, PqIndex, SignLshIndex}
-import graft.catalog.Catalog
-import graft.model.CollectionEntry
-import graft.search.LexIndex
+import graft.catalog.{Catalog, PartitionedTable}
+import graft.model.{CollectionEntry, ErrorCodes, GraftException}
 
-/** Derived-index maintenance shared by every write path (API upsert/delete
-  * and streaming compaction).
+/** One persisted derived index: a partitioned parquet table beside the
+  * documents table, plus the sidecars it is read and maintained with.
+  *
+  * Presence is one rule for every index: the index dir holds its write
+  * job's `_SUCCESS`. A build invalidates its index first (drops the
+  * marker), so every crash window reads as index-absent — search routes
+  * answer the governed not-found error and writes leave the files alone —
+  * never as a torn index. A present index whose required sidecar is gone
+  * cannot be maintained at its build parameters, so a write fails loudly
+  * naming the sidecar ([[requireIntact]]).
+  */
+trait DerivedIndex {
+
+  /** Key in `Api.describeCollection`. */
+  def key: String
+
+  /** Key in `Api.compactStorage`; None keeps the index out of compaction. */
+  def compactKey: Option[String] = Some(key)
+
+  /** Suffix of the index dir after the documents table path. */
+  protected def suffix: String
+
+  def partCols: Seq[String]
+
+  /** Within-partition sort of every write: full builds, maintenance and
+    * compaction alike.
+    */
+  def sortCols: Seq[String]
+
+  /** Declared read schema: partition columns keep their written types, and
+    * an index a delete drained empty still reads (as zero rows).
+    */
+  def schema: StructType
+
+  /** (label, path) of each sidecar a present index cannot be maintained
+    * without.
+    */
+  def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] = Nil
+
+  /** The indexes whose rebuild re-derives this one
+    * ([[Indexes.rebuildWithDependents]]).
+    */
+  def dependsOn(catalog: Catalog, entry: CollectionEntry): Seq[DerivedIndex] = Nil
+
+  /** Governed error of a search route over an absent index. */
+  def notFound: String = ErrorCodes.AnnIndexNotFound
+
+  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
+    catalog.tablePath(entry) + suffix
+
+  /** Present: the index dir and its write job's `_SUCCESS`. */
+  def exists(catalog: Catalog, entry: CollectionEntry): Boolean =
+    Files.exists(Paths.get(indexPath(catalog, entry), "_SUCCESS"))
+
+  def requirePresent(catalog: Catalog, entry: CollectionEntry): Unit =
+    if (!exists(catalog, entry)) throw new GraftException(notFound)
+
+  def requireIntact(catalog: Catalog, entry: CollectionEntry): Unit =
+    sidecars(catalog, entry).foreach { case (label, p) =>
+      require(Files.exists(Paths.get(p)),
+        s"$key index exists without its $label sidecar ($p) — rebuild it before writing")
+    }
+
+  /** Drop the `_SUCCESS` marker: the index reads as absent until a build
+    * rewrites the whole dir.
+    */
+  def invalidate(catalog: Catalog, entry: CollectionEntry): Unit = catalog.monitor {
+    Files.deleteIfExists(Paths.get(indexPath(catalog, entry), "_SUCCESS"))
+  }
+
+  /** The index rows, from the warehouse's serving snapshot; governed
+    * [[notFound]] when the index is absent.
+    */
+  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = {
+    requirePresent(catalog, entry)
+    catalog.snapshot("relation", indexPath(catalog, entry)) {
+      spark.read.schema(schema).parquet(indexPath(catalog, entry))
+    }
+  }
+
+  /** The one full-build write: every row of the index, overwritten. */
+  protected def writeFull(catalog: Catalog, entry: CollectionEntry, rows: DataFrame): Unit =
+    catalog.monitor {
+      PartitionedTable.write(rows, indexPath(catalog, entry), partCols, sortCols)
+    }
+
+  /** Partition values (one Seq per partition, in [[partCols]] order) the
+    * write's old and new rows live in — staged BEFORE the documents
+    * rewrite, while the old rows are still readable.
+    */
+  def affectedKeys(d: Indexes.Delta): Seq[Seq[Any]]
+
+  /** This index's rows for the write's fresh batch. */
+  def freshRows(d: Indexes.Delta): DataFrame
+
+  /** Whether the fresh rows add partitions to the staged keys (known only
+    * once the batch is embedded, at apply time).
+    */
+  protected def freshKeys: Boolean = false
+
+  /** The document an index row belongs to. */
+  protected def docId: Column = col("id")
+
+  /** Rewrite the affected partitions: their rows minus every changed
+    * document's, plus the fresh rows.
+    */
+  def maintain(d: Indexes.Delta, staged: Seq[Seq[Any]]): Unit = {
+    val fresh = freshRows(d)
+    val keys = if (freshKeys) (staged ++ Indexes.keysOf(fresh, partCols)).distinct else staged
+    if (keys.nonEmpty) {
+      val kept = load(d.spark, d.catalog, d.entry)
+        .filter(Indexes.inPartitions(partCols, keys))
+        .withColumn("__doc", docId)
+        .join(broadcast(d.ids.select(col("id").as("__doc"))), Seq("__doc"), "left_anti")
+        .drop("__doc")
+      PartitionedTable.replacePartitions(kept.unionByName(fresh),
+        indexPath(d.catalog, d.entry), partCols, sortCols,
+        keys.map(k => partCols.zip(k).map { case (c, v) => s"$c=$v" }.mkString("/")))
+    }
+  }
+
+  /** Whether [[rederive]] can run (a dependent whose quantizer is gone
+    * cannot, and is dropped instead).
+    */
+  def derivable(catalog: Catalog, entry: CollectionEntry): Boolean = true
+
+  /** Re-derive the whole index from its rebuilt parent, under its own
+    * frozen parameters.
+    */
+  def rederive(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Unit =
+    throw new UnsupportedOperationException(s"$key index has no parent to re-derive from")
+}
+
+/** The registry of persisted derived indexes and the write-path protocol
+  * that keeps them consistent with document writes.
   *
   * Reference parity: every backend maintains its indexes transactionally
-  * with document writes (pg updates GIN/HNSW per INSERT, qdrant/mongo index
-  * within upsert) — so any PERSISTED derived index here must reflect the
-  * table after a write instead of silently serving stale rows. And like
-  * those backends, maintenance is INCREMENTAL, not a full rebuild
-  * (ADVICE r3): every index is partitioned on a key that is a
-  * deterministic function of a row's content/embedding (term hash bucket,
-  * IVF cluster, LSH table+key), so a write touching Δ documents can
-  * compute exactly which partitions the old and new versions of those
-  * rows live in, and rewrite only those — O(Δ × bucket) work per write,
-  * independent of corpus size.
+  * with document writes (pg updates GIN/HNSW per INSERT, qdrant/mongo
+  * index within upsert), and INCREMENTALLY: every index but the graph is
+  * partitioned on a key that is a deterministic function of a row's
+  * content/embedding (term hash bucket, IVF cluster, LSH table+key, id
+  * bucket), so a write touching Δ documents computes exactly which
+  * partitions the old and new versions of those rows live in, and
+  * rewrites only those — O(Δ × partition) work per write.
   *
   * Two-phase protocol around the documents-table rewrite:
-  *   1. [[stage]] BEFORE the rewrite — snapshots the changed rows
-  *      (old versions still readable + incoming batch) off the table's
-  *      lineage via localCheckpoint and computes each index's affected
-  *      partition values eagerly.
-  *   2. [[applyPending]] AFTER the rewrite — for each index, rebuilds
-  *      the affected partitions only (surviving rows ∖ changed ids
-  *      ∪ fresh rows of the new batch) into a staging dir and swaps the
-  *      partition dirs in; a partition left with no rows is deleted,
-  *      so dynamic-overwrite's "empty partition survives" hazard cannot
-  *      produce stale index rows.
-  *
-  * Semantics are identical to a full rebuild (same index ROWS — file
-  * layout aside), which [[refreshDerived]] still provides for explicit
-  * rebuilds and legacy indexes without staged state.
+  *   1. [[stage]] BEFORE the rewrite — snapshots the changed rows (old
+  *      versions still readable + incoming batch) off the table's lineage
+  *      via localCheckpoint and computes each present index's affected
+  *      partitions.
+  *   2. [[applyPending]] AFTER the rewrite — each index, in registry
+  *      order, [[DerivedIndex.maintain]]s its affected partitions (a
+  *      partition left with no rows is deleted). The result is
+  *      row-identical to a full rebuild (IndexRefreshSpec).
   */
 object Indexes {
 
-  /** Eagerly-staged description of what one write touches: the changed-id
-    * snapshot (pre-rewrite, lineage-free) and each existing index's
-    * affected partition values. Built by [[stage]]; consumed once by
+  /** Registry order: an index comes after every index it derives from. */
+  lazy val All: Seq[DerivedIndex] = Seq(
+    graft.search.LexIndex, graft.ann.IvfIndex, graft.ann.PqIndex,
+    graft.ann.SignLshIndex, graft.dedup.MinHashIndex, graft.search.ChunkIndex,
+    graft.search.ChunkIvfIndex, graft.search.ChunkPqIndex, graft.ann.GraphIndex)
+
+  /** One write's delta, shared by every index's maintenance: the changed
+    * rows' old versions, the fresh batch and the distinct changed ids
+    * (all localCheckpoint'd, so they outlive the documents rewrite), plus
+    * values two indexes share — the IVF/PQ and chunk-IVF/chunk-PQ cluster
+    * sets, the fresh batch's embedded chunks — computed once.
+    */
+  final class Delta private[Indexes] (
+      val spark: SparkSession,
+      val catalog: Catalog,
+      val entry: CollectionEntry,
+      val old: DataFrame,
+      val fresh: DataFrame,
+      val ids: DataFrame) {
+    val both: DataFrame = old.unionByName(fresh)
+    private[graft] var embedder: graft.ingest.Embedder = _
+    private val memo = mutable.HashMap.empty[String, Any]
+    private val cached = mutable.Buffer.empty[DataFrame]
+
+    def shared[T](name: String)(compute: => T): T =
+      memo.getOrElseUpdate(name, compute).asInstanceOf[T]
+
+    /** Cache `df` until the write's maintenance ends. */
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+
+    private[Indexes] def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** What one write touches: its delta and each present index's staged
+    * partition values. Built by [[stage]]; consumed once by
     * [[applyPending]].
     */
-  final case class Pending(
-      ids: DataFrame, // distinct changed ids (old ∪ new), localCheckpoint'd
-      lexBuckets: Option[Seq[Int]],
-      ivfClusters: Option[Seq[Long]],
-      pqClusters: Option[Seq[Long]],
-      lsh: Option[(LshMeta, Seq[(Int, String)])],
-      minhash: Option[(graft.dedup.MinHashMeta, Seq[Int])] = None,
-      graph: Option[GraphIndex.GraphMeta] = None,
-      chunk: Option[(graft.search.ChunkIndex.ChunkMeta, Seq[Int])] = None,
-      chunkIvf: Option[Seq[Long]] = None,
-      chunkPq: Option[Seq[Long]] = None)
-
-  private def exists(p: String) = Files.exists(Paths.get(p))
+  final case class Pending(delta: Delta, work: Seq[(DerivedIndex, Seq[Seq[Any]])])
 
   private val DeltaCols = Seq("id", "content", "embedding", "norm")
 
-  /** Phase 1 (call BEFORE the documents-table rewrite): snapshot the
-    * write's delta and compute affected index partitions.
-    *
-    * `oldRows`: pre-write versions of the ids this write replaces or
-    * deletes (empty for pure inserts). `newRows`: the incoming batch
-    * (empty for deletes). Both need (id, content, embedding, norm).
-    * Returns None when the collection has no persisted derived index —
-    * then there is nothing to maintain and no snapshot cost is paid.
+  /** Distinct values of `cols` over `rows` (one job). */
+  def keysOf(rows: DataFrame, cols: Seq[String]): Seq[Seq[Any]] =
+    rows.select(cols.map(col): _*).distinct().collect().map(_.toSeq).toSeq
+
+  /** Rows in the partitions `keys` (pruned physically). */
+  def inPartitions(cols: Seq[String], keys: Seq[Seq[Any]]): Column =
+    if (cols.size == 1) col(cols.head).isin(keys.map(_.head): _*)
+    else keys.map(k => cols.zip(k).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+      .reduce(_ || _)
+
+  /** Phase 1 (call BEFORE the documents-table rewrite). `oldRows`: the
+    * pre-write versions of the ids this write replaces or deletes;
+    * `newRows`: the incoming batch; both with (id, content, embedding,
+    * norm). `dim` is the collection's dimension — unused, as every layout
+    * parameter comes from an index's sidecar. None when no derived index
+    * is present: nothing to maintain, no snapshot cost.
     */
   def stage(
       spark: SparkSession,
@@ -80,368 +234,66 @@ object Indexes {
       dim: Int,
       oldRows: DataFrame,
       newRows: DataFrame): Option[Pending] = {
-    val hasLex = exists(LexIndex.indexPath(catalog, entry))
-    val hasIvf = exists(IvfIndex.centroidsPath(catalog, entry)) &&
-      exists(IvfIndex.indexPath(catalog, entry))
-    val hasPq = exists(PqIndex.indexPath(catalog, entry)) &&
-      exists(PqIndex.codebooksPath(catalog, entry))
-    val lshMeta =
-      if (exists(SignLshIndex.indexPath(catalog, entry)))
-        SignLshIndex.metaOrDerive(spark, catalog, entry, dim)
-      else None
-    val mhMeta =
-      if (exists(graft.dedup.MinHashIndex.indexPath(catalog, entry)))
-        graft.dedup.MinHashIndex.loadMeta(spark, catalog, entry)
-      else None
-    val graphMeta =
-      if (exists(GraphIndex.indexPath(catalog, entry)))
-        GraphIndex.loadMeta(spark, catalog, entry)
-      else None
-    val chunkMeta =
-      if (exists(graft.search.ChunkIndex.indexPath(catalog, entry))) {
-        val m = graft.search.ChunkIndex.loadMeta(spark, catalog, entry)
-        // a chunk index without its meta sidecar cannot be maintained at
-        // the indexed chunking — skipping silently would leave maxsim
-        // serving stale rows after this write, so fail the write loudly
-        // (buildChunkIndex repairs; build writes meta before index data,
-        // so only pre-fix crash debris can reach this state)
-        require(m.isDefined,
-          "chunk index exists without its meta sidecar — rebuild via buildChunkIndex before writing")
-        m
-      } else None
-    if (!hasLex && !hasIvf && !hasPq && lshMeta.isEmpty && mhMeta.isEmpty &&
-      graphMeta.isEmpty && chunkMeta.isEmpty) return None
-
+    val live = All.filter(_.exists(catalog, entry))
+    if (live.isEmpty) return None
+    live.foreach(_.requireIntact(catalog, entry))
     // localCheckpoint severs lineage from the table path: the snapshots
-    // stay valid (and Δ-sized) after the rewrite swaps the table dirs.
-    val oldSnap = oldRows.select(DeltaCols.map(col): _*).localCheckpoint()
-    val newSnap = newRows.select(DeltaCols.map(col): _*).localCheckpoint()
-    val both = oldSnap.unionByName(newSnap)
-    val ids = both.select("id").distinct().localCheckpoint()
-
-    val lexBuckets =
-      if (!hasLex) None
-      else Some(LexIndex.indexRows(both)
-        .select("bucket").distinct().collect().map(_.getInt(0)).toSeq)
-    // IVF and PQ partition on the same quantizer (the persisted centroid
-    // table), so the cluster set is computed once and shared; a PQ index
-    // without centroids lives in the single cluster-0 partition.
-    val clusterSet =
-      if (!hasIvf && !(hasPq && exists(IvfIndex.centroidsPath(catalog, entry)))) None
-      else {
-        val cents = IvfIndex.loadCentroids(spark, catalog, entry)
-        // per-version assignment: Ann.assign picks one row per id (argmin
-        // aggregate on id), so a changed embedding's old and new clusters
-        // must be derived from separate passes over the two snapshots
-        def clustersOf(rows: DataFrame): Seq[Long] =
-          Ann.assign(rows, cents).select("cluster_id").distinct()
-            .collect().map(_.getLong(0)).toSeq
-        Some((clustersOf(oldSnap) ++ clustersOf(newSnap)).distinct)
-      }
-    val ivfClusters = if (hasIvf) clusterSet else None
-    val pqClusters =
-      if (!hasPq) None
-      else clusterSet.orElse(Some(Seq(0L)))
-    val lsh = lshMeta.map { m =>
-      val parts = SignLshIndex.band(both, m)
-        .select("table", "key").distinct().collect()
-        .map(r => (r.getInt(0), r.getString(1))).toSeq
-      (m, parts)
-    }
-    val minhash = mhMeta.map { m =>
-      val parts = graft.dedup.MinHashIndex.indexRows(both, m)
-        .select("pbucket").distinct().collect().map(_.getInt(0)).toSeq
-      (m, parts)
-    }
-    // chunk rows share the documents table's id-bucket layout, so the
-    // affected partition set is exactly the changed ids' buckets — no
-    // chunking or embedding happens at stage time
-    val chunk = chunkMeta.map { m =>
-      (m, ids.select(graft.ingest.Ingest.idBucket(col("id")).as("bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq)
-    }
-    // chunk-level IVF: the affected clusters of the OLD versions are the
-    // changed ids' stored chunk rows re-assigned under the index's
-    // CURRENT quantizer (own chunk-trained sidecar when present, doc
-    // centroids otherwise; bucket-pruned chunk-index read — never a full
-    // scan); the new batch's clusters are computed in applyPending where
-    // the fresh chunk rows are embedded once for both chunk indexes
-    val hasChunkIvf = graft.search.ChunkIvfIndex.exists(catalog, entry)
-    val hasChunkPq = graft.search.ChunkPqIndex.usable(catalog, entry)
-    // the chunk-level IVF and the residual-PQ codes partition on the SAME
-    // quantizer (ChunkIvfIndex.quantizer resolves one table for both), so
-    // the affected-cluster set is computed once and shared: the changed
-    // ids' stored chunk rows re-assigned under the current centroids
-    // (bucket-pruned chunk-index read — never a full scan)
-    val chunkClusterSet =
-      if (!hasChunkIvf && !hasChunkPq) None
-      else {
-        require(chunk.isDefined,
-          "chunk-level IVF / chunk-PQ codes exist without the chunk index — rebuild before writing")
-        chunk.map { case (_, buckets) =>
-          if (buckets.isEmpty) Seq.empty[Long]
-          else graft.search.ChunkIvfIndex.indexRows(
-              graft.search.ChunkIndex.load(spark, catalog, entry)
-                .filter(col("bucket").isin(buckets: _*))
-                .join(ids, Seq("id"), "left_semi"),
-              graft.search.ChunkIvfIndex.quantizer(spark, catalog, entry))
-            .select("cluster_id").distinct().collect().map(_.getLong(0)).toSeq
-        }
-      }
-    val chunkIvf = if (hasChunkIvf) chunkClusterSet else None
-    val chunkPq = if (hasChunkPq) chunkClusterSet else None
-    Some(Pending(ids, lexBuckets, ivfClusters, pqClusters, lsh, minhash,
-      graphMeta, chunk, chunkIvf, chunkPq))
+    // stay valid (and Δ-sized) after the rewrite swaps the table dirs
+    val old = oldRows.select(DeltaCols.map(col): _*).localCheckpoint()
+    val fresh = newRows.select(DeltaCols.map(col): _*).localCheckpoint()
+    val ids = old.unionByName(fresh).select("id").distinct().localCheckpoint()
+    val d = new Delta(spark, catalog, entry, old, fresh, ids)
+    Some(Pending(d, live.map(ix => ix -> ix.affectedKeys(d))))
   }
 
-  /** Phase 2 (call AFTER the documents-table rewrite): rewrite each
-    * index's affected partitions. `newRows` is the same incoming batch
-    * passed to [[stage]] (still cached by the caller). `embedder` is the
-    * collection's embedder — the chunk-vector index embeds the fresh
-    * batch's chunks here (the late-interaction write-time cost; every
-    * other index derives its rows without a model call).
+  /** Phase 2 (call AFTER the documents-table rewrite). `embedder` is the
+    * collection's: the chunk index embeds the fresh batch's chunks here
+    * (the late-interaction write-time cost; every other index derives its
+    * rows without a model call).
     */
-  def applyPending(
-      spark: SparkSession,
-      catalog: Catalog,
-      entry: CollectionEntry,
-      pending: Option[Pending],
-      newRows: DataFrame,
-      embedder: graft.ingest.Embedder): Unit = catalog.monitor { pending.foreach { p =>
-    val fresh = newRows.select(DeltaCols.map(col): _*)
-    p.lexBuckets.foreach { buckets =>
-      val idx = LexIndex.load(spark, catalog, entry)
-        .filter(col("bucket").isin(buckets: _*))
-        .join(broadcast(p.ids), Seq("id"), "left_anti")
-        .unionByName(LexIndex.indexRows(fresh))
-      replacePartitions(idx, LexIndex.indexPath(catalog, entry),
-        Seq("bucket"), sortCol = Some("term"),
-        affectedDirs = buckets.map(b => s"bucket=$b"))
-    }
-    p.ivfClusters.foreach { clusters =>
-      val cents = IvfIndex.loadCentroids(spark, catalog, entry)
-      val idx = IvfIndex.loadIndex(spark, catalog, entry)
-        .filter(col("cluster_id").isin(clusters: _*))
-        .join(broadcast(p.ids), Seq("id"), "left_anti")
-        .unionByName(Ann.assign(fresh, cents))
-      replacePartitions(idx, IvfIndex.indexPath(catalog, entry),
-        Seq("cluster_id"), sortCol = None,
-        affectedDirs = clusters.map(c => s"cluster_id=$c"))
-    }
-    p.pqClusters.foreach { clusters =>
-      PqIndex.loadCodebooks(spark, catalog, entry).foreach { cb =>
-        val idx = PqIndex.load(spark, catalog, entry)
-          .filter(col("cluster_id").isin(clusters: _*))
-          .join(broadcast(p.ids), Seq("id"), "left_anti")
-          .unionByName(PqIndex.encodeRows(spark, catalog, entry, fresh, cb))
-        replacePartitions(idx, PqIndex.indexPath(catalog, entry),
-          Seq("cluster_id"), sortCol = None,
-          affectedDirs = clusters.map(c => s"cluster_id=$c"))
+  def applyPending(pending: Option[Pending], embedder: graft.ingest.Embedder): Unit =
+    pending.foreach { p =>
+      p.delta.catalog.monitor {
+        p.delta.embedder = embedder
+        try p.work.foreach { case (ix, keys) => ix.maintain(p.delta, keys) }
+        finally p.delta.release()
       }
     }
-    p.lsh.foreach { case (m, parts) =>
-      if (parts.nonEmpty) {
-        val pred = parts.map { case (t, k) =>
-          col("table") === t && col("key") === k
-        }.reduce(_ || _)
-        val idx = SignLshIndex.load(spark, catalog, entry)
-          .filter(pred)
-          .join(broadcast(p.ids), Seq("id"), "left_anti")
-          .unionByName(SignLshIndex.band(fresh, m))
-        replacePartitions(idx, SignLshIndex.indexPath(catalog, entry),
-          Seq("table", "key"), sortCol = None,
-          affectedDirs = parts.map { case (t, k) => s"table=$t/key=$k" })
-      }
-    }
-    p.minhash.foreach { case (m, parts) =>
-      if (parts.nonEmpty) {
-        val idx = graft.dedup.MinHashIndex.load(spark, catalog, entry)
-          .filter(col("pbucket").isin(parts: _*))
-          .join(broadcast(p.ids), Seq("id"), "left_anti")
-          .unionByName(graft.dedup.MinHashIndex.indexRows(fresh, m))
-        replacePartitions(idx, graft.dedup.MinHashIndex.indexPath(catalog, entry),
-          Seq("pbucket"), sortCol = Some("key"),
-          affectedDirs = parts.map(b => s"pbucket=$b"))
-      }
-    }
-    // the fresh batch's chunk rows are embedded ONCE (the write-time
-    // model cost) and shared by the chunk index and the chunk-level IVF
-    val freshChunks = p.chunk
-      .filter { case (_, buckets) =>
-        buckets.nonEmpty || p.chunkIvf.isDefined || p.chunkPq.isDefined }
-      .map { case (m, _) =>
-        graft.search.ChunkIndex.indexRows(
-          fresh.select("id", "content"), embedder, m.maxTokens).cache()
-      }
-    try {
-      p.chunk.foreach { case (_, buckets) =>
-        if (buckets.nonEmpty) {
-          val idx = graft.search.ChunkIndex.load(spark, catalog, entry)
-            .filter(col("bucket").isin(buckets: _*))
-            .join(broadcast(p.ids), Seq("id"), "left_anti")
-            .unionByName(freshChunks.get)
-          replacePartitions(idx, graft.search.ChunkIndex.indexPath(catalog, entry),
-            Seq("bucket"), sortCol = Some("id"),
-            affectedDirs = buckets.map(b => s"bucket=$b"))
-        }
-      }
-      p.chunkIvf.foreach { oldClusters =>
-        val cents = graft.search.ChunkIvfIndex.quantizer(spark, catalog, entry)
-        val freshRows = graft.search.ChunkIvfIndex
-          .indexRows(freshChunks.get, cents).cache()
-        try {
-          val newClusters = freshRows.select("cluster_id").distinct()
-            .collect().map(_.getLong(0)).toSeq
-          val affected = (oldClusters ++ newClusters).distinct
-          if (affected.nonEmpty) {
-            val idx = graft.search.ChunkIvfIndex.load(spark, catalog, entry)
-              .filter(col("cluster_id").isin(affected: _*))
-              .withColumn("__doc", graft.search.ChunkIvfIndex.docIdOf(col("id")))
-              .join(broadcast(p.ids.withColumnRenamed("id", "__doc")),
-                Seq("__doc"), "left_anti")
-              .drop("__doc")
-              .unionByName(freshRows)
-            replacePartitions(idx,
-              graft.search.ChunkIvfIndex.indexPath(catalog, entry),
-              Seq("cluster_id"), sortCol = Some("id"),
-              affectedDirs = affected.map(c => s"cluster_id=$c"))
-          }
-        } finally freshRows.unpersist()
-      }
-      p.chunkPq.foreach { oldClusters =>
-        graft.search.ChunkPqIndex.loadCodebooks(spark, catalog, entry).foreach { cb =>
-          // fresh codes under the FROZEN codebooks and current quantizer
-          // (the PqIndex maintenance discipline at chunk granularity)
-          val freshCodes = graft.search.ChunkPqIndex.encodeChunkRows(
-            spark, catalog, entry, freshChunks.get, cb).cache()
-          try {
-            val newClusters = freshCodes.select("cluster_id").distinct()
-              .collect().map(_.getLong(0)).toSeq
-            val affected = (oldClusters ++ newClusters).distinct
-            if (affected.nonEmpty) {
-              val idx = graft.search.ChunkPqIndex.load(spark, catalog, entry)
-                .filter(col("cluster_id").isin(affected: _*))
-                .withColumn("__doc", graft.search.ChunkIvfIndex.docIdOf(col("id")))
-                .join(broadcast(p.ids.withColumnRenamed("id", "__doc")),
-                  Seq("__doc"), "left_anti")
-                .drop("__doc")
-                .unionByName(freshCodes)
-              replacePartitions(idx,
-                graft.search.ChunkPqIndex.codesPath(catalog, entry),
-                Seq("cluster_id"), sortCol = Some("id"),
-                affectedDirs = affected.map(c => s"cluster_id=$c"))
-            }
-          } finally freshCodes.unpersist()
-        }
-      }
-    } finally freshChunks.foreach(_.unpersist())
-    p.graph.foreach { gm =>
-      // graph edges are not row-local (a node's list depends on other
-      // rows), so the graph maintains itself with its Δ×corpus algebra
-      // instead of the partition-rebuild pattern above: changed ids that
-      // no longer exist were deleted; the rest are the upserted batch.
-      // delete FIRST: its affected recomputes see the post-write corpus,
-      // and upsert dedupes any already-admitted edge.
-      val current = catalog.readDocuments(entry).select("id")
-      val changed = p.ids.select("id")
-      val goneIds = changed.join(current, Seq("id"), "left_anti")
-        .collect().map(_.getString(0)).toSeq
-      val presentIds = changed.join(current, Seq("id"), "left_semi")
-        .collect().map(_.getString(0)).toSeq
-      // Content-addressed ids USUALLY make an update old-id-gone +
-      // new-id-fresh, but addDocuments accepts caller-PINNED embeddings
-      // (Embed.withEmbeddings fills only nulls): re-upserting identical
-      // content with a different embedding keeps the id, and upsert alone
-      // would leave other nodes' stale edges scoring the OLD vector.
-      // Any present id already in the graph therefore goes through delete
-      // first — its in-edges recompute against the post-write corpus
-      // (which holds the new vector), restoring the row-identical-to-
-      // rebuild invariant; for an unchanged re-upsert the recompute is
-      // redundant but exact, and the cost stays batch-bounded.
-      val preExisting =
-        if (presentIds.isEmpty) Seq.empty[String]
-        else {
-          import spark.implicits._
-          GraphIndex.load(spark, catalog, entry).select("qid").distinct()
-            .join(org.apache.spark.sql.functions.broadcast(presentIds.toDF("qid")),
-              Seq("qid"), "left_semi")
-            .as[String].collect().toSeq
-        }
-      GraphIndex.delete(spark, catalog, entry, goneIds ++ preExisting, gm.k, gm.buckets)
-      GraphIndex.upsert(spark, catalog, entry, presentIds, gm.k, gm.buckets)
-    }
-  } }
 
-  private def replacePartitions(
-      replacement: DataFrame,
-      indexPath: String,
-      partCols: Seq[String],
-      sortCol: Option[String],
-      affectedDirs: Seq[String]): Unit =
-    graft.catalog.PartitionedTable.replacePartitions(
-      replacement, indexPath, partCols, sortCol, affectedDirs)
-
-  /** Full rebuild of whichever persisted derived indexes exist for
-    * `entry` — the explicit-rebuild path (and the fallback when no
-    * staged delta is available). `dim` is the collection's embedding
-    * dimension (for LSH re-banding).
+  /** Rebuild `parent` through `build` with its dependents kept
+    * consistent: invalidate every present dependent (a crash anywhere
+    * below then reads as dependent-absent, never as an index keyed to the
+    * old parent), run `build`, then re-derive each dependent in registry
+    * order — or drop it when it can no longer be derived (its quantizer
+    * is gone). Dependents are resolved before `build`, which may change
+    * them.
     */
-  def refreshDerived(
-      spark: SparkSession,
-      catalog: Catalog,
-      entry: CollectionEntry,
-      dim: Int,
-      embedder: Option[graft.ingest.Embedder] = None): Unit = {
-    if (exists(LexIndex.indexPath(catalog, entry)))
-      LexIndex.build(spark, catalog, entry)
-    if (exists(graft.search.ChunkIndex.indexPath(catalog, entry))) {
-      // a silent skip would leave maxsim serving stale rows while every
-      // sibling index rebuilt — the exact failure this file's contract
-      // forbids; a chunk-indexed collection REQUIRES the embedder here
-      require(embedder.isDefined,
-        "refreshDerived on a chunk-indexed collection needs its embedder (the chunk index embeds at rebuild)")
-      // invalidate the derived chunk-level IVF BEFORE the parent rewrite
-      // (Api.buildChunkIndex's crash ordering): a crash between the two
-      // rebuilds must read as index-absent, never as a stale sidecar
-      val hadChunkIvf = graft.search.ChunkIvfIndex.exists(catalog, entry)
-      if (hadChunkIvf) graft.search.ChunkIvfIndex.invalidate(catalog, entry)
-      val hadChunkPq = graft.search.ChunkPqIndex.usable(catalog, entry)
-      if (hadChunkPq) graft.search.ChunkPqIndex.invalidate(catalog, entry)
-      for {
-        e <- embedder
-        m <- graft.search.ChunkIndex.loadMeta(spark, catalog, entry)
-      } graft.search.ChunkIndex.build(spark, catalog, entry, e, m.maxTokens)
-      if (hadChunkIvf)
-        graft.search.ChunkIvfIndex.build(spark, catalog, entry)
-      if (hadChunkPq)
-        graft.search.ChunkPqIndex.reencode(spark, catalog, entry)
+  def rebuildWithDependents[T](
+      spark: SparkSession, catalog: Catalog, entry: CollectionEntry, parent: DerivedIndex)(
+      build: => T): T = catalog.monitor {
+    val deps = All.foldLeft(Seq.empty[DerivedIndex]) { (acc, ix) =>
+      if (ix.dependsOn(catalog, entry).exists(p => p == parent || acc.contains(p))) acc :+ ix
+      else acc
+    }.filter(_.exists(catalog, entry))
+    deps.foreach(_.invalidate(catalog, entry))
+    val out = build
+    deps.foreach { d =>
+      if (d.derivable(catalog, entry)) d.rederive(spark, catalog, entry)
+      else PartitionedTable.deleteDir(Paths.get(d.indexPath(catalog, entry)))
     }
-    if (exists(IvfIndex.centroidsPath(catalog, entry)) &&
-        exists(IvfIndex.indexPath(catalog, entry)))
-      IvfIndex.reassign(spark, catalog, entry)
-    if (exists(PqIndex.indexPath(catalog, entry)) &&
-        exists(PqIndex.codebooksPath(catalog, entry)))
-      PqIndex.reencode(spark, catalog, entry)
-    if (exists(SignLshIndex.indexPath(catalog, entry))) {
-      // (bits, tables, seed) come from the persisted sidecar meta written at
-      // build time — never derived from index rows, which go away when a
-      // delete empties the collection (ADVICE r3). Legacy indexes without a
-      // sidecar fall back to row-derivation once; build() then writes the
-      // sidecar, making the parameters durable from that point on.
-      val meta = SignLshIndex.metaOrDerive(spark, catalog, entry, dim)
-      meta.foreach { m =>
-        SignLshIndex.build(spark, catalog, entry, m.dim,
-          bits = m.bits, tables = m.tables, seed = m.seed)
-      }
-    }
-    if (exists(graft.dedup.MinHashIndex.indexPath(catalog, entry)))
-      graft.dedup.MinHashIndex.loadMeta(spark, catalog, entry).foreach { m =>
-        graft.dedup.MinHashIndex.build(spark, catalog, entry,
-          bands = m.bands, shingleN = m.shingleN)
-      }
-    if (exists(GraphIndex.indexPath(catalog, entry)))
-      GraphIndex.loadMeta(spark, catalog, entry).foreach { gm =>
-        GraphIndex.build(spark, catalog, entry, gm.k, gm.buckets)
-      }
+    out
   }
+
+  /** A one-row sidecar table (an index's build parameters). */
+  def writeMeta[T <: Product: TypeTag](spark: SparkSession, path: String, meta: T): Unit = {
+    import spark.implicits._
+    Seq(meta).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+  }
+
+  def readMeta[T <: Product: TypeTag](spark: SparkSession, path: String): Option[T] =
+    if (!Files.exists(Paths.get(path))) None
+    else {
+      import spark.implicits._
+      spark.read.parquet(path).as[T].collect().headOption
+    }
 }

@@ -37,13 +37,7 @@ object QSweep {
     val qns = args.lift(1).getOrElse("100,1000,10000")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // fixed corpus: 8x the sf0.1 vectors, dense long ids, synthetic 8-NN

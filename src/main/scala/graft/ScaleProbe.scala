@@ -56,13 +56,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mults = args.lift(1).getOrElse("1,8,64").split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val printTimer: (Int, String, () => Long) => Unit = (mult, op, f) => {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev harness: per-query wall time at a given sf dir. */
 object TimeIt {
@@ -8,15 +7,7 @@ object TimeIt {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     // optional: query-name substrings to run (default: all)
     val filters = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM (not ICU) case mappings: avoids a minutes-long one-time ICU
-      // title-case table build in cold JVMs; identical results on ASCII data.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(8)
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "ERROR"))
     val t00 = System.nanoTime()
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,18 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM (not ICU) case mappings: avoids a minutes-long one-time ICU
-      // title-case table build in cold JVMs; identical results on ASCII data.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // long query sequences accumulate broadcast/shuffle metadata that only
-      // a JVM GC lets the ContextCleaner reclaim; default interval is 30min
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A failing query must be a loud, machine-readable artifact — not just a

@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.catalog.{Catalog, PartitionedTable}
 import graft.functions.VectorFunctions
 import graft.model.CollectionEntry
@@ -13,10 +14,9 @@ import graft.model.CollectionEntry
   * and INCREMENTALLY maintained").
   *
   * Unlike the rest of the index family, graph edges are NOT row-local: a
-  * node's adjacency depends on every other row, so this index cannot ride
-  * the generic stage/applyPending delta (which rebuilds affected
-  * partitions from their own surviving rows). It instead maintains itself
-  * EXACTLY with one Δ×corpus scoring pass per write:
+  * node's adjacency depends on every other row, so this index overrides
+  * the registry's partition rebuild ([[graft.DerivedIndex.maintain]]) and
+  * maintains itself EXACTLY with one Δ×corpus scoring pass per write:
   *
   *  - [[upsert]]: (1) the batch's own top-k comes from scoring batch ×
   *    corpus (one corpus scan, batch broadcast); (2) an EXISTING node's
@@ -59,10 +59,53 @@ import graft.model.CollectionEntry
   * maintenance algebra above only needs "top-k among candidates" and is
   * exact relative to whichever graph it maintains.
   */
-object GraphIndex {
+object GraphIndex extends graft.DerivedIndex {
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".knng"
+  val key = "graph"
+  override val compactKey = None
+  protected val suffix = ".knng"
+  val partCols = Seq("bucket")
+  val sortCols = Seq("qid", "rank")
+  val schema = StructType.fromDDL("qid STRING, neighbor STRING, rank INT, score DOUBLE, bucket INT")
+  private val ReverseSchema = StructType.fromDDL("qid STRING, neighbor STRING, bucket INT")
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    Seq("meta" -> metaPath(catalog, entry))
+
+  /** Unused: [[maintain]] finds its own touched buckets. */
+  def affectedKeys(d: graft.Indexes.Delta): Seq[Seq[Any]] = Nil
+
+  def freshRows(d: graft.Indexes.Delta): DataFrame = d.fresh.select("id")
+
+  /** The write's changed ids that no longer exist were deleted; the rest
+    * are the upserted batch. Delete FIRST: its affected recomputes see the
+    * post-write corpus, and upsert dedupes any already-admitted edge.
+    *
+    * Content-addressed ids USUALLY make an update old-id-gone +
+    * new-id-fresh, but addDocuments accepts caller-PINNED embeddings
+    * (Embed.withEmbeddings fills only nulls): re-upserting identical
+    * content with a different embedding keeps the id, and upsert alone
+    * would leave other nodes' stale edges scoring the OLD vector. Any
+    * present id already in the graph therefore goes through delete first —
+    * its in-edges recompute against the post-write corpus (which holds the
+    * new vector), restoring the row-identical-to-rebuild invariant; for an
+    * unchanged re-upsert the recompute is redundant but exact, and the cost
+    * stays batch-bounded.
+    */
+  override def maintain(d: graft.Indexes.Delta, staged: Seq[Seq[Any]]): Unit = {
+    import d.spark.implicits._
+    val gm = loadMeta(d.spark, d.catalog, d.entry).get
+    val current = d.catalog.readDocuments(d.entry).select("id")
+    val goneIds = d.ids.join(current, Seq("id"), "left_anti").as[String].collect().toSeq
+    val presentIds = d.ids.join(current, Seq("id"), "left_semi").as[String].collect().toSeq
+    val preExisting =
+      if (presentIds.isEmpty) Seq.empty[String]
+      else load(d.spark, d.catalog, d.entry).select("qid").distinct()
+        .join(broadcast(presentIds.toDF("qid")), Seq("qid"), "left_semi")
+        .as[String].collect().toSeq
+    delete(d.spark, d.catalog, d.entry, goneIds ++ preExisting, gm.k, gm.buckets)
+    upsert(d.spark, d.catalog, d.entry, presentIds, gm.k, gm.buckets)
+  }
 
   def metaPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".knng.meta"
@@ -83,9 +126,7 @@ object GraphIndex {
   final case class GraphMeta(k: Int, buckets: Int)
 
   def loadMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[GraphMeta] =
-    if (!pathExists(metaPath(catalog, entry))) None
-    else spark.read.parquet(metaPath(catalog, entry)).collect().headOption
-      .map(r => GraphMeta(r.getAs[Int]("k"), r.getAs[Int]("buckets")))
+    graft.Indexes.readMeta[GraphMeta](spark, metaPath(catalog, entry))
 
   val DefaultBuckets = 64
 
@@ -102,9 +143,6 @@ object GraphIndex {
     */
   val AffectedBroadcastMaxRows = 4096L
 
-  private def pathExists(p: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-
   private def bucketOf(id: org.apache.spark.sql.Column, buckets: Int) =
     pmod(xxhash64(id.cast("string")), lit(buckets.toLong)).cast("int")
 
@@ -117,31 +155,28 @@ object GraphIndex {
   }
 
   /** Build (or rebuild) the full adjacency: exact k-NN per node, written
-    * partitioned by the qid's hash bucket; plus the reverse sidecar, the
-    * entry-point centroid/medoid sidecars, and the meta sidecar.
+    * partitioned by the qid's hash bucket; plus the meta sidecar, the
+    * reverse sidecar and the entry-point centroid/medoid sidecars. The
+    * index is invalidated and the old reverse sidecar dropped first, so no
+    * crash window pairs the new adjacency with the old reverse edges.
     */
   def build(
       spark: SparkSession,
       catalog: Catalog,
       entry: CollectionEntry,
       k: Int,
-      buckets: Int = DefaultBuckets): Unit = {
-    val adj = Ann.knnJoin(vectorsOf(catalog, entry), k)
-      .withColumn("bucket", bucketOf(col("qid"), buckets))
-    adj.repartition(col("bucket")).sortWithinPartitions("qid", "rank")
-      .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
+      buckets: Int = DefaultBuckets): Unit = catalog.monitor {
+    invalidate(catalog, entry)
+    PartitionedTable.deleteDir(java.nio.file.Paths.get(reversePath(catalog, entry)))
+    graft.Indexes.writeMeta(spark, metaPath(catalog, entry), GraphMeta(k, buckets))
+    writeFull(catalog, entry, Ann.knnJoin(vectorsOf(catalog, entry), k)
+      .withColumn("bucket", bucketOf(col("qid"), buckets)))
     // reverse sidecar from the freshly written forward table (narrow read;
-    // re-deriving from `adj` would run the n² knnJoin twice)
-    load(spark, catalog, entry).select("qid", "neighbor")
-      .withColumn("bucket", bucketOf(col("neighbor"), buckets))
-      .repartition(col("bucket")).sortWithinPartitions("neighbor")
-      .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-      .parquet(reversePath(catalog, entry))
+    // re-deriving it would run the n² knnJoin twice)
+    PartitionedTable.write(load(spark, catalog, entry)
+      .select(col("qid"), col("neighbor"), bucketOf(col("neighbor"), buckets).as("bucket")),
+      reversePath(catalog, entry), partCols, Seq("neighbor"))
     buildEntryPoints(spark, catalog, entry)
-    import spark.implicits._
-    Seq((k, buckets)).toDF("k", "buckets")
-      .write.mode(SaveMode.Overwrite).parquet(metaPath(catalog, entry))
   }
 
   /** Deterministic entry points: decimal-exact k-means centroids (tiny,
@@ -171,17 +206,6 @@ object GraphIndex {
       .agg(min(struct((-col("sc")).as("nsc"), col("id").as("id"))).as("m"))
       .select(col("cluster_id"), col("m.id").as("id"))
 
-  /** Declared read schemas: a delete that empties the collection leaves
-    * the adjacency and reverse tables without a data file to infer from.
-    */
-  private val IndexSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "qid STRING, neighbor STRING, rank INT, score DOUBLE, bucket INT")
-  private val ReverseSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "qid STRING, neighbor STRING, bucket INT")
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
-
   def loadReverse(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[DataFrame] =
     if (!pathExists(reversePath(catalog, entry))) None
     else Some(spark.read.schema(ReverseSchema).parquet(reversePath(catalog, entry)))
@@ -189,6 +213,9 @@ object GraphIndex {
   def loadMedoids(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[DataFrame] =
     if (!pathExists(medoidsPath(catalog, entry))) None
     else Some(spark.read.parquet(medoidsPath(catalog, entry)))
+
+  private def pathExists(p: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(p))
 
   /** Beam-search the persisted graph (see [[GraphSearch.beamSearch]]).
     * With the medoid sidecar present (every post-r8 build), each query
@@ -273,8 +300,7 @@ object GraphIndex {
       entry: CollectionEntry,
       batchIds: Seq[String],
       k: Int,
-      buckets: Int = DefaultBuckets): Unit = {
-    if (batchIds.isEmpty) return
+      buckets: Int = DefaultBuckets): Unit = if (batchIds.nonEmpty) catalog.monitor {
     // the batch arrives as a frame, not an isin literal tree: API batches
     // are ~1000 ids, but applyPending may hand this arbitrary deltas
     val batchDf = broadcast(idFrame(spark, batchIds, "batch_id").localCheckpoint())
@@ -339,7 +365,7 @@ object GraphIndex {
     val replacement = untouchedRows
       .unionByName(newEdges.withColumn("bucket", bucketOf(col("qid"), buckets)))
     PartitionedTable.replacePartitions(replacement, indexPath(catalog, entry),
-      Seq("bucket"), sortCol = Some("qid"), affectedDirs = touched.map(b => s"bucket=$b"))
+      partCols, sortCols, affectedDirs = touched.map(b => s"bucket=$b"))
     replaceReverse(spark, catalog, entry, touchedQids,
       oldEdges = idx0.join(touchedQids, Seq("qid"), "left_semi").select("qid", "neighbor"),
       newEdges = newEdges.select("qid", "neighbor"), buckets)
@@ -357,8 +383,7 @@ object GraphIndex {
       ids: Seq[String],
       k: Int,
       buckets: Int = DefaultBuckets,
-      broadcastGate: Long = AffectedBroadcastMaxRows): Unit = {
-    if (ids.isEmpty) return
+      broadcastGate: Long = AffectedBroadcastMaxRows): Unit = if (ids.nonEmpty) catalog.monitor {
     val goneDf = broadcast(idFrame(spark, ids, "gone_id").localCheckpoint())
     val idx = load(spark, catalog, entry).localCheckpoint()
     // who pointed at a deleted id: the reverse sidecar prunes the read to
@@ -410,7 +435,7 @@ object GraphIndex {
     val replacement = untouchedRows
       .unionByName(recomputed.withColumn("bucket", bucketOf(col("qid"), buckets)))
     PartitionedTable.replacePartitions(replacement, indexPath(catalog, entry),
-      Seq("bucket"), sortCol = Some("qid"), affectedDirs = touched.map(b => s"bucket=$b"))
+      partCols, sortCols, affectedDirs = touched.map(b => s"bucket=$b"))
     replaceReverse(spark, catalog, entry, touchedQids,
       oldEdges = idx.join(touchedQids, Seq("qid"), "left_semi").select("qid", "neighbor"),
       newEdges = recomputed.select("qid", "neighbor"), buckets)
@@ -442,7 +467,7 @@ object GraphIndex {
       .unionByName(newEdges)
       .withColumn("bucket", bucketOf(col("neighbor"), buckets))
     PartitionedTable.replacePartitions(replacement, reversePath(catalog, entry),
-      Seq("bucket"), sortCol = Some("neighbor"),
+      partCols, Seq("neighbor"),
       affectedDirs = rb.map(b => s"bucket=$b"))
   }
 

@@ -2,8 +2,8 @@ package graft.ann
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Indexes.Delta
 import graft.catalog.Catalog
-import graft.functions.VectorFunctions
 import graft.model.CollectionEntry
 
 /** Persistent IVF index for a collection: the documents' vectors assigned
@@ -19,10 +19,34 @@ import graft.model.CollectionEntry
   * reproducible across builds — SURVEY §7.4 exactness note); swapping in
   * KMeans centroids changes recall, not the machinery.
   */
-object IvfIndex {
+object IvfIndex extends graft.DerivedIndex {
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".ivf"
+  val key = "ivf"
+  protected val suffix = ".ivf"
+  val partCols = Seq("cluster_id")
+  val sortCols = Nil
+  /** `cluster_id` is pinned to Long: partition-column inference would type
+    * it Integer, mismatching the Long centroid_id domain in driver-side Map
+    * lookups (Integer != Long under universal equality).
+    */
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, embedding ARRAY<FLOAT>, norm DOUBLE, cluster_id BIGINT")
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    Seq("centroids" -> centroidsPath(catalog, entry))
+
+  /** The clusters the delta's old and new rows are assigned to — shared
+    * with the PQ codes, which partition on the same quantizer. Ann.assign
+    * picks one row per id, so a changed embedding's old and new clusters
+    * come from separate assignments of the two snapshots (one job).
+    */
+  def affectedKeys(d: Delta): Seq[Seq[Any]] = d.shared("ivf clusters") {
+    val cents = loadCentroids(d.spark, d.catalog, d.entry)
+    graft.Indexes.keysOf(Ann.assign(d.old, cents).unionByName(Ann.assign(d.fresh, cents)), partCols)
+  }
+
+  def freshRows(d: Delta): DataFrame =
+    Ann.assign(d.fresh, loadCentroids(d.spark, d.catalog, d.entry))
 
   def centroidsPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".ivf.centroids"
@@ -44,6 +68,7 @@ object IvfIndex {
       trainFraction: Double = 1.0): DataFrame = catalog.monitor {
     require(trainFraction > 0 && trainFraction <= 1,
       s"trainFraction $trainFraction out of (0,1]")
+    invalidate(catalog, entry)
     val docs = catalog.readDocuments(entry)
       .select(col("id"), col("embedding"), col("norm"))
     // kmeansIters > 0 refines the deterministic seeds with decimal-exact
@@ -84,15 +109,7 @@ object IvfIndex {
     // compared against the PREVIOUS build's distribution
     graft.catalog.PartitionedTable.deleteDir(java.nio.file.Paths.get(
       IndexHealth.ivfBaselinePath(catalog, entry)))
-    Ann.assign(docs, loadCentroids(spark, catalog, entry))
-      // one writer per cluster partition: without this, every input task
-      // writes a file into every cluster dir it touches (tasks x clusters
-      // small files); with it the layout is one file per cluster
-      .repartition(col("cluster_id"))
-      .write
-      .partitionBy("cluster_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
+    writeFull(catalog, entry, Ann.assign(docs, loadCentroids(spark, catalog, entry)))
     // every full (re)assign re-baselines the health sidecar: the probe's
     // "build-time distribution" is exactly this moment's corpus
     IndexHealth.writeBaseline(loadIndex(spark, catalog, entry),
@@ -125,27 +142,9 @@ object IvfIndex {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
 
-  /** Schema the assignments are read back under. Spelling it out (instead
-    * of inference) pins `cluster_id` to Long: partition-column inference
-    * would type the directory values as Integer, mismatching the Long
-    * centroid_id domain in driver-side Map lookups (Integer != Long under
-    * universal equality). A declared schema keeps the column a true
-    * partition column, so probe filters still prune physically.
-    */
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("norm", DoubleType),
-      StructField("cluster_id", LongType)))
-  }
-
-  /** The persisted assignments with `cluster_id: Long` (see [[IndexSchema]]). */
+  /** The persisted assignments ([[load]]). */
   def loadIndex(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    catalog.snapshot("relation", indexPath(catalog, entry)) {
-      spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
-    }
+    load(spark, catalog, entry)
 
   /** Adaptive probe selection: the smallest prefix of distance-ranked
     * clusters whose cumulative size reaches `numCandidates` (the

@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
@@ -28,6 +28,30 @@ object Pq {
 
   /** Codebooks: codebooks(j)(c) = codeword c of subspace j (dim/m floats). */
   type Codebooks = Seq[Seq[Array[Float]]]
+
+  /** Persist codebooks as a (j, code, cw) table at `path`. */
+  def saveCodebooks(spark: SparkSession, path: String, cb: Codebooks): Unit = {
+    import spark.implicits._
+    cb.zipWithIndex.flatMap { case (words, j) =>
+      words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
+    }.toDF("j", "code", "cw")
+      .select(col("j"), col("code"), col("cw").cast("array<float>").as("cw"))
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(path)
+  }
+
+  /** The codebooks persisted at `path`, or None when there are none. */
+  def loadCodebooks(spark: SparkSession, path: String): Option[Codebooks] =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) None
+    else {
+      val rows = spark.read.parquet(path)
+        .select("j", "code", "cw").collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray)
+        .toMap
+      val m = rows.keys.map(_._1).max + 1
+      val k = rows.keys.map(_._2).max + 1
+      Some((0 until m).map(j => (0 until k).map(c => rows((j, c)))))
+    }
 
   private def subLen(dim: Int, m: Int): Int = {
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")

@@ -2,9 +2,10 @@ package graft.ann
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Indexes.Delta
 import graft.catalog.Catalog
 import graft.model.CollectionEntry
 
@@ -34,10 +35,34 @@ import graft.model.CollectionEntry
   * codes live in a single cluster-0 partition — ADC still scans only
   * codes, there is just no partition pruning.
   */
-object PqIndex {
+object PqIndex extends graft.DerivedIndex {
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".pq"
+  val key = "pq"
+  protected val suffix = ".pq"
+  val partCols = Seq("cluster_id")
+  val sortCols = Nil
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, codes ARRAY<INT>, cluster_id BIGINT")
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    Seq("codebooks" -> codebooksPath(catalog, entry))
+
+  /** Re-encoded whenever the IVF quantizer it partitions on is rebuilt. */
+  override def dependsOn(catalog: Catalog, entry: CollectionEntry): Seq[graft.DerivedIndex] =
+    Seq(IvfIndex)
+
+  override def rederive(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Unit =
+    reencode(spark, catalog, entry)
+
+  /** The IVF cluster set (computed once for both indexes); without
+    * centroids every code lives in the single cluster-0 partition.
+    */
+  def affectedKeys(d: Delta): Seq[Seq[Any]] =
+    if (hasCentroids(d.catalog, d.entry)) IvfIndex.affectedKeys(d) else Seq(Seq(0L))
+
+  def freshRows(d: Delta): DataFrame =
+    encodeRows(d.spark, d.catalog, d.entry, d.fresh,
+      loadCodebooks(d.spark, d.catalog, d.entry).get)
 
   def codebooksPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".pq.codebooks"
@@ -45,7 +70,10 @@ object PqIndex {
   def metaPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".pq.meta"
 
-  private def exists(p: String) = Files.exists(Paths.get(p))
+  private def hasCentroids(catalog: Catalog, entry: CollectionEntry): Boolean =
+    Files.exists(Paths.get(IvfIndex.centroidsPath(catalog, entry)))
+
+  final case class PqMeta(residual: Boolean)
 
   /** Whether the persisted codes are RESIDUAL-encoded (quantized
     * embedding - centroid, the IVFADC design) — part of the index's
@@ -54,24 +82,13 @@ object PqIndex {
     * predate residual support and are raw-encoded.
     */
   def isResidual(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Boolean =
-    exists(metaPath(catalog, entry)) && {
-      val rows = spark.read.parquet(metaPath(catalog, entry)).select("residual").collect()
-      rows.nonEmpty && rows(0).getBoolean(0)
-    }
-
-  private def saveMeta(
-      spark: SparkSession,
-      catalog: Catalog,
-      entry: CollectionEntry,
-      residual: Boolean): Unit = {
-    import spark.implicits._
-    Seq(residual).toDF("residual")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(metaPath(catalog, entry))
-  }
+    graft.Indexes.readMeta[PqMeta](spark, metaPath(catalog, entry)).exists(_.residual)
 
   /** Build (or rebuild) the index from the collection's documents table:
     * train codebooks (deterministic, [[Pq.train]]), persist them, encode
-    * every vector, and write the codes cluster-partitioned.
+    * every vector, and write the codes cluster-partitioned. The old codes
+    * are invalidated first, so codebooks and codes of two different
+    * builds never serve together.
     */
   def build(
       spark: SparkSession,
@@ -82,9 +99,10 @@ object PqIndex {
       k: Int = 16,
       iters: Int = 3,
       residual: Boolean = false,
-      trainFraction: Double = 1.0): Unit = {
+      trainFraction: Double = 1.0): Unit = catalog.monitor {
     require(trainFraction > 0 && trainFraction <= 1,
       s"trainFraction $trainFraction out of (0,1]")
+    invalidate(catalog, entry)
     val docs = catalog.readDocuments(entry)
       .select(col("id"), col("embedding"), col("norm"))
     // codebooks, like the IVF quantizer, need a REPRESENTATIVE sample,
@@ -96,7 +114,7 @@ object PqIndex {
       else graft.operators.Sampling.sample(docs, "id", trainFraction)
     // residual encoding needs an IVF quantizer to take residuals AGAINST;
     // without centroids it degenerates to raw encoding, so record raw
-    val doResidual = residual && exists(IvfIndex.centroidsPath(catalog, entry))
+    val doResidual = residual && hasCentroids(catalog, entry)
     val trainRows =
       if (!doResidual) trainDocs.select("id", "embedding")
       else {
@@ -107,16 +125,9 @@ object PqIndex {
           .select("id", "embedding")
       }
     val cb = Pq.train(trainRows, dim, m, k, iters)
-    saveCodebooks(spark, catalog, entry, cb)
-    saveMeta(spark, catalog, entry, doResidual)
-    val codes = encodeRows(spark, catalog, entry, docs, cb)
-    codes
-      // one writer per cluster partition (see IvfIndex.build)
-      .repartition(col("cluster_id"))
-      .write
-      .partitionBy("cluster_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
+    Pq.saveCodebooks(spark, codebooksPath(catalog, entry), cb)
+    graft.Indexes.writeMeta(spark, metaPath(catalog, entry), PqMeta(doResidual))
+    writeFull(catalog, entry, encodeRows(spark, catalog, entry, docs, cb))
   }
 
   /** PQ-encode a set of rows (id, embedding, norm) and attach their IVF
@@ -133,7 +144,7 @@ object PqIndex {
       rows: DataFrame,
       cb: Pq.Codebooks): DataFrame = {
     val dim = cb.size * cb.head.head.length
-    if (!exists(IvfIndex.centroidsPath(catalog, entry)))
+    if (!hasCentroids(catalog, entry))
       return Pq.encode(rows.select("id", "embedding"), dim, cb)
         .withColumn("cluster_id", lit(0L))
     val cents = IvfIndex.loadCentroids(spark, catalog, entry)
@@ -155,73 +166,16 @@ object PqIndex {
     */
   def reencode(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Unit =
     loadCodebooks(spark, catalog, entry).foreach { cb =>
-      val docs = catalog.readDocuments(entry)
-        .select(col("id"), col("embedding"), col("norm"))
-      encodeRows(spark, catalog, entry, docs, cb)
-        .repartition(col("cluster_id"))
-        .write
-        .partitionBy("cluster_id")
-        .mode(SaveMode.Overwrite)
-        .parquet(indexPath(catalog, entry))
+      writeFull(catalog, entry, encodeRows(spark, catalog, entry,
+        catalog.readDocuments(entry).select(col("id"), col("embedding"), col("norm")), cb))
     }
-
-  /** Clusters the given rows would land in — the write path's affected-
-    * partition probe (Δ-sized; no index read).
-    */
-  def clustersOf(
-      spark: SparkSession,
-      catalog: Catalog,
-      entry: CollectionEntry,
-      rows: DataFrame): Seq[Long] =
-    if (exists(IvfIndex.centroidsPath(catalog, entry))) {
-      val cents = IvfIndex.loadCentroids(spark, catalog, entry)
-      Ann.assign(rows.select("id", "embedding", "norm"), cents)
-        .select("cluster_id").distinct().collect().map(_.getLong(0)).toSeq
-    } else Seq(0L)
-
-  private def saveCodebooks(
-      spark: SparkSession,
-      catalog: Catalog,
-      entry: CollectionEntry,
-      cb: Pq.Codebooks): Unit = {
-    import spark.implicits._
-    cb.zipWithIndex.flatMap { case (words, j) =>
-      words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
-    }.toDF("j", "code", "cw")
-      .select(col("j"), col("code"), col("cw").cast("array<float>").as("cw"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(codebooksPath(catalog, entry))
-  }
 
   /** The persisted codebooks, or None when no PQ index was ever built. */
   def loadCodebooks(
       spark: SparkSession,
       catalog: Catalog,
       entry: CollectionEntry): Option[Pq.Codebooks] =
-    if (!exists(codebooksPath(catalog, entry))) None
-    else {
-      val rows = spark.read.parquet(codebooksPath(catalog, entry))
-        .select("j", "code", "cw").collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray)
-        .toMap
-      val m = rows.keys.map(_._1).max + 1
-      val k = rows.keys.map(_._2).max + 1
-      Some((0 until m).map(j => (0 until k).map(c => rows((j, c)))))
-    }
-
-  /** Schema the codes are read back under (declared: see
-    * IvfIndex.IndexSchema for why partition-column inference is avoided).
-    */
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("codes", ArrayType(IntegerType)),
-      StructField("cluster_id", LongType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
+    Pq.loadCodebooks(spark, codebooksPath(catalog, entry))
 
   /** Approximate top-k through the persisted index: driver-side probe
     * selection (adaptive, numCandidates oversampling floor — reference
@@ -238,10 +192,10 @@ object PqIndex {
       k: Int,
       numCandidates: Long,
       oversample: Int = 4): DataFrame = {
+    val index = load(spark, catalog, entry)
     val cb = loadCodebooks(spark, catalog, entry).getOrElse(
       throw new graft.model.GraftException(graft.model.ErrorCodes.AnnIndexNotFound))
-    val index = load(spark, catalog, entry)
-    val hasCentroids = exists(IvfIndex.centroidsPath(catalog, entry))
+    val hasCentroids = this.hasCentroids(catalog, entry)
     val centroidRows =
       if (!hasCentroids) Array.empty[org.apache.spark.sql.Row]
       else IvfIndex.loadCentroids(spark, catalog, entry)

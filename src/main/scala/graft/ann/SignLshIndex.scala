@@ -1,7 +1,8 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Indexes.Delta
 import graft.catalog.Catalog
 import graft.functions.VectorFunctions
 import graft.model.CollectionEntry
@@ -22,32 +23,38 @@ import graft.model.CollectionEntry
   */
 /** Build-time configuration of a sign-LSH index, persisted as a one-row
   * sidecar table next to the index itself. The layout parameters are part
-  * of the index — deriving them from index ROWS (max(table), key length)
-  * breaks the moment a write empties the collection: an empty rebuild has
-  * no rows, the parameters become unrecoverable, and every later refresh
-  * must silently skip. The sidecar survives empty rebuilds.
+  * of the index — never derived from index ROWS, which a write that
+  * empties the collection takes away. The sidecar survives empty rebuilds.
   */
 final case class LshMeta(bits: Int, tables: Int, seed: Long, dim: Int)
 
-object SignLshIndex {
+object SignLshIndex extends graft.DerivedIndex {
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".signlsh"
+  val key = "lsh"
+  override val compactKey = Some("signlsh")
+  protected val suffix = ".signlsh"
+  val partCols = Seq("table", "key")
+  val sortCols = Nil
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, embedding ARRAY<FLOAT>, norm DOUBLE, `table` INT, `key` STRING")
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    Seq("meta" -> metaPath(catalog, entry))
+
+  private def meta(d: Delta): LshMeta =
+    d.shared("lsh meta")(requireMeta(d.spark, d.catalog, d.entry))
+
+  def affectedKeys(d: Delta): Seq[Seq[Any]] =
+    graft.Indexes.keysOf(band(d.both, meta(d)), partCols)
+
+  def freshRows(d: Delta): DataFrame = band(d.fresh, meta(d))
 
   def metaPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".signlsh.meta"
 
-  /** The persisted build parameters, or None when no index was ever built
-    * (or a legacy index predates the sidecar).
-    */
-  def loadMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[LshMeta] = {
-    val p = metaPath(catalog, entry)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p))) None
-    else {
-      import spark.implicits._
-      spark.read.parquet(p).as[LshMeta].collect().headOption
-    }
-  }
+  /** The persisted build parameters, or None when no index was ever built. */
+  def loadMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[LshMeta] =
+    graft.Indexes.readMeta[LshMeta](spark, metaPath(catalog, entry))
 
   /** Like [[loadMeta]] but governed: missing index/meta surfaces the stable
     * error code instead of a raw storage exception (ADVICE r3: no ungoverned
@@ -56,24 +63,6 @@ object SignLshIndex {
   def requireMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): LshMeta =
     loadMeta(spark, catalog, entry).getOrElse(
       throw new graft.model.GraftException(graft.model.ErrorCodes.AnnIndexNotFound))
-
-  /** [[loadMeta]], with a one-time fallback for legacy indexes that predate
-    * the sidecar: derive (bits, tables) from the index rows — possible only
-    * while the index is non-empty; the default seed is the only one legacy
-    * builds could have used. Returns None when neither source has the
-    * parameters (legacy index emptied before a sidecar existed).
-    */
-  def metaOrDerive(
-      spark: SparkSession, catalog: Catalog, entry: CollectionEntry, dim: Int): Option[LshMeta] =
-    loadMeta(spark, catalog, entry).orElse {
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(indexPath(catalog, entry)))) None
-      else {
-        val row = load(spark, catalog, entry)
-          .agg(max(col("table")), max(length(col("key")))).collect()(0)
-        if (row.isNullAt(0)) None
-        else Some(LshMeta(bits = row.getInt(1), tables = row.getInt(0) + 1, seed = 42L, dim = dim))
-      }
-    }
 
   /** Deterministic hyperplanes: tables x bits x dim gaussians from a seeded
     * RNG — identical sequence at build and query time.
@@ -129,7 +118,10 @@ object SignLshIndex {
       posexplode(array(ps.map(keyCol): _*)).as(Seq("table", "key")))
   }
 
-  /** Build (or rebuild) the index from the collection's documents table. */
+  /** Build (or rebuild) the index from the collection's documents table.
+    * The meta sidecar lands before the index rows, so a crash between the
+    * two reads as index-absent, never as new rows under old parameters.
+    */
   def build(
       spark: SparkSession,
       catalog: Catalog,
@@ -137,37 +129,14 @@ object SignLshIndex {
       dim: Int,
       bits: Int = 8,
       tables: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    val docs = catalog.readDocuments(entry)
-      .select(col("id"), col("embedding"), col("norm"))
-    val banded = band(docs, LshMeta(bits, tables, seed, dim))
-    banded
-      // one writer per (table,key) partition (see IvfIndex.build): at
-      // bits=8, tables=8 the layout has up to 2048 partitions — without
-      // the repartition each input task fans out into all of them
-      .repartition(col("table"), col("key"))
-      .write
-      .partitionBy("table", "key")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
-    import spark.implicits._
-    spark.createDataset(Seq(LshMeta(bits, tables, seed, dim))).toDF()
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(metaPath(catalog, entry))
+      seed: Long = 42L): DataFrame = catalog.monitor {
+    invalidate(catalog, entry)
+    val meta = LshMeta(bits, tables, seed, dim)
+    graft.Indexes.writeMeta(spark, metaPath(catalog, entry), meta)
+    writeFull(catalog, entry,
+      band(catalog.readDocuments(entry).select(col("id"), col("embedding"), col("norm")), meta))
     load(spark, catalog, entry)
   }
-
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("norm", DoubleType),
-      StructField("table", IntegerType),
-      StructField("key", StringType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
 
   /** Ids of `batch` rows ((id, embedding, norm)) that near-duplicate an
     * already-indexed document with a DIFFERENT id at cosine >= `threshold`

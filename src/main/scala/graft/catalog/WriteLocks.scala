@@ -21,14 +21,16 @@ object WriteLocks {
     val key =
       try java.nio.file.Paths.get(warehouseDir).toAbsolutePath.normalize.toString
       catch { case _: Exception => warehouseDir }
-    locks.computeIfAbsent(key, _ => new WarehouseMonitor)
+    locks.computeIfAbsent(key, _ => new WarehouseMonitor(key))
   }
 }
 
 /** One warehouse's write monitor and its serving snapshot.
   *
   * `apply(body)` runs a write: exclusive and reentrant (a JVM monitor), so
-  * gated paths may call each other.
+  * gated paths may call each other. The outermost write first finishes any
+  * partition swap a crash interrupted ([[PartitionedTable.rollForward]]),
+  * so its reads see finished tables.
   *
   * [[snapshot]] memoizes state that is a pure function of the warehouse's
   * files — catalog entries, resolved relations (a reused DataFrame keeps
@@ -41,7 +43,7 @@ object WriteLocks {
   * no write began or ended while it computed, and a stored value is used
   * only at the generation it was computed at.
   */
-final class WarehouseMonitor private[catalog] () {
+final class WarehouseMonitor private[catalog] (warehouseDir: String) {
   private val seq = new AtomicLong(0L)
   private var depth = 0 // guarded by this
   private val memo = new ConcurrentHashMap[Any, (Long, Any)]()
@@ -49,8 +51,10 @@ final class WarehouseMonitor private[catalog] () {
   def apply[T](body: => T): T = synchronized {
     if (depth == 0) seq.incrementAndGet()
     depth += 1
-    try body
-    finally {
+    try {
+      if (depth == 1) PartitionedTable.rollForwardAll(warehouseDir)
+      body
+    } finally {
       depth -= 1
       if (depth == 0) {
         memo.clear()

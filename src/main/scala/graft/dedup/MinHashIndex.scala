@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Indexes.Delta
 import graft.catalog.Catalog
 import graft.model.CollectionEntry
 
@@ -35,27 +36,37 @@ final case class MinHashMeta(bands: Int, shingleN: Int)
   * index: a write stages the affected pbucket partitions from the delta's
   * own band keys and rewrites only those — O(batch), not O(corpus).
   */
-object MinHashIndex {
+object MinHashIndex extends graft.DerivedIndex {
+
+  val key = "minhash"
+  protected val suffix = ".minhash"
+  val partCols = Seq("pbucket")
+  val sortCols = Seq("key")
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, band INT, `key` STRING, pbucket INT")
+  override def notFound: String = graft.model.ErrorCodes.DedupIndexNotFound
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    Seq("meta" -> metaPath(catalog, entry))
+
+  private def meta(d: Delta): MinHashMeta =
+    d.shared("minhash meta")(requireMeta(d.spark, d.catalog, d.entry))
+
+  def affectedKeys(d: Delta): Seq[Seq[Any]] =
+    graft.Indexes.keysOf(indexRows(d.both, meta(d)), partCols)
+
+  def freshRows(d: Delta): DataFrame = indexRows(d.fresh, meta(d))
 
   /** Physical partition-dir count; same sizing logic as
     * [[graft.search.LexIndex.NumBuckets]].
     */
   val NumBuckets = 64
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".minhash"
-
   def metaPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".minhash.meta"
 
-  def loadMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[MinHashMeta] = {
-    val p = metaPath(catalog, entry)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p))) None
-    else {
-      import spark.implicits._
-      spark.read.parquet(p).as[MinHashMeta].collect().headOption
-    }
-  }
+  def loadMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[MinHashMeta] =
+    graft.Indexes.readMeta[MinHashMeta](spark, metaPath(catalog, entry))
 
   /** Governed form: a missing index surfaces the stable error code, not a
     * raw storage exception.
@@ -90,35 +101,16 @@ object MinHashIndex {
       catalog: Catalog,
       entry: CollectionEntry,
       bands: Int = 16,
-      shingleN: Int = 3): DataFrame = {
+      shingleN: Int = 3): DataFrame = catalog.monitor {
     require(Dedup.MinHashSeeds.size % bands == 0,
       s"bands=$bands must divide ${Dedup.MinHashSeeds.size}")
+    invalidate(catalog, entry)
     val meta = MinHashMeta(bands, shingleN)
-    val docs = catalog.readDocuments(entry).select(col("id"), col("content"))
-    indexRows(docs, meta)
-      .repartition(col("pbucket"))
-      .sortWithinPartitions("key")
-      .write
-      .partitionBy("pbucket")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
-    import spark.implicits._
-    spark.createDataset(Seq(meta)).toDF()
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(metaPath(catalog, entry))
+    graft.Indexes.writeMeta(spark, metaPath(catalog, entry), meta)
+    writeFull(catalog, entry,
+      indexRows(catalog.readDocuments(entry).select(col("id"), col("content")), meta))
     load(spark, catalog, entry)
   }
-
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("band", IntegerType),
-      StructField("key", StringType),
-      StructField("pbucket", IntegerType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
 
   /** Ids of `batch` rows ((id, content)) whose text near-duplicates an
     * already-ingested document with a DIFFERENT id at Jaccard >=

@@ -249,7 +249,7 @@ object Ingest {
       .select((cols :+ "bucket").map(col): _*)
     graft.catalog.PartitionedTable.replacePartitions(
       existing.unionByName(withBucket), catalog.tablePath(entry),
-      Seq("bucket"), sortCol = None,
+      Seq("bucket"), sortCols = Nil,
       affectedDirs = buckets.map(b => s"bucket=$b"))
   }
 
@@ -267,7 +267,7 @@ object Ingest {
       .filter(!col("id").isin(ids: _*))
     graft.catalog.PartitionedTable.replacePartitions(
       survivors, catalog.tablePath(entry),
-      Seq("bucket"), sortCol = None,
+      Seq("bucket"), sortCols = Nil,
       affectedDirs = buckets.map(b => s"bucket=$b"))
   }
 }

@@ -1,9 +1,10 @@
 package graft.search
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Indexes.Delta
 import graft.catalog.Catalog
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.ingest.{Embed, Embedder, Ingest}
@@ -47,12 +48,35 @@ import graft.model.CollectionEntry
   *     candidates come from the scored vectors themselves, so the only
   *     recall loss is quantization; `candidateSource` auto prefers it.
   */
-object ChunkIndex {
+object ChunkIndex extends graft.DerivedIndex {
 
   val DefaultMaxTokens = 64
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".chunkvecs"
+  val key = "chunkvecs"
+  protected val suffix = ".chunkvecs"
+  val partCols = Seq("bucket")
+  val sortCols = Seq("id", "chunk_idx")
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, chunk_idx INT, vec ARRAY<FLOAT>, bucket INT")
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    Seq("meta" -> metaPath(catalog, entry))
+
+  /** Chunk rows share the documents table's id-bucket layout: the
+    * affected partitions are exactly the changed ids' buckets (no chunking
+    * or embedding at stage time).
+    */
+  def affectedKeys(d: Delta): Seq[Seq[Any]] = d.shared("id buckets") {
+    graft.Indexes.keysOf(d.ids.select(Ingest.idBucket(col("id")).as("bucket")), partCols)
+  }
+
+  /** The fresh batch's chunk rows, embedded ONCE per write (the write-time
+    * model cost) for this index and the two chunk-level indexes.
+    */
+  def freshRows(d: Delta): DataFrame = d.shared("fresh chunks") {
+    val meta = loadMeta(d.spark, d.catalog, d.entry).get
+    d.cache(indexRows(d.fresh.select("id", "content"), d.embedder, meta.maxTokens))
+  }
 
   def metaPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".chunkvecs.meta"
@@ -60,9 +84,7 @@ object ChunkIndex {
   final case class ChunkMeta(maxTokens: Int)
 
   def loadMeta(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Option[ChunkMeta] =
-    if (!Files.exists(Paths.get(metaPath(catalog, entry)))) None
-    else spark.read.parquet(metaPath(catalog, entry)).collect().headOption
-      .map(r => ChunkMeta(r.getAs[Int]("max_tokens")))
+    graft.Indexes.readMeta[ChunkMeta](spark, metaPath(catalog, entry))
 
   /** Index rows for a document batch (id, content):
     * (id, chunk_idx, vec normalized ARRAY<FLOAT>, bucket).
@@ -97,41 +119,21 @@ object ChunkIndex {
       catalog: Catalog,
       entry: CollectionEntry,
       embedder: Embedder,
-      maxTokens: Int = DefaultMaxTokens): DataFrame = {
-    val docs = catalog.readDocuments(entry).select(col("id"), col("content"))
+      maxTokens: Int = DefaultMaxTokens): DataFrame = catalog.monitor {
     // crash ordering: drop any OLD index first, then meta, then the new
     // index. Every crash window is then harmless-or-loud — no-index
     // states don't serve or maintain, index-without-meta fails
-    // Indexes.stage's hard require — and the silent failure mode is
+    // Indexes.stage's sidecar check — and the silent failure mode is
     // unreachable: new-meta + OLD-index (a rebuild with different
     // maxTokens crashing between the writes would maintain a 64-token
     // index at 32-token chunking forever) cannot occur because the old
     // index is already gone when the new meta lands.
-    graft.catalog.PartitionedTable.deleteDir(
-      Paths.get(indexPath(catalog, entry)))
-    import spark.implicits._
-    Seq(maxTokens).toDF("max_tokens").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(metaPath(catalog, entry))
-    indexRows(docs, embedder, maxTokens)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("id", "chunk_idx")
-      .write.partitionBy("bucket")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
+    graft.catalog.PartitionedTable.deleteDir(Paths.get(indexPath(catalog, entry)))
+    graft.Indexes.writeMeta(spark, metaPath(catalog, entry), ChunkMeta(maxTokens))
+    writeFull(catalog, entry, indexRows(
+      catalog.readDocuments(entry).select(col("id"), col("content")), embedder, maxTokens))
     load(spark, catalog, entry)
   }
-
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("chunk_idx", IntegerType),
-      StructField("vec", ArrayType(FloatType)),
-      StructField("bucket", IntegerType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
 
   /** Maxsim serving from the persisted index.
     *

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Indexes.Delta
 import graft.catalog.Catalog
 import graft.functions.VectorFunctions
 import graft.model.CollectionEntry
@@ -50,14 +51,58 @@ import graft.model.CollectionEntry
   * are uuid-hex, '#'-free by construction). Maintenance is the standard
   * two-phase partition rebuild ([[graft.Indexes]]): a write touching Δ
   * documents rewrites only the clusters their old and new chunk vectors
-  * inhabit — O(Δ × cluster) work at any corpus size. Rebuilding the
-  * doc-level IVF (new centroids) re-assigns this index too
-  * ([[graft.Api.buildAnnIndex]]), keeping the one-quantizer invariant.
+  * inhabit — O(Δ × cluster) work at any corpus size. Rebuilding the chunk
+  * index, or the doc-level IVF of a doc-aligned index (new centroids),
+  * re-derives this index too ([[graft.Indexes.rebuildWithDependents]]),
+  * keeping the one-quantizer invariant.
   */
-object ChunkIvfIndex {
+object ChunkIvfIndex extends graft.DerivedIndex {
 
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".chunkvecs.ivf"
+  val key = "chunkivf"
+  protected val suffix = ".chunkvecs.ivf"
+  val partCols = Seq("cluster_id")
+  val sortCols = Seq("id")
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, embedding ARRAY<FLOAT>, norm DOUBLE, cluster_id BIGINT")
+  override protected val freshKeys = true
+  override protected def docId: org.apache.spark.sql.Column = docIdOf(col("id"))
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    quantizerSidecar(catalog, entry)
+
+  /** The chunk index, and the quantizer unless it is the own sidecar. */
+  private[search] def quantizerSidecar(catalog: Catalog, entry: CollectionEntry) =
+    Seq("chunk index" -> Paths.get(ChunkIndex.indexPath(catalog, entry), "_SUCCESS").toString) ++
+      (if (hasOwnCentroids(catalog, entry)) Nil
+       else Seq("IVF centroids" -> graft.ann.IvfIndex.centroidsPath(catalog, entry)))
+
+  override def dependsOn(catalog: Catalog, entry: CollectionEntry): Seq[graft.DerivedIndex] =
+    ChunkIndex +: (if (hasOwnCentroids(catalog, entry)) Nil else Seq(graft.ann.IvfIndex))
+
+  override def derivable(catalog: Catalog, entry: CollectionEntry): Boolean =
+    quantizerExists(catalog, entry)
+
+  override def rederive(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Unit =
+    build(spark, catalog, entry)
+
+  /** The clusters of the changed ids' STORED chunk rows under the current
+    * quantizer (a bucket-pruned chunk-index read, never a full scan) —
+    * shared with the chunk-PQ codes, which partition on the same
+    * quantizer. The fresh batch's clusters join at apply time.
+    */
+  def affectedKeys(d: Delta): Seq[Seq[Any]] = d.shared("chunk clusters") {
+    val buckets = ChunkIndex.affectedKeys(d)
+    if (buckets.isEmpty) Nil
+    else graft.Indexes.keysOf(indexRows(
+      ChunkIndex.load(d.spark, d.catalog, d.entry)
+        .filter(graft.Indexes.inPartitions(ChunkIndex.partCols, buckets))
+        .join(d.ids, Seq("id"), "left_semi"),
+      quantizer(d.spark, d.catalog, d.entry)), partCols)
+  }
+
+  def freshRows(d: Delta): DataFrame = d.shared("chunk ivf rows") {
+    d.cache(indexRows(ChunkIndex.freshRows(d), quantizer(d.spark, d.catalog, d.entry)))
+  }
 
   /** The OWN centroid sidecar of a chunk-trained index ([[buildChunkTrained]]);
     * absent for doc-aligned indexes. Shares the table-path prefix, so
@@ -88,29 +133,6 @@ object ChunkIvfIndex {
       spark.read.parquet(centroidsPath(catalog, entry))
     else graft.ann.IvfIndex.loadCentroids(spark, catalog, entry)
 
-  /** A usable index = the dir AND its write job's _SUCCESS marker: a
-    * crash mid-build (including the re-assign inside
-    * [[graft.Api.buildAnnIndex]], where the NEW centroids are already
-    * persisted) must read as index-absent — auto routing then falls back
-    * to the doc-level/chunk routes and maintenance skips — never as a
-    * partial or wrong-quantizer index served silently.
-    */
-  def exists(catalog: Catalog, entry: CollectionEntry): Boolean =
-    Files.exists(Paths.get(indexPath(catalog, entry))) &&
-      Files.exists(Paths.get(indexPath(catalog, entry), "_SUCCESS"))
-
-  /** Invalidate the persisted index AHEAD of a parent-artifact rewrite
-    * (chunk index re-chunk, IVF quantizer rebuild). [[exists]] demands the
-    * `_SUCCESS` marker, so dropping just the marker makes every crash
-    * window between the parent's commit and this index's rebuild read as
-    * index-absent — auto routing falls back, maintenance skips — instead
-    * of silently serving (and desyncing) an index keyed to the OLD
-    * chunking/quantizer. The caller rebuilds via [[build]] afterwards,
-    * which drops and rewrites the whole dir anyway.
-    */
-  def invalidate(catalog: Catalog, entry: CollectionEntry): Unit =
-    Files.deleteIfExists(Paths.get(indexPath(catalog, entry), "_SUCCESS"))
-
   /** Index rows for chunk-index rows (id, chunk_idx, vec):
     * (id = doc#chunk, doc-recoverable, embedding, norm, cluster_id).
     */
@@ -126,14 +148,8 @@ object ChunkIvfIndex {
     * current quantizer source ([[quantizer]]) — the re-derive entry the
     * parent rebuilds (re-chunk, doc-quantizer rebuild) call.
     */
-  def build(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = {
-    // drop the old index first: every crash window then reads as
-    // index-absent (exists() also demands _SUCCESS), never as a stale
-    // index keyed to the previous quantizer or chunking
-    graft.catalog.PartitionedTable.deleteDir(
-      Paths.get(indexPath(catalog, entry)))
+  def build(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
     writeAssigned(spark, catalog, entry, quantizer(spark, catalog, entry))
-  }
 
   /** Build doc-ALIGNED: key the index on the collection's doc-level IVF
     * centroids and DROP any chunk-trained sidecar (the explicit switch
@@ -142,14 +158,13 @@ object ChunkIvfIndex {
     * between the two leaves an orphaned sidecar and no index, which the
     * next build simply resolves through [[quantizer]].
     */
-  def buildDocAligned(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = {
-    graft.catalog.PartitionedTable.deleteDir(
-      Paths.get(indexPath(catalog, entry)))
-    graft.catalog.PartitionedTable.deleteDir(
-      Paths.get(centroidsPath(catalog, entry)))
-    writeAssigned(spark, catalog, entry,
-      graft.ann.IvfIndex.loadCentroids(spark, catalog, entry))
-  }
+  def buildDocAligned(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
+    catalog.monitor {
+      invalidate(catalog, entry)
+      graft.catalog.PartitionedTable.deleteDir(Paths.get(centroidsPath(catalog, entry)))
+      writeAssigned(spark, catalog, entry,
+        graft.ann.IvfIndex.loadCentroids(spark, catalog, entry))
+    }
 
   /** Build with a quantizer TRAINED ON THE CHUNK VECTORS themselves —
     * the PLAID recipe (arXiv:2205.09707): deterministic decimal-exact
@@ -170,12 +185,11 @@ object ChunkIvfIndex {
       entry: CollectionEntry,
       nClusters: Int,
       kmeansIters: Int = 2,
-      trainFraction: Double = 1.0): DataFrame = {
+      trainFraction: Double = 1.0): DataFrame = catalog.monitor {
     require(nClusters >= 0, s"nClusters $nClusters out of range")
     require(trainFraction > 0 && trainFraction <= 1,
       s"trainFraction $trainFraction out of (0,1]")
-    graft.catalog.PartitionedTable.deleteDir(
-      Paths.get(indexPath(catalog, entry)))
+    invalidate(catalog, entry)
     val chunks = ChunkIndex.load(spark, catalog, entry).select(
         concat(col("id"), lit("#"), col("chunk_idx")).as("id"),
         col("vec").as("embedding"))
@@ -202,7 +216,8 @@ object ChunkIvfIndex {
       spark: SparkSession,
       catalog: Catalog,
       entry: CollectionEntry,
-      centroids: DataFrame): DataFrame = {
+      centroids: DataFrame): DataFrame = catalog.monitor {
+    invalidate(catalog, entry)
     // invalidate-first: drop the PREVIOUS build's health baseline before
     // the index lands, so a crash between the index write and the fresh
     // baseline below reads as baseline-missing (governed
@@ -210,29 +225,12 @@ object ChunkIvfIndex {
     // index silently compared against the prior build's distribution
     graft.catalog.PartitionedTable.deleteDir(Paths.get(
       graft.ann.IndexHealth.chunkIvfBaselinePath(catalog, entry)))
-    indexRows(ChunkIndex.load(spark, catalog, entry), centroids)
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions("id")
-      .write.partitionBy("cluster_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
+    writeFull(catalog, entry, indexRows(ChunkIndex.load(spark, catalog, entry), centroids))
     // every full (re)build re-baselines the drift probe's sidecar
     graft.ann.IndexHealth.writeBaseline(load(spark, catalog, entry), centroids,
       graft.ann.IndexHealth.chunkIvfBaselinePath(catalog, entry))
     load(spark, catalog, entry)
   }
-
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("norm", DoubleType),
-      StructField("cluster_id", LongType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
 
   /** The doc id a chunk-row key belongs to. */
   def docIdOf(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

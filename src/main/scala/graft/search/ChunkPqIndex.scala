@@ -1,11 +1,10 @@
 package graft.search
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Indexes.Delta
 import graft.ann.Pq
 import graft.catalog.Catalog
 import graft.functions.VectorFunctions
@@ -55,35 +54,48 @@ import graft.model.CollectionEntry
   * quantizer rebuilds invalidate-first and [[reencode]] re-derives every
   * code under the new centroids.
   */
-object ChunkPqIndex {
+object ChunkPqIndex extends graft.DerivedIndex {
 
-  def codesPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".chunkvecs.pq"
+  val key = "chunkpq"
+  protected val suffix = ".chunkvecs.pq"
+  val partCols = Seq("cluster_id")
+  val sortCols = Seq("id")
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, codes ARRAY<INT>, cluster_id BIGINT")
+  override protected val freshKeys = true
+  override protected def docId: Column = ChunkIvfIndex.docIdOf(col("id"))
+
+  override def sidecars(catalog: Catalog, entry: CollectionEntry): Seq[(String, String)] =
+    ("codebooks" -> codebooksPath(catalog, entry)) +:
+      ChunkIvfIndex.quantizerSidecar(catalog, entry)
+
+  /** Re-encoded when the chunk rows or their quantizer are rebuilt. */
+  override def dependsOn(catalog: Catalog, entry: CollectionEntry): Seq[graft.DerivedIndex] =
+    ChunkIvfIndex +: ChunkIvfIndex.dependsOn(catalog, entry)
+
+  override def derivable(catalog: Catalog, entry: CollectionEntry): Boolean =
+    ChunkIvfIndex.quantizerExists(catalog, entry)
+
+  override def rederive(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Unit =
+    reencode(spark, catalog, entry)
+
+  /** The chunk-IVF cluster set (one quantizer, computed once for both). */
+  def affectedKeys(d: Delta): Seq[Seq[Any]] = ChunkIvfIndex.affectedKeys(d)
+
+  /** Fresh codes under the FROZEN codebooks and current quantizer. */
+  def freshRows(d: Delta): DataFrame = d.cache(encodeChunkRows(d.spark, d.catalog, d.entry,
+    ChunkIndex.freshRows(d), loadCodebooks(d.spark, d.catalog, d.entry).get))
 
   def codebooksPath(catalog: Catalog, entry: CollectionEntry): String =
     catalog.tablePath(entry) + ".chunkvecs.pq.codebooks"
 
-  private def exists(p: String) = Files.exists(Paths.get(p))
-
-  /** A usable index = codes dir + its write job's `_SUCCESS` + the
-    * codebook sidecar + a readable quantizer. Any crash window between a
-    * parent rebuild and this index's re-encode must read as
-    * index-absent (auto routing falls back, maintenance skips), never
-    * serve codes keyed to a stale quantizer/chunking.
+  /** A servable index: present ([[exists]]) with a readable quantizer.
+    * Any crash window between a parent rebuild and this index's re-encode
+    * reads as index-absent (auto routing falls back, maintenance skips),
+    * never serves codes keyed to a stale quantizer/chunking.
     */
   def usable(catalog: Catalog, entry: CollectionEntry): Boolean =
-    exists(codesPath(catalog, entry)) &&
-      exists(codesPath(catalog, entry) + "/_SUCCESS") &&
-      exists(codebooksPath(catalog, entry)) &&
-      ChunkIvfIndex.quantizerExists(catalog, entry)
-
-  /** Invalidate ahead of a parent-artifact rewrite (re-chunk, quantizer
-    * rebuild): dropping just the `_SUCCESS` marker makes every crash
-    * window read as index-absent ([[usable]] demands it); the caller
-    * re-derives via [[reencode]] (which rewrites the whole dir) after.
-    */
-  def invalidate(catalog: Catalog, entry: CollectionEntry): Unit =
-    Files.deleteIfExists(Paths.get(codesPath(catalog, entry), "_SUCCESS"))
+    exists(catalog, entry) && ChunkIvfIndex.quantizerExists(catalog, entry)
 
   /** Build (or rebuild) from the persisted chunk index: assign every
     * chunk vector under the collection's chunk quantizer
@@ -100,16 +112,15 @@ object ChunkPqIndex {
       m: Int = 8,
       k: Int = 16,
       iters: Int = 2,
-      trainFraction: Double = 1.0): Long = {
+      trainFraction: Double = 1.0): Long = catalog.monitor {
     require(trainFraction > 0 && trainFraction <= 1,
       s"trainFraction $trainFraction out of (0,1]")
     val dim = entry.dimension
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    // crash ordering: old codes first (usable() reads absent from here on),
-    // then the old codebooks — a codebook/codes pairing from two different
-    // builds can never serve
-    graft.catalog.PartitionedTable.deleteDir(Paths.get(codesPath(catalog, entry)))
-    graft.catalog.PartitionedTable.deleteDir(Paths.get(codebooksPath(catalog, entry)))
+    // crash ordering: old codes first (absent from here on), then the new
+    // codebooks — a codebook/codes pairing from two different builds can
+    // never serve
+    invalidate(catalog, entry)
     val cents = ChunkIvfIndex.quantizer(spark, catalog, entry)
     val residuals = residualRows(
       ChunkIvfIndex.indexRows(ChunkIndex.load(spark, catalog, entry), cents), cents)
@@ -117,8 +128,8 @@ object ChunkPqIndex {
       if (trainFraction >= 1.0) residuals
       else graft.operators.Sampling.sample(residuals, "id", trainFraction)
     val cb = Pq.train(train.select("id", "embedding"), dim, m, k, iters)
-    saveCodebooks(spark, catalog, entry, cb)
-    writeCodes(encodeAssigned(residuals, cb, dim), catalog, entry)
+    Pq.saveCodebooks(spark, codebooksPath(catalog, entry), cb)
+    writeFull(catalog, entry, encodeAssigned(residuals, cb, dim))
     load(spark, catalog, entry).count()
   }
 
@@ -129,10 +140,8 @@ object ChunkPqIndex {
     */
   def reencode(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): Unit =
     loadCodebooks(spark, catalog, entry).foreach { cb =>
-      val cents = ChunkIvfIndex.quantizer(spark, catalog, entry)
-      val residuals = residualRows(
-        ChunkIvfIndex.indexRows(ChunkIndex.load(spark, catalog, entry), cents), cents)
-      writeCodes(encodeAssigned(residuals, cb, entry.dimension), catalog, entry)
+      writeFull(catalog, entry, encodeChunkRows(spark, catalog, entry,
+        ChunkIndex.load(spark, catalog, entry), cb))
     }
 
   /** Residual rows (id, embedding = vec − assigned centroid, cluster_id)
@@ -142,17 +151,15 @@ object ChunkPqIndex {
     Pq.residualOf(assigned,
       centroids.select(col("centroid_id").as("cluster_id"), col("centroid")))
 
-  /** Codes (id, codes, cluster_id) for residual rows under codebooks —
-    * the row-level unit [[build]]/[[reencode]] (whole table) and the
-    * write path's incremental partition refresh (Δ batch only) share.
-    */
+  /** Codes (id, codes, cluster_id) for residual rows under codebooks. */
   private def encodeAssigned(residuals: DataFrame, cb: Pq.Codebooks, dim: Int): DataFrame =
     Pq.encode(residuals.select("id", "embedding"), dim, cb)
       .join(residuals.select(col("id"), col("cluster_id")), "id")
 
-  /** Codes for a FRESH chunk-row batch (id, chunk_idx, vec) — the
-    * maintenance unit: assign under the current quantizer, take
-    * residuals, encode under the frozen codebooks.
+  /** Codes for chunk rows (id, chunk_idx, vec) — the row-level unit of
+    * [[reencode]] (whole table) and write-path maintenance (Δ batch):
+    * assign under the current quantizer, take residuals, encode under the
+    * frozen codebooks.
     */
   def encodeChunkRows(
       spark: SparkSession,
@@ -166,57 +173,12 @@ object ChunkPqIndex {
       cb, entry.dimension)
   }
 
-  private def writeCodes(codes: DataFrame, catalog: Catalog, entry: CollectionEntry): Unit =
-    codes
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions("id")
-      .write.partitionBy("cluster_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(codesPath(catalog, entry))
-
-  private def saveCodebooks(
-      spark: SparkSession,
-      catalog: Catalog,
-      entry: CollectionEntry,
-      cb: Pq.Codebooks): Unit = {
-    import spark.implicits._
-    cb.zipWithIndex.flatMap { case (words, j) =>
-      words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
-    }.toDF("j", "code", "cw")
-      .select(col("j"), col("code"), col("cw").cast("array<float>").as("cw"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(codebooksPath(catalog, entry))
-  }
-
   /** The persisted codebooks, or None when never built. */
   def loadCodebooks(
       spark: SparkSession,
       catalog: Catalog,
       entry: CollectionEntry): Option[Pq.Codebooks] =
-    if (!exists(codebooksPath(catalog, entry))) None
-    else {
-      val rows = spark.read.parquet(codebooksPath(catalog, entry))
-        .select("j", "code", "cw").collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray)
-        .toMap
-      val m = rows.keys.map(_._1).max + 1
-      val k = rows.keys.map(_._2).max + 1
-      Some((0 until m).map(j => (0 until k).map(c => rows((j, c)))))
-    }
-
-  /** Declared schema (cluster_id pinned to Long — the IvfIndex.IndexSchema
-    * rationale: partition-column inference would type it Integer).
-    */
-  private val CodesSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("codes", ArrayType(IntegerType)),
-      StructField("cluster_id", LongType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    spark.read.schema(CodesSchema).parquet(codesPath(catalog, entry))
+    Pq.loadCodebooks(spark, codebooksPath(catalog, entry))
 
   /** Per-query top-k GROUPS by approximate ADC dot product over coded
     * rows — the [[graft.ann.Ann.ivfGroupTopKBatchAdaptive]] shape with

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
 import graft.ingest.Ingest
@@ -19,15 +19,22 @@ import graft.model.CollectionEntry
   * 3-term query over a B-bucket index reads <= 3/B of the postings
   * regardless of corpus size.
   */
-object LexIndex {
+object LexIndex extends graft.DerivedIndex {
+
+  val key = "lexical"
+  override val compactKey = Some("postings")
+  protected val suffix = ".postings"
+  val partCols = Seq("bucket")
+  // rows sorted by term inside each file so parquet row-group min/max
+  // stats prune term lookups within a bucket
+  val sortCols = Seq("term")
+  val schema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id STRING, dl INT, term STRING, tf BIGINT, bucket INT")
 
   /** Bucket count: enough for 64x scan pruning, few enough that tiny
     * collections do not fragment into thousands of files.
     */
   val NumBuckets = 64
-
-  def indexPath(catalog: Catalog, entry: CollectionEntry): String =
-    catalog.tablePath(entry) + ".postings"
 
   /** Stable term -> bucket hash, definable identically in any SQL oracle:
     * first two hex chars of md5, mod NumBuckets.
@@ -50,39 +57,17 @@ object LexIndex {
     Ingest.postings(docs.select(col("id"), col("content")))
       .withColumn("bucket", bucketOf(col("term")))
 
+  def affectedKeys(d: graft.Indexes.Delta): Seq[Seq[Any]] =
+    graft.Indexes.keysOf(indexRows(d.both), partCols)
+
+  def freshRows(d: graft.Indexes.Delta): DataFrame = indexRows(d.fresh)
+
   /** Build (or rebuild) the index from the collection's documents table. */
   def build(
       spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame = catalog.monitor {
-    val docs = catalog.readDocuments(entry).select(col("id"), col("content"))
-    indexRows(docs)
-      // one writer per bucket, rows sorted by term inside each file so
-      // parquet row-group min/max stats prune term lookups within a bucket
-      .repartition(col("bucket"))
-      .sortWithinPartitions("term")
-      .write
-      .partitionBy("bucket")
-      .mode(SaveMode.Overwrite)
-      .parquet(indexPath(catalog, entry))
+    writeFull(catalog, entry, indexRows(catalog.readDocuments(entry)))
     load(spark, catalog, entry)
   }
-
-  /** Read the index back under a declared schema (bucket stays Int — see
-    * IvfIndex.IndexSchema for why inference is avoided on partition cols).
-    */
-  private val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("dl", IntegerType),
-      StructField("term", StringType),
-      StructField("tf", LongType),
-      StructField("bucket", IntegerType)))
-  }
-
-  def load(spark: SparkSession, catalog: Catalog, entry: CollectionEntry): DataFrame =
-    catalog.snapshot("relation", indexPath(catalog, entry)) {
-      spark.read.schema(IndexSchema).parquet(indexPath(catalog, entry))
-    }
 
   /** BM25 document statistics: N documents, mean document length. */
   final case class DocStats(n: Double, avgdl: Double)

@@ -229,7 +229,7 @@ object StreamingIngest {
       // bucket-level MERGE: compaction rewrites only the micro-batch's
       // id buckets, so maintenance cost tracks batch size, not corpus size
       Ingest.mergeUpsert(spark, catalog, entry, embedded, Some(buckets))
-      graft.Indexes.applyPending(spark, catalog, entry, pending, embedded, embedder)
+      graft.Indexes.applyPending(pending, embedder)
       // bloom existence sketch is a derived index like the rest: fold the
       // micro-batch's ids in so batch-API inserts keep their O(batch) check
       graft.ingest.BloomGate.noteInserted(catalog, entry, embedded)
