@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 
-import graft.ann.{GraphIndex, IvfIndex, PqIndex}
+import graft.ann.{GraphIndex, PqIndex}
 import graft.ingest.DeterministicHashEmbedder
 import graft.model.{CollectionEntry, ErrorCodes, GraftException}
 
@@ -87,10 +87,11 @@ class IndexRegistrySpec extends SparkSpec {
     val entry = entryOf(api, "crash")
     api.buildAnnIndex("crash", nClusters = 3)
     api.buildPqIndex("crash", m = 4, k = 4, iters = 1)
-    // the crash window: buildAnnIndex invalidated the codes, then the new
-    // quantizer landed, then the process died before the re-encode
-    Files.delete(Paths.get(PqIndex.indexPath(api.catalog, entry), "_SUCCESS"))
-    IvfIndex.build(spark, api.catalog, entry, nClusters = 5)
+    // a quantizer rebuild that dies after it started rewriting: the codes
+    // it would have re-encoded must read as absent, not as codes keyed to
+    // the old quantizer
+    intercept[Exception](api.buildAnnIndex("crash", nClusters = -1))
+    assert(!PqIndex.exists(api.catalog, entry))
     val q = Seq("registry doc 3 about topic t3 with words w3")
     notFound(ErrorCodes.AnnIndexNotFound)(api.semanticSearchPq("crash", q, 3))
     val before = files(PqIndex.indexPath(api.catalog, entry))
@@ -98,7 +99,8 @@ class IndexRegistrySpec extends SparkSpec {
     api.deleteDocuments("crash", api.catalog.readDocuments(entry).select("id").as[String]
       .collect().take(2).toSeq)
     assert(files(PqIndex.indexPath(api.catalog, entry)) == before)
-    // a completed rebuild re-derives the codes under the new quantizer
+    // rebuilt, and re-encoded by the next quantizer rebuild
+    api.buildAnnIndex("crash", nClusters = 5)
     api.buildPqIndex("crash", m = 4, k = 4, iters = 1)
     api.buildAnnIndex("crash", nClusters = 4)
     def rows(df: DataFrame): Set[String] =
