@@ -80,24 +80,27 @@ class PartitionSwapSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(path + ".delta")))
   }
 
-  test("the documents table: a write into the interrupted bucket sees it finished first") {
+  test("the documents table: the next write finishes an interrupted swap before it reads") {
     val api = new Api(spark, Files.createTempDirectory("graft-wh").toString,
       new DeterministicHashEmbedder(16))
     val texts = (0 until 40).map(i => s"swap document $i")
     api.createCollection("swap", documents = Some(texts.toDF("content")))
+    api.buildLexicalIndex("swap")
     val entry = api.catalog.getCollection(api.catalog.physicalName("default", "swap"))
     val tablePath = api.catalog.tablePath(entry)
     val victim = Ingest.contentIdScala(texts(5))
     val b = Ingest.idBucketScala(victim)
-    // a delete of `victim` staged its bucket, deleted the live dir and died
-    PartitionedTable.stage(api.catalog.readDocumentsPhysical(entry)
-      .filter($"bucket" === b && $"id" =!= victim), tablePath, Seq("bucket"), Nil, Seq(s"bucket=$b"))
+    // a compaction of the victim's bucket staged its (row-identical) swap,
+    // deleted the live dir and died
+    PartitionedTable.stage(api.catalog.readDocumentsPhysical(entry).filter($"bucket" === b),
+      tablePath, Seq("bucket"), Nil, Seq(s"bucket=$b"))
     PartitionedTable.deleteDir(Paths.get(tablePath, s"bucket=$b"))
-    // the next write lands in the same bucket
-    val fresh = Iterator.from(0).map(i => s"fresh document $i")
-      .find(c => Ingest.idBucketScala(Ingest.contentIdScala(c)) == b).get
-    api.addDocuments("swap", Seq(fresh).toDF("content"))
+    // the next write deletes from that bucket: its index maintenance reads
+    // the victim's row before any swap of its own
+    api.deleteDocuments("swap", Seq(victim))
     val ids = api.catalog.readDocuments(entry).select("id").as[String].collect().toSet
-    assert(ids == (texts.filterNot(_ == texts(5)) :+ fresh).map(Ingest.contentIdScala).toSet)
+    assert(ids == texts.filterNot(_ == texts(5)).map(Ingest.contentIdScala).toSet)
+    assert(graft.search.LexIndex.load(spark, api.catalog, entry).select("id").as[String]
+      .collect().toSet == ids, "the lexical index kept the deleted document")
   }
 }
