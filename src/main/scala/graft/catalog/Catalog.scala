@@ -167,7 +167,7 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
     readDocumentsPhysical(entry).drop("bucket")
 
   /** The physical layout: logical columns + the id-hash `bucket` partition
-    * column (declared, not inferred — see IvfIndex.IndexSchema), for
+    * column (declared, not inferred — see IvfIndex.schema), for
     * writers doing partition-level merges and readers that prune buckets.
     */
   def readDocumentsPhysical(entry: CollectionEntry): DataFrame =
