@@ -438,21 +438,124 @@ final class Api(
     Ingest.getByIds(catalog.readDocumentsForIds(entry, ids), ids)
   }
 
-  // ---- search ----
+  // ---- search: one route table ----
+  //
+  // Every question route is `request` (validation, then the collection
+  // lookup), a leg from `semanticHits`/`lexicalHits` or an RRF fusion of
+  // one of each, and `respond` (the payload join). The scan routes that
+  // carry their payload through the top-k (semanticSearch, lexicalSearch,
+  // lexicalSearchBm25), the MMR re-rank and the phrase snippet serialize
+  // their own frames.
 
-  private def docs(name: String): DataFrame =
-    catalog.readDocuments(catalog.getCollection(physical(name)))
+  private type Entry = graft.model.CollectionEntry
+
+  private def docs(entry: Entry): DataFrame = catalog.readDocuments(entry)
+
+  /** Rows a semantic leg may score: a zero-norm embedding has no cosine
+    * (it would raise DIVIDE_BY_ZERO under ANSI and fail the request), so
+    * it never takes a top-k slot or an RRF rank. Lexical legs still see it.
+    */
+  private def scorable(rows: DataFrame): DataFrame = rows.filter(col("norm") > 0)
+
+  private def embed(qs: Seq[(Int, String)]): Seq[(Int, Seq[Float])] =
+    qs.map { case (i, q) => i -> embedder.embedQuery(q).toSeq }
+
+  /** The prologue of every question route: the result count, the route's
+    * own argument `checks`, the question batch (sanitized, indexed by
+    * position), then the collection lookup — so an invalid request never
+    * reports a storage or index error.
+    */
+  private def request[T](name: String, questions: Seq[String], nResults: Int,
+      checks: => Unit = ())(body: (Entry, Seq[(Int, String)], Int) => T): T = {
+    val k = validLimit(nResults)
+    checks
+    val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
+    body(catalog.getCollection(physical(name)), qs, k)
+  }
+
+  /** A route served from a (query_idx, id, score) frame: [[request]], then
+    * [[respond]].
+    */
+  private def serve(name: String, questions: Seq[String], nResults: Int,
+      checks: => Unit = (), attribute: Boolean = false)(
+      hits: (Entry, Seq[(Int, String)], Int) => DataFrame): SearchResponse =
+    request(name, questions, nResults, checks)((e, qs, k) => respond(e, hits(e, qs, k), attribute))
+
+  /** The payload join: hits (query_idx, id, score) get their content and
+    * metadata, in (question, score desc, id) order. `attribute` records
+    * each hit's question in its metadata under the reserved "query_idx"
+    * key (per-question counts vary, so a flat batch response cannot be
+    * sliced by stride).
+    */
+  private def respond(entry: Entry, hits: DataFrame, attribute: Boolean): SearchResponse = {
+    val metadata =
+      if (attribute) Api.withQueryIdx(col("d.metadata"), col("f.query_idx")) else col("d.metadata")
+    serialize(hits.alias("f")
+      .join(docs(entry).alias("d"), col("f.id") === col("d.id"), "left")
+      .select(col("f.query_idx"), col("f.id"), col("d.content"), metadata.as("metadata"),
+        col("f.score"))
+      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id").asc))
+  }
+
+  /** The semantic leg of `mode` ([[McpSurface.SemanticModes]]): (query_idx,
+    * id, score), top-k per question. maxsim embeds per token itself, so
+    * only the single-vector modes embed the questions.
+    */
+  private def semanticHits(entry: Entry, mode: String, qs: Seq[(Int, String)], k: Int): DataFrame =
+    mode match {
+      case "exact" => Semantic.search(scorable(docs(entry)), embed(qs), k)
+      case "approx" => approxHits(entry, embed(qs), k)
+      case "lsh" => lshHits(entry, embed(qs), k)
+      case "pq" => pqHits(entry, embed(qs), k)
+      case "maxsim" => maxsimHits(entry, qs, k)
+      case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
+    }
+
+  /** The lexical leg of `mode` ([[McpSurface.LexicalModes]]): (query_idx,
+    * id, score), top-k per question.
+    */
+  private def lexicalHits(entry: Entry, mode: String, qs: Seq[(Int, String)], k: Int): DataFrame =
+    mode match {
+      case "scan" => Lexical.search(docs(entry), qs, k)
+      case "bm25" => Lexical.searchBm25Many(docs(entry), qs, k)
+      case "indexed" => graft.search.LexIndex.searchTf(
+        graft.search.LexIndex.load(spark, catalog, entry), qs, k)
+      case "bm25_indexed" => bm25Hits(entry, qs, k)
+      case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
+    }
+
+  /** The route table behind both MCP search tools: `action` with its
+    * resolved modes over a question batch. `single` marks the
+    * per-question tool: its hybrid checks the question before the
+    * weights, and its maxsim and hybrid hits carry no question
+    * attribution.
+    */
+  private[graft] def route(
+      action: String, semanticMode: String, lexicalMode: String, name: String,
+      questions: Seq[String], nResults: Int, semanticWeight: Double,
+      lexicalWeight: Double, rrfK: Int, single: Boolean): SearchResponse =
+    (action, semanticMode, lexicalMode) match {
+      case ("semantic_search", "exact", _) => semanticSearch(name, questions, nResults)
+      case ("semantic_search", "diverse", _) => semanticSearchDiverse(name, questions.head, nResults)
+      case ("semantic_search", m, _) =>
+        serve(name, questions, nResults, attribute = !single && m == "maxsim")(semanticHits(_, m, _, _))
+      case ("lexical_search", _, "scan") => lexicalSearch(name, questions, nResults)
+      case ("lexical_search", _, "bm25") => lexicalSearchBm25(name, questions, nResults)
+      case ("lexical_search", _, "phrase") => phraseSearch(name, questions.head, nResults)
+      case ("lexical_search", _, m) => serve(name, questions, nResults)(lexicalHits(_, m, _, _))
+      case (_, sm, lm) if single => searchIndexed(name, questions.head, nResults,
+        semanticWeight, lexicalWeight, rrfK, sm, lm)
+      case (_, sm, lm) => searchIndexedMany(name, questions, nResults,
+        semanticWeight, lexicalWeight, rrfK, sm, lm)
+    }
 
   def semanticSearch(
       name: String, questions: Seq[String], nResults: Int = 10,
-      distanceThreshold: Double = -1.0): SearchResponse = {
-    val k = validLimit(nResults)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString)
-      .zipWithIndex.map { case (q, i) => i -> embedder.embedQuery(q).toSeq }
-    val res = Semantic.search(docs(name), qs, k, distanceThreshold,
-      payload = Seq("content", "metadata"))
-    serialize(res)
-  }
+      distanceThreshold: Double = -1.0): SearchResponse =
+    request(name, questions, nResults) { (e, qs, k) =>
+      serialize(Semantic.search(scorable(docs(e)), embed(qs), k, distanceThreshold,
+        payload = Seq("content", "metadata")))
+    }
 
   /** Build (or rebuild) the persistent chunk-vector index — the
     * late-interaction serving state ([[graft.search.ChunkIndex]]):
@@ -504,6 +607,11 @@ final class Api(
       trainFraction: Double = 1.0): Long = writeLock {
     require(Set("doc", "chunks").contains(trainOn),
       s"trainOn '$trainOn' not in {doc, chunks}")
+    // checked before the dependents are invalidated, like buildAnnIndex
+    if (trainOn == "chunks") {
+      require(nClusters >= 0, s"nClusters $nClusters out of range")
+      validTrainFraction(trainFraction)
+    }
     val entry = catalog.getCollection(physical(validCollection(name)))
     graft.search.ChunkIndex.requirePresent(catalog, entry)
     if (trainOn == "doc") graft.ann.IvfIndex.requirePresent(catalog, entry)
@@ -577,22 +685,9 @@ final class Api(
       name: String, question: String, nResults: Int = 10,
       perTokenT: Int = 25, maxQueryTokens: Int = 16,
       candidateSource: String = "auto",
-      where: Option[org.apache.spark.sql.Column] = None): SearchResponse = {
-    val k = validLimit(nResults)
-    // validate the REQUEST before touching storage (the sibling routes'
-    // precedence: an invalid question must never report an index error)
-    validMaxsimParams(perTokenT, maxQueryTokens, candidateSource)
-    val q = Sanitize.sanitizeString(validQuestions(Seq(question)).head)
-    val entry = catalog.getCollection(physical(validCollection(name)))
-    val res = maxsimHits(entry, Seq(0 -> q), k, perTokenT, maxQueryTokens,
-      candidateSource, where)
-    val payload = res.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.id"), col("d.content"), col("d.metadata"),
-        col("f.score"))
-      .orderBy(col("f.score").desc, col("f.id").asc)
-    serialize(payload)
-  }
+      where: Option[org.apache.spark.sql.Column] = None): SearchResponse =
+    maxsim(name, Seq(question), nResults, perTokenT, maxQueryTokens, candidateSource, where,
+      attribute = false)
 
   /** Batched late-interaction (maxsim) search — [[maxsimSearch]] over a
     * question LIST. Every candidate route's serving core is already a
@@ -605,32 +700,23 @@ final class Api(
     * serve_maxsim_many_* rows price the loop alternative at 10-30× the
     * drive time). Validation, candidate routing, and per-question scores
     * are identical to the single-question route (MaxsimManySpec pins
-    * result identity); results order (query_idx, score desc, id).
+    * result identity); results order (query_idx, score desc, id), each
+    * hit's question under the "query_idx" metadata key.
     */
   def maxsimSearchMany(
       name: String, questions: Seq[String], nResults: Int = 10,
       perTokenT: Int = 25, maxQueryTokens: Int = 16,
       candidateSource: String = "auto",
-      where: Option[org.apache.spark.sql.Column] = None): SearchResponse = {
-    val k = validLimit(nResults)
-    validMaxsimParams(perTokenT, maxQueryTokens, candidateSource)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString)
-      .zipWithIndex.map(_.swap)
-    val entry = catalog.getCollection(physical(validCollection(name)))
-    val res = maxsimHits(entry, qs, k, perTokenT, maxQueryTokens,
-      candidateSource, where)
-    val payload = res.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        // per-question counts can differ (sparse matches, the non-finite
-        // filter), so the flat response carries each hit's question in
-        // the metadata (the phraseSearch snippet precedent) — callers
-        // attribute by key, never by stride
-        Api.withQueryIdx(col("d.metadata"), col("f.query_idx")).as("metadata"),
-        col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id").asc)
-    serialize(payload)
-  }
+      where: Option[org.apache.spark.sql.Column] = None): SearchResponse =
+    maxsim(name, questions, nResults, perTokenT, maxQueryTokens, candidateSource, where,
+      attribute = true)
+
+  private def maxsim(
+      name: String, questions: Seq[String], nResults: Int, perTokenT: Int,
+      maxQueryTokens: Int, candidateSource: String,
+      where: Option[org.apache.spark.sql.Column], attribute: Boolean): SearchResponse =
+    serve(name, questions, nResults, validMaxsimParams(perTokenT, maxQueryTokens, candidateSource),
+      attribute)(maxsimHits(_, _, _, perTokenT, maxQueryTokens, candidateSource, where))
 
   private def validMaxsimParams(
       perTokenT: Int, maxQueryTokens: Int, candidateSource: String): Unit = {
@@ -652,23 +738,20 @@ final class Api(
     */
   def semanticSearchDiverse(
       name: String, question: String, nResults: Int = 10,
-      lambda: Double = 0.5, oversample: Int = 4): SearchResponse = {
-    val k = validLimit(nResults)
-    require(oversample >= 1 && k.toLong * oversample <= 10000,
-      s"oversample $oversample out of range for k=$k")
-    val q = Sanitize.sanitizeString(validQuestions(Seq(question)).head)
-    val d = docs(name)
-    val short = Semantic.search(d, Seq(0 -> embedder.embedQuery(q).toSeq),
-        k * oversample, payload = Seq("embedding"))
-      .select("id", "score", "embedding")
-    val reranked = graft.search.Mmr.rerank(short, k, lambda)
-    val payload = reranked.alias("f")
-      .join(d.alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.rank"), col("f.id"), col("d.content"), col("d.metadata"),
-        col("f.mmr").as("score"))
-      .orderBy(col("f.rank"))
-    serialize(payload.drop("rank"))
-  }
+      lambda: Double = 0.5, oversample: Int = 4): SearchResponse =
+    request(name, Seq(question), nResults,
+      require(oversample >= 1 && nResults.toLong * oversample <= 10000,
+        s"oversample $oversample out of range for k=$nResults")) { (e, qs, k) =>
+      val d = docs(e)
+      val short = Semantic.search(scorable(d), embed(qs), k * oversample, payload = Seq("embedding"))
+        .select("id", "score", "embedding")
+      val payload = graft.search.Mmr.rerank(short, k, lambda).alias("f")
+        .join(d.alias("d"), col("f.id") === col("d.id"), "left")
+        .select(col("f.rank"), col("f.id"), col("d.content"), col("d.metadata"),
+          col("f.mmr").as("score"))
+        .orderBy(col("f.rank"))
+      serialize(payload.drop("rank"))
+    }
 
   /** Build (or rebuild) the collection's persistent ANN index (IVF layout,
     * cluster-partitioned parquet — see graft.ann.IvfIndex).
@@ -676,6 +759,10 @@ final class Api(
   def buildAnnIndex(
       name: String, nClusters: Int, kmeansIters: Int = 0,
       trainFraction: Double = 1.0): DataFrame = writeLock {
+    // checked before the dependents are invalidated: a rejected call must
+    // leave every index as it was
+    require(nClusters >= 1, s"nClusters $nClusters out of range")
+    validTrainFraction(trainFraction)
     val entry = catalog.getCollection(physical(name))
     // the PQ codes, and a DOC-ALIGNED chunk-level IVF and its residual-PQ
     // codes, are partitioned (PQ residuals also VALUED) under the IVF
@@ -684,6 +771,9 @@ final class Api(
       graft.ann.IvfIndex.build(spark, catalog, entry, nClusters, kmeansIters, trainFraction)
     }
   }
+
+  private def validTrainFraction(f: Double): Unit =
+    require(f > 0 && f <= 1, s"trainFraction $f out of (0,1]")
 
   /** Approximate semantic search through the ANN index, carrying the
     * reference's recall knob: candidates considered >= max(10*k, 100)
@@ -694,22 +784,8 @@ final class Api(
   def semanticSearchApprox(
       name: String,
       questions: Seq[String],
-      nResults: Int = 10): SearchResponse = {
-    val k = validLimit(nResults)
-    // validate the batch BEFORE touching storage: an empty or invalid batch
-    // must surface as the governed error, not an index-read failure
-    val valid = validQuestions(questions).map(Sanitize.sanitizeString)
-    val entry = catalog.getCollection(physical(name))
-    val qs = valid.zipWithIndex.map { case (q, i) => i -> embedder.embedQuery(q).toSeq }
-    val union = approxHits(entry, qs, k)
-    val docsDf = docs(name)
-    val payload = union.alias("f")
-      .join(docsDf.alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        col("d.metadata"), col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id"))
-    serialize(payload)
-  }
+      nResults: Int = 10): SearchResponse =
+    serve(name, questions, nResults)(semanticHits(_, "approx", _, _))
 
   /** IVF-approx hits (query_idx, id, score) for prepared query vectors —
     * the serving core shared by [[semanticSearchApprox]] and the
@@ -727,12 +803,11 @@ final class Api(
     // unioned scans (driver-bound — the QSweep cliff); the batched route
     // serves the whole batch in ONE adaptive-nprobe plan with identical
     // scores/tie-breaks (AnnServeSpec parity)
+    val assigned = scorable(graft.ann.IvfIndex.loadIndex(spark, catalog, entry))
     if (qs.size > Api.BatchedServeThreshold)
-      return graft.ann.Ann.ivfTopKBatchAdaptive(
-        graft.ann.IvfIndex.loadIndex(spark, catalog, entry),
+      return graft.ann.Ann.ivfTopKBatchAdaptive(assigned,
         graft.ann.IvfIndex.loadCentroids(spark, catalog, entry),
         qs, k, numCandidates)
-    val assigned = graft.ann.IvfIndex.loadIndex(spark, catalog, entry)
     val clusterSizes = graft.ann.IvfIndex.clusterSizes(spark, catalog, entry)
     val centroidRows = graft.ann.IvfIndex.centroidRows(spark, catalog, entry)
     val results = qs.map { case (qIdx, qVec) =>
@@ -757,11 +832,10 @@ final class Api(
   }
 
   def lexicalSearch(
-      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse = {
-    val k = validLimit(nResults)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
-    serialize(Lexical.search(docs(name), qs, k, payload = Seq("content", "metadata")))
-  }
+      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse =
+    request(name, questions, nResults) { (e, qs, k) =>
+      serialize(Lexical.search(docs(e), qs, k, payload = Seq("content", "metadata")))
+    }
 
   /** Positional phrase search over the collection: query terms ADJACENT
     * and IN ORDER, ranked by phrase occurrence count, with a snippet
@@ -772,26 +846,24 @@ final class Api(
     */
   def phraseSearch(
       name: String, question: String, nResults: Int = 10,
-      window: Int = 5): SearchResponse = {
-    val k = validLimit(nResults)
-    require(window >= 0 && window <= 100, s"window $window out of range")
-    val q = Sanitize.sanitizeString(validQuestions(Seq(question)).head)
-    val d = docs(name)
-    val hits = Lexical.phraseSearch(
-      d.select(col("id"), col("content")), Seq(0 -> q), k, window)
-    val payload = hits.alias("h")
-      .join(d.alias("d"), col("h.id") === col("d.id"))
-      .select(col("h.id").as("id"), col("d.content").as("content"),
-        // snippet/phrase_tf are reserved response keys: stored metadata
-        // carrying either would throw under the default map-key dedup
-        // policy (withReservedMeta strips them first)
-        Api.withReservedMeta(col("d.metadata"),
-          map(lit("snippet"), col("h.snippet"),
-            lit("phrase_tf"), col("h.phrase_tf").cast("string"))).as("metadata"),
-        col("h.phrase_tf").cast("double").as("score"))
-      .orderBy(col("score").desc, col("id"))
-    serialize(payload)
-  }
+      window: Int = 5): SearchResponse =
+    request(name, Seq(question), nResults,
+      require(window >= 0 && window <= 100, s"window $window out of range")) { (e, qs, k) =>
+      val d = docs(e)
+      val hits = Lexical.phraseSearch(d.select(col("id"), col("content")), qs, k, window)
+      val payload = hits.alias("h")
+        .join(d.alias("d"), col("h.id") === col("d.id"))
+        .select(col("h.id").as("id"), col("d.content").as("content"),
+          // snippet/phrase_tf are reserved response keys: stored metadata
+          // carrying either would throw under the default map-key dedup
+          // policy (withReservedMeta strips them first)
+          Api.withReservedMeta(col("d.metadata"),
+            map(lit("snippet"), col("h.snippet"),
+              lit("phrase_tf"), col("h.phrase_tf").cast("string"))).as("metadata"),
+          col("h.phrase_tf").cast("double").as("score"))
+        .orderBy(col("score").desc, col("id"))
+      serialize(payload)
+    }
 
   /** Build (or rebuild) the collection's persistent sign-LSH ANN index
     * (graft.ann.SignLshIndex) — the angular-hash alternative to the IVF
@@ -858,19 +930,8 @@ final class Api(
     */
   def semanticSearchLsh(
       name: String, questions: Seq[String], nResults: Int = 10,
-      multiProbe: Int = 0): SearchResponse = {
-    val k = validLimit(nResults)
-    val valid = validQuestions(questions).map(Sanitize.sanitizeString)
-    val entry = catalog.getCollection(physical(name))
-    val qs = valid.zipWithIndex.map { case (q, i) => i -> embedder.embedQuery(q).toSeq }
-    val hits = lshHits(entry, qs, k, multiProbe)
-    val payload = hits.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        col("d.metadata"), col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id"))
-    serialize(payload)
-  }
+      multiProbe: Int = 0): SearchResponse =
+    serve(name, questions, nResults)((e, qs, k) => lshHits(e, embed(qs), k, multiProbe))
 
   /** Build (or rebuild) the collection's persistent IVF-PQ index
     * (graft.ann.PqIndex) — cluster-partitioned PQ codes + persisted
@@ -897,19 +958,8 @@ final class Api(
     */
   def semanticSearchPq(
       name: String, questions: Seq[String], nResults: Int = 10,
-      oversample: Int = 4): SearchResponse = {
-    val k = validLimit(nResults)
-    val valid = validQuestions(questions).map(Sanitize.sanitizeString)
-    val entry = catalog.getCollection(physical(name))
-    val qs = valid.zipWithIndex.map { case (q, i) => i -> embedder.embedQuery(q).toSeq }
-    val hits = pqHits(entry, qs, k, oversample)
-    val payload = hits.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        col("d.metadata"), col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id"))
-    serialize(payload)
-  }
+      oversample: Int = 4): SearchResponse =
+    serve(name, questions, nResults)((e, qs, k) => pqHits(e, embed(qs), k, oversample))
 
   /** Build (or rebuild) the collection's persistent lexical index —
     * term-bucket-partitioned postings (graft.search.LexIndex), the durable
@@ -954,48 +1004,25 @@ final class Api(
     * scan, no document content touched until the final payload join.
     */
   def lexicalSearchIndexed(
-      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse = {
-    val k = validLimit(nResults)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
-    val entry = catalog.getCollection(physical(name))
-    val index = graft.search.LexIndex.load(spark, catalog, entry)
-    val hits = graft.search.LexIndex.searchTf(index, qs, k)
-    val payload = hits.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        col("d.metadata"), col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id"))
-    serialize(payload)
-  }
+      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse =
+    serve(name, questions, nResults)(lexicalHits(_, "indexed", _, _))
 
   /** BM25 lexical search through the persistent index: bucket-pruned
     * postings slice; scores bit-identical to the scan path.
     */
   def lexicalSearchBm25Indexed(
-      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse = {
-    val k = validLimit(nResults)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
-    val entry = catalog.getCollection(physical(name))
-    val hits = bm25Hits(entry, qs, k)
-    val payload = hits.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        col("d.metadata"), col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id"))
-    serialize(payload)
-  }
+      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse =
+    serve(name, questions, nResults)(lexicalHits(_, "bm25_indexed", _, _))
 
   /** BM25 lexical search — the scoring the reference's retriever names
     * (retriever/retriever.py:90-101). One shared corpus-stats pass for the
     * whole question batch, then a scan + bounded top-k per question.
     */
   def lexicalSearchBm25(
-      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse = {
-    val k = validLimit(nResults)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
-    serialize(Lexical.searchBm25Many(docs(name), qs, k,
-      payload = Seq("content", "metadata")))
-  }
+      name: String, questions: Seq[String], nResults: Int = 10): SearchResponse =
+    request(name, questions, nResults) { (e, qs, k) =>
+      serialize(Lexical.searchBm25Many(docs(e), qs, k, payload = Seq("content", "metadata")))
+    }
 
   /** BM25 hits (query_idx, id, score) from the persistent lexical index,
     * scored with the serving snapshot's (N, avgdl).
@@ -1016,7 +1043,7 @@ final class Api(
       qs: Seq[(Int, Seq[Float])],
       k: Int,
       multiProbe: Int = 0): DataFrame = {
-    val index = graft.ann.SignLshIndex.load(spark, catalog, entry)
+    val index = scorable(graft.ann.SignLshIndex.load(spark, catalog, entry))
     val meta = graft.ann.SignLshIndex.requireMeta(spark, catalog, entry)
     graft.ann.SignLshIndex.search(
       index, qs, k, meta.dim, meta.bits, meta.tables, meta.seed, multiProbe = multiProbe)
@@ -1100,108 +1127,51 @@ final class Api(
       k: Int,
       oversample: Int = 4): DataFrame =
     graft.ann.PqIndex.search(spark, catalog, entry,
-      catalog.readDocuments(entry).select("id", "embedding", "norm"), qs, k,
+      scorable(docs(entry)).select("id", "embedding", "norm"), qs, k,
       numCandidates = math.max(10L * k, 100L), oversample = oversample)
 
-  /** Hybrid RRF search (vector_api.py:518-566). */
+  /** Hybrid RRF search (vector_api.py:518-566): the exact semantic leg
+    * fused with the TF scan leg.
+    */
   def search(
       name: String, question: String, numberResults: Int = 10,
       semanticWeight: Double = 0.5, lexicalWeight: Double = 0.5,
-      rrfK: Int = 60): SearchResponse = {
-    val limit = validLimit(numberResults)
-    validQuestion(question)
-    validWeightsAndK(semanticWeight, lexicalWeight, rrfK)
-    val safeQ = Sanitize.sanitizeString(question)
-    val d = docs(name).cache()
-    try {
-      val sem = invoke(Semantic.search(d, Seq(0 -> embedder.embedQuery(safeQ).toSeq), limit))
-      val lex = invoke(Lexical.search(d, Seq((0, safeQ)), limit))
-      val fused = Hybrid.rrf(sem, lex, semanticWeight, lexicalWeight, rrfK, limit)
-      val payload = fused.alias("f")
-        .join(d.alias("d"), col("f.id") === col("d.id"), "left")
-        .select(col("f.query_idx"), col("f.id"), col("d.content"),
-          col("d.metadata"), col("f.score"))
-        .orderBy(col("f.score").desc, col("f.id").asc)
-      serialize(payload)
-    } finally d.unpersist()
-  }
-
-  /** Batched hybrid RRF over a question list: one fused plan for the whole
-    * batch ([[graft.search.Hybrid.rrfMany]]) — the semantic legs share one
-    * docs×queries pass, the lexical legs share one corpus-stats aggregate.
-    * Validation and fusion math are identical to [[search]].
-    */
-  def searchMany(
-      name: String, questions: Seq[String], numberResults: Int = 10,
-      semanticWeight: Double = 0.5, lexicalWeight: Double = 0.5,
-      rrfK: Int = 60): SearchResponse = {
-    val limit = validLimit(numberResults)
-    validWeightsAndK(semanticWeight, lexicalWeight, rrfK)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString).zipWithIndex.map(_.swap)
-    val d = docs(name).cache()
-    try {
-      import spark.implicits._
-      val queriesDf = qs.map { case (i, q) => (i, embedder.embedQuery(q).toSeq) }
-        .toDF("query_idx", "query_vec")
-      val fused = invoke(graft.search.Hybrid.rrfMany(
-        d, queriesDf, qs, semanticWeight, lexicalWeight, rrfK, limit))
-      val payload = fused.alias("f")
-        .join(d.alias("d"), col("f.id") === col("d.id"), "left")
-        .select(col("f.query_idx"), col("f.id"), col("d.content"),
-          col("d.metadata"), col("f.score"))
-        .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id").asc)
-      serialize(payload)
-    } finally d.unpersist()
-  }
+      rrfK: Int = 60): SearchResponse =
+    searchIndexed(name, question, numberResults, semanticWeight, lexicalWeight, rrfK,
+      semanticMode = "exact", lexicalMode = "scan")
 
   /** Index-served hybrid RRF: the 100 TB serving shape — both fusion
     * inputs come from persistent indexes (semantic via IVF / sign-LSH /
     * IVF-PQ / maxsim-over-the-chunk-index, lexical via the bucket-pruned
     * posting index), so the corpus content is never scanned; only the
-    * fused top-k joins back for its payload. Fusion math and validation
-    * are identical to [[search]]; an unknown mode is governed like an
-    * unknown action.
+    * fused top-k joins back for its payload. Any other leg pair fuses the
+    * same way ([[search]] is exact + scan). The question is checked
+    * before the weights; an unknown mode is governed like an unknown
+    * action.
     */
   def searchIndexed(
       name: String, question: String, numberResults: Int = 10,
       semanticWeight: Double = 0.5, lexicalWeight: Double = 0.5,
       rrfK: Int = 60,
       semanticMode: String = "approx",
-      lexicalMode: String = "bm25_indexed"): SearchResponse = {
-    val limit = validLimit(numberResults)
-    validQuestion(question)
-    validWeightsAndK(semanticWeight, lexicalWeight, rrfK)
-    val safeQ = Sanitize.sanitizeString(question)
-    val entry = catalog.getCollection(physical(name))
-    // lazy: the maxsim leg embeds per token itself — see searchIndexedMany
-    lazy val qs = Seq(0 -> embedder.embedQuery(safeQ).toSeq)
-    val sem = invoke(semanticMode match {
-      case "exact" => Semantic.search(docs(name), qs, limit)
-      case "approx" => approxHits(entry, qs, limit)
-      case "lsh" => lshHits(entry, qs, limit)
-      case "pq" => pqHits(entry, qs, limit)
-      // late-interaction leg: maxsim ranks fuse with the lexical ranks
-      // through the identical RRF math (RRF consumes ranks only,
-      // vector_api.py:556-564 semantics unchanged)
-      case "maxsim" => maxsimHits(entry, Seq(0 -> safeQ), limit)
-      case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
-    })
-    val lex = invoke(lexicalMode match {
-      case "scan" => Lexical.search(docs(name), Seq((0, safeQ)), limit)
-      case "bm25" => Lexical.searchBm25Many(docs(name), Seq((0, safeQ)), limit)
-      case "indexed" => graft.search.LexIndex.searchTf(
-        graft.search.LexIndex.load(spark, catalog, entry), Seq((0, safeQ)), limit)
-      case "bm25_indexed" => bm25Hits(entry, Seq((0, safeQ)), limit)
-      case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
-    })
-    val fused = Hybrid.rrf(sem, lex, semanticWeight, lexicalWeight, rrfK, limit)
-    val payload = fused.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        col("d.metadata"), col("f.score"))
-      .orderBy(col("f.score").desc, col("f.id").asc)
-    serialize(payload)
-  }
+      lexicalMode: String = "bm25_indexed"): SearchResponse =
+    hybrid(name, Seq(question), numberResults, semanticWeight, lexicalWeight, rrfK,
+      semanticMode, lexicalMode, attribute = false,
+      checks = { validQuestion(question); validWeightsAndK(semanticWeight, lexicalWeight, rrfK) })
+
+  /** The hybrid core: each leg serves the whole question batch in one
+    * plan, and [[graft.search.Hybrid.rrf]] fuses them once (it is
+    * query_idx-keyed with a per-query limit).
+    */
+  private def hybrid(
+      name: String, questions: Seq[String], numberResults: Int,
+      semanticWeight: Double, lexicalWeight: Double, rrfK: Int,
+      semanticMode: String, lexicalMode: String, attribute: Boolean,
+      checks: => Unit): SearchResponse =
+    serve(name, questions, numberResults, checks, attribute) { (e, qs, k) =>
+      Hybrid.rrf(invoke(semanticHits(e, semanticMode, qs, k)),
+        invoke(lexicalHits(e, lexicalMode, qs, k)), semanticWeight, lexicalWeight, rrfK, k)
+    }
 
   /** Index-health / drift probe ([[graft.ann.IndexHealth]]): recompute
     * the named index's quantization stats (mean residual to the frozen
@@ -1245,58 +1215,23 @@ final class Api(
     IndexHealth.compare(baseline, current) + ("index" -> index)
   }
 
-  /** Batched index-served hybrid RRF — [[searchIndexed]] over a question
-    * LIST: each leg serves the WHOLE batch from its persistent index in
-    * one plan (the semantic approx/lsh/pq/maxsim units and the
-    * bucket-pruned lexical postings all take query batches natively),
-    * and fusion runs once — [[graft.search.Hybrid.rrf]] is already
-    * query_idx-keyed with a per-query limit. Q questions therefore cost
-    * one plan pair + one fusion instead of the 2Q single-question plans
-    * a caller loop pays (the QSweep-measured driver cliff). Validation,
-    * mode routing, fusion math, and per-question results are identical
-    * to the per-question route (MaxsimManySpec pins the identity).
+  /** Batched hybrid RRF — [[searchIndexed]] over a question LIST, any leg
+    * pair: Q questions cost one plan per leg + one fusion instead of the
+    * 2Q single-question plans a caller loop pays (the QSweep-measured
+    * driver cliff). The weights are checked before the questions;
+    * per-question results equal the per-question route's (MaxsimManySpec
+    * pins the identity), each hit's question under the "query_idx"
+    * metadata key.
     */
   def searchIndexedMany(
       name: String, questions: Seq[String], numberResults: Int = 10,
       semanticWeight: Double = 0.5, lexicalWeight: Double = 0.5,
       rrfK: Int = 60,
       semanticMode: String = "approx",
-      lexicalMode: String = "bm25_indexed"): SearchResponse = {
-    val limit = validLimit(numberResults)
-    validWeightsAndK(semanticWeight, lexicalWeight, rrfK)
-    val qs = validQuestions(questions).map(Sanitize.sanitizeString)
-      .zipWithIndex.map(_.swap)
-    val entry = catalog.getCollection(physical(name))
-    // lazy: the maxsim leg tokenizes and embeds its own way — eager
-    // per-question embedQuery calls would be Q wasted model invocations
-    // on that route
-    lazy val qvecs = qs.map { case (i, q) => i -> embedder.embedQuery(q).toSeq }
-    val sem = invoke(semanticMode match {
-      case "exact" => Semantic.search(docs(name), qvecs, limit)
-      case "approx" => approxHits(entry, qvecs, limit)
-      case "lsh" => lshHits(entry, qvecs, limit)
-      case "pq" => pqHits(entry, qvecs, limit)
-      case "maxsim" => maxsimHits(entry, qs, limit)
-      case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
-    })
-    val lex = invoke(lexicalMode match {
-      case "scan" => Lexical.search(docs(name), qs, limit)
-      case "bm25" => Lexical.searchBm25Many(docs(name), qs, limit)
-      case "indexed" => graft.search.LexIndex.searchTf(
-        graft.search.LexIndex.load(spark, catalog, entry), qs, limit)
-      case "bm25_indexed" => bm25Hits(entry, qs, limit)
-      case _ => throw new GraftException(ErrorCodes.SearchActionInvalid)
-    })
-    val fused = Hybrid.rrf(sem, lex, semanticWeight, lexicalWeight, rrfK, limit)
-    val payload = fused.alias("f")
-      .join(docs(name).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"),
-        // question attribution rides the metadata like maxsimSearchMany
-        Api.withQueryIdx(col("d.metadata"), col("f.query_idx")).as("metadata"),
-        col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id").asc)
-    serialize(payload)
-  }
+      lexicalMode: String = "bm25_indexed"): SearchResponse =
+    hybrid(name, questions, numberResults, semanticWeight, lexicalWeight, rrfK,
+      semanticMode, lexicalMode, attribute = true,
+      checks = validWeightsAndK(semanticWeight, lexicalWeight, rrfK))
 
   /** Collection statistics — the observability half of the doctor surface
     * (model.BackendPolicy.backendStatus is the availability half): document
@@ -1311,7 +1246,7 @@ final class Api(
       .map(ix => ix.key -> ix.load(spark, catalog, entry).count()).toMap
     Map(
       "collection" -> name,
-      "documents" -> docs(name).count(),
+      "documents" -> docs(entry).count(),
       "dimension" -> entry.dimension,
       "indexes" -> indexes)
   }

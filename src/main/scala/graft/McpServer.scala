@@ -162,11 +162,18 @@ final class McpServer(
           "lexical_weight" -> Map("type" -> "number"),
           "rrf_k" -> Map("type" -> "integer"),
           "db_type" -> Map("type" -> "string"),
-          "semantic_mode" -> Map("type" -> "string",
-            "description" -> "exact (default) | approx | lsh | pq | diverse | maxsim"),
-          "lexical_mode" -> Map("type" -> "string",
-            "description" -> "scan (default) | indexed | bm25 | bm25_indexed | phrase")),
+          "semantic_mode" -> modeProperty(McpSurface.SemanticModes, "semantic_search"),
+          "lexical_mode" -> modeProperty(McpSurface.LexicalModes, "lexical_search")),
         "required" -> Seq("action", "collection_name", "question"))))
+
+  /** A mode argument's schema, described from McpSurface's mode table:
+    * the leg's modes (the first is the default), then the one-sided
+    * action's single-question mode.
+    */
+  private def modeProperty(modes: Seq[String], action: String): Map[String, Any] =
+    Map("type" -> "string", "description" ->
+      ((modes.head + " (default)") +: modes.tail :+ McpSurface.SingleQuestionModes(action))
+        .mkString(" | "))
 
   private def callTool(name: String, args: JsonNode): Map[String, Any] = {
     def s(k: String): String =

@@ -102,17 +102,11 @@ class McpSurface(
     * which physical strategy serves the action — are routed through the
     * `semanticMode` / `lexicalMode` knobs instead of new actions, so the
     * observable action contract is untouched while index-backed serving is
-    * first-class:
-    *   - semanticMode: exact (brute top-k) | approx (IVF partition-pruned,
-    *     numCandidates = max(10k,100)) | lsh (sign-LSH probe-pruned) |
-    *     pq (IVF-PQ: probe-pruned ADC over codes, exact re-rank) |
-    *     maxsim (late-interaction over the persisted chunk index)
-    *   - lexicalMode: scan (TF over content) | indexed (TF from postings) |
-    *     bm25 (BM25 scan) | bm25_indexed (BM25 from postings) |
-    *     phrase (adjacency + order + snippet; lexical_search action only —
-    *     hybrid fusion over phrase scores is not defined)
-    * An unknown mode is governed like an unknown action (the mode IS an
-    * action refinement): search_action_invalid.
+    * first-class. The modes are [[McpSurface.SemanticModes]] and
+    * [[McpSurface.LexicalModes]], plus the single-question
+    * [[McpSurface.SingleQuestionModes]] (diverse, phrase) on the
+    * one-sided actions. An unknown mode is governed like an unknown
+    * action (the mode IS an action refinement): search_action_invalid.
     */
   def vectorSearch(
       action: String,
@@ -124,84 +118,21 @@ class McpSurface(
       rrfK: Int = 60,
       dbType: String = null,
       semanticMode: String = "exact",
-      lexicalMode: String = "scan"): Map[String, Any] = {
-    val backend = BackendPolicy.resolve(dbType)
-    val res = resolveAction(action,
-      Set("semantic_search", "lexical_search", "search"),
-      ErrorCodes.SearchActionInvalid) match {
-      case "semantic_search" =>
-        resolveAction(semanticMode,
-          Set("exact", "approx", "lsh", "pq", "diverse", "maxsim"),
-          ErrorCodes.SearchActionInvalid) match {
-          case "exact" =>
-            api.semanticSearch(collectionName, Seq(question), numberResults)
-          case "approx" =>
-            api.semanticSearchApprox(collectionName, Seq(question), numberResults)
-          case "lsh" =>
-            api.semanticSearchLsh(collectionName, Seq(question), numberResults)
-          case "pq" =>
-            api.semanticSearchPq(collectionName, Seq(question), numberResults)
-          case "diverse" => // MMR re-ranked serving (Api.semanticSearchDiverse)
-            api.semanticSearchDiverse(collectionName, question, numberResults)
-          case "maxsim" => // late-interaction serving (Api.maxsimSearch)
-            api.maxsimSearch(collectionName, question, numberResults)
-        }
-      case "lexical_search" =>
-        resolveAction(lexicalMode,
-          Set("scan", "indexed", "bm25", "bm25_indexed", "phrase"),
-          ErrorCodes.SearchActionInvalid) match {
-          case "scan" =>
-            api.lexicalSearch(collectionName, Seq(question), numberResults)
-          case "indexed" =>
-            api.lexicalSearchIndexed(collectionName, Seq(question), numberResults)
-          case "bm25" =>
-            api.lexicalSearchBm25(collectionName, Seq(question), numberResults)
-          case "bm25_indexed" =>
-            api.lexicalSearchBm25Indexed(collectionName, Seq(question), numberResults)
-          case "phrase" => // adjacency + order + snippet (Api.phraseSearch)
-            api.phraseSearch(collectionName, question, numberResults)
-        }
-      case "search" =>
-        // normalize the modes exactly like the single-sided actions do —
-        // "Exact"/" scan " must behave identically on every action.
-        // maxsim fuses as a semantic leg: RRF consumes ranks only, so the
-        // late-interaction ranks drop into the reference fusion unchanged
-        val sem = resolveAction(semanticMode,
-          Set("exact", "approx", "lsh", "pq", "maxsim"),
-          ErrorCodes.SearchActionInvalid)
-        val lex = resolveAction(lexicalMode,
-          Set("scan", "indexed", "bm25", "bm25_indexed"),
-          ErrorCodes.SearchActionInvalid)
-        // default modes = the scan hybrid (reference behavior); any
-        // index-backed mode on either side routes through the
-        // index-served fusion with identical RRF math
-        if (sem == "exact" && lex == "scan")
-          api.search(collectionName, question, numberResults,
-            semanticWeight, lexicalWeight, rrfK)
-        else
-          api.searchIndexed(collectionName, question, numberResults,
-            semanticWeight, lexicalWeight, rrfK, sem, lex)
-    }
-    Map("results" -> res.results.map(h => Map(
-      "id" -> h.id, "content" -> h.content,
-      "metadata" -> h.metadata, "score" -> h.score)),
-      "db_type" -> backend)
-  }
+      lexicalMode: String = "scan"): Map[String, Any] =
+    search(action, collectionName, Seq(question), single = true, numberResults,
+      semanticWeight, lexicalWeight, rrfK, dbType, semanticMode, lexicalMode)
 
-  /** Batched [[vectorSearch]] — the same action/mode contract over a
-    * question LIST, served through each route's batched unit: ONE plan
-    * for the whole batch (semantic exact/approx/lsh/pq batch natively,
-    * maxsim through `Api.maxsimSearchMany`'s one-plan frame unit, hybrid
-    * through `Api.searchMany`'s fused scan plan or
-    * `Api.searchIndexedMany`'s index-served batched fusion). Engine
-    * extension — the
-    * reference's tools are single-question — so validation, mode
-    * routing, and error codes are byte-identical to the per-question
-    * tool; a caller looping questions gets the same results, this just
-    * removes the per-question plan loop (the QSweep-measured driver
-    * cliff). Modes without a defined batch semantics (diverse re-rank,
-    * phrase) stay single-question and are governed here like an unknown
-    * mode.
+  /** Batched [[vectorSearch]] — the same actions and modes over a question
+    * LIST, each route serving the whole batch in one plan (hybrid pairs
+    * through `Api.searchIndexedMany`). Engine extension — the reference's
+    * tools are single-question — with validation, mode routing and error
+    * codes identical to the per-question tool: each question's hits, in
+    * question order, equal what [[vectorSearch]] returns for it
+    * (SearchParitySpec), without the per-question plan loop (the
+    * QSweep-measured driver cliff). The maxsim and hybrid routes record
+    * each hit's question under the "query_idx" metadata key. The
+    * single-question modes (diverse re-rank, phrase) have no batch
+    * semantics and are governed here like an unknown mode.
     */
   def vectorSearchMany(
       action: String,
@@ -213,46 +144,30 @@ class McpSurface(
       rrfK: Int = 60,
       dbType: String = null,
       semanticMode: String = "exact",
-      lexicalMode: String = "scan"): Map[String, Any] = {
+      lexicalMode: String = "scan"): Map[String, Any] =
+    search(action, collectionName, questions, single = false, numberResults,
+      semanticWeight, lexicalWeight, rrfK, dbType, semanticMode, lexicalMode)
+
+  /** The one dispatch of both search tools: the backend gate, the action,
+    * then the modes its legs use (semantic before lexical), normalized
+    * like actions — "Exact"/" scan " behave identically on every action —
+    * and served by `Api.route`.
+    */
+  private def search(
+      action: String, collectionName: String, questions: Seq[String], single: Boolean,
+      numberResults: Int, semanticWeight: Double, lexicalWeight: Double, rrfK: Int,
+      dbType: String, semanticMode: String, lexicalMode: String): Map[String, Any] = {
+    import McpSurface._
     val backend = BackendPolicy.resolve(dbType)
-    val res = resolveAction(action,
-      Set("semantic_search", "lexical_search", "search"),
-      ErrorCodes.SearchActionInvalid) match {
-      case "semantic_search" =>
-        resolveAction(semanticMode, Set("exact", "approx", "lsh", "pq", "maxsim"),
-          ErrorCodes.SearchActionInvalid) match {
-          case "exact" => api.semanticSearch(collectionName, questions, numberResults)
-          case "approx" => api.semanticSearchApprox(collectionName, questions, numberResults)
-          case "lsh" => api.semanticSearchLsh(collectionName, questions, numberResults)
-          case "pq" => api.semanticSearchPq(collectionName, questions, numberResults)
-          case "maxsim" => api.maxsimSearchMany(collectionName, questions, numberResults)
-        }
-      case "lexical_search" =>
-        resolveAction(lexicalMode, Set("scan", "indexed", "bm25", "bm25_indexed"),
-          ErrorCodes.SearchActionInvalid) match {
-          case "scan" => api.lexicalSearch(collectionName, questions, numberResults)
-          case "indexed" => api.lexicalSearchIndexed(collectionName, questions, numberResults)
-          case "bm25" => api.lexicalSearchBm25(collectionName, questions, numberResults)
-          case "bm25_indexed" =>
-            api.lexicalSearchBm25Indexed(collectionName, questions, numberResults)
-        }
-      case "search" =>
-        // mode normalization identical to the per-question tool: the scan
-        // hybrid for the reference-default (exact, scan) pair, the
-        // index-served batched fusion for any index-backed mode
-        val sem = resolveAction(semanticMode,
-          Set("exact", "approx", "lsh", "pq", "maxsim"),
-          ErrorCodes.SearchActionInvalid)
-        val lex = resolveAction(lexicalMode,
-          Set("scan", "indexed", "bm25", "bm25_indexed"),
-          ErrorCodes.SearchActionInvalid)
-        if (sem == "exact" && lex == "scan")
-          api.searchMany(collectionName, questions, numberResults,
-            semanticWeight, lexicalWeight, rrfK)
-        else
-          api.searchIndexedMany(collectionName, questions, numberResults,
-            semanticWeight, lexicalWeight, rrfK, sem, lex)
-    }
+    val act = resolveAction(action, Set("semantic_search", "lexical_search", "search"),
+      ErrorCodes.SearchActionInvalid)
+    def mode(raw: String, modes: Seq[String]): String = resolveAction(raw,
+      (modes ++ SingleQuestionModes.get(act).filter(_ => single)).toSet,
+      ErrorCodes.SearchActionInvalid)
+    val sem = if (act == "lexical_search") null else mode(semanticMode, SemanticModes)
+    val lex = if (act == "semantic_search") null else mode(lexicalMode, LexicalModes)
+    val res = api.route(act, sem, lex, collectionName, questions, numberResults,
+      semanticWeight, lexicalWeight, rrfK, single)
     Map("results" -> res.results.map(h => Map(
       "id" -> h.id, "content" -> h.content,
       "metadata" -> h.metadata, "score" -> h.score)),
@@ -299,4 +214,29 @@ class McpSurface(
     if (!allowed.contains(norm)) throw new GraftException(errCode)
     norm
   }
+}
+
+object McpSurface {
+  /** The semantic modes both search tools serve, on semantic_search and
+    * on the hybrid: exact (brute top-k) | approx (IVF partition-pruned,
+    * numCandidates = max(10k,100)) | lsh (sign-LSH probe-pruned) | pq
+    * (IVF-PQ: probe-pruned ADC over codes, exact re-rank) | maxsim
+    * (late-interaction over the persisted chunk index; RRF consumes
+    * ranks only, so it fuses like any other semantic leg).
+    */
+  val SemanticModes: Seq[String] = Seq("exact", "approx", "lsh", "pq", "maxsim")
+
+  /** The lexical modes both search tools serve, on lexical_search and on
+    * the hybrid: scan (TF over content) | indexed (TF from postings) |
+    * bm25 (BM25 scan) | bm25_indexed (BM25 from postings).
+    */
+  val LexicalModes: Seq[String] = Seq("scan", "indexed", "bm25", "bm25_indexed")
+
+  /** The one extra mode of each one-sided action, on the single-question
+    * tool only: diverse (MMR re-ranked semantic serving) and phrase
+    * (adjacency + order + snippet). Neither has batch or fusion
+    * semantics.
+    */
+  val SingleQuestionModes: Map[String, String] =
+    Map("semantic_search" -> "diverse", "lexical_search" -> "phrase")
 }

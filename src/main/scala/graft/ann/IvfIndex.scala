@@ -58,6 +58,8 @@ object IvfIndex extends graft.DerivedIndex {
     * mutation of the documents table cannot silently desynchronize the
     * centroids a search probes against from the persisted assignments.
     * Returns the persisted centroid table (read back, not the lazy plan).
+    * `nClusters` >= 1 and `trainFraction` in (0,1] are checked by
+    * [[graft.Api.buildAnnIndex]] before any dependent is invalidated.
     */
   def build(
       spark: SparkSession,
@@ -66,8 +68,6 @@ object IvfIndex extends graft.DerivedIndex {
       nClusters: Int,
       kmeansIters: Int = 0,
       trainFraction: Double = 1.0): DataFrame = catalog.monitor {
-    require(trainFraction > 0 && trainFraction <= 1,
-      s"trainFraction $trainFraction out of (0,1]")
     invalidate(catalog, entry)
     val docs = catalog.readDocuments(entry)
       .select(col("id"), col("embedding"), col("norm"))

@@ -2,10 +2,10 @@ package graft.catalog
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
-import java.util.Comparator
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.model.{CollectionEntry, ErrorCodes, GraftException, Schemas}
+import PartitionedTable.deleteDir
 
 /** Collection catalog + DDL — the engine's storage layer.
   *
@@ -95,11 +95,6 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
     deleteDir(Paths.get(catalogDir))
     Files.move(Paths.get(tmp), Paths.get(catalogDir), StandardCopyOption.ATOMIC_MOVE)
   }
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
 
   /** 3-case create contract (reference: vectordb/base.py:88-105):
     * missing -> create; exists+overwrite -> drop & recreate;

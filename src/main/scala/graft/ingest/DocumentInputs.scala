@@ -114,7 +114,9 @@ object DocumentInputs {
         }
         var total = 0L
         var count = 0
-        Files.walk(scanBase).iterator().asScala.foreach { p =>
+        // closed on every exit, the size-limit failures included
+        val walk = Files.walk(scanBase)
+        try walk.iterator().asScala.foreach { p =>
           if (Files.isSymbolicLink(p))
             fail("Configured document root contains a symbolic link")
           if (Files.isRegularFile(p, LinkOption.NOFOLLOW_LINKS)) {
@@ -129,6 +131,7 @@ object DocumentInputs {
               fail("Configured document root exceeded its size limit")
           }
         }
+        finally walk.close()
         Some(scanBase)
       }
 

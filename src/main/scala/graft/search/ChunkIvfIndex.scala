@@ -177,7 +177,9 @@ object ChunkIvfIndex extends graft.DerivedIndex {
     * through here). Crash ordering: index dir is dropped first, so every
     * window below reads index-absent; an orphaned new-centroid sidecar
     * (crash between the centroid and index writes) is a valid trained
-    * quantizer the next [[build]] picks up.
+    * quantizer the next [[build]] picks up. `nClusters` >= 0 and
+    * `trainFraction` in (0,1] are checked by
+    * [[graft.Api.buildChunkIvfIndex]] before any dependent is invalidated.
     */
   def buildChunkTrained(
       spark: SparkSession,
@@ -186,9 +188,6 @@ object ChunkIvfIndex extends graft.DerivedIndex {
       nClusters: Int,
       kmeansIters: Int = 2,
       trainFraction: Double = 1.0): DataFrame = catalog.monitor {
-    require(nClusters >= 0, s"nClusters $nClusters out of range")
-    require(trainFraction > 0 && trainFraction <= 1,
-      s"trainFraction $trainFraction out of (0,1]")
     invalidate(catalog, entry)
     val chunks = ChunkIndex.load(spark, catalog, entry).select(
         concat(col("id"), lit("#"), col("chunk_idx")).as("id"),

@@ -337,24 +337,6 @@ class ApiSpec extends SparkSpec {
     assert(hit.metadata.contains("category"))
   }
 
-  test("searchMany: batched hybrid fusion matches per-question search results") {
-    val api = newApi()
-    api.createCollection("batch", documents = Some(corpus()))
-    val many = api.searchMany("batch", Seq("vector database", "spark engine"), 3)
-    // same legs as rrfMany (exact semantic + BM25 lexical), one question each
-    val one0 = api.searchIndexed("batch", "vector database", 3,
-      semanticMode = "exact", lexicalMode = "bm25")
-    val one1 = api.searchIndexed("batch", "spark engine", 3,
-      semanticMode = "exact", lexicalMode = "bm25")
-    // responses flatten query_idx but keep (query_idx, score desc) order,
-    // so the batch must equal the per-question results concatenated
-    def ids(r: Seq[HitRow]) = r.map(h => (h.id, math.round(h.score * 1e9)))
-    assert(ids(many.results) == ids(one0.results) ++ ids(one1.results))
-    // weight/rrf_k validation applies to the batch path too
-    assert(intercept[GraftException](
-      api.searchMany("batch", Seq("q"), rrfK = 0)).code == ErrorCodes.RrfKInvalid)
-  }
-
   test("PII entities redacted by default on the ingest -> search round trip") {
     val api = newApi()
     import spark.implicits._

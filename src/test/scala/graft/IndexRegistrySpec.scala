@@ -51,6 +51,16 @@ class IndexRegistrySpec extends SparkSpec {
     api.buildChunkPqIndex("reg", m = 4, k = 4, iters = 1)
     GraphIndex.build(spark, api.catalog, entry, k = 3)
     assert(Indexes.All.forall(_.exists(api.catalog, entry)))
+    // a rejected build argument is refused before any index is touched
+    def indexFiles = Indexes.All.map(ix => files(ix.indexPath(api.catalog, entry)))
+    val built = indexFiles
+    intercept[IllegalArgumentException](api.buildAnnIndex("reg", nClusters = -1))
+    intercept[IllegalArgumentException](api.buildAnnIndex("reg", nClusters = 3, trainFraction = 0))
+    intercept[IllegalArgumentException](
+      api.buildChunkIvfIndex("reg", trainOn = "chunks", nClusters = -1))
+    intercept[IllegalArgumentException](
+      api.buildChunkIvfIndex("reg", trainOn = "chunks", trainFraction = 1.5))
+    assert(indexFiles == built, "a rejected build argument touched an index")
 
     val q = "registry doc 3 about topic t3 with words w3"
     val routes: Map[String, () => Any] = Map(
@@ -93,7 +103,11 @@ class IndexRegistrySpec extends SparkSpec {
     // a quantizer rebuild that dies after it started rewriting: the codes
     // it would have re-encoded must read as absent, not as codes keyed to
     // the old quantizer
-    intercept[Exception](api.buildAnnIndex("crash", nClusters = -1))
+    val table = Paths.get(api.catalog.tablePath(entry))
+    val aside = Paths.get(s"$table.aside")
+    Files.move(table, aside)
+    try intercept[Exception](api.buildAnnIndex("crash", nClusters = 3))
+    finally Files.move(aside, table)
     assert(!PqIndex.exists(api.catalog, entry))
     val q = Seq("registry doc 3 about topic t3 with words w3")
     notFound(ErrorCodes.AnnIndexNotFound)(api.semanticSearchPq("crash", q, 3))
