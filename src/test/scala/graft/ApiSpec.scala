@@ -337,6 +337,23 @@ class ApiSpec extends SparkSpec {
     assert(hit.metadata.contains("category"))
   }
 
+  test("searchMany: batched hybrid fusion matches per-question search results") {
+    val api = newApi()
+    api.createCollection("batch", documents = Some(corpus()))
+    // the batch hybrid runs the same legs as search (exact semantic + TF scan)
+    val many = api.searchIndexedMany("batch", Seq("vector database", "spark engine"), 3,
+      semanticMode = "exact", lexicalMode = "scan")
+    val one0 = api.search("batch", "vector database", 3)
+    val one1 = api.search("batch", "spark engine", 3)
+    // responses flatten query_idx but keep (query_idx, score desc) order,
+    // so the batch must equal the per-question results concatenated
+    def ids(r: Seq[HitRow]) = r.map(h => (h.id, math.round(h.score * 1e9)))
+    assert(ids(many.results) == ids(one0.results) ++ ids(one1.results))
+    // weight/rrf_k validation applies to the batch path too
+    assert(intercept[GraftException](api.searchIndexedMany("batch", Seq("q"), rrfK = 0,
+      semanticMode = "exact", lexicalMode = "scan")).code == ErrorCodes.RrfKInvalid)
+  }
+
   test("PII entities redacted by default on the ingest -> search round trip") {
     val api = newApi()
     import spark.implicits._
