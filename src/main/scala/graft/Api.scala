@@ -178,7 +178,7 @@ final class Api(
       val replaced = catalog.readDocumentsPhysical(entry)
         .filter(col("bucket").isin(buckets: _*)).drop("bucket")
         .join(embedded.select("id"), Seq("id"), "left_semi")
-      val pending = Indexes.stage(spark, catalog, entry, embedder.dimension,
+      val pending = Indexes.stage(spark, catalog, entry,
         oldRows = replaced, newRows = embedded)
       // bucket-level MERGE: only the batch's id buckets are rewritten
       Ingest.mergeUpsert(spark, catalog, entry, embedded, Some(buckets))
@@ -237,7 +237,7 @@ final class Api(
       throw new GraftException(ErrorCodes.DocumentIdsRequired)
     val entry = catalog.getCollection(physical(name))
     val existing = catalog.readDocuments(entry)
-    val pending = Indexes.stage(spark, catalog, entry, embedder.dimension,
+    val pending = Indexes.stage(spark, catalog, entry,
       oldRows = catalog.readDocumentsForIds(entry, ids)
         .filter(col("id").isin(ids: _*)),
       newRows = existing.limit(0))

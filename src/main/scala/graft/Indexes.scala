@@ -223,15 +223,13 @@ object Indexes {
   /** Phase 1 (call BEFORE the documents-table rewrite). `oldRows`: the
     * pre-write versions of the ids this write replaces or deletes;
     * `newRows`: the incoming batch; both with (id, content, embedding,
-    * norm). `dim` is the collection's dimension — unused, as every layout
-    * parameter comes from an index's sidecar. None when no derived index
-    * is present: nothing to maintain, no snapshot cost.
+    * norm). None when no derived index is present: nothing to maintain,
+    * no snapshot cost.
     */
   def stage(
       spark: SparkSession,
       catalog: Catalog,
       entry: CollectionEntry,
-      dim: Int,
       oldRows: DataFrame,
       newRows: DataFrame): Option[Pending] = {
     val live = All.filter(_.exists(catalog, entry))

@@ -224,7 +224,7 @@ object StreamingIngest {
       val replaced = catalog.readDocumentsPhysical(entry)
         .filter(col("bucket").isin(buckets: _*)).drop("bucket")
         .join(embedded.select("id"), Seq("id"), "left_semi")
-      val pending = graft.Indexes.stage(spark, catalog, entry, embedder.dimension,
+      val pending = graft.Indexes.stage(spark, catalog, entry,
         oldRows = replaced, newRows = embedded)
       // bucket-level MERGE: compaction rewrites only the micro-batch's
       // id buckets, so maintenance cost tracks batch size, not corpus size

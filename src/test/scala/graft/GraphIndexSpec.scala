@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ann.GraphIndex
@@ -37,7 +38,7 @@ class GraphIndexSpec extends SparkSpec {
     val fwd = GraphIndex.load(spark, api.catalog, entry)
       .select("qid", "neighbor")
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val rev = GraphIndex.loadReverse(spark, api.catalog, entry).get
+    val rev = GraphIndex.loadReverse(spark, api.catalog, entry)
       .select("qid", "neighbor")
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     assert(rev == fwd)
@@ -133,6 +134,57 @@ class GraphIndexSpec extends SparkSpec {
     assertReverseConsistent(api, entry)
     GraphIndex.build(spark, api.catalog, entry, K)
     assert(incremental == adjacency(api, entry))
+
+    // a mixed write: new content plus a changed-vector re-upsert, so one
+    // node can both lose an edge and admit a batch edge
+    val mixed = (20 until 23).map(i =>
+        (s"document number $i carries words w$i and w${i % 7}", Option.empty[Seq[Float]])) :+
+      ("document number 5 carries words w5 and w5", Some(emb.embedQuery("moved again 5").toSeq))
+    assert(api.addDocuments("g6", mixed.toDF("content", "embedding")) == 4)
+    val afterMixed = adjacency(api, entry)
+    assertReverseConsistent(api, entry)
+    GraphIndex.build(spark, api.catalog, entry, K)
+    assert(afterMixed == adjacency(api, entry))
+  }
+
+  test("a zero-norm embedding is not a graph node and does not break a graph-indexed write") {
+    val api = newApi()
+    api.createCollection("g7", documents = Some(docsDf(0 until 20)))
+    val entry = api.catalog.getCollection(api.catalog.physicalName("default", "g7"))
+    GraphIndex.build(spark, api.catalog, entry, K)
+    val batch = Seq(
+      ("an all-zero pinned embedding", Some(Seq.fill(32)(0f))),
+      ("document number 20 carries words w20 and w6", Option.empty[Seq[Float]]))
+    assert(api.addDocuments("g7", batch.toDF("content", "embedding")) == 2)
+    val zeroIds = api.catalog.readDocuments(entry)
+      .filter(col("norm") === 0).select("id").as[String].collect().toSeq
+    assert(zeroIds.size == 1)
+    val incremental = adjacency(api, entry)
+    assert(!incremental.exists(e => zeroIds.contains(e._1) || zeroIds.contains(e._2)))
+    assertReverseConsistent(api, entry)
+    GraphIndex.build(spark, api.catalog, entry, K)
+    assert(incremental == adjacency(api, entry))
+  }
+
+  test("a graph index without its reverse sidecar fails the next write and stays untouched") {
+    val api = newApi()
+    api.createCollection("g8", documents = Some(docsDf(0 until 20)))
+    val entry = api.catalog.getCollection(api.catalog.physicalName("default", "g8"))
+    GraphIndex.build(spark, api.catalog, entry, K)
+    graft.catalog.PartitionedTable.deleteDir(
+      java.nio.file.Paths.get(GraphIndex.reversePath(api.catalog, entry)))
+    def graphFiles: Set[(String, Long, Long)] = {
+      val stream = Files.walk(java.nio.file.Paths.get(GraphIndex.indexPath(api.catalog, entry)))
+      try stream.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSet
+      finally stream.close()
+    }
+    val before = graphFiles
+    val ex = intercept[IllegalArgumentException] {
+      api.addDocuments("g8", docsDf(20 until 22))
+    }
+    assert(ex.getMessage.contains("reverse sidecar"))
+    assert(graphFiles == before)
   }
 
   test("beam search serves from the persisted medoid entry points") {

@@ -79,7 +79,7 @@ class IndexRefreshSpec extends SparkSpec {
     assert(rows(graph, "qid", "neighbor", "rank") ==
       rows(Ann.knnJoin(docs.select("id", "embedding", "norm"), GraphK), "qid", "neighbor", "rank"),
       "graph adjacency must equal a from-scratch build")
-    assert(rows(GraphIndex.loadReverse(spark, api.catalog, entry).get, "qid", "neighbor") ==
+    assert(rows(GraphIndex.loadReverse(spark, api.catalog, entry), "qid", "neighbor") ==
       rows(graph, "qid", "neighbor"), "graph reverse sidecar must mirror the adjacency")
   }
 
@@ -161,7 +161,7 @@ class IndexRefreshSpec extends SparkSpec {
     api.createCollection("plain", documents = Some(Seq("just a doc").toDF("content")))
     val entry = api.catalog.getCollection(api.catalog.physicalName("default", "plain"))
     val d = api.catalog.readDocuments(entry)
-    assert(Indexes.stage(spark, api.catalog, entry, 16,
+    assert(Indexes.stage(spark, api.catalog, entry,
       oldRows = d.limit(0), newRows = d).isEmpty)
     api.deleteCollection("plain", confirm = true)
   }
