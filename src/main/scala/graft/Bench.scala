@@ -1,14 +1,14 @@
 package graft
+
+import Verify.q
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local profiling loop)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val ordered = SparkEntry.selected.map(g => g.name -> g.harness)
     // JIT/codegen warmup at the smallest sf so timed numbers measure the
     // engine, not cold-JVM compilation (standard practice; same queries).
     // Warmup errors are swallowed here ONLY because the same failure
@@ -53,15 +53,6 @@ object Bench {
         case None    => name -> Right(attempts.map(_._2).min)
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val ok = results.collect { case (k, Right(v)) => k -> v }
     val errors = results.collect { case (k, Left(e)) => k -> e }
     val qs = ok.map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")

@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev harness (not driver contract): per-query wall time plus scheduler
   * shape — job count, stage count, task count, summed executor run time —
-  * under the SAME session config as [[Bench]]. Separates "this query is
+  * under the SAME session config as [[Bench]], and the part of the wall
+  * time spent building the frame (`build_s`). Separates "this query is
   * barrier-heavy" (many sequential jobs over tiny data) from "this query
   * is compute-heavy" (few jobs, high task time), which is the first
   * question of guide §1 at a scale factor where per-job scheduling
@@ -55,9 +56,7 @@ object ProfileIt {
         }
       }
     })
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val ordered = SparkEntry.selected.map(g => g.name -> g.harness)
     // same warmup discipline as Bench
     val warmDir = "/root/testdata/sf0.001"
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1" && sfDir != warmDir)
@@ -66,22 +65,26 @@ object ProfileIt {
         spark.catalog.clearCache()
       }
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
-    println(f"${"query"}%-28s ${"best_s"}%8s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"taskTime_s"}%10s")
+    println(f"${"query"}%-28s ${"best_s"}%8s ${"build_s"}%8s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"taskTime_s"}%10s")
     ordered.foreach { case (name, fn) =>
       val measured = (1 to reps).map { _ =>
         jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0L)
         val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count()
+        // build_s: the harness call alone — analysis plus any eager
+        // checkpoint or collect it runs before returning its frame
+        val df = fn(spark, sfDir)
+        val built = (System.nanoTime() - t0) / 1e9
+        df.queryExecution.toRdd.count()
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         System.gc()
-        (dt, jobs.get, stages.get, tasks.get, taskTimeMs.get / 1e3)
+        (dt, built, jobs.get, stages.get, tasks.get, taskTimeMs.get / 1e3)
       }
       val best = measured.minBy(_._1)
       // session-accumulation diagnostic: persistent RDDs (localCheckpoint
       // blocks live here until the ContextCleaner reaps them)
       val rdds = spark.sparkContext.getPersistentRDDs.size
-      println(f"$name%-28s ${best._1}%8.3f ${best._2}%5d ${best._3}%7d ${best._4}%6d ${best._5}%10.2f  rdds=$rdds%4d")
+      println(f"$name%-28s ${best._1}%8.3f ${best._2}%8.3f ${best._3}%5d ${best._4}%7d ${best._5}%6d ${best._6}%10.2f  rdds=$rdds%4d")
     }
     spark.stop()
   }

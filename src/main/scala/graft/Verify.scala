@@ -3,6 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in oracle SQL would otherwise make a JSON reader of
+  // oracle_sql.json fail and silently lose every oracle. Bench's JSON
+  // line uses the same quoter.
+  def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -14,34 +28,18 @@ object Verify {
     // and the driver's correctness file simply shrank. Every failure lands
     // in outDir/_errors.json AND on stdout.
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (local iteration loop);
-    // the driver never sets it, so its runs always cover every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val selected = SparkEntry.selected
+    selected.foreach { g =>
+      try g.harness(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        failures(name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(500)}"
-        System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
+        failures(g.name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(500)}"
+        System.err.println(s"[verify] ${g.name} FAILED: ${e.getMessage}")
       }
       finally spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map(g => s"${q(g.name)}: ${q(g.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = failures
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

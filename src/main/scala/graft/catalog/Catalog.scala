@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -10,15 +10,16 @@ import PartitionedTable.deleteDir
 /** Collection catalog + DDL — the engine's storage layer.
   *
   * One Parquet directory per collection under a warehouse dir, plus a tiny
-  * `_catalog` Parquet table `(collection_name, table_name, dimension)`
-  * mirroring the reference's registry table
+  * `_catalog` Parquet table `(collection_name, table_name, dimension)`,
+  * one `table_name=` partition per collection, mirroring the reference's
+  * registry table
   * (reference: vector_mcp/vectordb/postgres.py:106-115). Physical table
   * naming is the same scheme: `vm_` + first 24 hex chars of
   * sha256(collection_name) (postgres.py:33-35). Tenant scoping prefixes the
   * logical name with `t_<sha256(tenant)[:16]>_` (vector_api.py:216-223).
   *
-  * Scale note: catalog rows are O(#collections) — always tiny — so catalog
-  * mutations are driver-side rewrites. Collection DATA paths are what grow;
+  * Scale note: catalog rows are O(#collections) — always tiny — and each
+  * catalog mutation swaps only its own collection's row. Collection DATA paths are what grow;
   * they are only ever appended/swapped as whole Parquet dirs, and at 100 TB
   * a collection dir is partitioned (see Ingest.upsert) so a swap touches
   * only affected partitions.
@@ -87,13 +88,16 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
     }
   }
 
-  private def writeEntries(es: Seq[CollectionEntry]): Unit = {
+  /** Replace one collection's catalog row (`None` removes it). The catalog
+    * is partitioned by `table_name`, so the write swaps only that
+    * collection's partition through [[PartitionedTable.replacePartitions]]:
+    * a crash mid-swap leaves its manifest, which the next write rolls
+    * forward, and no write can drop another collection's row.
+    */
+  private def writeEntry(tableName: String, row: Option[CollectionEntry]): Unit = {
     import spark.implicits._
-    val tmp = s"$catalogDir.tmp"
-    spark.createDataset(es).toDF().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    deleteDir(Paths.get(catalogDir))
-    Files.move(Paths.get(tmp), Paths.get(catalogDir), StandardCopyOption.ATOMIC_MOVE)
+    PartitionedTable.replacePartitions(spark.createDataset(row.toSeq).toDF(), catalogDir,
+      Seq("table_name"), Nil, Seq(s"table_name=$tableName"))
   }
 
   /** 3-case create contract (reference: vectordb/base.py:88-105):
@@ -126,7 +130,7 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.documentsPhysical)
           .write.partitionBy("bucket")
           .mode(SaveMode.Overwrite).parquet(tablePath(entry))
-        writeEntries(es.filterNot(_.collection_name == name) :+ entry)
+        writeEntry(entry.table_name, Some(entry))
         entry
     }
   }
@@ -150,11 +154,9 @@ final class Catalog(spark: SparkSession, val warehouseDir: String) {
 
   /** Drop table dir + derived indexes + catalog row (postgres.py:225-239). */
   def deleteCollection(name: String): Unit = monitor {
-    val es = entries()
-    val entry = es.find(_.collection_name == name)
-      .getOrElse(throw new GraftException(ErrorCodes.CollectionNotFound))
+    val entry = getCollection(name)
     deleteTableAndDerived(entry)
-    writeEntries(es.filterNot(_.collection_name == name))
+    writeEntry(entry.table_name, None)
   }
 
   /** The logical documents table (bucket partition column dropped). */

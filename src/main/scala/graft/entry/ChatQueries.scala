@@ -167,6 +167,45 @@ object ChatQueries {
       |       doc_id % 11 <> 0 AND doc_id % 7 <> 0 AS valid
       |FROM documents ORDER BY conv_id""".stripMargin
 
+  /** Per conversation and budget: kept content turns, kept tool turns,
+    * kept tokens and the first kept content turn (-1 when none).
+    */
+  private def trimSummary(kept: DataFrame): DataFrame =
+    kept.groupBy("conv_id", "budget")
+      .agg(
+        sum(when(col("role") =!= "system", 1L).otherwise(0L)).as("n_kept"),
+        sum(when(col("role") === "tool", 1L).otherwise(0L)).as("n_tool_kept"),
+        sum(col("tokens")).as("kept_tokens"),
+        coalesce(min(when(col("role") =!= "system", col("turn_idx"))),
+          lit(-1)).cast("long").as("first_kept_idx"))
+      .orderBy("conv_id", "budget")
+
+  /** The tool-aware trim in DuckDB after the suffix `sfx` within budget
+    * `b` (system turn costs 2): cut at the first kept user turn, drop tool
+    * turns whose `anchor` was cut, and summarize as [[trimSummary]].
+    */
+  private val toolTrimTailSql: String =
+    """fu AS (SELECT conv_id, budget,
+      |              min(CASE WHEN role = 'user' THEN i END) AS u0
+      |       FROM sfx GROUP BY conv_id, budget),
+      |kept AS (SELECT sfx.* FROM sfx
+      |         JOIN fu ON fu.conv_id = sfx.conv_id AND fu.budget = sfx.budget
+      |         WHERE sfx.i >= fu.u0
+      |           AND (sfx.role <> 'tool'
+      |                OR (sfx.anchor IS NOT NULL AND sfx.anchor >= fu.u0)))
+      |SELECT d.doc_id AS conv_id, bb.budget,
+      |       CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
+      |       CAST(coalesce(k.n_tool, 0) AS BIGINT) AS n_tool_kept,
+      |       CAST(coalesce(k.kept_len, 0) + 2 AS BIGINT) AS kept_tokens,
+      |       CAST(coalesce(k.first_i, -1) AS BIGINT) AS first_kept_idx
+      |FROM documents d CROSS JOIN b bb
+      |LEFT JOIN (SELECT conv_id, budget, count(*) AS n_kept,
+      |                  sum(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS n_tool,
+      |                  sum(len) AS kept_len, min(i) AS first_i
+      |           FROM kept GROUP BY conv_id, budget) k
+      |  ON k.conv_id = d.doc_id AND k.budget = bb.budget
+      |ORDER BY conv_id, bb.budget""".stripMargin
+
   // ---- budget trim over the TOOL fixture: grades the orphan rule ----
   // Same planted roles as q_chat_tools; token costs 3 + (doc_id+i) mod 5
   // per content turn, system costs 2, budget 18 — the suffix cut lands
@@ -196,18 +235,11 @@ object ChatQueries {
     val kept = Seq(18L, 40L).map { b =>
       Chat.contextBudgetTrim(turns, b, "tokens").withColumn("budget", lit(b))
     }.reduce(_ unionByName _)
-    kept.groupBy("conv_id", "budget")
-      .agg(
-        sum(when(col("role") =!= "system", 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("role") === "tool", 1L).otherwise(0L)).as("n_tool_kept"),
-        sum(col("tokens")).as("kept_tokens"),
-        coalesce(min(when(col("role") =!= "system", col("turn_idx"))),
-          lit(-1)).cast("long").as("first_kept_idx"))
-      .orderBy("conv_id", "budget")
+    trimSummary(kept)
   }
 
   val chatBudgetToolsSql: String =
-    """WITH t AS (SELECT doc_id AS conv_id, CAST(g.i AS INTEGER) AS i,
+    s"""WITH t AS (SELECT doc_id AS conv_id, CAST(g.i AS INTEGER) AS i,
       |             CASE WHEN g.i = 7 THEN 'tool'
       |                  WHEN g.i = 2 AND doc_id % 11 = 0 THEN 'tool'
       |                  WHEN g.i = 1 THEN 'user' WHEN g.i = 2 THEN 'assistant'
@@ -225,26 +257,7 @@ object ChatQueries {
       |b AS (SELECT CAST(unnest([18, 40]) AS BIGINT) AS budget),
       |sfx AS (SELECT a.*, b.budget FROM a CROSS JOIN b
       |        WHERE rev_sum + 2 <= b.budget),
-      |fu AS (SELECT conv_id, budget,
-      |              min(CASE WHEN role = 'user' THEN i END) AS u0
-      |       FROM sfx GROUP BY conv_id, budget),
-      |kept AS (SELECT sfx.* FROM sfx
-      |         JOIN fu ON fu.conv_id = sfx.conv_id AND fu.budget = sfx.budget
-      |         WHERE sfx.i >= fu.u0
-      |           AND (sfx.role <> 'tool'
-      |                OR (sfx.anchor IS NOT NULL AND sfx.anchor >= fu.u0)))
-      |SELECT d.doc_id AS conv_id, bb.budget,
-      |       CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
-      |       CAST(coalesce(k.n_tool, 0) AS BIGINT) AS n_tool_kept,
-      |       CAST(coalesce(k.kept_len, 0) + 2 AS BIGINT) AS kept_tokens,
-      |       CAST(coalesce(k.first_i, -1) AS BIGINT) AS first_kept_idx
-      |FROM documents d CROSS JOIN b bb
-      |LEFT JOIN (SELECT conv_id, budget, count(*) AS n_kept,
-      |                  sum(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS n_tool,
-      |                  sum(len) AS kept_len, min(i) AS first_i
-      |           FROM kept GROUP BY conv_id, budget) k
-      |  ON k.conv_id = d.doc_id AND k.budget = bb.budget
-      |ORDER BY conv_id, bb.budget""".stripMargin
+      |$toolTrimTailSql""".stripMargin
 
   // ---- id-matched tool anchoring: parallel calls + interleaved results ----
   // Content turns i=1..9 per doc: user, assistant calls [c{d}_1, c{d}_2],
@@ -344,18 +357,11 @@ object ChatQueries {
     val kept = Seq(25L, 50L).map { b =>
       Chat.contextBudgetTrimIds(turns, b, "tokens").withColumn("budget", lit(b))
     }.reduce(_ unionByName _)
-    kept.groupBy("conv_id", "budget")
-      .agg(
-        sum(when(col("role") =!= "system", 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("role") === "tool", 1L).otherwise(0L)).as("n_tool_kept"),
-        sum(col("tokens")).as("kept_tokens"),
-        coalesce(min(when(col("role") =!= "system", col("turn_idx"))),
-          lit(-1)).cast("long").as("first_kept_idx"))
-      .orderBy("conv_id", "budget")
+    trimSummary(kept)
   }
 
   val chatBudgetToolsIdsSql: String =
-    """WITH t AS (SELECT doc_id AS conv_id, CAST(g.i AS INTEGER) AS i,
+    s"""WITH t AS (SELECT doc_id AS conv_id, CAST(g.i AS INTEGER) AS i,
       |             CASE WHEN g.i = 1 THEN
       |                    CASE WHEN doc_id % 17 = 0 THEN 'tool' ELSE 'user' END
       |                  WHEN g.i IN (2, 5, 7, 9) THEN 'assistant'
@@ -382,26 +388,7 @@ object ChatQueries {
       |b AS (SELECT CAST(unnest([25, 50]) AS BIGINT) AS budget),
       |sfx AS (SELECT rv.*, b.budget FROM rv CROSS JOIN b
       |        WHERE rev_sum + 2 <= b.budget),
-      |fu AS (SELECT conv_id, budget,
-      |              min(CASE WHEN role = 'user' THEN i END) AS u0
-      |       FROM sfx GROUP BY conv_id, budget),
-      |kept AS (SELECT sfx.* FROM sfx
-      |         JOIN fu ON fu.conv_id = sfx.conv_id AND fu.budget = sfx.budget
-      |         WHERE sfx.i >= fu.u0
-      |           AND (sfx.role <> 'tool'
-      |                OR (sfx.anchor IS NOT NULL AND sfx.anchor >= fu.u0)))
-      |SELECT d.doc_id AS conv_id, bb.budget,
-      |       CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept,
-      |       CAST(coalesce(k.n_tool, 0) AS BIGINT) AS n_tool_kept,
-      |       CAST(coalesce(k.kept_len, 0) + 2 AS BIGINT) AS kept_tokens,
-      |       CAST(coalesce(k.first_i, -1) AS BIGINT) AS first_kept_idx
-      |FROM documents d CROSS JOIN b bb
-      |LEFT JOIN (SELECT conv_id, budget, count(*) AS n_kept,
-      |                  sum(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS n_tool,
-      |                  sum(len) AS kept_len, min(i) AS first_i
-      |           FROM kept GROUP BY conv_id, budget) k
-      |  ON k.conv_id = d.doc_id AND k.budget = bb.budget
-      |ORDER BY conv_id, bb.budget""".stripMargin
+      |$toolTrimTailSql""".stripMargin
 
   // ---- preference-pair (DPO/RLHF) audits over synthesized pairs ----
   // chosen = tokens 9..9+lenc-1 (lenc = 6 + 3*doc_id mod 9), rejected =
@@ -435,6 +422,16 @@ object ChatQueries {
       |             coalesce(array_to_string(toks[24 : 23 + 5 + (doc_id * 7) % 7], ' '), '') AS rejected
       |      FROM d)""".stripMargin
 
+  /** The length-bias report over `l(source, chosen, rejected, lc, lr)`. */
+  private val lengthBiasReportSql: String =
+    """SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
+      |       CAST(sum(CASE WHEN lc > lr THEN 1 ELSE 0 END) AS BIGINT)
+      |         * 1000000 // count(*) AS chosen_longer_ppm,
+      |       CAST(sum(lc - lr) AS BIGINT) AS len_delta_sum,
+      |       CAST(sum(CASE WHEN chosen = rejected THEN 1 ELSE 0 END) AS BIGINT)
+      |         * 1000000 // count(*) AS identical_ppm
+      |FROM l GROUP BY source ORDER BY source""".stripMargin
+
   def prefBias(s: SparkSession, dir: String): DataFrame =
     graft.operators.Preference.lengthBiasReport(
       prefPairs(s, dir), "source", "chosen", "rejected").orderBy("source")
@@ -445,13 +442,7 @@ object ChatQueries {
       |             len(regexp_extract_all(chosen, '[a-z0-9_]{2,}')) AS lc,
       |             len(regexp_extract_all(rejected, '[a-z0-9_]{2,}')) AS lr
       |      FROM p)
-      |SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
-      |       CAST(sum(CASE WHEN lc > lr THEN 1 ELSE 0 END) AS BIGINT)
-      |         * 1000000 // count(*) AS chosen_longer_ppm,
-      |       CAST(sum(lc - lr) AS BIGINT) AS len_delta_sum,
-      |       CAST(sum(CASE WHEN chosen = rejected THEN 1 ELSE 0 END) AS BIGINT)
-      |         * 1000000 // count(*) AS identical_ppm
-      |FROM l GROUP BY source ORDER BY source""".stripMargin
+      |$lengthBiasReportSql""".stripMargin
 
   def prefDups(s: SparkSession, dir: String): DataFrame =
     graft.operators.Preference.duplicateResponses(
@@ -533,35 +524,27 @@ object ChatQueries {
       |             len(regexp_extract_all(chosen, '[a-z0-9_]{2,}')) AS lc,
       |             len(regexp_extract_all(rejected, '[a-z0-9_]{2,}')) AS lr
       |      FROM p)
-      |SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
-      |       CAST(sum(CASE WHEN lc > lr THEN 1 ELSE 0 END) AS BIGINT)
-      |         * 1000000 // count(*) AS chosen_longer_ppm,
-      |       CAST(sum(lc - lr) AS BIGINT) AS len_delta_sum,
-      |       CAST(sum(CASE WHEN chosen = rejected THEN 1 ELSE 0 END) AS BIGINT)
-      |         * 1000000 // count(*) AS identical_ppm
-      |FROM l GROUP BY source ORDER BY source""".stripMargin
+      |$lengthBiasReportSql""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_chat_validate" -> (chatValidate _),
-    "q_chat_budget" -> (chatBudget _),
-    "q_chat_tools" -> (chatTools _),
-    "q_chat_budget_tools" -> (chatBudgetTools _),
-    "q_chat_tools_ids" -> (chatToolsIds _),
-    "q_chat_budget_tools_ids" -> (chatBudgetToolsIds _),
-    "q_pref_bias" -> (prefBias _),
-    "q_pref_dups" -> (prefDups _),
-    "q_pref_build" -> (prefBuild _),
-    "q_pipeline_pref" -> (pipelinePref _))
-
-  def oracles: Map[String, String] = Map(
-    "q_chat_validate" -> chatValidateSql,
-    "q_chat_budget" -> chatBudgetSql,
-    "q_chat_tools" -> chatToolsSql,
-    "q_chat_budget_tools" -> chatBudgetToolsSql,
-    "q_chat_tools_ids" -> chatToolsIdsSql,
-    "q_chat_budget_tools_ids" -> chatBudgetToolsIdsSql,
-    "q_pref_bias" -> prefBiasSql,
-    "q_pref_dups" -> prefDupsSql,
-    "q_pref_build" -> prefBuildSql,
-    "q_pipeline_pref" -> pipelinePrefSql)
+  val graded: Seq[Graded] = Seq(
+    Graded("q_chat_validate", chatValidate, chatValidateSql,
+      "chat structural audit: from_json parse + per-conversation role-array HOFs, conversation-keyed agg only"),
+    Graded("q_chat_budget", chatBudget, chatBudgetSql,
+      "chat budget trim: conversation-keyed reverse running sum + user-alignment cut — two windows, one exchange"),
+    Graded("q_chat_tools", chatTools, chatToolsSql,
+      "tool-role audit: JSON roundtrip + conversation-keyed agg, role-grammar HOF (tool only after assistant) — per-key state bounded by context length"),
+    Graded("q_chat_budget_tools", chatBudgetTools, chatBudgetToolsSql,
+      "tool-aware budget trim: anchor window (nearest preceding assistant) + reverse-sum suffix + user-aligned cut + orphan-tool drop — all conversation-keyed windows, context-length-bounded state"),
+    Graded("q_chat_tools_ids", chatToolsIds, chatToolsIdsSql,
+      "id-matched tool audit: JSON roundtrip with call-id columns; parallel-result runs verified BY ID against the run-head assistant's call list (window-carried, no self-join) — conversation-keyed, context-length-bounded"),
+    Graded("q_chat_budget_tools_ids", chatBudgetToolsIds, chatBudgetToolsIdsSql,
+      "id-anchored budget trim: tool anchors resolve to the assistant CARRYING the call id (window-collected carrier list + array HOF), suffix + user-aligned cut unchanged — all conversation-keyed windows"),
+    Graded("q_pref_bias", prefBias, prefBiasSql,
+      "DPO length-bias audit: narrow token-count projection + ONE source-keyed combiner-collapsed agg"),
+    Graded("q_pref_dups", prefDups, prefDupsSql,
+      "duplicate-response audit: sha256-keyed agg, output dup-group-sized"),
+    Graded("q_pref_build", prefBuild, prefBuildSql,
+      "DPO pair construction: prompt-keyed window (best) + prompt-keyed self-join bounded by K responses/prompt, content-identical pairs dropped via sha"),
+    Graded("q_pipeline_pref", pipelinePref, pipelinePrefSql,
+      "producer->audit composition: buildPairs (all ordered, prompt-keyed K^2) into the length-bias combiner-collapsed agg; identical_ppm 0 by construction"))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.ingest.{DeterministicHashEmbedder, Embed, Ingest, Sanitize}
+import Fixtures._
 
 /** Oracle-checked queries for the reference-surface operators of SURVEY §2
   * (DDL listing, validation, sanitization, id derivation, dedup, MERGE,
@@ -282,13 +283,8 @@ object CoreQueries {
     * (doc, dim)-keyed aggregate; nothing corpus-sized beyond the chunk
     * rows themselves.
     */
-  def chunkEmbedPool(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id"), col("text").as("content"))
-    val chunks = graft.retriever.Retriever.chunk(docs, maxTokens = 20)
-      .select(col("doc_id"), col("content"),
-        lit(null).cast("array<float>").as("embedding"))
-    Embed.withEmbeddings(chunks, new DeterministicHashEmbedder(8))
+  def chunkEmbedPool(s: SparkSession, dir: String): DataFrame =
+    chunkEmbeddings(s, dir)
       .select(col("doc_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .select(col("doc_id"), col("dim"),
         round(col("v").cast("double") * 100, 0).cast("long").as("cent"))
@@ -297,18 +293,11 @@ object CoreQueries {
       .select(col("doc_id"), col("dim"), col("n_chunks"),
         expr("sm div n_chunks").as("pooled_micro"))
       .orderBy("doc_id", "dim")
-  }
 
   val chunkEmbedPoolSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(content, '\s+') AS words
+    raw"""WITH w AS (SELECT doc_id, regexp_split_to_array(content, '\s+') AS words
       |           FROM (SELECT doc_id, text AS content FROM documents)),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
+      |$chunkWindowCtes,
       |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
       |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
       |v AS (SELECT doc_id, dim,
@@ -333,15 +322,9 @@ object CoreQueries {
   }
 
   val retrieverChunksSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(content, '\s+') AS words
+    raw"""WITH w AS (SELECT doc_id, regexp_split_to_array(content, '\s+') AS words
       |           FROM (SELECT doc_id, text AS content FROM documents)),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks)
+      |$chunkWindowCtes
       |SELECT doc_id, CAST(length(chunk) AS INTEGER) AS chunk_len, chunk
       |FROM c WHERE length(chunk) > 0 ORDER BY doc_id, chunk""".stripMargin
 
@@ -388,28 +371,9 @@ object CoreQueries {
   }
 
   val leakageSplitSql: String =
-    """WITH RECURSIVE sh AS (
-      |  SELECT id, list_distinct(list_transform(range(len(w) - 2),
-      |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS sh
-      |  FROM (SELECT doc_id AS id,
-      |          regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS w
-      |        FROM documents)
-      |  WHERE len(w) >= 3),
-      |f AS (SELECT id, unnest(sh) AS s FROM sh),
-      |sizes AS (SELECT id, len(sh) AS l FROM sh),
-      |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-      |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-      |       GROUP BY x.id, y.id),
-      |p AS (SELECT co.a, co.b FROM co
-      |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-      |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.6),
-      |edges AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
-      |reach(src, t) AS (
-      |  SELECT a, b FROM edges
-      |  UNION
-      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.t = e.a),
-      |comp AS (SELECT src AS id, least(src, min(t)) AS comp
-      |         FROM reach GROUP BY src),
+    s"""WITH RECURSIVE $jaccardCoCtes,
+      |${jaccardPairsCte(0.6)},
+      |$componentCtes,
       |lab AS (SELECT d.doc_id AS id, COALESCE(comp.comp, d.doc_id) AS comp
       |        FROM documents d LEFT JOIN comp ON d.doc_id = comp.id)
       |SELECT id AS doc_id, comp,
@@ -482,41 +446,37 @@ object CoreQueries {
       |    // count(*) AS pii_rate_micro
       |FROM fl GROUP BY lang ORDER BY lang""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pii_scan" -> (piiScan _),
-    "q_chunk_overlap" -> (chunkOverlapQ _),
-    "q_split_leakage" -> (leakageSplitQ _),
-    "q_collection_list" -> (collectionList _),
-    "q_name_validation" -> (nameValidation _),
-    "q_sanitize_paths" -> (sanitizePaths _),
-    "q_sanitize_pii" -> (sanitizePii _),
-    "q_id_derivation" -> (idDerivation _),
-    "q_ingest_dedup" -> (ingestDedup _),
-    "q_upsert_merge" -> (upsertMerge _),
-    "q_delete_docs" -> (deleteDocs _),
-    "q_get_by_ids" -> (getByIds _),
-    "q_embed_validate" -> (embedValidate _),
-    "q_embed_deterministic" -> (embedDeterministic _),
-    "q_chunk_embed_pool" -> (chunkEmbedPool _),
-    "q_retriever_chunks" -> (retrieverChunks _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_pii_scan" -> piiScanSql,
-    "q_collection_list" -> collectionListSql,
-    "q_name_validation" -> nameValidationSql,
-    "q_sanitize_paths" -> sanitizePathsSql,
-    "q_sanitize_pii" -> sanitizePiiSql,
-    "q_id_derivation" -> idDerivationSql,
-    "q_ingest_dedup" -> ingestDedupSql,
-    "q_upsert_merge" -> upsertMergeSql,
-    "q_delete_docs" -> deleteDocsSql,
-    "q_get_by_ids" -> getByIdsSql,
-    "q_embed_validate" -> embedValidateSql,
-    "q_embed_deterministic" -> embedDeterministicSql,
-    "q_chunk_embed_pool" -> chunkEmbedPoolSql,
-    "q_chunk_overlap" -> chunkOverlapSql,
-    "q_split_leakage" -> leakageSplitSql,
-    "q_retriever_chunks" -> retrieverChunksSql
-  )
+  val graded: Seq[Graded] = Seq(
+    Graded("q_pii_scan", piiScan, piiScanSql,
+      "PII scan: native redaction expression per row + ppm rollup"),
+    Graded("q_chunk_overlap", chunkOverlapQ, chunkOverlapSql,
+      "overlapping chunker: per-doc window slices exploded, output chunk-sized"),
+    Graded("q_split_leakage", leakageSplitQ, leakageSplitSql,
+      "split leakage: train/test shingle probe join, leak rows output-sized"),
+    Graded("q_collection_list", collectionList, collectionListSql,
+      "catalog listing: tenant-prefix filter over the metadata table — catalog-sized, no corpus touch"),
+    Graded("q_name_validation", nameValidation, nameValidationSql,
+      "collection-name guard: regex validation projection — catalog-sized"),
+    Graded("q_sanitize_paths", sanitizePaths, sanitizePathsSql,
+      "path sanitization: codegen'd regex chain in a single projection"),
+    Graded("q_sanitize_pii", sanitizePii, sanitizePiiSql,
+      "PII sanitization: one projection pass, Luhn fold inside codegen"),
+    Graded("q_id_derivation", idDerivation, idDerivationSql,
+      "uuid5(sha256) id derivation: narrow per-row expression, zero shuffle"),
+    Graded("q_ingest_dedup", ingestDedup, ingestDedupSql,
+      "ingest last-wins dedup: id-keyed window on arrival order, one exchange"),
+    Graded("q_upsert_merge", upsertMerge, upsertMergeSql,
+      "upsert MERGE: id-keyed full-outer with last-wins resolution"),
+    Graded("q_delete_docs", deleteDocs, deleteDocsSql,
+      "delete_documents: broadcast id-set LEFT ANTI — one corpus pass"),
+    Graded("q_get_by_ids", getByIds, getByIdsSql,
+      "get_documents_by_ids: IN-list pushed into the parquet scan (PushedFilters)"),
+    Graded("q_embed_validate", embedValidate, embedValidateSql,
+      "embedding validation: dim/finite/norm checks in ONE projection + rollup agg"),
+    Graded("q_embed_deterministic", embedDeterministic, embedDeterministicSql,
+      "deterministic embedder: per-partition batch embed, narrow map — no shuffle"),
+    Graded("q_chunk_embed_pool", chunkEmbedPool, chunkEmbedPoolSql,
+      "chunk-embed-pool: chunk explode -> per-partition batch embed -> (doc,dim) agg"),
+    Graded("q_retriever_chunks", retrieverChunks, retrieverChunksSql,
+      "retriever chunking: 512-token windows per doc, explode output-sized"))
 }

@@ -6,6 +6,7 @@ import graft.Tables
 import graft.Tables.t
 import graft.ann.{Ann, Pq, Sq}
 import graft.dedup.{Dedup, EditJoin}
+import Fixtures._
 
 /** Oracle-checked queries for the dedup + similarity-search pipeline
   * operators. LSH-based operators (MinHash, SimHash blocking) verify every
@@ -18,16 +19,6 @@ object DedupQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").select(col("doc_id").as("id"), col("text").as("content"))
 
-  /** DuckDB shingle-set fragment shared by the jaccard oracles. */
-  private val shingleCte =
-    """sh AS (
-      |  SELECT id, list_distinct(list_transform(range(len(w) - 2),
-      |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS sh
-      |  FROM (SELECT doc_id AS id,
-      |          regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS w
-      |        FROM documents)
-      |  WHERE len(w) >= 3)""".stripMargin
-
   /** Exact pairwise Jaccard in the INVERTED-INDEX shape (unnest -> shingle
     * self-join -> pair groupBy), identical results to the naive all-pairs
     * `list_intersect` formulation but ~250x faster in DuckDB at sf0.1
@@ -36,12 +27,7 @@ object DedupQueries {
     * all-pairs join would keep. Keeps the driver's oracle replay cheap.
     */
   private def jaccardInvertedSqlD(threshold: Double): String =
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id)
+    s"""WITH $jaccardCoCtes
        |SELECT co.a, co.b,
        |  round(CAST(inter AS DOUBLE) / (sa.l + sb.l - inter), 6) AS jaccard
        |FROM co JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
@@ -118,12 +104,7 @@ object DedupQueries {
       .orderBy("src", "dst")
 
   val dedupContainmentSql: String =
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
+    s"""WITH $jaccardCoCtes,
        |sized AS (SELECT co.a, co.b, co.inter, sa.l AS la, sb.l AS lb
        |          FROM co JOIN sizes sa ON co.a = sa.id
        |          JOIN sizes sb ON co.b = sb.id),
@@ -182,12 +163,7 @@ object DedupQueries {
   }
 
   val mineTripletsSql: String =
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
+    s"""WITH $jaccardCoCtes,
        |jp AS (SELECT co.a, co.b
        |       FROM co JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
        |       WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.5),
@@ -364,12 +340,7 @@ object DedupQueries {
   }
 
   val dedupSweepSql: String =
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
+    s"""WITH $jaccardCoCtes,
        |pj AS (SELECT co.a, co.b,
        |         CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) AS j
        |       FROM co JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
@@ -412,22 +383,9 @@ object DedupQueries {
   }
 
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
-       |p AS (SELECT co.a, co.b FROM co
-       |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-       |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.6),
-       |edges AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
-       |reach(src, t) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.t = e.a),
-       |comp AS (SELECT src AS id, least(src, min(t)) AS comp
-       |         FROM reach GROUP BY src)
+    s"""WITH RECURSIVE $jaccardCoCtes,
+       |${jaccardPairsCte(0.6)},
+       |$componentCtes
        |SELECT comp AS keep_id, count(*) AS n_members,
        |       CAST(sum(id) AS BIGINT) AS member_checksum
        |FROM comp GROUP BY 1 ORDER BY keep_id""".stripMargin
@@ -456,22 +414,9 @@ object DedupQueries {
   }
 
   val dedupStatsSql: String =
-    s"""WITH RECURSIVE $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
-       |p AS (SELECT co.a, co.b FROM co
-       |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-       |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.6),
-       |edges AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
-       |reach(src, t) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.t = e.a),
-       |comp AS (SELECT src AS id, least(src, min(t)) AS comp
-       |         FROM reach GROUP BY src),
+    s"""WITH RECURSIVE $jaccardCoCtes,
+       |${jaccardPairsCte(0.6)},
+       |$componentCtes,
        |cs AS (SELECT comp, count(*) AS cluster_size FROM comp GROUP BY comp),
        |hist AS (SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
        |         FROM cs GROUP BY cluster_size
@@ -620,11 +565,8 @@ object DedupQueries {
   }
 
   val decontaminateSemanticSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |$repCentroidCte,
       |tr AS (SELECT id, v FROM e WHERE id % 10 <> 0),
       |ev AS (SELECT id, v FROM e WHERE id % 10 = 0
       |       UNION ALL
@@ -676,19 +618,9 @@ object DedupQueries {
   }
 
   val dedupSemanticSql: String =
-    """WITH RECURSIVE
+    s"""WITH RECURSIVE
       |e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
-      |assign AS (
-      |  SELECT id, v, cluster_id FROM (
-      |    SELECT e.id, e.v, cent.centroid_id AS cluster_id,
-      |           row_number() OVER (PARTITION BY e.id
-      |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-      |    FROM e CROSS JOIN cent)
-      |  WHERE rn = 1),
+      |${ivfAssignCtes(renameInner = true)},
       |p AS (SELECT x.id AS a, y.id AS b
       |      FROM assign x JOIN assign y
       |        ON x.cluster_id = y.cluster_id AND x.id < y.id
@@ -836,18 +768,8 @@ object DedupQueries {
   }
 
   val annIvfSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
-      |assign AS (
-      |  SELECT id, v, centroid_id AS cluster_id FROM (
-      |    SELECT e.id, e.v, cent.centroid_id,
-      |           row_number() OVER (PARTITION BY e.id
-      |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-      |    FROM e CROSS JOIN cent)
-      |  WHERE rn = 1),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |${ivfAssignCtes(renameInner = false)},
       |q AS (SELECT CAST(vec_id AS INTEGER) AS qid, CAST(embedding AS DOUBLE[]) AS qv
       |      FROM embeddings WHERE vec_id IN (0,1,2)),
       |probes AS (
@@ -886,33 +808,23 @@ object DedupQueries {
       .orderBy(col("query_idx"), col("score").desc, col("id"))
   }
 
-  val annPqSql: String =
-    """WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |js AS (SELECT CAST(j AS INTEGER) AS j FROM generate_series(0, 3) t(j)),
-      |seed AS (SELECT code, v FROM (
-      |    SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INTEGER) AS code, v FROM e)
-      |  WHERE code < 8),
-      |cw AS (SELECT js.j, seed.code, list_slice(seed.v, js.j*16 + 1, js.j*16 + 16) AS cw
-      |       FROM js CROSS JOIN seed),
-      |sub AS (SELECT e.id, js.j, list_slice(e.v, js.j*16 + 1, js.j*16 + 16) AS sv
-      |        FROM e CROSS JOIN js),
-      |codes AS (SELECT id, j, code FROM (
+  /** PQ encoding in DuckDB: each sub-vector `sub(id, j, sv)`'s nearest
+    * codeword of `cw(j, code, cw)` (ties to the smaller code).
+    */
+  private val pqCodesCte: String =
+    """codes AS (SELECT id, j, code FROM (
       |    SELECT sub.id, sub.j, cw.code,
       |           row_number() OVER (PARTITION BY sub.id, sub.j ORDER BY
       |             list_sum(list_transform(range(1, 17),
       |               i -> (sv[i] - cw[i]) * (sv[i] - cw[i]))), cw.code) AS rn
       |    FROM sub JOIN cw ON sub.j = cw.j)
-      |  WHERE rn = 1),
-      |q AS (SELECT CAST(vec_id AS INTEGER) AS qid, CAST(embedding AS DOUBLE[]) AS qv
-      |      FROM embeddings WHERE vec_id IN (0,1,2)),
-      |qsub AS (SELECT q.qid, js.j, list_slice(q.qv, js.j*16 + 1, js.j*16 + 16) AS qsv
-      |         FROM q CROSS JOIN js),
-      |perj AS (SELECT qsub.qid, codes.id, codes.j,
-      |                list_sum(list_transform(range(1, 17),
-      |                  i -> (qsv[i] - cw.cw[i]) * (qsv[i] - cw.cw[i]))) AS dj
-      |         FROM codes JOIN cw ON cw.j = codes.j AND cw.code = codes.code
-      |         JOIN qsub ON qsub.j = codes.j),
-      |adist AS (SELECT qid, id, list_sum(list(dj ORDER BY j)) AS ad
+      |  WHERE rn = 1)""".stripMargin
+
+  /** The PQ answer from per-subspace distances `perj(qid, id, j, dj)`:
+    * the 20 smallest ADC distances per query, rescored by exact cosine, top 5.
+    */
+  private val pqRescoreSql: String =
+    """adist AS (SELECT qid, id, list_sum(list(dj ORDER BY j)) AS ad
       |          FROM perj GROUP BY qid, id),
       |short AS (SELECT qid, id FROM (
       |    SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY ad ASC, id) AS rn
@@ -926,6 +838,28 @@ object DedupQueries {
       |      FROM scored)
       |SELECT query_idx, id, round(sc, 6) AS score FROM t WHERE rn <= 5
       |ORDER BY query_idx, round(sc, 6) DESC, id""".stripMargin
+
+  val annPqSql: String =
+    s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |js AS (SELECT CAST(j AS INTEGER) AS j FROM generate_series(0, 3) t(j)),
+      |seed AS (SELECT code, v FROM (
+      |    SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INTEGER) AS code, v FROM e)
+      |  WHERE code < 8),
+      |cw AS (SELECT js.j, seed.code, list_slice(seed.v, js.j*16 + 1, js.j*16 + 16) AS cw
+      |       FROM js CROSS JOIN seed),
+      |sub AS (SELECT e.id, js.j, list_slice(e.v, js.j*16 + 1, js.j*16 + 16) AS sv
+      |        FROM e CROSS JOIN js),
+      |$pqCodesCte,
+      |q AS (SELECT CAST(vec_id AS INTEGER) AS qid, CAST(embedding AS DOUBLE[]) AS qv
+      |      FROM embeddings WHERE vec_id IN (0,1,2)),
+      |qsub AS (SELECT q.qid, js.j, list_slice(q.qv, js.j*16 + 1, js.j*16 + 16) AS qsv
+      |         FROM q CROSS JOIN js),
+      |perj AS (SELECT qsub.qid, codes.id, codes.j,
+      |                list_sum(list_transform(range(1, 17),
+      |                  i -> (qsv[i] - cw.cw[i]) * (qsv[i] - cw.cw[i]))) AS dj
+      |         FROM codes JOIN cw ON cw.j = codes.j AND cw.code = codes.code
+      |         JOIN qsub ON qsub.j = codes.j),
+      |$pqRescoreSql""".stripMargin
 
   // ---- ANN: SQ8 scalar quantization — per-dimension min/max byte codes,
   //      linearized approximate-dot ADC shortlist (weight vector per
@@ -1048,7 +982,7 @@ object DedupQueries {
   }
 
   val annPqResidualSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |js AS (SELECT CAST(j AS INTEGER) AS j FROM generate_series(0, 3) t(j)),
       |cent AS (SELECT label AS cl, v AS c FROM (
       |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
@@ -1070,13 +1004,7 @@ object DedupQueries {
       |       FROM js CROSS JOIN seed),
       |sub AS (SELECT res.id, js.j, list_slice(res.rv, js.j*16 + 1, js.j*16 + 16) AS sv
       |        FROM res CROSS JOIN js),
-      |codes AS (SELECT id, j, code FROM (
-      |    SELECT sub.id, sub.j, cw.code,
-      |           row_number() OVER (PARTITION BY sub.id, sub.j ORDER BY
-      |             list_sum(list_transform(range(1, 17),
-      |               i -> (sv[i] - cw[i]) * (sv[i] - cw[i]))), cw.code) AS rn
-      |    FROM sub JOIN cw ON sub.j = cw.j)
-      |  WHERE rn = 1),
+      |$pqCodesCte,
       |q AS (SELECT CAST(vec_id AS INTEGER) AS qid, CAST(embedding AS DOUBLE[]) AS qv
       |      FROM embeddings WHERE vec_id IN (0,1,2)),
       |qres AS (SELECT q.qid, cent.cl,
@@ -1093,20 +1021,7 @@ object DedupQueries {
       |         JOIN assign ON assign.id = codes.id
       |         JOIN qsub ON qsub.j = codes.j AND qsub.cl = assign.cl
       |         JOIN cw ON cw.j = codes.j AND cw.code = codes.code),
-      |adist AS (SELECT qid, id, list_sum(list(dj ORDER BY j)) AS ad
-      |          FROM perj GROUP BY qid, id),
-      |short AS (SELECT qid, id FROM (
-      |    SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY ad ASC, id) AS rn
-      |    FROM adist)
-      |  WHERE rn <= 20),
-      |scored AS (SELECT q.qid AS query_idx, e.id,
-      |                  list_cosine_similarity(e.v, q.qv) AS sc
-      |           FROM short JOIN q ON q.qid = short.qid JOIN e ON e.id = short.id),
-      |t AS (SELECT query_idx, id, sc,
-      |             row_number() OVER (PARTITION BY query_idx ORDER BY sc DESC, id) AS rn
-      |      FROM scored)
-      |SELECT query_idx, id, round(sc, 6) AS score FROM t WHERE rn <= 5
-      |ORDER BY query_idx, round(sc, 6) DESC, id""".stripMargin
+      |$pqRescoreSql""".stripMargin
 
   // ---- kNN self-join: top-3 neighbors of the first 50 vectors ----
   def annKnnJoin(s: SparkSession, dir: String): DataFrame =
@@ -1136,18 +1051,8 @@ object DedupQueries {
   }
 
   val annKnnBlockedSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
-      |assign AS (
-      |  SELECT id, v, cluster_id FROM (
-      |    SELECT e.id, e.v, cent.centroid_id AS cluster_id,
-      |           row_number() OVER (PARTITION BY e.id
-      |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-      |    FROM e CROSS JOIN cent)
-      |  WHERE rn = 1),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |${ivfAssignCtes(renameInner = true)},
       |s AS (SELECT a.id AS qid, b.id AS nid,
       |             list_cosine_similarity(a.v, b.v) AS sc
       |      FROM assign a JOIN assign b
@@ -1344,7 +1249,7 @@ object DedupQueries {
       .orderBy("doc_id")
 
   val dedupSpansSql: String =
-    """WITH d AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS toks
+    s"""WITH d AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS toks
       |           FROM documents),
       |g AS (SELECT doc_id, i AS pos, array_to_string(toks[i+1:i+5], ' ') AS g
       |      FROM d, UNNEST(range(greatest(len(toks)-4, 0))) AS u(i)),
@@ -1354,19 +1259,7 @@ object DedupQueries {
       |cov AS (SELECT DISTINCT doc_id, p
       |        FROM (SELECT doc_id, UNNEST(generate_series(pos, pos+4)) AS p
       |              FROM r WHERE rn > 1) e),
-      |tp AS (SELECT doc_id, i AS p, toks[i+1] AS tok
-      |       FROM d, UNNEST(range(len(toks))) AS u(i)),
-      |kept AS (SELECT tp.doc_id, tp.p, tp.tok FROM tp
-      |         LEFT JOIN cov ON tp.doc_id = cov.doc_id AND tp.p = cov.p
-      |         WHERE cov.p IS NULL),
-      |c AS (SELECT doc_id, count(*) AS kept_tokens,
-      |        string_agg(tok, ' ' ORDER BY p) AS cleaned
-      |      FROM kept GROUP BY doc_id)
-      |SELECT d.doc_id, len(d.toks) AS tok_len,
-      |       coalesce(c.kept_tokens, 0) AS kept_tokens,
-      |       coalesce(c.cleaned, '') AS cleaned
-      |FROM d LEFT JOIN c USING (doc_id)
-      |ORDER BY d.doc_id""".stripMargin
+      |$spanStripSql""".stripMargin
 
   // ---- near-dup graph PageRank: template-spam centrality over the
   //      exact-Jaccard pair graph at threshold 0.3 (the sweep-proven
@@ -1389,15 +1282,8 @@ object DedupQueries {
          |r$i AS (SELECT n.id, CAST(150000 + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
          |       FROM deg n LEFT JOIN c$i c ON n.id = c.id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
-       |p AS (SELECT co.a, co.b FROM co
-       |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-       |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.3),
+    s"""WITH $jaccardCoCtes,
+       |${jaccardPairsCte(0.3)},
        |edges AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
        |deg AS (SELECT a AS id, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY a),
        |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM deg),
@@ -1427,15 +1313,8 @@ object DedupQueries {
          |              + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
          |       FROM deg n LEFT JOIN c$i c ON n.id = c.id CROSS JOIN rst)""".stripMargin
     }.mkString(",\n")
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
-       |p AS (SELECT co.a, co.b FROM co
-       |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-       |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.3),
+    s"""WITH $jaccardCoCtes,
+       |${jaccardPairsCte(0.3)},
        |edges AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
        |deg AS (SELECT a AS id, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY a),
        |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1462,15 +1341,8 @@ object DedupQueries {
       .orderBy("id")
 
   val graphTrianglesSql: String =
-    s"""WITH $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
-       |p AS (SELECT co.a, co.b FROM co
-       |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-       |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.3),
+    s"""WITH $jaccardCoCtes,
+       |${jaccardPairsCte(0.3)},
        |e AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
        |      FROM p WHERE a <> b),
        |deg AS (SELECT id, CAST(count(*) AS BIGINT) AS deg
@@ -1521,22 +1393,9 @@ object DedupQueries {
   }
 
   val dedupSurvivorSql: String =
-    s"""WITH RECURSIVE $shingleCte,
-       |f AS (SELECT id, unnest(sh) AS s FROM sh),
-       |sizes AS (SELECT id, len(sh) AS l FROM sh),
-       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
-       |       FROM f x JOIN f y ON x.s = y.s AND x.id < y.id
-       |       GROUP BY x.id, y.id),
-       |p AS (SELECT co.a, co.b FROM co
-       |      JOIN sizes sa ON co.a = sa.id JOIN sizes sb ON co.b = sb.id
-       |      WHERE CAST(inter AS DOUBLE) / (sa.l + sb.l - inter) >= 0.6),
-       |edges AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
-       |reach(src, t) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.t = e.a),
-       |comp AS (SELECT src AS id, least(src, min(t)) AS comp
-       |         FROM reach GROUP BY src),
+    s"""WITH RECURSIVE $jaccardCoCtes,
+       |${jaccardPairsCte(0.6)},
+       |$componentCtes,
        |toks AS (SELECT doc_id AS id,
        |           CAST(len(regexp_extract_all(lower(text), '[a-z0-9_]{2,}')) AS BIGINT)
        |             AS tokens
@@ -1635,95 +1494,89 @@ object DedupQueries {
        |ORDER BY pm.src_a, pm.src_b""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_corpus_overlap" -> (corpusOverlap _),
-    "q_graph_pagerank" -> (graphPagerank _),
-    "q_graph_ppr" -> (graphPpr _),
-    "q_graph_triangles" -> (graphTriangles _),
-    "q_dedup_survivor" -> (dedupSurvivor _),
-    "q_dedup_spans" -> (dedupSpans _),
-    "q_ann_sq" -> (annSq _),
-    "q_search_mmr" -> (searchMmr _),
-    "q_dedup_ngram_prefix" -> (dedupNgramPrefix _),
-    "q_dedup_multiscript" -> (dedupMultiscript _),
-    "q_ann_knn_join" -> (annKnnJoin _),
-    "q_ann_knn_blocked" -> (annKnnBlocked _),
-    "q_ann_nndescent" -> (annNnDescent _),
-    "q_lsh_planner" -> (lshPlanner _),
-    "q_dedup_exact" -> (dedupExact _),
-    "q_dedup_minhash" -> (dedupMinhash _),
-    "q_dedup_minhash_sig" -> (dedupMinhashSig _),
-    "q_dedup_clusters" -> (dedupClusters _),
-    "q_dedup_clusters_lss" -> (dedupClustersLss _),
-    "q_dedup_stats" -> (dedupStats _),
-    "q_dedup_ngram" -> (dedupNgram _),
-    "q_dedup_sweep" -> (dedupSweep _),
-    "q_dedup_containment" -> (dedupContainment _),
-    "q_dedup_containment_prefix" -> (dedupContainmentPrefix _),
-    "q_dedup_editdist" -> (dedupEditdist _),
-    "q_mine_triplets" -> (mineTriplets _),
-    "q_knn_mutual" -> (knnMutual _),
-    "q_knn_mutual_clusters" -> (knnMutualClusters _),
-    "q_graph_lpa" -> (graphLpa _),
-    "q_cluster_purity" -> (clusterPurity _),
-    "q_dedup_simhash" -> (dedupSimhash _),
-    "q_dedup_simhash64" -> (dedupSimhash64 _),
-    "q_dedup_embedding" -> (dedupEmbedding _),
-    "q_decontaminate_semantic" -> (decontaminateSemantic _),
-    "q_hard_negatives" -> (hardNegatives _),
-    "q_random_negatives" -> (randomNegatives _),
-    "q_dedup_semantic" -> (dedupSemantic _),
-    "q_ann_rp" -> (annRp _),
-    "q_ann_hamming" -> (annHamming _),
-    "q_ann_brute" -> (annBrute _),
-    "q_ann_ivf" -> (annIvf _),
-    "q_ann_pq" -> (annPq _),
-    "q_ann_pq_residual" -> (annPqResidual _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_corpus_overlap" -> corpusOverlapSql,
-    "q_graph_pagerank" -> graphPagerankSql,
-    "q_graph_ppr" -> graphPprSql,
-    "q_graph_triangles" -> graphTrianglesSql,
-    "q_dedup_survivor" -> dedupSurvivorSql,
-    "q_dedup_spans" -> dedupSpansSql,
-    "q_ann_sq" -> annSqSql,
-    "q_search_mmr" -> searchMmrSql,
-    "q_dedup_ngram_prefix" -> jaccardInvertedSqlD(0.5),
-    "q_dedup_multiscript" -> dedupMultiscriptSql,
-    "q_ann_knn_join" -> annKnnJoinSql,
-    "q_ann_knn_blocked" -> annKnnBlockedSql,
-    "q_ann_nndescent" -> annNnDescentSql,
-    "q_lsh_planner" -> lshPlannerSql,
-    "q_dedup_exact" -> dedupExactSql,
-    "q_dedup_minhash" -> dedupMinhashSql,
-    "q_dedup_minhash_sig" -> dedupMinhashSigSql,
-    "q_dedup_clusters" -> dedupClustersSql,
-    "q_dedup_clusters_lss" -> dedupClustersSql,
-    "q_dedup_stats" -> dedupStatsSql,
-    "q_dedup_ngram" -> dedupNgramSql,
-    "q_dedup_sweep" -> dedupSweepSql,
-    "q_dedup_containment" -> dedupContainmentSql,
-    "q_dedup_containment_prefix" -> dedupContainmentSql,
-    "q_dedup_editdist" -> dedupEditdistSql,
-    "q_mine_triplets" -> mineTripletsSql,
-    "q_knn_mutual" -> knnMutualSql,
-    "q_knn_mutual_clusters" -> knnMutualClustersSql,
-    "q_graph_lpa" -> graphLpaSql,
-    "q_cluster_purity" -> clusterPuritySql,
-    "q_dedup_simhash" -> dedupSimhashSql,
-    "q_dedup_simhash64" -> dedupSimhash64Sql,
-    "q_dedup_embedding" -> dedupEmbeddingSql,
-    "q_decontaminate_semantic" -> decontaminateSemanticSql,
-    "q_hard_negatives" -> hardNegativesSql,
-    "q_random_negatives" -> randomNegativesSql,
-    "q_dedup_semantic" -> dedupSemanticSql,
-    "q_ann_rp" -> annRpSql,
-    "q_ann_hamming" -> annHammingSql,
-    "q_ann_brute" -> annBruteSql,
-    "q_ann_ivf" -> annIvfSql,
-    "q_ann_pq" -> annPqSql,
-    "q_ann_pq_residual" -> annPqResidualSql
-  )
+  val graded: Seq[Graded] = Seq(
+    Graded("q_corpus_overlap", corpusOverlap, corpusOverlapSql,
+      "corpus overlap: corpus-keyed signature agg + broadcast pair compare"),
+    Graded("q_graph_pagerank", graphPagerank, graphPagerankSql,
+      "near-dup PageRank: output-sized edge list, per-round ONE keyed join + agg"),
+    Graded("q_graph_ppr", graphPpr, graphPprSql,
+      "personalized PageRank round: one keyed join + agg, seed-conditional restart projection"),
+    Graded("q_graph_triangles", graphTriangles, graphTrianglesSql,
+      "triangle census: degree-ordered orientation, wedge equi-join + closing-edge probe (O(m^1.5))"),
+    Graded("q_dedup_survivor", dedupSurvivor, dedupSurvivorSql,
+      "survivor selection: component-keyed argmax window over the cluster join"),
+    Graded("q_dedup_spans", dedupSpans, dedupSpansSql,
+      "ExactSubstr span removal (keep-first): 5-gram occurrence index, later spans cut, first survives"),
+    Graded("q_ann_sq", annSq, annSqSql,
+      "SQ8 scalar quantization: int8-code ADC scan (no embedding read) + exact re-rank of the shortlist"),
+    Graded("q_search_mmr", searchMmr, searchMmrSql,
+      "MMR re-rank: greedy over the k-sized shortlist (k^2 bounded) — corpus untouched"),
+    Graded("q_dedup_ngram_prefix", dedupNgramPrefix, jaccardInvertedSqlD(0.5),
+      "PPJoin: xxhash64-keyed prefix candidates + sorted-merge verify"),
+    Graded("q_dedup_multiscript", dedupMultiscript, dedupMultiscriptSql,
+      "script-aware near-dup: per-row CJK char-ngram / Latin word-gram routing (native CharNgrams), banded LSH bucket join"),
+    Graded("q_ann_knn_join", annKnnJoin, annKnnJoinSql,
+      "kNN self-join: cluster-blocked candidate pairs + per-src bounded window — no all-pairs product"),
+    Graded("q_ann_knn_blocked", annKnnBlocked, annKnnBlockedSql,
+      "blocked kNN: within-cluster keyed self-join"),
+    Graded("q_ann_nndescent", annNnDescent, annNnDescentSql,
+      "NN-descent round: bounded neighbor self-joins + vector-fetch joins + per-src window"),
+    Graded("q_lsh_planner", lshPlanner, lshPlannerSql,
+      "LSH planner: analytic (bands, rows) S-curve on a literal grid — metadata-sized, no corpus touch"),
+    Graded("q_dedup_exact", dedupExact, dedupExactSql,
+      "exact dedup: sha256-keyed agg, ONE exchange, min-id winners"),
+    Graded("q_dedup_minhash", dedupMinhash, dedupMinhashSql,
+      "MinHash LSH: keyed bucket joins, no all-pairs product"),
+    Graded("q_dedup_minhash_sig", dedupMinhashSig, dedupMinhashSigSql,
+      "MinHash signatures: native per-row expression — signature column out, zero shuffle"),
+    Graded("q_dedup_clusters", dedupClusters, dedupClustersSql,
+      "near-dup components: MinHash pair gen + star rounds, edge set output-sized"),
+    Graded("q_dedup_clusters_lss", dedupClustersLss, dedupClustersSql,
+      "LSS components: per-round keyed min-aggs + joins, edge set output-sized"),
+    Graded("q_dedup_stats", dedupStats, dedupStatsSql,
+      "dup-health histogram: cluster-size keyed counts, size-1 filled from the 1-row corpus total"),
+    Graded("q_dedup_ngram", dedupNgram, dedupNgramSql,
+      "n-gram Jaccard: inverted-index candidate join + sorted-merge verify; diagnosis frames released try/finally"),
+    Graded("q_dedup_sweep", dedupSweep, dedupSweepSql,
+      "threshold sweep: ONE persisted pair frame scored once, cutoffs applied as a broadcast grid"),
+    Graded("q_dedup_containment", dedupContainment, dedupContainmentSql,
+      "containment pairs: inverted-index candidate join, direction fan-out output-sized"),
+    Graded("q_dedup_containment_prefix", dedupContainmentPrefix, dedupContainmentSql,
+      "one-sided prefix containment: rarity-prefix probe join vs RAW (un-windowed) indexed shingles"),
+    Graded("q_dedup_editdist", dedupEditdist, dedupEditdistSql,
+      "Ed-Join: positional char-q-gram prefix candidates + levenshtein verify, light leg broadcast"),
+    Graded("q_mine_triplets", mineTriplets, mineTripletsSql,
+      "triplet mining: output-sized pair/kNN frames, anti-join + per-anchor bounded window"),
+    Graded("q_knn_mutual", knnMutual, knnMutualSql,
+      "mutual kNN: bounded kNN legs + reciprocity self-join on (src, dst)"),
+    Graded("q_knn_mutual_clusters", knnMutualClusters, knnMutualClustersSql,
+      "mutual-kNN clustering: reciprocity self-join -> components over output-sized edges"),
+    Graded("q_graph_lpa", graphLpa, graphLpaSql,
+      "LPA: per round one keyed join + vote agg + per-node argmax over <= degree rows"),
+    Graded("q_cluster_purity", clusterPurity, clusterPuritySql,
+      "cluster purity: (cluster,label) keyed counts -> per-cluster argmax window over label-sized groups"),
+    Graded("q_dedup_simhash", dedupSimhash, dedupSimhashSql,
+      "SimHash-32: per-row fingerprint expression + banded Hamming candidate join"),
+    Graded("q_dedup_simhash64", dedupSimhash64, dedupSimhash64Sql,
+      "SimHash-64: the same banded plan at 64-bit fingerprint precision"),
+    Graded("q_dedup_embedding", dedupEmbedding, dedupEmbeddingSql,
+      "embedding near-dup: cluster-keyed cosine pairs over threshold — never all-pairs"),
+    Graded("q_decontaminate_semantic", decontaminateSemantic, decontaminateSemanticSql,
+      "semantic decontamination: bipartite cluster-blocked eval x train cosine, per-eval bounded argmax — output eval-sized"),
+    Graded("q_hard_negatives", hardNegatives, hardNegativesSql,
+      "hard negatives: kNN shortlist anti-joined vs positives, per-anchor bounded window"),
+    Graded("q_random_negatives", randomNegatives, randomNegativesSql,
+      "random negatives: seeded-hash picks anti-joined vs positives"),
+    Graded("q_dedup_semantic", dedupSemantic, dedupSemanticSql,
+      "SemDeDup: cluster-keyed cosine pairs, never all-pairs"),
+    Graded("q_ann_rp", annRp, annRpSql,
+      "random-projection LSH: per-row bit-fold bucket key, bucket-keyed candidate join + exact re-rank"),
+    Graded("q_ann_hamming", annHamming, annHammingSql,
+      "Hamming shortlist: 64-bit sign-LSH xor+popcount prefilter, exact cosine re-rank of survivors only"),
+    Graded("q_ann_brute", annBrute, annBruteSql,
+      "brute-force cosine baseline: ONE narrow score projection + TakeOrderedAndProject heap, zero shuffle"),
+    Graded("q_ann_ivf", annIvf, annIvfSql, "IVF probe: cluster-pruned scan + bounded top-k"),
+    Graded("q_ann_pq", annPq, annPqSql, "PQ: ADC over codes (no embedding scan) + exact re-rank"),
+    Graded("q_ann_pq_residual", annPqResidual, annPqResidualSql,
+      "residual IVF-PQ: per-(query,cluster) ADC tables over codes"))
 }

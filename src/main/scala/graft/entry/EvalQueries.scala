@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.TextFunctions
+import Fixtures._
 
 /** Oracle-checked queries for the evaluation/monitoring tail: exact
   * tie-aware AUC of the trained quality classifier, PSI distribution
@@ -11,8 +12,6 @@ import graft.functions.TextFunctions
   * Every oracle is a full DuckDB replay over the raw tables.
   */
 object EvalQueries {
-
-  private val toksD = "regexp_extract_all(lower(text), '[a-z0-9_]{2,}')"
 
   // ---- Poisson-bootstrap confidence interval for mean tokens/doc
   //      (operators.Bootstrap): 32 deterministic hash-drawn Poisson(1)
@@ -154,20 +153,13 @@ object EvalQueries {
   //      prefix sum (no global sort), oracle side via the naive global
   //      window; hash equality proves the distributed form exact. ----
   def classifierAuc(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id").as("id"),
-        when(col("source") === "src0", 1).otherwise(0).as("label"),
-        TextFunctions.tokens(col("text")).as("toks"))
-    val feats = graft.operators.QualityClassifier.features(docs, 64)
-      .localCheckpoint()
-    val model = graft.operators.QualityClassifier.train(feats, buckets = 64, iters = 2)
-    val scored = graft.operators.QualityClassifier.score(feats, model)
+    val scored = classifierScores(s, dir)
       .select(col("margin_micro"), col("label").cast("long").as("pos"))
     graft.operators.Eval.aucExact(scored)
   }
 
   val classifierAucSql: String =
-    s"""WITH ${TextQueries.clfTrainCtes},
+    s"""WITH $clfTrainCtes,
        |dist AS (SELECT margin_micro AS m, CAST(sum(label) AS BIGINT) AS np,
        |                CAST(count(*) - sum(label) AS BIGINT) AS nn
        |         FROM m2 GROUP BY 1),
@@ -275,25 +267,21 @@ object EvalQueries {
        |SELECT lang, id AS doc_id, weight FROM r WHERE rn <= 20
        |ORDER BY lang, doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bootstrap_ci" -> (bootstrapCi _),
-    "q_drift_semantic" -> (driftSemantic _),
-    "q_profile_merge" -> (profileMerge _),
-    "q_trend_ols" -> (trendOls _),
-    "q_classifier_auc" -> (classifierAuc _),
-    "q_drift_psi" -> (driftPsi _),
-    "q_sample_weighted" -> (sampleWeighted _),
-    "q_sample_weighted_group" -> (sampleWeightedGroup _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_bootstrap_ci" -> bootstrapCiSql,
-    "q_drift_semantic" -> driftSemanticSql,
-    "q_profile_merge" -> profileMergeSql,
-    "q_trend_ols" -> trendOlsSql,
-    "q_classifier_auc" -> classifierAucSql,
-    "q_drift_psi" -> driftPsiSql,
-    "q_sample_weighted" -> sampleWeightedSql,
-    "q_sample_weighted_group" -> sampleWeightedGroupSql
-  )
+  val graded: Seq[Graded] = Seq(
+    Graded("q_bootstrap_ci", bootstrapCi, bootstrapCiSql,
+      "Poisson bootstrap: B-way explode collapses map-side to B rows per partition"),
+    Graded("q_drift_semantic", driftSemantic, driftSemanticSql,
+      "semantic drift: two dim-keyed combiner aggs -> d-row join -> broadcast summary"),
+    Graded("q_profile_merge", profileMerge, profileMergeSql,
+      "mergeable profile: two 1-row aggs -> |cols|-row merge agg (metadata-sized)"),
+    Graded("q_trend_ols", trendOls, trendOlsSql,
+      "grouped OLS: one keyed sufficient-statistics agg -> closed-form projection"),
+    Graded("q_classifier_auc", classifierAuc, classifierAucSql,
+      "exact AUC: distinct-margin agg + bucket-sliced prefix sum, window PARTITIONED by bucket (no global sort)"),
+    Graded("q_drift_psi", driftPsi, driftPsiSql,
+      "PSI drift: two pruned scans -> 10-key aggs -> bins-sized grid, single-row broadcast total"),
+    Graded("q_sample_weighted", sampleWeighted, sampleWeightedSql,
+      "weighted sample: Gumbel micro-key + TakeOrderedAndProject heap"),
+    Graded("q_sample_weighted_group", sampleWeightedGroup, sampleWeightedGroupSql,
+      "per-group weighted sample: Gumbel keys + per-group bounded window"))
 }

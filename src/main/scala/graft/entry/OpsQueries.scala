@@ -7,6 +7,7 @@ import graft.ann.{Ann, GraphSearch}
 import graft.ingest.Sanitize
 import graft.operators.{Compaction, CorpusDiff, ZOrder}
 import graft.functions.TextFunctions
+import Fixtures._
 
 /** Table-maintenance / layout / serving-infrastructure operators — the
   * round-7 ops tail: snapshot diff, small-file compaction planning,
@@ -121,6 +122,10 @@ object OpsQueries {
       .select(col("m.id").as("id"))
   }
 
+  /** The exact 8-NN graph `(qid, neighbor)` every graph-beam harness walks. */
+  private def knnGraph(vecs: DataFrame): DataFrame =
+    Ann.knnJoin(vecs, 8).select(col("qid"), col("neighbor"))
+
   def annGraphBeam(s: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.vectors(s, dir)
     val qs = Tables.queryVectors(s, dir, Seq(0, 1, 2))
@@ -128,7 +133,7 @@ object OpsQueries {
     // persisted adjacency table the two search hops probe) ∥ the medoid
     // table — independent fixture legs, overlapped (guide §2.6)
     val (graph, medoids) = graft.Checkpoints.join2(
-      () => Ann.knnJoin(vecs, 8).select(col("qid"), col("neighbor")).localCheckpoint(),
+      () => knnGraph(vecs).localCheckpoint(),
       () => labelMedoids(vecs).localCheckpoint())
     // entry points = the persisted medoid table's stand-in (the
     // q_lexical_indexed pattern): each query routes to its 4 nearest
@@ -155,32 +160,40 @@ object OpsQueries {
       |                 ORDER BY list_cosine_similarity(el.v, c.cv) DESC, el.id) AS rn
       |          FROM el JOIN cent c ON el.label = c.label) WHERE rn = 1)""".stripMargin
 
-  val annGraphBeamSql: String =
-    s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |$medoidCtes,
-      |g AS (SELECT qid, neighbor FROM (
+  // The DuckDB side of the graph-beam harnesses: the exact 8-NN graph
+  // `g(qid, neighbor)` over `e` and the three queries `q(query_idx, qv)`;
+  // the walk from the `n0` entries of `entrySet` nearest each query, two
+  // hops over g keeping a beam of 8 (CTE names suffixed `x`); the top-5
+  // answer of an unfiltered walk, scored (beamAnswerSql) or as ids
+  // (beamTopCtes); and exact top-5 truth under the two filter predicates.
+  private val graphCtes: String =
+    """g AS (SELECT qid, neighbor FROM (
       |        SELECT a.id AS qid, b.id AS neighbor,
       |               row_number() OVER (PARTITION BY a.id
       |                 ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.id) AS rn
       |        FROM e a JOIN e b ON a.id <> b.id) WHERE rn <= 8),
       |q AS (SELECT CAST(vec_id AS INTEGER) AS query_idx, CAST(embedding AS DOUBLE[]) AS qv
-      |      FROM embeddings WHERE vec_id IN (0,1,2)),
-      |f0 AS (SELECT query_idx, id FROM (
-      |         SELECT q.query_idx, e.id,
-      |                row_number() OVER (PARTITION BY q.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |         FROM q CROSS JOIN e
-      |         WHERE e.id IN (SELECT id FROM med)) WHERE rn <= 4),
-      |u1 AS (SELECT f.query_idx, g.neighbor AS id FROM f0 f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f0),
-      |f1 AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u1 u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |u2 AS (SELECT f.query_idx, g.neighbor AS id FROM f1 f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f1),
-      |f2 AS (SELECT query_idx, id, sc FROM (
+      |      FROM embeddings WHERE vec_id IN (0,1,2))""".stripMargin
+
+  private def beamWalkCtes(x: String, entrySet: String, n0: Int): String =
+    s"""f0$x AS (SELECT query_idx, id FROM (
+       |         SELECT q.query_idx, e.id,
+       |                row_number() OVER (PARTITION BY q.query_idx
+       |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
+       |         FROM q CROSS JOIN e
+       |         WHERE e.id IN ($entrySet)) WHERE rn <= $n0),
+       |u1$x AS (SELECT f.query_idx, g.neighbor AS id FROM f0$x f JOIN g ON g.qid = f.id
+       |       UNION SELECT query_idx, id FROM f0$x),
+       |f1$x AS (SELECT query_idx, id FROM (
+       |         SELECT u.query_idx, u.id,
+       |                row_number() OVER (PARTITION BY u.query_idx
+       |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
+       |         FROM u1$x u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
+       |u2$x AS (SELECT f.query_idx, g.neighbor AS id FROM f1$x f JOIN g ON g.qid = f.id
+       |       UNION SELECT query_idx, id FROM f1$x)""".stripMargin
+
+  private val beamAnswerSql: String =
+    """f2 AS (SELECT query_idx, id, sc FROM (
       |         SELECT u.query_idx, u.id, list_cosine_similarity(e.v, q.qv) AS sc,
       |                row_number() OVER (PARTITION BY u.query_idx
       |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
@@ -191,13 +204,45 @@ object OpsQueries {
       |  FROM f2) WHERE rn <= 5
       |ORDER BY query_idx, round(sc, 6) DESC, id""".stripMargin
 
+  private def beamTopCtes(x: String): String =
+    s"""f2$x AS (SELECT query_idx, id FROM (
+       |         SELECT u.query_idx, u.id,
+       |                row_number() OVER (PARTITION BY u.query_idx
+       |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
+       |         FROM u2$x u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
+       |approx$x AS (SELECT query_idx, id FROM (
+       |             SELECT f.query_idx, f.id,
+       |                    row_number() OVER (PARTITION BY f.query_idx
+       |                      ORDER BY list_cosine_similarity(e.v, q.qv) DESC, f.id) AS rn
+       |             FROM f2$x f JOIN e ON e.id = f.id JOIN q ON q.query_idx = f.query_idx)
+       |           WHERE rn <= 5)""".stripMargin
+
+  private val filteredTruthCtes: String =
+    """truth_s AS (SELECT query_idx, id FROM (
+      |              SELECT q.query_idx, e.id,
+      |                     row_number() OVER (PARTITION BY q.query_idx
+      |                       ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
+      |              FROM q CROSS JOIN e WHERE e.id % 97 = 0) WHERE rn <= 5),
+      |truth_h AS (SELECT query_idx, id FROM (
+      |              SELECT q.query_idx, e.id,
+      |                     row_number() OVER (PARTITION BY q.query_idx
+      |                       ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
+      |              FROM q CROSS JOIN e WHERE e.id % 2 = 0) WHERE rn <= 5)""".stripMargin
+
+  val annGraphBeamSql: String =
+    s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |$medoidCtes,
+      |$graphCtes,
+      |${beamWalkCtes("", "SELECT id FROM med", 4)},
+      |$beamAnswerSql""".stripMargin
+
   // ---- IVF-routed graph beam: the two-layer serving composition ----
   // Coarse layer = the IVF deterministic representatives (min-id member
   // per label); each query enters the graph at its 3 nearest reps and
   // walks from there — a two-layer HNSW shape with the quantizer on top.
   def annGraphIvf(s: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.vectors(s, dir)
-    val graph = Ann.knnJoin(vecs, 8).select(col("qid"), col("neighbor")).localCheckpoint()
+    val graph = knnGraph(vecs).localCheckpoint()
     val qs = Tables.queryVectors(s, dir, Seq(0, 1, 2))
     import s.implicits._
     val qframe = qs.toDF("query_idx", "qv")
@@ -218,40 +263,11 @@ object OpsQueries {
   }
 
   val annGraphIvfSql: String =
-    """WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |g AS (SELECT qid, neighbor FROM (
-      |        SELECT a.id AS qid, b.id AS neighbor,
-      |               row_number() OVER (PARTITION BY a.id
-      |                 ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.id) AS rn
-      |        FROM e a JOIN e b ON a.id <> b.id) WHERE rn <= 8),
-      |q AS (SELECT CAST(vec_id AS INTEGER) AS query_idx, CAST(embedding AS DOUBLE[]) AS qv
-      |      FROM embeddings WHERE vec_id IN (0,1,2)),
+    s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |$graphCtes,
       |reps AS (SELECT min(vec_id) AS id FROM embeddings GROUP BY label),
-      |f0 AS (SELECT query_idx, id FROM (
-      |         SELECT q.query_idx, e.id,
-      |                row_number() OVER (PARTITION BY q.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |         FROM q CROSS JOIN e
-      |         WHERE e.id IN (SELECT id FROM reps)) WHERE rn <= 3),
-      |u1 AS (SELECT f.query_idx, g.neighbor AS id FROM f0 f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f0),
-      |f1 AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u1 u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |u2 AS (SELECT f.query_idx, g.neighbor AS id FROM f1 f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f1),
-      |f2 AS (SELECT query_idx, id, sc FROM (
-      |         SELECT u.query_idx, u.id, list_cosine_similarity(e.v, q.qv) AS sc,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u2 u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8)
-      |SELECT query_idx, id, round(sc, 6) AS score FROM (
-      |  SELECT query_idx, id, sc,
-      |         row_number() OVER (PARTITION BY query_idx ORDER BY sc DESC, id) AS rn
-      |  FROM f2) WHERE rn <= 5
-      |ORDER BY query_idx, round(sc, 6) DESC, id""".stripMargin
+      |${beamWalkCtes("", "SELECT id FROM reps", 3)},
+      |$beamAnswerSql""".stripMargin
 
   // ---- graph-beam recall: grade BOTH entry routes against exact truth ----
   // The eval that closes the graph-index loop (build -> serve -> grade),
@@ -272,7 +288,7 @@ object OpsQueries {
     // graph build ∥ exact truth ∥ medoid table — three independent
     // fixture legs, overlapped (guide §2.6)
     val w = graft.Checkpoints.parCheckpoint(Seq(
-      Ann.knnJoin(vecs, 8).select(col("qid"), col("neighbor")),
+      knnGraph(vecs),
       Ann.bruteTopK(vecs, qs, 5).select("query_idx", "id"),
       labelMedoids(vecs)))
     val (graph, truth, medoids) = (w(0), w(1), w(2))
@@ -283,84 +299,24 @@ object OpsQueries {
       "medoid" -> GraphSearch.beamSearchWithEntries(
         graph, vecs, qs, medoidEntries, beam = 8, hops = 2, k = 5))
     routes.map { case (name, approx) =>
-      val hits = truth.join(approx.select("query_idx", "id"), Seq("query_idx", "id"))
-        .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-      truth.groupBy("query_idx").agg(count(lit(1)).as("k_eff"))
-        .join(hits, Seq("query_idx"), "left")
-        .select(lit(name).as("route"), col("query_idx"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") /
-            col("k_eff").cast("double"), 6).as("recall"))
+      recallByQuery(truth, approx)
+        .select(lit(name).as("route"), col("query_idx"), col("n_hits"), col("recall"))
     }.reduce(_ unionByName _).orderBy("route", "query_idx")
   }
 
   val annGraphRecallSql: String =
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |$medoidCtes,
-      |g AS (SELECT qid, neighbor FROM (
-      |        SELECT a.id AS qid, b.id AS neighbor,
-      |               row_number() OVER (PARTITION BY a.id
-      |                 ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.id) AS rn
-      |        FROM e a JOIN e b ON a.id <> b.id) WHERE rn <= 8),
-      |q AS (SELECT CAST(vec_id AS INTEGER) AS query_idx, CAST(embedding AS DOUBLE[]) AS qv
-      |      FROM embeddings WHERE vec_id IN (0,1,2)),
+      |$graphCtes,
       |truth AS (SELECT query_idx, id FROM (
       |            SELECT q.query_idx, e.id,
       |                   row_number() OVER (PARTITION BY q.query_idx
       |                     ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
       |            FROM q CROSS JOIN e) WHERE rn <= 5),
-      |f0m AS (SELECT query_idx, id FROM (
-      |         SELECT q.query_idx, e.id,
-      |                row_number() OVER (PARTITION BY q.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |         FROM q CROSS JOIN e
-      |         WHERE e.id IN (SELECT id FROM med)) WHERE rn <= 4),
-      |u1m AS (SELECT f.query_idx, g.neighbor AS id FROM f0m f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f0m),
-      |f1m AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u1m u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |u2m AS (SELECT f.query_idx, g.neighbor AS id FROM f1m f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f1m),
-      |f2m AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u2m u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |approxm AS (SELECT query_idx, id FROM (
-      |             SELECT f.query_idx, f.id,
-      |                    row_number() OVER (PARTITION BY f.query_idx
-      |                      ORDER BY list_cosine_similarity(e.v, q.qv) DESC, f.id) AS rn
-      |             FROM f2m f JOIN e ON e.id = f.id JOIN q ON q.query_idx = f.query_idx)
-      |           WHERE rn <= 5),
-      |f0s AS (SELECT query_idx, id FROM (
-      |         SELECT q.query_idx, e.id,
-      |                row_number() OVER (PARTITION BY q.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |         FROM q CROSS JOIN e
-      |         WHERE e.id IN (SELECT id FROM e ORDER BY id LIMIT 4)) WHERE rn <= 8),
-      |u1s AS (SELECT f.query_idx, g.neighbor AS id FROM f0s f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f0s),
-      |f1s AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u1s u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |u2s AS (SELECT f.query_idx, g.neighbor AS id FROM f1s f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f1s),
-      |f2s AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u2s u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |approxs AS (SELECT query_idx, id FROM (
-      |             SELECT f.query_idx, f.id,
-      |                    row_number() OVER (PARTITION BY f.query_idx
-      |                      ORDER BY list_cosine_similarity(e.v, q.qv) DESC, f.id) AS rn
-      |             FROM f2s f JOIN e ON e.id = f.id JOIN q ON q.query_idx = f.query_idx)
-      |           WHERE rn <= 5),
+      |${beamWalkCtes("m", "SELECT id FROM med", 4)},
+      |${beamTopCtes("m")},
+      |${beamWalkCtes("s", "SELECT id FROM e ORDER BY id LIMIT 4", 8)},
+      |${beamTopCtes("s")},
       |ke AS (SELECT query_idx, count(*) AS k_eff FROM truth GROUP BY 1),
       |hm AS (SELECT t.query_idx, count(*) AS n_hits
       |       FROM truth t JOIN approxm a ON t.query_idx = a.query_idx AND t.id = a.id
@@ -395,7 +351,7 @@ object OpsQueries {
     // graph build ∥ the medoid-entry chain — independent fixture legs,
     // overlapped (guide §2.6)
     val (graph, medoidEntries) = graft.Checkpoints.join2(
-      () => Ann.knnJoin(vecs, 8).select(col("qid"), col("neighbor")).localCheckpoint(),
+      () => knnGraph(vecs).localCheckpoint(),
       () => GraphSearch.routeEntries(
         vecs, labelMedoids(vecs).localCheckpoint(), qs, entries = 4).localCheckpoint())
     val preds = Seq(
@@ -410,53 +366,18 @@ object OpsQueries {
       val truth = Ann.bruteTopK(vecs.filter(pred), qs, 5).select("query_idx", "id")
       val approx = GraphSearch.filteredRescoreTopK(
         visited, vecs, qs, k = 5, pred, beam = 8, hops = 2)
-      val hits = truth.join(approx.select("query_idx", "id"), Seq("query_idx", "id"))
-        .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-      truth.groupBy("query_idx").agg(count(lit(1)).as("k_eff"))
-        .join(hits, Seq("query_idx"), "left")
-        .select(lit(name).as("pred"), col("query_idx"), col("k_eff"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") /
-            col("k_eff").cast("double"), 6).as("recall"))
+      recallByQuery(truth, approx).select(lit(name).as("pred"),
+        col("query_idx"), col("k_eff"), col("n_hits"), col("recall"))
     }.reduce(_ unionByName _).orderBy("pred", "query_idx")
   }
 
   val annGraphFilteredSql: String =
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |$medoidCtes,
-      |g AS (SELECT qid, neighbor FROM (
-      |        SELECT a.id AS qid, b.id AS neighbor,
-      |               row_number() OVER (PARTITION BY a.id
-      |                 ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.id) AS rn
-      |        FROM e a JOIN e b ON a.id <> b.id) WHERE rn <= 8),
-      |q AS (SELECT CAST(vec_id AS INTEGER) AS query_idx, CAST(embedding AS DOUBLE[]) AS qv
-      |      FROM embeddings WHERE vec_id IN (0,1,2)),
-      |f0 AS (SELECT query_idx, id FROM (
-      |         SELECT q.query_idx, e.id,
-      |                row_number() OVER (PARTITION BY q.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |         FROM q CROSS JOIN e
-      |         WHERE e.id IN (SELECT id FROM med)) WHERE rn <= 4),
-      |u1 AS (SELECT f.query_idx, g.neighbor AS id FROM f0 f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f0),
-      |f1 AS (SELECT query_idx, id FROM (
-      |         SELECT u.query_idx, u.id,
-      |                row_number() OVER (PARTITION BY u.query_idx
-      |                  ORDER BY list_cosine_similarity(e.v, q.qv) DESC, u.id) AS rn
-      |         FROM u1 u JOIN e ON e.id = u.id JOIN q ON q.query_idx = u.query_idx) WHERE rn <= 8),
-      |u2 AS (SELECT f.query_idx, g.neighbor AS id FROM f1 f JOIN g ON g.qid = f.id
-      |       UNION SELECT query_idx, id FROM f1),
+       |$medoidCtes,
+      |$graphCtes,
+      |${beamWalkCtes("", "SELECT id FROM med", 4)},
       |vis AS (SELECT query_idx, id FROM u1 UNION SELECT query_idx, id FROM u2),
-      |truth_s AS (SELECT query_idx, id FROM (
-      |              SELECT q.query_idx, e.id,
-      |                     row_number() OVER (PARTITION BY q.query_idx
-      |                       ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |              FROM q CROSS JOIN e WHERE e.id % 97 = 0) WHERE rn <= 5),
-      |truth_h AS (SELECT query_idx, id FROM (
-      |              SELECT q.query_idx, e.id,
-      |                     row_number() OVER (PARTITION BY q.query_idx
-      |                       ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |              FROM q CROSS JOIN e WHERE e.id % 2 = 0) WHERE rn <= 5),
+      |$filteredTruthCtes,
       |ans_s AS (SELECT query_idx, id FROM (
       |            SELECT v.query_idx, v.id,
       |                   row_number() OVER (PARTITION BY v.query_idx
@@ -540,18 +461,8 @@ object OpsQueries {
   }
 
   val annIvfFilteredSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
-      |assign AS (
-      |  SELECT id, v, centroid_id AS cluster_id FROM (
-      |    SELECT e.id, e.v, cent.centroid_id,
-      |           row_number() OVER (PARTITION BY e.id
-      |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-      |    FROM e CROSS JOIN cent)
-      |  WHERE rn = 1),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |${ivfAssignCtes(renameInner = false)},
       |q AS (SELECT CAST(vec_id AS INTEGER) AS query_idx, CAST(embedding AS DOUBLE[]) AS qv
       |      FROM embeddings WHERE vec_id IN (0,1,2)),
       |probes AS (
@@ -585,16 +496,7 @@ object OpsQueries {
       |             SELECT query_idx, id, row_number() OVER (PARTITION BY query_idx
       |               ORDER BY sc DESC, id) AS rn
       |             FROM over_c WHERE id % 2 = 0) WHERE rn <= 5),
-      |truth_s AS (SELECT query_idx, id FROM (
-      |              SELECT q.query_idx, e.id,
-      |                     row_number() OVER (PARTITION BY q.query_idx
-      |                       ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |              FROM q CROSS JOIN e WHERE e.id % 97 = 0) WHERE rn <= 5),
-      |truth_h AS (SELECT query_idx, id FROM (
-      |              SELECT q.query_idx, e.id,
-      |                     row_number() OVER (PARTITION BY q.query_idx
-      |                       ORDER BY list_cosine_similarity(e.v, q.qv) DESC, e.id) AS rn
-      |              FROM q CROSS JOIN e WHERE e.id % 2 = 0) WHERE rn <= 5),
+      |$filteredTruthCtes,
       |legs AS (
       |  SELECT 'sel_1pct' AS pred, 'pushdown' AS route, query_idx, id FROM pre_s
       |  UNION ALL
@@ -882,8 +784,11 @@ object OpsQueries {
       .withColumn("score", round(col("score"), 6))
       .orderBy(col("score").desc, col("id"))
 
-  val searchExpandedSql: String =
-    """WITH d AS (SELECT doc_id AS id, regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS toks
+  /** BM25 of the query (spark, join) through the tf/df tables: `d`, `st`,
+    * the terms `q0`, `tf0`, `df0` and scores `s0`.
+    */
+  private val expandedBm25Ctes: String =
+    """d AS (SELECT doc_id AS id, regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS toks
       |           FROM documents),
       |st AS (SELECT CAST(count(*) AS BIGINT) AS n, avg(len(toks)) AS avgdl FROM d),
       |q0(ord, term) AS (VALUES (0, 'spark'), (1, 'join')),
@@ -896,7 +801,10 @@ object OpsQueries {
       |             * (t.tf*2.2)/(t.tf + 1.2*(0.25 + 0.75*t.dl/st.avgdl))
       |             ORDER BY t.ord) AS score
       |       FROM tf0 t JOIN df0 USING (term) CROSS JOIN st
-      |       WHERE t.tf > 0 GROUP BY t.id),
+      |       WHERE t.tf > 0 GROUP BY t.id)""".stripMargin
+
+  val searchExpandedSql: String =
+    s"""WITH $expandedBm25Ctes,
       |fb AS (SELECT id FROM s0 ORDER BY score DESC, id LIMIT 10),
       |cand AS (SELECT term, CAST(count(*) AS BIGINT) AS fbtf
       |         FROM (SELECT unnest(toks) AS term FROM d JOIN fb USING (id))
@@ -936,17 +844,34 @@ object OpsQueries {
     graft.operators.Hll.registers(hllTokens(s, dir), Seq("lang"), "term")
       .orderBy("lang", "reg_idx")
 
-  val profileHllRegsSql: String =
-    """WITH tk AS (SELECT DISTINCT lang, unnest(list_distinct(
+  // The HLL sketch in DuckDB (512 registers, 52-bit hashes): the distinct
+  // terms per language `tk`, each hash `h`'s register index and rank
+  // `r`, and the per-language register maxima `g` with their harmonic
+  // sum `e`.
+  private val hllTermsCte: String =
+    """tk AS (SELECT DISTINCT lang, unnest(list_distinct(
       |             regexp_extract_all(lower(text), '[a-z0-9_]{2,}'))) AS term
-      |           FROM documents),
-      |h AS (SELECT lang, CAST('0x' || substr(md5(term), 1, 15) AS BIGINT) AS h
-      |      FROM tk),
-      |r AS (SELECT lang, h >> 51 AS reg_idx,
+      |           FROM documents)""".stripMargin
+
+  private val hllRankCte: String =
+    """r AS (SELECT lang, h >> 51 AS reg_idx,
       |             CASE WHEN (h & ((1::BIGINT << 51) - 1)) = 0 THEN 52
       |                  ELSE 52 - length(bin(h & ((1::BIGINT << 51) - 1)))
       |             END AS rho
-      |      FROM h)
+      |      FROM h)""".stripMargin
+
+  private val hllSumCtes: String =
+    """g AS (SELECT lang, reg_idx, max(rho) AS reg FROM r GROUP BY 1, 2),
+      |e AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_set,
+      |             CAST(sum(1::BIGINT << (52 - reg)) AS BIGINT)
+      |               + (512 - count(*)) * (1::BIGINT << 52) AS s_int
+      |      FROM g GROUP BY 1)""".stripMargin
+
+  val profileHllRegsSql: String =
+    s"""WITH $hllTermsCte,
+      |h AS (SELECT lang, CAST('0x' || substr(md5(term), 1, 15) AS BIGINT) AS h
+      |      FROM tk),
+      |$hllRankCte
       |SELECT lang, reg_idx, CAST(max(rho) AS INTEGER) AS reg
       |FROM r GROUP BY lang, reg_idx ORDER BY lang, reg_idx""".stripMargin
 
@@ -964,22 +889,12 @@ object OpsQueries {
   }
 
   val profileHllSql: String =
-    """WITH tk AS (SELECT DISTINCT lang, unnest(list_distinct(
-      |             regexp_extract_all(lower(text), '[a-z0-9_]{2,}'))) AS term
-      |           FROM documents),
+    s"""WITH $hllTermsCte,
       |h AS (SELECT lang, term,
       |             CAST('0x' || substr(md5(term), 1, 15) AS BIGINT) AS h
       |      FROM tk),
-      |r AS (SELECT lang, h >> 51 AS reg_idx,
-      |             CASE WHEN (h & ((1::BIGINT << 51) - 1)) = 0 THEN 52
-      |                  ELSE 52 - length(bin(h & ((1::BIGINT << 51) - 1)))
-      |             END AS rho
-      |      FROM h),
-      |g AS (SELECT lang, reg_idx, max(rho) AS reg FROM r GROUP BY 1, 2),
-      |e AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_set,
-      |             CAST(sum(1::BIGINT << (52 - reg)) AS BIGINT)
-      |               + (512 - count(*)) * (1::BIGINT << 52) AS s_int
-      |      FROM g GROUP BY 1),
+      |$hllRankCte,
+      |$hllSumCtes,
       |f AS (SELECT lang, n_set, s_int,
       |             (0.7213 / (1 + 1.079 / 512)) * 512 * 512 * (1::BIGINT << 52)
       |               / s_int AS raw
@@ -1015,21 +930,11 @@ object OpsQueries {
   }
 
   val pipelineSketchIncrSql: String =
-    """WITH tk AS (SELECT DISTINCT lang, unnest(list_distinct(
-      |             regexp_extract_all(lower(text), '[a-z0-9_]{2,}'))) AS term
-      |           FROM documents),
+    s"""WITH $hllTermsCte,
       |h AS (SELECT lang, CAST('0x' || substr(md5(term), 1, 15) AS BIGINT) AS h
       |      FROM tk),
-      |r AS (SELECT lang, h >> 51 AS reg_idx,
-      |             CASE WHEN (h & ((1::BIGINT << 51) - 1)) = 0 THEN 52
-      |                  ELSE 52 - length(bin(h & ((1::BIGINT << 51) - 1)))
-      |             END AS rho
-      |      FROM h),
-      |g AS (SELECT lang, reg_idx, max(rho) AS reg FROM r GROUP BY 1, 2),
-      |e AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_set,
-      |             CAST(sum(1::BIGINT << (52 - reg)) AS BIGINT)
-      |               + (512 - count(*)) * (1::BIGINT << 52) AS s_int
-      |      FROM g GROUP BY 1)
+      |$hllRankCte,
+      |$hllSumCtes
       |SELECT lang, n_set, s_int,
       |       round(CASE WHEN (0.7213 / (1 + 1.079 / 512)) * 512 * 512
       |                       * (1::BIGINT << 52) / s_int <= 2.5 * 512
@@ -1477,20 +1382,7 @@ object OpsQueries {
       .orderBy(col("bm25").desc, col("id"))
 
   val searchLtrSql: String =
-    """WITH d AS (SELECT doc_id AS id, regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS toks
-      |           FROM documents),
-      |st AS (SELECT CAST(count(*) AS BIGINT) AS n, avg(len(toks)) AS avgdl FROM d),
-      |q0(ord, term) AS (VALUES (0, 'spark'), (1, 'join')),
-      |tf0 AS (SELECT d.id, len(d.toks) AS dl, q.ord, q.term,
-      |               len(list_filter(d.toks, x -> x = q.term)) AS tf
-      |        FROM d CROSS JOIN q0 q),
-      |df0 AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf0 WHERE tf > 0 GROUP BY term),
-      |s0 AS (SELECT t.id,
-      |         sum(ln(1 + (st.n - df0.df + 0.5)/(df0.df + 0.5))
-      |             * (t.tf*2.2)/(t.tf + 1.2*(0.25 + 0.75*t.dl/st.avgdl))
-      |             ORDER BY t.ord) AS score
-      |       FROM tf0 t JOIN df0 USING (term) CROSS JOIN st
-      |       WHERE t.tf > 0 GROUP BY t.id),
+    s"""WITH $expandedBm25Ctes,
       |top AS (SELECT id, score FROM s0 ORDER BY score DESC, id LIMIT 10),
       |f AS (SELECT t.id,
       |        CAST(sum(CASE WHEN t.tf > 0 THEN 1 ELSE 0 END) AS INTEGER) AS n_match,
@@ -1657,33 +1549,174 @@ object OpsQueries {
   // cent units); two 3-token queries score sum-over-tokens of
   // max-over-chunks dot product — all integer arithmetic, so the two
   // keyed aggregates + bounded top-k replay hash-identically in DuckDB.
+  // The DuckDB side of the maxsim fixtures: the chunk CTEs w..ck plus the
+  // embedding dims i; the two 3-token queries qt with their cents qv
+  // (`centering` " - 50" for the centered fixtures); the exact cosine
+  // maxsim over normalized chunk and token vectors, down to its top-10
+  // `truth` (`truthFilter` restricts the documents ranked).
+  private val maxsimChunkCtes: String =
+    raw"""w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
+         |           FROM documents),
+         |$chunkWindowCtes,
+         |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
+         |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim)""".stripMargin
+
+  private def maxsimTokenCtes(centering: String): String =
+    s"""qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
+       |                             (0, 2, 'system'), (1, 0, 'market'),
+       |                             (1, 1, 'music'), (1, 2, 'research'))
+       |                  v(query_idx, tok_idx, tok)),
+       |qv AS (SELECT query_idx, tok_idx, dim,
+       |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100$centering AS cent
+       |       FROM qt CROSS JOIN i)""".stripMargin
+
+  private def maxsimCosineTruth(truthFilter: String): String =
+    s"""cn AS (SELECT doc_id, chunk, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
+       |       FROM cv GROUP BY 1, 2),
+       |nv AS (SELECT cv.doc_id, cv.chunk, cv.dim, cv.cent / cn.nrm AS x
+       |       FROM cv JOIN cn ON cn.doc_id = cv.doc_id AND cn.chunk = cv.chunk),
+       |qn AS (SELECT query_idx, tok_idx, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
+       |       FROM qv GROUP BY 1, 2),
+       |nq AS (SELECT qv.query_idx, qv.tok_idx, qv.dim, qv.cent / qn.nrm AS x
+       |       FROM qv JOIN qn ON qn.query_idx = qv.query_idx
+       |                      AND qn.tok_idx = qv.tok_idx),
+       |dp AS (SELECT nq.query_idx, nq.tok_idx, nv.doc_id, nv.chunk,
+       |              sum(nq.x * nv.x) AS dotp
+       |       FROM nv JOIN nq USING (dim)
+       |       GROUP BY 1, 2, 3, 4),
+       |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
+       |         FROM dp GROUP BY 1, 2, 3),
+       |sc AS (SELECT query_idx, doc_id, sum(best) AS score
+       |       FROM best GROUP BY 1, 2),
+       |truth AS (SELECT query_idx, doc_id FROM (
+       |            SELECT *, row_number() OVER (PARTITION BY query_idx
+       |                        ORDER BY score DESC, doc_id ASC) AS rn FROM sc$truthFilter)
+       |          WHERE rn <= 10)""".stripMargin
+
+  /** The integer cents `cv` of the plain chunks, the tokens, and each
+    * token's best chunk dot product per document, `best`.
+    */
+  private val maxsimBestCtes: String =
+    s"""cv AS (SELECT doc_id, chunk, dim,
+       |         ('0x' || substr(sha256(chunk || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 AS cent
+       |       FROM ck CROSS JOIN i),
+       |${maxsimTokenCtes("")},
+       |dp AS (SELECT qv.query_idx, qv.tok_idx, cv.doc_id, cv.chunk,
+       |              sum(qv.cent * cv.cent) AS dotp
+       |       FROM cv JOIN qv USING (dim)
+       |       GROUP BY 1, 2, 3, 4),
+       |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
+       |         FROM dp GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The multi-topic fixture's chunk cents: two topics per document, the
+    * chunk's hash parity picks one (`tk`), plus 16 x the topic's cents.
+    */
+  private val maxsimTopicCtes: String =
+    """tk AS (SELECT doc_id, chunk,
+      |         'gtopic' || CAST(('0x' || substr(sha256(CAST(doc_id AS VARCHAR) || 'x' ||
+      |             CAST(('0x' || substr(sha256(chunk), 1, 15))::BIGINT % 2 AS VARCHAR)),
+      |             1, 15))::BIGINT % 32 AS VARCHAR) AS topic
+      |       FROM ck),
+      |cv AS (SELECT tk.doc_id, tk.chunk, i.dim,
+      |         ('0x' || substr(sha256(tk.chunk || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50
+      |           + 16 * (('0x' || substr(sha256(tk.topic || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50) AS cent
+      |       FROM tk CROSS JOIN i)""".stripMargin
+
+  // The doc-level IVF candidate leg of the centered fixtures: chunk cents
+  // plus 16 x their document's cents (`dc`, `cv`); the representative
+  // min-id centroid per doc_id % 16 over pooled doc vectors `dv` (`crep`,
+  // `cvd`, `cn2`); each token's probed clusters under the pool rule at
+  // both widths, sized by `sizes(cluster_id, csize)` (`qk`..`probes`);
+  // and the grade of each width's candidates `cand` against `truth`.
+  private val maxsimDocTopicCtes: String =
+    """dc AS (SELECT doc_id, dim,
+      |         ('0x' || substr(sha256(CAST(doc_id AS VARCHAR) || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS dcent
+      |       FROM documents CROSS JOIN i),
+      |cv AS (SELECT ck.doc_id, ck.chunk, i.dim,
+      |         ('0x' || substr(sha256(ck.chunk || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50
+      |           + 16 * dc.dcent AS cent
+      |       FROM ck CROSS JOIN i
+      |       JOIN dc ON dc.doc_id = ck.doc_id AND dc.dim = i.dim)""".stripMargin
+
+  private val maxsimDocCentroidCtes: String =
+    """crep AS (SELECT id % 16 AS centroid_id, id FROM (
+      |           SELECT id, row_number() OVER (PARTITION BY id % 16
+      |                           ORDER BY id) AS rn
+      |           FROM (SELECT DISTINCT id FROM dv))
+      |         WHERE rn = 1),
+      |cvd AS (SELECT crep.centroid_id, dv.dim, dv.m
+      |        FROM crep JOIN dv ON dv.id = crep.id),
+      |cn2 AS (SELECT centroid_id, sqrt(sum(m * m)) AS nrm FROM cvd GROUP BY 1)""".stripMargin
+
+  private def maxsimProbeCtes(sizes: String): String =
+    s"""qk AS (SELECT query_idx * 3 + tok_idx AS tok_key, query_idx, dim,
+       |              CAST(cent AS DOUBLE) AS qc
+       |       FROM qv),
+       |qn2 AS (SELECT tok_key, sqrt(sum(qc * qc)) AS nrm FROM qk GROUP BY 1),
+       |qdot AS (SELECT qk.tok_key, cvd.centroid_id, sum(qk.qc * cvd.m) AS dt
+       |         FROM qk JOIN cvd USING (dim) GROUP BY 1, 2),
+       |pr AS (SELECT q.tok_key, q.centroid_id,
+       |              1.0 - q.dt / (c2.nrm * qn2.nrm) AS d,
+       |              coalesce(s.csize, 0) AS csize
+       |       FROM qdot q
+       |       JOIN cn2 c2 ON c2.centroid_id = q.centroid_id
+       |       JOIN qn2 ON qn2.tok_key = q.tok_key
+       |       LEFT JOIN $sizes s ON s.cluster_id = q.centroid_id),
+       |pool AS (SELECT tok_key, centroid_id,
+       |                coalesce(sum(csize) OVER (PARTITION BY tok_key
+       |                  ORDER BY d, centroid_id
+       |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+       |                  0) AS pool
+       |         FROM pr),
+       |widths AS (SELECT CAST(unnest([5, 25]) AS BIGINT) AS t_width),
+       |probes AS (SELECT w.t_width, p.tok_key, p.centroid_id
+       |           FROM widths w JOIN pool p
+       |             ON p.pool < greatest(10 * w.t_width, 100))""".stripMargin
+
+  private val maxsimWidthGradeSql: String =
+    """pruned AS (SELECT t_width, query_idx, doc_id FROM (
+      |             SELECT c.t_width, s.query_idx, s.doc_id,
+      |                    row_number() OVER (PARTITION BY c.t_width, s.query_idx
+      |                      ORDER BY s.score DESC, s.doc_id ASC) AS rn
+      |             FROM sc s JOIN cand c
+      |               ON s.query_idx = c.query_idx AND s.doc_id = c.doc_id)
+      |           WHERE rn <= 10),
+      |nc AS (SELECT t_width, query_idx, CAST(count(*) AS BIGINT) AS n_candidates
+      |       FROM cand GROUP BY 1, 2),
+      |h AS (SELECT p.t_width, p.query_idx, CAST(count(*) AS BIGINT) AS n_hits
+      |      FROM pruned p JOIN truth t
+      |        ON t.query_idx = p.query_idx AND t.doc_id = p.doc_id
+      |      GROUP BY 1, 2)
+      |SELECT nc.t_width, nc.query_idx, nc.n_candidates,
+      |       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits
+      |FROM nc LEFT JOIN h
+      |  ON h.t_width = nc.t_width AND h.query_idx = nc.query_idx
+      |ORDER BY nc.t_width, nc.query_idx""".stripMargin
+
   private def maxsimCents = expr(
     "transform(embedding, v -> cast(round(cast(v as double) * 100, 0) as double))")
 
   private def maxsimChunkVecs(s: SparkSession, dir: String): DataFrame = {
-    val embedder = new graft.ingest.DeterministicHashEmbedder(8)
-    val docs = Tables.t(s, dir, "documents")
-      .select(col("doc_id"), col("text").as("content"))
-    val chunks = graft.retriever.Retriever.chunk(docs, maxTokens = 20)
-      .select(col("doc_id"), col("content"),
-        lit(null).cast("array<float>").as("embedding"))
-    graft.ingest.Embed.withEmbeddings(chunks, embedder)
-      .select(col("doc_id"), maxsimCents.as("vec"))
+    chunkEmbeddings(s, dir).select(col("doc_id"), maxsimCents.as("vec"))
   }
 
-  private def maxsimQueryToks(s: SparkSession, dir: String): DataFrame = {
+  /** The hash embeddings of the two 3-token queries' tokens. */
+  private def maxsimTokenEmbeddings(s: SparkSession): DataFrame = {
     import s.implicits._
-    val embedder = new graft.ingest.DeterministicHashEmbedder(8)
     val qtoks = Seq((0, 0, "data"), (0, 1, "analysis"), (0, 2, "system"),
         (1, 0, "market"), (1, 1, "music"), (1, 2, "research"))
       .toDF("query_idx", "tok_idx", "content")
       .withColumn("embedding", lit(null).cast("array<float>"))
+    graft.ingest.Embed.withEmbeddings(qtoks, new graft.ingest.DeterministicHashEmbedder(8))
+  }
+
+  private def maxsimQueryToks(s: SparkSession, dir: String): DataFrame = {
     // broadcast-hinted at the source: the embed pass goes through an
     // ExistingRDD (no static row bound), so MaxSim.topK's maxRows size
     // gate can't see that this frame is queries × tokens = 6 rows — the
     // hint makes the exact-scan join a BroadcastNestedLoopJoin instead
     // of a left×right-partitioned CartesianProduct
-    broadcast(graft.ingest.Embed.withEmbeddings(qtoks, embedder)
+    broadcast(maxsimTokenEmbeddings(s)
       .select(col("query_idx"), col("tok_idx"), maxsimCents.as("vec")))
   }
 
@@ -1693,33 +1726,8 @@ object OpsQueries {
       .orderBy("query_idx", "doc_id")
 
   val searchMaxsimSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
-      |cv AS (SELECT doc_id, chunk, dim,
-      |         ('0x' || substr(sha256(chunk || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 AS cent
-      |       FROM ck CROSS JOIN i),
-      |qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
-      |                             (0, 2, 'system'), (1, 0, 'market'),
-      |                             (1, 1, 'music'), (1, 2, 'research'))
-      |                  v(query_idx, tok_idx, tok)),
-      |qv AS (SELECT query_idx, tok_idx, dim,
-      |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 AS cent
-      |       FROM qt CROSS JOIN i),
-      |dp AS (SELECT qv.query_idx, qv.tok_idx, cv.doc_id, cv.chunk,
-      |              sum(qv.cent * cv.cent) AS dotp
-      |       FROM cv JOIN qv USING (dim)
-      |       GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
-      |         FROM dp GROUP BY 1, 2, 3),
+    s"""WITH $maxsimChunkCtes,
+      |$maxsimBestCtes,
       |sc AS (SELECT query_idx, doc_id, CAST(sum(best) AS BIGINT) AS score
       |       FROM best GROUP BY 1, 2),
       |rk AS (SELECT query_idx, doc_id, score,
@@ -1769,45 +1777,12 @@ object OpsQueries {
       .filter(col("rn") <= 10)
       .select("query_idx", "doc_id")
     // the pruned leg exercises the OPERATOR's shortlist path end to end
-    val pruned = graft.search.MaxSim.topK(chunkVecs, queryToks, k = 10,
-      candidates = Some(cand))
-    val nCand = cand.groupBy("query_idx").agg(count(lit(1)).as("n_candidates"))
-    val hits = pruned.select("query_idx", "doc_id")
-      .join(truth, Seq("query_idx", "doc_id"), "left_semi")
-      .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-    nCand.join(hits, Seq("query_idx"), "left")
-      .na.fill(0L, Seq("n_hits"))
-      .orderBy("query_idx")
+    maxsimShortlist(chunkVecs, queryToks, truth, cand).orderBy("query_idx")
   }
 
   val searchMaxsimPrunedSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
-      |cv AS (SELECT doc_id, chunk, dim,
-      |         ('0x' || substr(sha256(chunk || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 AS cent
-      |       FROM ck CROSS JOIN i),
-      |qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
-      |                             (0, 2, 'system'), (1, 0, 'market'),
-      |                             (1, 1, 'music'), (1, 2, 'research'))
-      |                  v(query_idx, tok_idx, tok)),
-      |qv AS (SELECT query_idx, tok_idx, dim,
-      |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 AS cent
-      |       FROM qt CROSS JOIN i),
-      |dp AS (SELECT qv.query_idx, qv.tok_idx, cv.doc_id, cv.chunk,
-      |              sum(qv.cent * cv.cent) AS dotp
-      |       FROM cv JOIN qv USING (dim)
-      |       GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
-      |         FROM dp GROUP BY 1, 2, 3),
+    s"""WITH $maxsimChunkCtes,
+      |$maxsimBestCtes,
       |cand AS (SELECT DISTINCT query_idx, doc_id FROM (
       |           SELECT *, row_number() OVER (PARTITION BY query_idx, tok_idx
       |                       ORDER BY best DESC, doc_id ASC) AS rn FROM best)
@@ -1868,35 +1843,43 @@ object OpsQueries {
     * corpora, string-ordered identically in both engines).
     */
   private def maxsimAnnChunkVecsKeyed(s: SparkSession, dir: String): DataFrame = {
-    val embedder = new graft.ingest.DeterministicHashEmbedder(8)
-    val docs = Tables.t(s, dir, "documents")
-      .select(col("doc_id"), col("text").as("content"))
-    val chunks = graft.retriever.Retriever.chunk(docs, maxTokens = 20)
-      .select(col("doc_id"), col("content"),
-        lit(null).cast("array<float>").as("embedding"))
-    val cc = graft.ingest.Embed.withEmbeddings(chunks, embedder)
+    val cc = chunkEmbeddings(s, dir)
       .select(col("doc_id"),
         concat(col("doc_id").cast("string"), lit("#"), col("content")).as("ckey"),
         maxsimCentsCentered.as("vec"))
     val docCents = Tables.t(s, dir, "documents")
       .select(col("doc_id"), col("doc_id").cast("string").as("content"))
       .withColumn("embedding", lit(null).cast("array<float>"))
-    val dv = graft.ingest.Embed.withEmbeddings(docCents, embedder)
+    val dv = graft.ingest.Embed.withEmbeddings(docCents, new graft.ingest.DeterministicHashEmbedder(8))
       .select(col("doc_id"), maxsimCentsCentered.as("dvec"))
     cc.join(dv, "doc_id")
       .select(col("doc_id"), col("ckey"),
         zip_with(col("vec"), col("dvec"), (c, d) => c + d * lit(16)).as("vec"))
   }
 
-  private def maxsimAnnQueryToks(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val embedder = new graft.ingest.DeterministicHashEmbedder(8)
-    val qtoks = Seq((0, 0, "data"), (0, 1, "analysis"), (0, 2, "system"),
-        (1, 0, "market"), (1, 1, "music"), (1, 2, "research"))
-      .toDF("query_idx", "tok_idx", "content")
-      .withColumn("embedding", lit(null).cast("array<float>"))
-    graft.ingest.Embed.withEmbeddings(qtoks, embedder)
+  private def maxsimAnnQueryToks(s: SparkSession, dir: String): DataFrame =
+    maxsimTokenEmbeddings(s)
       .select(col("query_idx"), col("tok_idx"), maxsimCentsCentered.as("vec"))
+
+  /** `vec` scaled to unit length. */
+  private def normalized(df: DataFrame): DataFrame = df
+    .withColumn("__n", graft.functions.VectorFunctions.l2Norm(col("vec")))
+    .withColumn("vec", expr("transform(vec, x -> x / __n)"))
+    .drop("__n")
+
+  /** One graded shortlist: per query, the candidate count and how many of
+    * the exact rescore's top-10 over `cand` are in `truth`.
+    */
+  private def maxsimShortlist(chunkVecs: DataFrame, queryToks: DataFrame,
+      truth: DataFrame, cand: DataFrame): DataFrame = {
+    val pruned = graft.search.MaxSim.topK(chunkVecs, queryToks, k = 10,
+      candidates = Some(cand))
+    val nCand = cand.groupBy("query_idx").agg(count(lit(1)).as("n_candidates"))
+    val hits = pruned.select("query_idx", "doc_id")
+      .join(truth, Seq("query_idx", "doc_id"), "left_semi")
+      .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
+    nCand.join(hits, Seq("query_idx"), "left")
+      .na.fill(0L, Seq("n_hits"))
   }
 
   private def maxsimDocVecs(rawChunkVecs: DataFrame): DataFrame = {
@@ -1929,10 +1912,6 @@ object OpsQueries {
     // duplicate text produce identical doubles in both engines and break
     // on doc_id). Outputs stay counts-only — the q_ann_recall-accepted
     // risk class.
-    def normalized(df: DataFrame): DataFrame = df
-      .withColumn("__n", graft.functions.VectorFunctions.l2Norm(col("vec")))
-      .withColumn("vec", expr("transform(vec, x -> x / __n)"))
-      .drop("__n")
     // Concurrent fixture waves — the searchMaxsimCivf rationale (guide
     // §2.6): independent legs materialize as overlapping jobs.
     val (raw, rawToks) = graft.Checkpoints.join2(
@@ -1971,81 +1950,22 @@ object OpsQueries {
         .select(floor(col("query_idx") / 3).cast("int").as("query_idx"),
           col("id").cast("long").as("doc_id")).distinct().localCheckpoint()
     }))
-    def annLeg(t: Int, cand: DataFrame): DataFrame = {
-      val pruned = graft.search.MaxSim.topK(chunkVecs, queryToks, k = 10,
-        candidates = Some(cand))
-      val nCand = cand.groupBy("query_idx").agg(count(lit(1)).as("n_candidates"))
-      val hits = pruned.select("query_idx", "doc_id")
-        .join(truth, Seq("query_idx", "doc_id"), "left_semi")
-        .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-      nCand.join(hits, Seq("query_idx"), "left")
-        .na.fill(0L, Seq("n_hits"))
-        .withColumn("t_width", lit(t.toLong))
-    }
+    def annLeg(t: Int, cand: DataFrame): DataFrame =
+      maxsimShortlist(chunkVecs, queryToks, truth, cand).withColumn("t_width", lit(t.toLong))
     annLeg(5, candByT(0)).unionByName(annLeg(25, candByT(1)))
       .select("t_width", "query_idx", "n_candidates", "n_hits")
       .orderBy("t_width", "query_idx")
   }
 
   val searchMaxsimAnnSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
-      |dc AS (SELECT doc_id, dim,
-      |         ('0x' || substr(sha256(CAST(doc_id AS VARCHAR) || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS dcent
-      |       FROM documents CROSS JOIN i),
-      |cv AS (SELECT ck.doc_id, ck.chunk, i.dim,
-      |         ('0x' || substr(sha256(ck.chunk || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50
-      |           + 16 * dc.dcent AS cent
-      |       FROM ck CROSS JOIN i
-      |       JOIN dc ON dc.doc_id = ck.doc_id AND dc.dim = i.dim),
-      |qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
-      |                             (0, 2, 'system'), (1, 0, 'market'),
-      |                             (1, 1, 'music'), (1, 2, 'research'))
-      |                  v(query_idx, tok_idx, tok)),
-      |qv AS (SELECT query_idx, tok_idx, dim,
-      |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS cent
-      |       FROM qt CROSS JOIN i),
-      |cn AS (SELECT doc_id, chunk, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM cv GROUP BY 1, 2),
-      |nv AS (SELECT cv.doc_id, cv.chunk, cv.dim, cv.cent / cn.nrm AS x
-      |       FROM cv JOIN cn ON cn.doc_id = cv.doc_id AND cn.chunk = cv.chunk),
-      |qn AS (SELECT query_idx, tok_idx, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM qv GROUP BY 1, 2),
-      |nq AS (SELECT qv.query_idx, qv.tok_idx, qv.dim, qv.cent / qn.nrm AS x
-      |       FROM qv JOIN qn ON qn.query_idx = qv.query_idx
-      |                      AND qn.tok_idx = qv.tok_idx),
-      |dp AS (SELECT nq.query_idx, nq.tok_idx, nv.doc_id, nv.chunk,
-      |              sum(nq.x * nv.x) AS dotp
-      |       FROM nv JOIN nq USING (dim)
-      |       GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
-      |         FROM dp GROUP BY 1, 2, 3),
-      |sc AS (SELECT query_idx, doc_id, sum(best) AS score
-      |       FROM best GROUP BY 1, 2),
-      |truth AS (SELECT query_idx, doc_id FROM (
-      |            SELECT *, row_number() OVER (PARTITION BY query_idx
-      |                        ORDER BY score DESC, doc_id ASC) AS rn FROM sc)
-      |          WHERE rn <= 10),
+    s"""WITH $maxsimChunkCtes,
+       |$maxsimDocTopicCtes,
+      |${maxsimTokenCtes(" - 50")},
+      |${maxsimCosineTruth("")},
       |dv AS (SELECT doc_id AS id, dim, CAST(sum(cent) AS DOUBLE) AS m
       |       FROM cv GROUP BY 1, 2),
       |dn AS (SELECT id, sqrt(sum(m * m)) AS nrm FROM dv GROUP BY 1),
-      |crep AS (SELECT id % 16 AS centroid_id, id FROM (
-      |           SELECT id, row_number() OVER (PARTITION BY id % 16
-      |                           ORDER BY id) AS rn
-      |           FROM (SELECT DISTINCT id FROM dv))
-      |         WHERE rn = 1),
-      |cvd AS (SELECT crep.centroid_id, dv.dim, dv.m
-      |        FROM crep JOIN dv ON dv.id = crep.id),
-      |cn2 AS (SELECT centroid_id, sqrt(sum(m * m)) AS nrm FROM cvd GROUP BY 1),
+      |$maxsimDocCentroidCtes,
       |adot AS (SELECT dv.id, cvd.centroid_id, sum(dv.m * cvd.m) AS dt
       |         FROM dv JOIN cvd USING (dim) GROUP BY 1, 2),
       |assign AS (SELECT id, cluster_id FROM (
@@ -2058,29 +1978,7 @@ object OpsQueries {
       |             JOIN cn2 c2 ON c2.centroid_id = a.centroid_id)
       |           WHERE rn = 1),
       |csize AS (SELECT cluster_id, count(*) AS csize FROM assign GROUP BY 1),
-      |qk AS (SELECT query_idx * 3 + tok_idx AS tok_key, query_idx, dim,
-      |              CAST(cent AS DOUBLE) AS qc
-      |       FROM qv),
-      |qn2 AS (SELECT tok_key, sqrt(sum(qc * qc)) AS nrm FROM qk GROUP BY 1),
-      |qdot AS (SELECT qk.tok_key, cvd.centroid_id, sum(qk.qc * cvd.m) AS dt
-      |         FROM qk JOIN cvd USING (dim) GROUP BY 1, 2),
-      |pr AS (SELECT q.tok_key, q.centroid_id,
-      |              1.0 - q.dt / (c2.nrm * qn2.nrm) AS d,
-      |              coalesce(s.csize, 0) AS csize
-      |       FROM qdot q
-      |       JOIN cn2 c2 ON c2.centroid_id = q.centroid_id
-      |       JOIN qn2 ON qn2.tok_key = q.tok_key
-      |       LEFT JOIN csize s ON s.cluster_id = q.centroid_id),
-      |pool AS (SELECT tok_key, centroid_id,
-      |                coalesce(sum(csize) OVER (PARTITION BY tok_key
-      |                  ORDER BY d, centroid_id
-      |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |                  0) AS pool
-      |         FROM pr),
-      |widths AS (SELECT CAST(unnest([5, 25]) AS BIGINT) AS t_width),
-      |probes AS (SELECT w.t_width, p.tok_key, p.centroid_id
-      |           FROM widths w JOIN pool p
-      |             ON p.pool < greatest(10 * w.t_width, 100)),
+      |${maxsimProbeCtes("csize")},
       |sdot AS (SELECT qk.tok_key, min(qk.query_idx) AS query_idx, dv.id,
       |                sum(qk.qc * dv.m) AS dt
       |         FROM qk JOIN dv USING (dim) GROUP BY qk.tok_key, dv.id),
@@ -2096,24 +1994,7 @@ object OpsQueries {
       |        JOIN qn2 ON qn2.tok_key = sd.tok_key),
       |cand AS (SELECT DISTINCT s.t_width, s.query_idx, s.id AS doc_id
       |         FROM sct s WHERE s.rn <= s.t_width),
-      |pruned AS (SELECT t_width, query_idx, doc_id FROM (
-      |             SELECT c.t_width, s.query_idx, s.doc_id,
-      |                    row_number() OVER (PARTITION BY c.t_width, s.query_idx
-      |                      ORDER BY s.score DESC, s.doc_id ASC) AS rn
-      |             FROM sc s JOIN cand c
-      |               ON s.query_idx = c.query_idx AND s.doc_id = c.doc_id)
-      |           WHERE rn <= 10),
-      |nc AS (SELECT t_width, query_idx, CAST(count(*) AS BIGINT) AS n_candidates
-      |       FROM cand GROUP BY 1, 2),
-      |h AS (SELECT p.t_width, p.query_idx, CAST(count(*) AS BIGINT) AS n_hits
-      |      FROM pruned p JOIN truth t
-      |        ON t.query_idx = p.query_idx AND t.doc_id = p.doc_id
-      |      GROUP BY 1, 2)
-      |SELECT nc.t_width, nc.query_idx, nc.n_candidates,
-      |       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits
-      |FROM nc LEFT JOIN h
-      |  ON h.t_width = nc.t_width AND h.query_idx = nc.query_idx
-      |ORDER BY nc.t_width, nc.query_idx""".stripMargin
+      |$maxsimWidthGradeSql""".stripMargin
 
   // ---- maxsim as a hybrid RRF leg (Api.searchIndexed semanticMode=
   //      "maxsim", McpSurface hybrid `search`): the late-interaction
@@ -2137,17 +2018,7 @@ object OpsQueries {
   }
 
   val hybridMaxsimSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
+    s"""WITH $maxsimChunkCtes,
       |cv AS (SELECT doc_id, chunk, dim,
       |         ('0x' || substr(sha256(chunk || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 AS cent
       |       FROM ck CROSS JOIN i),
@@ -2213,12 +2084,6 @@ object OpsQueries {
     * to candidate-generate for. Everything integer-derived, replayable.
     */
   private def maxsimCivfChunkVecsKeyed(s: SparkSession, dir: String): DataFrame = {
-    val embedder = new graft.ingest.DeterministicHashEmbedder(8)
-    val docs = Tables.t(s, dir, "documents")
-      .select(col("doc_id"), col("text").as("content"))
-    val chunks = graft.retriever.Retriever.chunk(docs, maxTokens = 20)
-      .select(col("doc_id"), col("content"),
-        lit(null).cast("array<float>").as("embedding"))
     // the doc's two topics come from a GLOBAL pool of 32 shared topic
     // directions (hash of doc id + the chunk text's hash parity), so the
     // chunk-vector space has real cluster structure — the structure a
@@ -2227,7 +2092,8 @@ object OpsQueries {
     // the topic join below — left lazy, the corpus-sized chunk-embedding
     // mapPartitions pass executes twice (measured ~25 s executor time per
     // pass at sf0.1)
-    val cc = graft.ingest.Embed.withEmbeddings(chunks, embedder)
+    val embedder = new graft.ingest.DeterministicHashEmbedder(8)
+    val cc = chunkEmbeddings(s, dir)
       .select(col("doc_id"),
         concat(col("doc_id").cast("string"), lit("#"), col("content")).as("ckey"),
         concat(lit("gtopic"),
@@ -2254,10 +2120,6 @@ object OpsQueries {
   }
 
   def searchMaxsimCivf(s: SparkSession, dir: String): DataFrame = {
-    def normalized(df: DataFrame): DataFrame = df
-      .withColumn("__n", graft.functions.VectorFunctions.l2Norm(col("vec")))
-      .withColumn("vec", expr("transform(vec, x -> x / __n)"))
-      .drop("__n")
     val rawKeyed = maxsimCivfChunkVecsKeyed(s, dir)
     val raw = rawKeyed.select("doc_id", "vec")
     val rawToks = maxsimAnnQueryToks(s, dir).localCheckpoint()
@@ -2322,18 +2184,10 @@ object OpsQueries {
           .select(col("query_idx"), col("doc_id").cast("long").as("doc_id"))
           .distinct().localCheckpoint()
     })
-    def leg(qz: String, cand: DataFrame, t: Int): DataFrame = {
-      val pruned = graft.search.MaxSim.topK(chunkVecs, queryToks, k = 10,
-        candidates = Some(cand))
-      val nCand = cand.groupBy("query_idx").agg(count(lit(1)).as("n_candidates"))
-      val hits = pruned.select("query_idx", "doc_id")
-        .join(truth, Seq("query_idx", "doc_id"), "left_semi")
-        .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-      nCand.join(hits, Seq("query_idx"), "left")
-        .na.fill(0L, Seq("n_hits"))
+    def leg(qz: String, cand: DataFrame, t: Int): DataFrame =
+      maxsimShortlist(chunkVecs, queryToks, truth, cand)
         .withColumn("t_width", lit(t.toLong))
         .withColumn("quantizer", lit(qz))
-    }
     legSpecs.zip(candByLeg).map { case ((qz, _, _, t), cand) => leg(qz, cand, t) }
       .reduce(_ unionByName _)
       .select("quantizer", "t_width", "query_idx", "n_candidates", "n_hits")
@@ -2341,54 +2195,10 @@ object OpsQueries {
   }
 
   val searchMaxsimCivfSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
-      |tk AS (SELECT doc_id, chunk,
-      |         'gtopic' || CAST(('0x' || substr(sha256(CAST(doc_id AS VARCHAR) || 'x' ||
-      |             CAST(('0x' || substr(sha256(chunk), 1, 15))::BIGINT % 2 AS VARCHAR)),
-      |             1, 15))::BIGINT % 32 AS VARCHAR) AS topic
-      |       FROM ck),
-      |cv AS (SELECT tk.doc_id, tk.chunk, i.dim,
-      |         ('0x' || substr(sha256(tk.chunk || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50
-      |           + 16 * (('0x' || substr(sha256(tk.topic || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50) AS cent
-      |       FROM tk CROSS JOIN i),
-      |qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
-      |                             (0, 2, 'system'), (1, 0, 'market'),
-      |                             (1, 1, 'music'), (1, 2, 'research'))
-      |                  v(query_idx, tok_idx, tok)),
-      |qv AS (SELECT query_idx, tok_idx, dim,
-      |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS cent
-      |       FROM qt CROSS JOIN i),
-      |cn AS (SELECT doc_id, chunk, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM cv GROUP BY 1, 2),
-      |nv AS (SELECT cv.doc_id, cv.chunk, cv.dim, cv.cent / cn.nrm AS x
-      |       FROM cv JOIN cn ON cn.doc_id = cv.doc_id AND cn.chunk = cv.chunk),
-      |qn AS (SELECT query_idx, tok_idx, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM qv GROUP BY 1, 2),
-      |nq AS (SELECT qv.query_idx, qv.tok_idx, qv.dim, qv.cent / qn.nrm AS x
-      |       FROM qv JOIN qn ON qn.query_idx = qv.query_idx
-      |                      AND qn.tok_idx = qv.tok_idx),
-      |dp AS (SELECT nq.query_idx, nq.tok_idx, nv.doc_id, nv.chunk,
-      |              sum(nq.x * nv.x) AS dotp
-      |       FROM nv JOIN nq USING (dim)
-      |       GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
-      |         FROM dp GROUP BY 1, 2, 3),
-      |sc AS (SELECT query_idx, doc_id, sum(best) AS score
-      |       FROM best GROUP BY 1, 2),
-      |truth AS (SELECT query_idx, doc_id FROM (
-      |            SELECT *, row_number() OVER (PARTITION BY query_idx
-      |                        ORDER BY score DESC, doc_id ASC) AS rn FROM sc)
-      |          WHERE rn <= 10),
+    s"""WITH $maxsimChunkCtes,
+      |$maxsimTopicCtes,
+      |${maxsimTokenCtes(" - 50")},
+      |${maxsimCosineTruth("")},
       |dv AS (SELECT doc_id AS id, dim, CAST(sum(cent) AS DOUBLE) AS m
       |       FROM cv GROUP BY 1, 2),
       |crep AS (SELECT id % 16 AS centroid_id, id FROM (
@@ -2490,7 +2300,6 @@ object OpsQueries {
       |  ON h.qz = nc.qz AND h.t_width = nc.t_width AND h.query_idx = nc.query_idx
       |ORDER BY nc.qz, nc.t_width, nc.query_idx""".stripMargin
 
-
   // ---- residual-PQ chunk-code candidates (the PLAID compression,
   //      ChunkPqIndex), graded vs exact maxsim truth NEXT TO the raw
   //      chunk-IVF route at the same two widths. Same multi-topic
@@ -2508,10 +2317,6 @@ object OpsQueries {
   //      reads codes instead of float vectors. Every candidate-leg
   //      quantity is integer-derived — bit-identical ranks. ----
   def searchMaxsimCpq(s: SparkSession, dir: String): DataFrame = {
-    def normalized(df: DataFrame): DataFrame = df
-      .withColumn("__n", graft.functions.VectorFunctions.l2Norm(col("vec")))
-      .withColumn("vec", expr("transform(vec, x -> x / __n)"))
-      .drop("__n")
     val rawKeyed = maxsimCivfChunkVecsKeyed(s, dir)
     val raw = rawKeyed.select("doc_id", "vec")
     val rawToks = maxsimAnnQueryToks(s, dir).localCheckpoint()
@@ -2582,18 +2387,10 @@ object OpsQueries {
         .select(col("query_idx"), col("doc_id").cast("long").as("doc_id"))
         .distinct().localCheckpoint()
     })
-    def leg(name: String, cand: DataFrame, t: Int): DataFrame = {
-      val pruned = graft.search.MaxSim.topK(chunkVecs, queryToks, k = 10,
-        candidates = Some(cand))
-      val nCand = cand.groupBy("query_idx").agg(count(lit(1)).as("n_candidates"))
-      val hits = pruned.select("query_idx", "doc_id")
-        .join(truth, Seq("query_idx", "doc_id"), "left_semi")
-        .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-      nCand.join(hits, Seq("query_idx"), "left")
-        .na.fill(0L, Seq("n_hits"))
+    def leg(name: String, cand: DataFrame, t: Int): DataFrame =
+      maxsimShortlist(chunkVecs, queryToks, truth, cand)
         .withColumn("t_width", lit(t.toLong))
         .withColumn("leg", lit(name))
-    }
     legSpecs.zip(candByLeg).map { case ((name, t), cand) => leg(name, cand, t) }
       .reduce(_ unionByName _)
       .select("leg", "t_width", "query_idx", "n_candidates", "n_hits")
@@ -2601,54 +2398,10 @@ object OpsQueries {
   }
 
   val searchMaxsimCpqSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
-      |tk AS (SELECT doc_id, chunk,
-      |         'gtopic' || CAST(('0x' || substr(sha256(CAST(doc_id AS VARCHAR) || 'x' ||
-      |             CAST(('0x' || substr(sha256(chunk), 1, 15))::BIGINT % 2 AS VARCHAR)),
-      |             1, 15))::BIGINT % 32 AS VARCHAR) AS topic
-      |       FROM ck),
-      |cv AS (SELECT tk.doc_id, tk.chunk, i.dim,
-      |         ('0x' || substr(sha256(tk.chunk || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50
-      |           + 16 * (('0x' || substr(sha256(tk.topic || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50) AS cent
-      |       FROM tk CROSS JOIN i),
-      |qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
-      |                             (0, 2, 'system'), (1, 0, 'market'),
-      |                             (1, 1, 'music'), (1, 2, 'research'))
-      |                  v(query_idx, tok_idx, tok)),
-      |qv AS (SELECT query_idx, tok_idx, dim,
-      |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS cent
-      |       FROM qt CROSS JOIN i),
-      |cn AS (SELECT doc_id, chunk, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM cv GROUP BY 1, 2),
-      |nv AS (SELECT cv.doc_id, cv.chunk, cv.dim, cv.cent / cn.nrm AS x
-      |       FROM cv JOIN cn ON cn.doc_id = cv.doc_id AND cn.chunk = cv.chunk),
-      |qn AS (SELECT query_idx, tok_idx, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM qv GROUP BY 1, 2),
-      |nq AS (SELECT qv.query_idx, qv.tok_idx, qv.dim, qv.cent / qn.nrm AS x
-      |       FROM qv JOIN qn ON qn.query_idx = qv.query_idx
-      |                      AND qn.tok_idx = qv.tok_idx),
-      |dp AS (SELECT nq.query_idx, nq.tok_idx, nv.doc_id, nv.chunk,
-      |              sum(nq.x * nv.x) AS dotp
-      |       FROM nv JOIN nq USING (dim)
-      |       GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
-      |         FROM dp GROUP BY 1, 2, 3),
-      |sc AS (SELECT query_idx, doc_id, sum(best) AS score
-      |       FROM best GROUP BY 1, 2),
-      |truth AS (SELECT query_idx, doc_id FROM (
-      |            SELECT *, row_number() OVER (PARTITION BY query_idx
-      |                        ORDER BY score DESC, doc_id ASC) AS rn FROM sc)
-      |          WHERE rn <= 10),
+    s"""WITH $maxsimChunkCtes,
+      |$maxsimTopicCtes,
+      |${maxsimTokenCtes(" - 50")},
+      |${maxsimCosineTruth("")},
       |qcv AS (SELECT cv.doc_id, cv.chunk, cv.dim,
       |               floor(cv.cent / cn.nrm * 1000) AS qc2
       |        FROM cv JOIN cn ON cn.doc_id = cv.doc_id
@@ -2684,29 +2437,7 @@ object OpsQueries {
       |            WHERE rn = 1),
       |ccsize AS (SELECT cluster_id, count(*) AS csize
       |           FROM cassign GROUP BY 1),
-      |qk AS (SELECT query_idx * 3 + tok_idx AS tok_key, query_idx, dim,
-      |              CAST(cent AS DOUBLE) AS qc
-      |       FROM qv),
-      |qn2 AS (SELECT tok_key, sqrt(sum(qc * qc)) AS nrm FROM qk GROUP BY 1),
-      |qdot AS (SELECT qk.tok_key, cvd.centroid_id, sum(qk.qc * cvd.m) AS dt
-      |         FROM qk JOIN cvd USING (dim) GROUP BY 1, 2),
-      |pr AS (SELECT q.tok_key, q.centroid_id,
-      |              1.0 - q.dt / (c2.nrm * qn2.nrm) AS d,
-      |              coalesce(s.csize, 0) AS csize
-      |       FROM qdot q
-      |       JOIN cn2 c2 ON c2.centroid_id = q.centroid_id
-      |       JOIN qn2 ON qn2.tok_key = q.tok_key
-      |       LEFT JOIN ccsize s ON s.cluster_id = q.centroid_id),
-      |pool AS (SELECT tok_key, centroid_id,
-      |                coalesce(sum(csize) OVER (PARTITION BY tok_key
-      |                  ORDER BY d, centroid_id
-      |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |                  0) AS pool
-      |         FROM pr),
-      |widths AS (SELECT CAST(unnest([5, 25]) AS BIGINT) AS t_width),
-      |probes AS (SELECT w.t_width, p.tok_key, p.centroid_id
-      |           FROM widths w JOIN pool p
-      |             ON p.pool < greatest(10 * w.t_width, 100)),
+      |${maxsimProbeCtes("ccsize")},
       |csdot AS (SELECT qk.tok_key, min(qk.query_idx) AS query_idx,
       |                 q.doc_id, q.chunk,
       |                 sum(qk.qc * q.qc2) AS dt
@@ -2805,10 +2536,6 @@ object OpsQueries {
   // unfiltered routes. Same correlated fixture as q_search_maxsim_ann;
   // every candidate-leg quantity integer-derived, fully replayed.
   def searchMaxsimFiltered(s: SparkSession, dir: String): DataFrame = {
-    def normalized(df: DataFrame): DataFrame = df
-      .withColumn("__n", graft.functions.VectorFunctions.l2Norm(col("vec")))
-      .withColumn("vec", expr("transform(vec, x -> x / __n)"))
-      .drop("__n")
     // Concurrent fixture waves — the searchMaxsimCivf rationale (guide
     // §2.6): independent legs materialize as overlapping jobs.
     val (rawKeyed, rawToks) = graft.Checkpoints.join2(
@@ -2855,80 +2582,21 @@ object OpsQueries {
           s, assignedIn, cents, toks.toIndexedSeq, t)
         .select(col("query_idx"), col("doc_id").cast("long").as("doc_id"))
         .distinct().localCheckpoint()))
-    def leg(t: Int, cand: DataFrame): DataFrame = {
-      val pruned = graft.search.MaxSim.topK(chunkVecs, queryToks, k = 10,
-        candidates = Some(cand))
-      val nCand = cand.groupBy("query_idx").agg(count(lit(1)).as("n_candidates"))
-      val hits = pruned.select("query_idx", "doc_id")
-        .join(truth, Seq("query_idx", "doc_id"), "left_semi")
-        .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-      nCand.join(hits, Seq("query_idx"), "left")
-        .na.fill(0L, Seq("n_hits"))
-        .withColumn("t_width", lit(t.toLong))
-    }
+    def leg(t: Int, cand: DataFrame): DataFrame =
+      maxsimShortlist(chunkVecs, queryToks, truth, cand).withColumn("t_width", lit(t.toLong))
     leg(5, candByT(0)).unionByName(leg(25, candByT(1)))
       .select("t_width", "query_idx", "n_candidates", "n_hits")
       .orderBy("t_width", "query_idx")
   }
 
   val searchMaxsimFilteredSql: String =
-    """WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS words
-      |           FROM documents),
-      |n AS (SELECT doc_id, words,
-      |             greatest(CAST(ceil(len(words) / 20.0) AS INTEGER), 1) AS n_chunks
-      |      FROM w),
-      |c AS (SELECT doc_id,
-      |             array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk
-      |      FROM n, (SELECT unnest(range(100)) AS i) ix
-      |      WHERE ix.i < n.n_chunks),
-      |ck AS (SELECT doc_id, chunk FROM c WHERE length(chunk) > 0),
-      |i AS (SELECT CAST(unnest(range(8)) AS INTEGER) AS dim),
-      |dc AS (SELECT doc_id, dim,
-      |         ('0x' || substr(sha256(CAST(doc_id AS VARCHAR) || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS dcent
-      |       FROM documents CROSS JOIN i),
-      |cv AS (SELECT ck.doc_id, ck.chunk, i.dim,
-      |         ('0x' || substr(sha256(ck.chunk || CAST(i.dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50
-      |           + 16 * dc.dcent AS cent
-      |       FROM ck CROSS JOIN i
-      |       JOIN dc ON dc.doc_id = ck.doc_id AND dc.dim = i.dim),
-      |qt AS (SELECT * FROM (VALUES (0, 0, 'data'), (0, 1, 'analysis'),
-      |                             (0, 2, 'system'), (1, 0, 'market'),
-      |                             (1, 1, 'music'), (1, 2, 'research'))
-      |                  v(query_idx, tok_idx, tok)),
-      |qv AS (SELECT query_idx, tok_idx, dim,
-      |         ('0x' || substr(sha256(tok || CAST(dim AS VARCHAR)), 1, 15))::BIGINT % 100 - 50 AS cent
-      |       FROM qt CROSS JOIN i),
-      |cn AS (SELECT doc_id, chunk, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM cv GROUP BY 1, 2),
-      |nv AS (SELECT cv.doc_id, cv.chunk, cv.dim, cv.cent / cn.nrm AS x
-      |       FROM cv JOIN cn ON cn.doc_id = cv.doc_id AND cn.chunk = cv.chunk),
-      |qn AS (SELECT query_idx, tok_idx, sqrt(sum(CAST(cent * cent AS DOUBLE))) AS nrm
-      |       FROM qv GROUP BY 1, 2),
-      |nq AS (SELECT qv.query_idx, qv.tok_idx, qv.dim, qv.cent / qn.nrm AS x
-      |       FROM qv JOIN qn ON qn.query_idx = qv.query_idx
-      |                      AND qn.tok_idx = qv.tok_idx),
-      |dp AS (SELECT nq.query_idx, nq.tok_idx, nv.doc_id, nv.chunk,
-      |              sum(nq.x * nv.x) AS dotp
-      |       FROM nv JOIN nq USING (dim)
-      |       GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT query_idx, tok_idx, doc_id, max(dotp) AS best
-      |         FROM dp GROUP BY 1, 2, 3),
-      |sc AS (SELECT query_idx, doc_id, sum(best) AS score
-      |       FROM best GROUP BY 1, 2),
-      |truth AS (SELECT query_idx, doc_id FROM (
-      |            SELECT *, row_number() OVER (PARTITION BY query_idx
-      |                        ORDER BY score DESC, doc_id ASC) AS rn FROM sc WHERE doc_id % 3 = 0)
-      |          WHERE rn <= 10),
+    s"""WITH $maxsimChunkCtes,
+       |$maxsimDocTopicCtes,
+      |${maxsimTokenCtes(" - 50")},
+      |${maxsimCosineTruth(" WHERE doc_id % 3 = 0")},
       |dv AS (SELECT doc_id AS id, dim, CAST(sum(cent) AS DOUBLE) AS m
       |       FROM cv GROUP BY 1, 2),
-      |crep AS (SELECT id % 16 AS centroid_id, id FROM (
-      |           SELECT id, row_number() OVER (PARTITION BY id % 16
-      |                           ORDER BY id) AS rn
-      |           FROM (SELECT DISTINCT id FROM dv))
-      |         WHERE rn = 1),
-      |cvd AS (SELECT crep.centroid_id, dv.dim, dv.m
-      |        FROM crep JOIN dv ON dv.id = crep.id),
-      |cn2 AS (SELECT centroid_id, sqrt(sum(m * m)) AS nrm FROM cvd GROUP BY 1),
+      |$maxsimDocCentroidCtes,
       |cadot AS (SELECT cv.doc_id, cv.chunk, cvd.centroid_id,
       |                 sum(CAST(cv.cent AS DOUBLE) * cvd.m) AS dt
       |          FROM cv JOIN cvd USING (dim) GROUP BY 1, 2, 3),
@@ -2943,29 +2611,7 @@ object OpsQueries {
       |            WHERE rn = 1),
       |ccsize AS (SELECT cluster_id, count(*) AS csize FROM cassign
       |           WHERE doc_id % 3 = 0 GROUP BY 1),
-      |qk AS (SELECT query_idx * 3 + tok_idx AS tok_key, query_idx, dim,
-      |              CAST(cent AS DOUBLE) AS qc
-      |       FROM qv),
-      |qn2 AS (SELECT tok_key, sqrt(sum(qc * qc)) AS nrm FROM qk GROUP BY 1),
-      |qdot AS (SELECT qk.tok_key, cvd.centroid_id, sum(qk.qc * cvd.m) AS dt
-      |         FROM qk JOIN cvd USING (dim) GROUP BY 1, 2),
-      |pr AS (SELECT q.tok_key, q.centroid_id,
-      |              1.0 - q.dt / (c2.nrm * qn2.nrm) AS d,
-      |              coalesce(s.csize, 0) AS csize
-      |       FROM qdot q
-      |       JOIN cn2 c2 ON c2.centroid_id = q.centroid_id
-      |       JOIN qn2 ON qn2.tok_key = q.tok_key
-      |       LEFT JOIN ccsize s ON s.cluster_id = q.centroid_id),
-      |pool AS (SELECT tok_key, centroid_id,
-      |                coalesce(sum(csize) OVER (PARTITION BY tok_key
-      |                  ORDER BY d, centroid_id
-      |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-      |                  0) AS pool
-      |         FROM pr),
-      |widths AS (SELECT CAST(unnest([5, 25]) AS BIGINT) AS t_width),
-      |probes AS (SELECT w.t_width, p.tok_key, p.centroid_id
-      |           FROM widths w JOIN pool p
-      |             ON p.pool < greatest(10 * w.t_width, 100)),
+      |${maxsimProbeCtes("ccsize")},
       |csdot AS (SELECT qk.tok_key, min(qk.query_idx) AS query_idx,
       |                 cv.doc_id, cv.chunk,
       |                 sum(qk.qc * CAST(cv.cent AS DOUBLE)) AS dt
@@ -2986,25 +2632,7 @@ object OpsQueries {
       |        FROM sbest),
       |cand AS (SELECT DISTINCT s.t_width, s.query_idx, s.doc_id
       |         FROM sct s WHERE s.rn <= s.t_width),
-      |pruned AS (SELECT t_width, query_idx, doc_id FROM (
-      |             SELECT c.t_width, s.query_idx, s.doc_id,
-      |                    row_number() OVER (PARTITION BY c.t_width, s.query_idx
-      |                      ORDER BY s.score DESC, s.doc_id ASC) AS rn
-      |             FROM sc s JOIN cand c
-      |               ON s.query_idx = c.query_idx AND s.doc_id = c.doc_id)
-      |           WHERE rn <= 10),
-      |nc AS (SELECT t_width, query_idx, CAST(count(*) AS BIGINT) AS n_candidates
-      |       FROM cand GROUP BY 1, 2),
-      |h AS (SELECT p.t_width, p.query_idx, CAST(count(*) AS BIGINT) AS n_hits
-      |      FROM pruned p JOIN truth t
-      |        ON t.query_idx = p.query_idx AND t.doc_id = p.doc_id
-      |      GROUP BY 1, 2)
-      |SELECT nc.t_width, nc.query_idx, nc.n_candidates,
-      |       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits
-      |FROM nc LEFT JOIN h
-      |  ON h.t_width = nc.t_width AND h.query_idx = nc.query_idx
-      |ORDER BY nc.t_width, nc.query_idx""".stripMargin
-
+      |$maxsimWidthGradeSql""".stripMargin
 
   // ---- index-health drift probe (ann.IndexHealth): frozen-quantizer
   //      recall decay made measurable. Fixture: 8-dim integer vectors
@@ -3139,93 +2767,91 @@ object OpsQueries {
       |                   OR 100 * c.ent_cur_nano < 75 * r.ent_ref_nano THEN 1 ELSE 0 END AS BIGINT) AS rebuild_recommended
       |FROM rstat r CROSS JOIN cstat c""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_search_maxsim" -> (searchMaxsim _),
-    "q_search_maxsim_pruned" -> (searchMaxsimPruned _),
-    "q_search_maxsim_ann" -> (searchMaxsimAnn _),
-    "q_search_maxsim_civf" -> (searchMaxsimCivf _),
-    "q_search_maxsim_cpq" -> (searchMaxsimCpq _),
-    "q_search_maxsim_filtered" -> (searchMaxsimFiltered _),
-    "q_index_drift" -> (indexDrift _),
-    "q_hybrid_maxsim" -> (hybridMaxsim _),
-    "q_snapshot_diff" -> (snapshotDiff _),
-    "q_compaction_plan" -> (compactionPlan _),
-    "q_zorder_layout" -> (zorderLayout _),
-    "q_ann_graph_beam" -> (annGraphBeam _),
-    "q_sanitize_extended" -> (sanitizeExtended _),
-    "q_events_overlap" -> (eventsOverlap _),
-    "q_corpus_kl" -> (corpusKl _),
-    "q_lexical_boolean" -> (lexicalBoolean _),
-    "q_feature_binning" -> (featureBinning _),
-    "q_search_facet_cap" -> (searchFacetCap _),
-    "q_skew_report" -> (skewReport _),
-    "q_events_pattern" -> (eventsPattern _),
-    "q_data_contract" -> (dataContract _),
-    "q_pipeline_incremental" -> (pipelineIncremental _),
-    "q_ann_graph_ivf" -> (annGraphIvf _),
-    "q_ann_graph_recall" -> (annGraphRecall _),
-    "q_ann_graph_filtered" -> (annGraphFiltered _),
-    "q_ann_ivf_filtered" -> (annIvfFiltered _),
-    "q_privacy_kanon" -> (privacyKanon _),
-    "q_search_expanded" -> (searchExpanded _),
-    "q_search_spell" -> (searchSpell _),
-    "q_mine_kcenter" -> (mineKcenter _),
-    "q_pack_batches" -> (packBatches _),
-    "q_profile_hll_regs" -> (profileHllRegs _),
-    "q_profile_hll" -> (profileHll _),
-    "q_profile_cms_cells" -> (profileCmsCells _),
-    "q_profile_cms" -> (profileCms _),
-    "q_dedup_source_sim" -> (dedupSourceSim _),
-    "q_pipeline_sketch_incr" -> (pipelineSketchIncr _),
-    "q_search_ltr" -> (searchLtr _),
-    "q_events_assoc" -> (eventsAssoc _),
-    "q_eval_outliers" -> (evalOutliers _),
-    "q_er_clusters" -> (erClusters _),
-    "q_rag_attribution" -> (ragAttribution _),
-    "q_events_seasonal" -> (eventsSeasonal _))
-
-  def oracles: Map[String, String] = Map(
-    "q_search_maxsim" -> searchMaxsimSql,
-    "q_search_maxsim_pruned" -> searchMaxsimPrunedSql,
-    "q_search_maxsim_ann" -> searchMaxsimAnnSql,
-    "q_search_maxsim_civf" -> searchMaxsimCivfSql,
-    "q_search_maxsim_cpq" -> searchMaxsimCpqSql,
-    "q_search_maxsim_filtered" -> searchMaxsimFilteredSql,
-    "q_index_drift" -> indexDriftSql,
-    "q_hybrid_maxsim" -> hybridMaxsimSql,
-    "q_snapshot_diff" -> snapshotDiffSql,
-    "q_compaction_plan" -> compactionPlanSql,
-    "q_zorder_layout" -> zorderLayoutSql,
-    "q_ann_graph_beam" -> annGraphBeamSql,
-    "q_sanitize_extended" -> sanitizeExtendedSql,
-    "q_events_overlap" -> eventsOverlapSql,
-    "q_corpus_kl" -> corpusKlSql,
-    "q_lexical_boolean" -> lexicalBooleanSql,
-    "q_feature_binning" -> featureBinningSql,
-    "q_search_facet_cap" -> searchFacetCapSql,
-    "q_skew_report" -> skewReportSql,
-    "q_events_pattern" -> eventsPatternSql,
-    "q_data_contract" -> dataContractSql,
-    "q_pipeline_incremental" -> pipelineIncrementalSql,
-    "q_ann_graph_ivf" -> annGraphIvfSql,
-    "q_ann_graph_recall" -> annGraphRecallSql,
-    "q_ann_graph_filtered" -> annGraphFilteredSql,
-    "q_ann_ivf_filtered" -> annIvfFilteredSql,
-    "q_privacy_kanon" -> privacyKanonSql,
-    "q_search_expanded" -> searchExpandedSql,
-    "q_search_spell" -> searchSpellSql,
-    "q_mine_kcenter" -> mineKcenterSql,
-    "q_pack_batches" -> packBatchesSql,
-    "q_profile_hll_regs" -> profileHllRegsSql,
-    "q_profile_hll" -> profileHllSql,
-    "q_profile_cms_cells" -> profileCmsCellsSql,
-    "q_profile_cms" -> profileCmsSql,
-    "q_dedup_source_sim" -> dedupSourceSimSql,
-    "q_pipeline_sketch_incr" -> pipelineSketchIncrSql,
-    "q_search_ltr" -> searchLtrSql,
-    "q_events_assoc" -> eventsAssocSql,
-    "q_eval_outliers" -> evalOutliersSql,
-    "q_er_clusters" -> erClustersSql,
-    "q_rag_attribution" -> ragAttributionSql,
-    "q_events_seasonal" -> eventsSeasonalSql)
+  val graded: Seq[Graded] = Seq(
+    Graded("q_search_maxsim", searchMaxsim, searchMaxsimSql,
+      "late-interaction maxsim: chunk-vector scan x broadcast query tokens, TWO combiner-collapsed keyed aggs (max per token-doc, sum per doc), bounded top-k window; serving path joins candidates on doc_id (bucket-pruned chunk fetch)"),
+    Graded("q_search_maxsim_pruned", searchMaxsimPruned, searchMaxsimPrunedSql,
+      "pruned maxsim serving graded vs exact truth: per-token top-T doc shortlist (the chunk-ANN route's rule), maxsim rescore on the shortlist only, hit-count join"),
+    Graded("q_search_maxsim_ann", searchMaxsimAnn, searchMaxsimAnnSql,
+      "ANN-pruned maxsim serving graded vs exact truth at two widths: per-token doc shortlists from the batched adaptive-probe doc-level IVF (probe-pruned, never chunk-table-linear), union per query, exact maxsim rescore on the shortlist join"),
+    Graded("q_search_maxsim_civf", searchMaxsimCivf, searchMaxsimCivfSql,
+      "chunk-level-IVF maxsim serving (PLAID shape) graded vs exact truth at two widths x TWO quantizer training spaces (pooled-doc vs chunk-sampled — multi-topic fixture where pooling averages the topics away): per-token DOC shortlists ranked by best probed CHUNK (grouped adaptive-probe route), exact rescore on the shortlist join"),
+    Graded("q_search_maxsim_cpq", searchMaxsimCpq, searchMaxsimCpqSql,
+      "residual-PQ maxsim candidates (PLAID compressed storage): the ADC leg ranks per-token DOC shortlists from (cluster, codes) rows alone — centroid dot + broadcast per-token subspace tables, NO float-vector read in the candidate scan — graded vs the raw chunk-IVF rule and exact truth at two widths"),
+    Graded("q_search_maxsim_filtered", searchMaxsimFiltered, searchMaxsimFilteredSql,
+      "metadata-FILTERED maxsim through the chunk-level IVF: allowed-id pushdown restricts the index rows BEFORE the per-token rank and probe pool (filtered top-k FILLS k from the sub-corpus), graded vs the FILTERED exact truth at two widths"),
+    Graded("q_index_drift", indexDrift, indexDriftSql,
+      "index-health drift probe: per-row nano-floored residuals to the frozen centroids + entropy from exact cluster counts, ref vs planted-drift slices, integer-arithmetic rebuild flag (one scan + cluster-keyed combine per slice)"),
+    Graded("q_hybrid_maxsim", hybridMaxsim, hybridMaxsimSql,
+      "maxsim as a hybrid RRF leg: late-interaction ranks fused with the TF lexical ranks via the reference RRF math (ranks only — both legs bounded top-k, fusion over <= 2*limit rows per query)"),
+    Graded("q_snapshot_diff", snapshotDiff, snapshotDiffSql,
+      "snapshot diff: full-outer join on 16-byte digests, keyed status rollup"),
+    Graded("q_compaction_plan", compactionPlan, compactionPlanSql,
+      "compaction plan: file-inventory agg -> bucketed prefix sum (window partitioned by coarse bucket)"),
+    Graded("q_zorder_layout", zorderLayout, zorderLayoutSql,
+      "z-order: per-row codegen'd bit fold + ONE keyed aggregate"),
+    Graded("q_ann_graph_beam", annGraphBeam, annGraphBeamSql,
+      "graph-beam ANN: medoid-routed entries + broadcast frontier probes + point vector fetches, corpus-size-independent per hop"),
+    Graded("q_sanitize_extended", sanitizeExtended, sanitizeExtendedSql,
+      "extended sanitize: single projection pass, Luhn fold inside codegen"),
+    Graded("q_events_overlap", eventsOverlap, eventsOverlapSql,
+      "interval-overlap join: bucket explode + keyed equi-join, NO inequality theta-join"),
+    Graded("q_corpus_kl", corpusKl, corpusKlSql,
+      "per-slice KL: keyed aggs + ONE token-keyed join, micro-nat integer sum"),
+    Graded("q_lexical_boolean", lexicalBoolean, lexicalBooleanSql,
+      "boolean retrieval: term-pruned postings, AND = keyed count, NOT = left-anti"),
+    Graded("q_feature_binning", featureBinning, featureBinningSql,
+      "equal-frequency binning: value-count prefix sum (partitioned window) + broadcast bin map"),
+    Graded("q_search_facet_cap", searchFacetCap, searchFacetCapSql,
+      "facet caps: per-facet rank window over the serve shortlist only"),
+    Graded("q_skew_report", skewReport, skewReportSql,
+      "skew diagnosis: key-count agg + heavy-hitter heap, report-sized output"),
+    Graded("q_events_pattern", eventsPattern, eventsPatternSql,
+      "sequence patterns: ONE keyed aggregate + per-row regex, no self-joins"),
+    Graded("q_data_contract", dataContract, dataContractSql,
+      "data contract: every Deequ-style check as a conditional count in ONE aggregate — single corpus pass"),
+    Graded("q_pipeline_incremental", pipelineIncremental, pipelineIncrementalSql,
+      "incremental curation: snapshot diff -> gate ADDED+CHANGED only — cost tracks the delta"),
+    Graded("q_ann_graph_ivf", annGraphIvf, annGraphIvfSql,
+      "two-layer serving: IVF reps route the query into the graph beam"),
+    Graded("q_ann_graph_recall", annGraphRecall, annGraphRecallSql,
+      "graph-beam recall report: beam leg vs checkpointed exact-truth leg, hit join on (query,id)"),
+    Graded("q_ann_graph_filtered", annGraphFiltered, annGraphFilteredSql,
+      "filtered graph ANN: unfiltered medoid beam, visited-set AND predicate rescore (oversample floor max(10k,100)), recall vs exact filtered truth"),
+    Graded("q_ann_ivf_filtered", annIvfFiltered, annIvfFilteredSql,
+      "filtered IVF ANN: predicate pushed under the cluster-pruned top-k (pushdown) vs oversampled post-filter — recall graded vs exact filtered truth"),
+    Graded("q_privacy_kanon", privacyKanon, privacyKanonSql,
+      "k-anonymity audit: ONE combiner-collapsed QI-class agg x broadcast k values, no second corpus pass"),
+    Graded("q_search_expanded", searchExpanded, searchExpandedSql,
+      "PRF expansion: two bounded BM25 serves around R-doc candidate mining + broadcast-probed df scan"),
+    Graded("q_search_spell", searchSpell, searchSpellSql,
+      "SymSpell: vocab-sized delete expansion join vs broadcast query variants, banded levenshtein verify"),
+    Graded("q_mine_kcenter", mineKcenter, mineKcenterSql,
+      "k-center: k narrow running-min distance maps + 1-row argmax each — no joins, no pair space"),
+    Graded("q_pack_batches", packBatches, packBatchesSql,
+      "length batching: histogram agg -> driver offsets -> keyed in-length window (no global sort)"),
+    Graded("q_profile_hll_regs", profileHllRegs, profileHllRegsSql,
+      "raw HLL registers: (group, register) max agg — 512 rows regardless of corpus"),
+    Graded("q_profile_hll", profileHll, profileHllSql,
+      "HLL: narrow hash map + (group, register) max agg — output 512 registers regardless of corpus"),
+    Graded("q_profile_cms_cells", profileCmsCells, profileCmsCellsSql,
+      "raw CMS cells: d-way explode, combiner-collapsed counts — auditable cell dump"),
+    Graded("q_profile_cms", profileCms, profileCmsSql,
+      "CMS: d-way explode + combiner-collapsed cell counts; probes broadcast"),
+    Graded("q_dedup_source_sim", dedupSourceSim, dedupSourceSimSql,
+      "bottom-k: distinct + WindowGroupLimit signatures; estimation reads groups x k rows only"),
+    Graded("q_pipeline_sketch_incr", pipelineSketchIncr, pipelineSketchIncrSql,
+      "incremental sketches: stored registers merged with the delta == full rebuild, graded by an independent oracle"),
+    Graded("q_search_ltr", searchLtr, searchLtrSql,
+      "LTR features: serve top-k + one-pass stats agg + shortlist-only assembly"),
+    Graded("q_events_assoc", eventsAssoc, eventsAssocSql,
+      "association rules: basket-keyed self-join (fan-out sum basket^2, capped), exact ppm"),
+    Graded("q_eval_outliers", evalOutliers, evalOutliersSql,
+      "MAD outliers: three keyed aggs, group-sized median/MAD frames broadcast back"),
+    Graded("q_er_clusters", erClusters, erClustersSql,
+      "ER: Ed-Join prefix candidates + banded verify -> star components"),
+    Graded("q_rag_attribution", ragAttribution, ragAttributionSql,
+      "attribution: (answer, gram)-keyed match join, argmax bounded by shortlist"),
+    Graded("q_events_seasonal", eventsSeasonal, eventsSeasonalSql,
+      "seasonal MASE: two lag windows over one series-keyed exchange + one agg"))
 }

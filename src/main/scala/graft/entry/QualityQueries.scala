@@ -8,6 +8,7 @@ import graft.ann.Ann
 import graft.dedup.{CorpusFilters, Dedup}
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators.HeavyHitters
+import Fixtures._
 
 /** Oracle-checked queries for the round-7 quality/evaluation additions:
   * the C4 cleaning gate, Flesch readability, sketch-routed heavy-hitter
@@ -16,8 +17,6 @@ import graft.operators.HeavyHitters
   * over the raw tables.
   */
 object QualityQueries {
-
-  private val toksD = "regexp_extract_all(lower(text), '[a-z0-9_]{2,}')"
 
   // ---- C4 cleaning gate (Raffel 2020 §2.2). The synthetic corpus has no
   //      newlines or punctuation, so BOTH sides replay a deterministic
@@ -209,13 +208,7 @@ object QualityQueries {
   }
 
   val dedupAcrossSql: String =
-    """WITH sh AS (
-      |  SELECT id, list_distinct(list_transform(range(len(w) - 2),
-      |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS sh
-      |  FROM (SELECT doc_id AS id,
-      |          regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS w
-      |        FROM documents)
-      |  WHERE len(w) >= 3),
+    s"""WITH $shingleCte,
       |f AS (SELECT id, unnest(sh) AS s FROM sh),
       |sizes AS (SELECT id, len(sh) AS l FROM sh),
       |co AS (SELECT x.id AS a, y.id AS b, count(*) AS inter
@@ -239,13 +232,7 @@ object QualityQueries {
   }
 
   val textNoveltySql: String =
-    """WITH sh AS (
-      |  SELECT id, list_distinct(list_transform(range(len(w) - 2),
-      |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS sh
-      |  FROM (SELECT doc_id AS id,
-      |          regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS w
-      |        FROM documents)
-      |  WHERE len(w) >= 3),
+    s"""WITH $shingleCte,
       |ref AS (SELECT DISTINCT unnest(sh) AS sg FROM sh WHERE id % 2 = 0),
       |d AS (SELECT id, unnest(sh) AS sg FROM sh WHERE id % 2 = 1),
       |tot AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shingles FROM d GROUP BY 1),
@@ -269,19 +256,13 @@ object QualityQueries {
     val truth = Ann.bruteTopK(vecs, qs, 10).select("query_idx", "id")
     val approx = Ann.ivfTopK(assigned, cents, qs, k = 10, nprobe = 2)
       .select("query_idx", "id")
-    val hits = truth.join(approx, Seq("query_idx", "id"))
-      .groupBy("query_idx").agg(count(lit(1)).as("n_hits"))
-    truth.groupBy("query_idx").agg(count(lit(1)).as("k_eff"))
-      .join(hits, Seq("query_idx"), "left")
-      .select(col("query_idx"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") /
-          col("k_eff").cast("double"), 6).as("recall"))
+    recallByQuery(truth, approx)
+      .select(col("query_idx"), col("n_hits"), col("recall"))
       .orderBy("query_idx")
   }
 
   val annRecallSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |q AS (SELECT CAST(vec_id AS INTEGER) AS qid, CAST(embedding AS DOUBLE[]) AS qv
       |      FROM embeddings WHERE vec_id IN (0,1,2)),
       |bs AS (SELECT q.qid AS query_idx, e.id,
@@ -291,17 +272,7 @@ object QualityQueries {
       |            SELECT query_idx, id,
       |                   row_number() OVER (PARTITION BY query_idx ORDER BY sc DESC, id) AS rn
       |            FROM bs) WHERE rn <= 10),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
-      |assign AS (
-      |  SELECT id, v, centroid_id AS cluster_id FROM (
-      |    SELECT e.id, e.v, cent.centroid_id,
-      |           row_number() OVER (PARTITION BY e.id
-      |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-      |    FROM e CROSS JOIN cent)
-      |  WHERE rn = 1),
+      |${ivfAssignCtes(renameInner = false)},
       |probes AS (
       |  SELECT qid, centroid_id FROM (
       |    SELECT q.qid, cent.centroid_id,
@@ -659,17 +630,7 @@ object QualityQueries {
        |          FROM (SELECT query_idx, id, sc,
        |                  row_number() OVER (PARTITION BY query_idx ORDER BY sc DESC, id) AS rn
        |                FROM bs) WHERE rn <= 10),
-       |cent AS (
-       |  SELECT label AS centroid_id, v AS c FROM (
-       |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-       |  WHERE rn = 1),
-       |assign AS (
-       |  SELECT id, v, centroid_id AS cluster_id FROM (
-       |    SELECT e.id, e.v, cent.centroid_id,
-       |           row_number() OVER (PARTITION BY e.id
-       |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-       |    FROM e CROSS JOIN cent)
-       |  WHERE rn = 1),
+       |${ivfAssignCtes(renameInner = false)},
        |probes AS (
        |  SELECT qid, centroid_id FROM (
        |    SELECT q.qid, cent.centroid_id,
@@ -732,18 +693,8 @@ object QualityQueries {
   }
 
   val clusterBalanceSql: String =
-    """WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cent AS (
-      |  SELECT label AS centroid_id, v AS c FROM (
-      |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-      |  WHERE rn = 1),
-      |assign AS (
-      |  SELECT id, v, cluster_id FROM (
-      |    SELECT e.id, e.v, cent.centroid_id AS cluster_id,
-      |           row_number() OVER (PARTITION BY e.id
-      |             ORDER BY 1.0 - list_cosine_similarity(e.v, cent.c), cent.centroid_id) AS rn
-      |    FROM e CROSS JOIN cent)
-      |  WHERE rn = 1),
+    s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |${ivfAssignCtes(renameInner = true)},
       |x AS (SELECT a.cluster_id,
       |             round(list_cosine_similarity(a.v, cent.c), 6) AS cos6
       |      FROM assign a JOIN cent ON a.cluster_id = cent.centroid_id),
@@ -756,39 +707,34 @@ object QualityQueries {
       |       min_cos, max_cos
       |FROM g ORDER BY cluster_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_filter_c4" -> (filterC4 _),
-    "q_text_readability" -> (textReadability _),
-    "q_terms_topk" -> (termsTopK _),
-    "q_terms_zipf" -> (termsZipf _),
-    "q_text_diversity" -> (textDiversity _),
-    "q_text_novelty" -> (textNovelty _),
-    "q_embed_stats" -> (embedStats _),
-    "q_embed_pca" -> (embedPca _),
-    "q_ann_dim_sweep" -> (annDimSweep _),
-    "q_pipeline_curate8" -> (pipelineCurate8 _),
-    "q_pipeline_curate9" -> (pipelineCurate9 _),
-    "q_dedup_across" -> (dedupAcross _),
-    "q_ann_recall" -> (annRecall _),
-    "q_ann_ndcg" -> (annNdcg _),
-    "q_cluster_balance" -> (clusterBalance _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_filter_c4" -> filterC4Sql,
-    "q_text_readability" -> textReadabilitySql,
-    "q_terms_topk" -> termsTopKSql,
-    "q_terms_zipf" -> termsZipfSql,
-    "q_text_diversity" -> textDiversitySql,
-    "q_text_novelty" -> textNoveltySql,
-    "q_embed_stats" -> embedStatsSql,
-    "q_embed_pca" -> embedPcaSql,
-    "q_ann_dim_sweep" -> annDimSweepSql,
-    "q_pipeline_curate8" -> pipelineCurate8Sql,
-    "q_pipeline_curate9" -> pipelineCurate9Sql,
-    "q_dedup_across" -> dedupAcrossSql,
-    "q_ann_recall" -> annRecallSql,
-    "q_ann_ndcg" -> annNdcgSql,
-    "q_cluster_balance" -> clusterBalanceSql
-  )
+  val graded: Seq[Graded] = Seq(
+    Graded("q_filter_c4", filterC4, filterC4Sql,
+      "C4 gate: ONE native C4LineStats pass per row (CSE-deduped struct fields), no shuffle"),
+    Graded("q_text_readability", textReadability, textReadabilitySql,
+      "readability: syllable-estimate expression + per-doc agg, narrow"),
+    Graded("q_terms_topk", termsTopK, termsTopKSql, "top-k terms: token-keyed agg + heap"),
+    Graded("q_terms_zipf", termsZipf, termsZipfSql,
+      "Zipf fit: rank from bucket-partitioned prefix sums + closed-form OLS on log-log sufficient stats"),
+    Graded("q_text_diversity", textDiversity, textDiversitySql,
+      "lexical diversity: per-doc distinct/total token aggs, one exchange"),
+    Graded("q_text_novelty", textNovelty, textNoveltySql,
+      "novelty: distinct-shingle agg + LEFT SEMI probe, per-doc keyed counts"),
+    Graded("q_embed_stats", embedStats, embedStatsSql,
+      "embedding stats: narrow posexplode + 64-key combiner-collapsed agg"),
+    Graded("q_embed_pca", embedPca, embedPcaSql,
+      "PCA power round: broadcast 64-row component join + two keyed aggs per pass"),
+    Graded("q_ann_dim_sweep", annDimSweep, annDimSweepSql,
+      "dim sweep: four truncated top-k legs unioned against ONE checkpointed truth leg"),
+    Graded("q_pipeline_curate8", pipelineCurate8, pipelineCurate8Sql,
+      "curation v8: C4 clean -> bipartite novelty gate -> rollup, one composed plan"),
+    Graded("q_pipeline_curate9", pipelineCurate9, pipelineCurate9Sql,
+      "skew-aware rollup: diagnosed-hot keys through two-phase salted agg, cold keys plain — one union"),
+    Graded("q_dedup_across", dedupAcross, dedupAcrossSql,
+      "cross-corpus near-dup: bipartite (band,bucket) inner join, candidates output-shaped"),
+    Graded("q_ann_recall", annRecall, annRecallSql,
+      "ANN recall report: both retrieval legs bounded top-k, hit join on (query,id)"),
+    Graded("q_ann_ndcg", annNdcg, annNdcgSql,
+      "NDCG/MRR eval: bounded top-k legs + per-query discount-weight join"),
+    Graded("q_cluster_balance", clusterBalance, clusterBalanceSql,
+      "cluster balance: narrow centroid-argmin projection + ONE keyed count agg"))
 }

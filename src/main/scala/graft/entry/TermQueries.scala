@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.{LangId, TextFunctions}
 import graft.operators.Keywords
+import Fixtures._
 
 /** Oracle-checked queries for the corpus term-statistics operators:
   * TF-IDF keyword extraction, PMI collocation mining, and multi-language
@@ -13,8 +14,6 @@ import graft.operators.Keywords
   * documents table, not from precomputed artifacts.
   */
 object TermQueries {
-
-  private val toksD = "regexp_extract_all(lower(text), '[a-z0-9_]{2,}')"
 
   /** Top-5 TF-IDF keywords per document (first 500 docs keep the result
     * table bounded; the operator itself runs corpus-wide).
@@ -131,7 +130,7 @@ object TermQueries {
   }
 
   val filterGopherSql: String =
-    """WITH m AS (SELECT doc_id AS id, text,
+    raw"""WITH m AS (SELECT doc_id AS id, text,
       |    list_filter(regexp_split_to_array(text, '\s+'), w -> length(w) > 0) AS words,
       |    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
       |      l -> length(l) > 0) AS lines,
@@ -139,25 +138,7 @@ object TermQueries {
       |    (length(text) - length(regexp_replace(text, '\.\.\.', '', 'g'))) // 3 AS n_ell
       |  FROM documents),
       |s AS (SELECT id,
-      |    CAST(len(words) AS BIGINT) AS n_words,
-      |    CASE WHEN len(words) = 0 THEN 0.0
-      |         ELSE list_reduce(list_prepend(0, list_transform(words, w -> length(w))),
-      |                (a, b) -> a + b) * 1.0 / len(words) END AS mean_word_len,
-      |    CASE WHEN len(words) = 0 THEN 0.0
-      |         ELSE (n_hash + n_ell) * 1.0 / len(words) END AS symbol_ratio,
-      |    CASE WHEN len(lines) = 0 THEN 0.0
-      |         ELSE len(list_filter(lines, l -> starts_with(l, '•')
-      |                OR starts_with(l, '- ') OR starts_with(l, '* ')))
-      |              * 1.0 / len(lines) END AS bullet_frac,
-      |    CASE WHEN len(lines) = 0 THEN 0.0
-      |         ELSE len(list_filter(lines, l -> ends_with(l, '...')))
-      |              * 1.0 / len(lines) END AS ellipsis_frac,
-      |    CASE WHEN len(words) = 0 THEN 0.0
-      |         ELSE len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]')))
-      |              * 1.0 / len(words) END AS alpha_frac,
-      |    CAST(len(list_intersect(list_distinct(list_transform(words, w -> lower(w))),
-      |      ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'])) AS BIGINT)
-      |      AS n_req_stops
+      |$gopherStatCols
       |  FROM m)
       |SELECT id, n_words, round(mean_word_len, 6) AS mean_word_len,
       |       round(symbol_ratio, 6) AS symbol_ratio,
@@ -200,10 +181,7 @@ object TermQueries {
 
   val clusterTopicsSql: String =
     s"""WITH e AS (SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cent AS (
-       |  SELECT label AS centroid_id, v AS c FROM (
-       |    SELECT label, v, row_number() OVER (PARTITION BY label ORDER BY id) AS rn FROM e)
-       |  WHERE rn = 1),
+       |$repCentroidCte,
        |assign AS (
        |  SELECT id, cluster_id FROM (
        |    SELECT e.id, cent.centroid_id AS cluster_id,
@@ -461,29 +439,25 @@ object TermQueries {
        |FROM x GROUP BY grp, bin, lo, wd
        |ORDER BY "group", bin""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_corpus_histogram" -> (corpusHistogram _),
-    "q_phrase_search" -> (phraseSearch _),
-    "q_unigram_segment" -> (unigramSegment _),
-    "q_wordpiece_segment" -> (wordpieceSegment _),
-    "q_unigram_train" -> (unigramTrain _),
-    "q_keywords_tfidf" -> (keywordsTfidf _),
-    "q_collocations_pmi" -> (collocationsPmi _),
-    "q_text_langid_multi" -> (textLangidMulti _),
-    "q_filter_gopher" -> (filterGopher _),
-    "q_cluster_topics" -> (clusterTopics _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_corpus_histogram" -> corpusHistogramSql,
-    "q_phrase_search" -> phraseSearchSql,
-    "q_unigram_segment" -> unigramSegmentSql,
-    "q_wordpiece_segment" -> wordpieceSegmentSql,
-    "q_unigram_train" -> unigramTrainSql,
-    "q_keywords_tfidf" -> keywordsTfidfSql,
-    "q_collocations_pmi" -> collocationsPmiSql,
-    "q_text_langid_multi" -> textLangidMultiSql,
-    "q_filter_gopher" -> filterGopherSql,
-    "q_cluster_topics" -> clusterTopicsSql
-  )
+  val graded: Seq[Graded] = Seq(
+    Graded("q_corpus_histogram", corpusHistogram, corpusHistogramSql,
+      "equi-width histogram: 1-row min/max broadcast + bin-keyed counts, both passes combiner-collapsed"),
+    Graded("q_phrase_search", phraseSearch, phraseSearchSql,
+      "phrase search: slot emission + ONE (id,p0) keyed shuffle, no positional self-join"),
+    Graded("q_unigram_segment", unigramSegment, unigramSegmentSql,
+      "Unigram-LM Viterbi: broadcast piece costs, per-row DP — no shuffle"),
+    Graded("q_wordpiece_segment", wordpieceSegment, wordpieceSegmentSql,
+      "WordPiece: greedy longest-match vs broadcast vocab, narrow per-row"),
+    Graded("q_unigram_train", unigramTrain, unigramTrainSql,
+      "unigram-LM: vocab-sized word table, Viterbi over broadcast costs, keyed usage agg"),
+    Graded("q_keywords_tfidf", keywordsTfidf, keywordsTfidfSql,
+      "TF-IDF keywords: (doc,term)/(term) keyed aggs, per-doc bounded window"),
+    Graded("q_collocations_pmi", collocationsPmi, collocationsPmiSql,
+      "PMI collocations: bigram/unigram keyed aggs + broadcast totals, micro-nat integer log-ratios"),
+    Graded("q_text_langid_multi", textLangidMulti, textLangidMultiSql,
+      "language ID: native CharTrigrams generate + broadcast profile join + keyed argmax"),
+    Graded("q_filter_gopher", filterGopher, filterGopherSql,
+      "Gopher gates: ONE native per-row stats pass, gates as projections — no shuffle"),
+    Graded("q_cluster_topics", clusterTopics, clusterTopicsSql,
+      "cluster topics: narrow centroid argmin + cluster-keyed term aggs"))
 }

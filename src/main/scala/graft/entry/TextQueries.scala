@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
+import Fixtures._
 
 /** Oracle-checked queries for the text-analysis + multimodal pipeline
   * operators (language ID heuristic, quality scoring, token counting,
   * document fingerprinting, binary-payload decode plumbing).
   */
 object TextQueries {
-
-  private val toksD = "regexp_extract_all(lower(text), '[a-z0-9_]{2,}')"
 
   /** Language-ID heuristic: English-stopword density. */
   def textLangid(s: SparkSession, dir: String): DataFrame =
@@ -244,6 +243,38 @@ object TextQueries {
        |FROM kk GROUP BY lang ORDER BY lang""".stripMargin
   }
 
+  /** The bigram Kneser-Ney model (discount 0.75) trained on `rp(w1, w2)`:
+    * bigram counts `big`, context stats `ctx`, continuation counts `cont`,
+    * type totals `tot`.
+    */
+  private val knModelCtes: String =
+    """big AS (SELECT w1, w2, count(*) AS c12 FROM rp GROUP BY w1, w2),
+      |ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS n1r
+      |        FROM big GROUP BY w1),
+      |cont AS (SELECT w2, count(*) AS nl FROM big GROUP BY w2),
+      |tot AS (SELECT (SELECT count(*) FROM big) AS b_types,
+      |               (SELECT count(*) FROM cont) AS w_types)""".stripMargin
+
+  /** Each bigram occurrence `occ(w1, w2)`'s negative log-likelihood under
+    * [[knModelCtes]] in micro units, `t_micro`: the select-list column and
+    * the FROM clause joining the model.
+    */
+  private val knNllFrom: String =
+    """        CAST(floor(-ln(
+      |          CASE WHEN ctx.c1 IS NULL
+      |            THEN CAST(coalesce(cont.nl, 0) + 1 AS DOUBLE)
+      |                 / CAST(tot.b_types + tot.w_types + 1 AS DOUBLE)
+      |            ELSE greatest(CAST(coalesce(big.c12, 0) AS DOUBLE) - 0.75, 0.0)
+      |                   / CAST(ctx.c1 AS DOUBLE)
+      |                 + 0.75 * CAST(ctx.n1r AS DOUBLE) / CAST(ctx.c1 AS DOUBLE)
+      |                   * (CAST(coalesce(cont.nl, 0) + 1 AS DOUBLE)
+      |                      / CAST(tot.b_types + tot.w_types + 1 AS DOUBLE))
+      |          END) * 1e6) AS BIGINT) AS t_micro
+      |      FROM occ LEFT JOIN big ON occ.w1 = big.w1 AND occ.w2 = big.w2
+      |               LEFT JOIN ctx ON occ.w1 = ctx.w1
+      |               LEFT JOIN cont ON occ.w2 = cont.w2
+      |               CROSS JOIN tot)""".stripMargin
+
   /** Curation pipeline v7 — the round-7 composition: Gopher rule gate
     * → multi-language trigram-profile ID → Kneser–Ney perplexity terciles
     * per predicted language (LM trained on the GATED src0 slice; tail
@@ -300,25 +331,7 @@ object TextQueries {
        |    (length(text) - length(regexp_replace(text, '\\.\\.\\.', '', 'g'))) // 3 AS n_ell
        |  FROM g0),
        |gs AS (SELECT id,
-       |    CAST(len(words) AS BIGINT) AS n_words,
-       |    CASE WHEN len(words) = 0 THEN 0.0
-       |         ELSE list_reduce(list_prepend(0, list_transform(words, w -> length(w))),
-       |                (a, b) -> a + b) * 1.0 / len(words) END AS mean_word_len,
-       |    CASE WHEN len(words) = 0 THEN 0.0
-       |         ELSE (n_hash + n_ell) * 1.0 / len(words) END AS symbol_ratio,
-       |    CASE WHEN len(lines) = 0 THEN 0.0
-       |         ELSE len(list_filter(lines, l -> starts_with(l, '•')
-       |                OR starts_with(l, '- ') OR starts_with(l, '* ')))
-       |              * 1.0 / len(lines) END AS bullet_frac,
-       |    CASE WHEN len(lines) = 0 THEN 0.0
-       |         ELSE len(list_filter(lines, l -> ends_with(l, '...')))
-       |              * 1.0 / len(lines) END AS ellipsis_frac,
-       |    CASE WHEN len(words) = 0 THEN 0.0
-       |         ELSE len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]')))
-       |              * 1.0 / len(words) END AS alpha_frac,
-       |    CAST(len(list_intersect(list_distinct(list_transform(words, w -> lower(w))),
-       |      ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'])) AS BIGINT)
-       |      AS n_req_stops
+       |$gopherStatCols
        |  FROM gm),
        |gk AS (SELECT id FROM gs
        |       WHERE n_words >= 20 AND n_words <= 100000
@@ -345,30 +358,12 @@ object TextQueries {
        |rp AS (SELECT toks[i+1] AS w1, toks[i+2] AS w2
        |       FROM dt, UNNEST(range(greatest(len(toks)-1, 0))) AS u(i)
        |       WHERE source = 'src0'),
-       |big AS (SELECT w1, w2, count(*) AS c12 FROM rp GROUP BY w1, w2),
-       |ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS n1r
-       |        FROM big GROUP BY w1),
-       |cont AS (SELECT w2, count(*) AS nl FROM big GROUP BY w2),
-       |tot AS (SELECT (SELECT count(*) FROM big) AS b_types,
-       |               (SELECT count(*) FROM cont) AS w_types),
+       |$knModelCtes,
        |occ AS (SELECT id, toks[i+1] AS w1, toks[i+2] AS w2, count(*) AS occ
        |        FROM dt, UNNEST(range(greatest(len(toks)-1, 0))) AS u(i)
        |        GROUP BY id, w1, w2),
        |sc AS (SELECT occ.id, occ.occ,
-       |        CAST(floor(-ln(
-       |          CASE WHEN ctx.c1 IS NULL
-       |            THEN CAST(coalesce(cont.nl, 0) + 1 AS DOUBLE)
-       |                 / CAST(tot.b_types + tot.w_types + 1 AS DOUBLE)
-       |            ELSE greatest(CAST(coalesce(big.c12, 0) AS DOUBLE) - 0.75, 0.0)
-       |                   / CAST(ctx.c1 AS DOUBLE)
-       |                 + 0.75 * CAST(ctx.n1r AS DOUBLE) / CAST(ctx.c1 AS DOUBLE)
-       |                   * (CAST(coalesce(cont.nl, 0) + 1 AS DOUBLE)
-       |                      / CAST(tot.b_types + tot.w_types + 1 AS DOUBLE))
-       |          END) * 1e6) AS BIGINT) AS t_micro
-       |      FROM occ LEFT JOIN big ON occ.w1 = big.w1 AND occ.w2 = big.w2
-       |               LEFT JOIN ctx ON occ.w1 = ctx.w1
-       |               LEFT JOIN cont ON occ.w2 = cont.w2
-       |               CROSS JOIN tot),
+       |$knNllFrom,
        |ag AS (SELECT id, CAST(sum(occ) AS BIGINT) AS n_bigrams,
        |        CAST(sum(occ * t_micro) AS BIGINT) AS nll_micro
        |      FROM sc GROUP BY id),
@@ -573,18 +568,12 @@ object TextQueries {
       |  CAST(0 AS BIGINT) AS f_spread
       |FROM m ORDER BY id""".stripMargin
 
-  /** REAL audio decode roundtrip: deterministic mono PCM WAVs
-    * (square-wave samples, dims/rate/amplitude from per-doc arithmetic)
-    * are encoded, then decoded by `javax.sound.sampled` through
-    * [[Multimodal.decode]] — recovered sample rate, channel count, frame
-    * count, and per-window RMS (which equals the amplitude exactly for a
-    * square wave) must match the encode-side arithmetic the oracle
-    * replays without seeing any bytes. A byte-length stub cannot pass.
+  /** Decode each document's synthesized audio bytes `wav(doc_id)`: sample
+    * rate, channels, frame count, recovered RMS amplitude and the spread
+    * of the window features, per id.
     */
-  def mmDecodeAudio(s: SparkSession, dir: String): DataFrame = {
-    val wav = udf((id: Long) => Multimodal.squareWav(
-      (400 + id % 600).toInt, (8000 + (id % 4) * 4000).toInt,
-      (1000 + id % 20000).toInt))
+  private def decodedAudioStats(s: SparkSession, dir: String,
+      wav: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
     val media = t(s, dir, "documents")
       .select(col("doc_id").as("id"), lit("audio").as("modality"),
         wav(col("doc_id").cast("long")).as("data"))
@@ -596,6 +585,19 @@ object TextQueries {
           * 1e6).cast("long").as("f_spread"))
       .orderBy("id")
   }
+
+  /** REAL audio decode roundtrip: deterministic mono PCM WAVs
+    * (square-wave samples, dims/rate/amplitude from per-doc arithmetic)
+    * are encoded, then decoded by `javax.sound.sampled` through
+    * [[Multimodal.decode]] — recovered sample rate, channel count, frame
+    * count, and per-window RMS (which equals the amplitude exactly for a
+    * square wave) must match the encode-side arithmetic the oracle
+    * replays without seeing any bytes. A byte-length stub cannot pass.
+    */
+  def mmDecodeAudio(s: SparkSession, dir: String): DataFrame =
+    decodedAudioStats(s, dir, udf((id: Long) => Multimodal.squareWav(
+      (400 + id % 600).toInt, (8000 + (id % 4) * 4000).toInt,
+      (1000 + id % 20000).toInt)))
 
   val mmDecodeAudioSql: String =
     """SELECT doc_id AS id,
@@ -614,21 +616,10 @@ object TextQueries {
     * oracle holds: recovered RMS == amplitude, bit-for-bit — a stub,
     * a wrong predictor, or a broken Rice reader all break the hash.
     */
-  def mmDecodeFlac(s: SparkSession, dir: String): DataFrame = {
-    val flac = udf((id: Long) => Multimodal.squareFlac(
+  def mmDecodeFlac(s: SparkSession, dir: String): DataFrame =
+    decodedAudioStats(s, dir, udf((id: Long) => Multimodal.squareFlac(
       (400 + id % 600).toInt, (8000 + (id % 4) * 4000).toInt,
-      (1000 + id % 20000).toInt, stereo = id % 3 == 0))
-    val media = t(s, dir, "documents")
-      .select(col("doc_id").as("id"), lit("audio").as("modality"),
-        flac(col("doc_id").cast("long")).as("data"))
-    Multimodal.decode(media)
-      .select(col("id"), col("width").as("sample_rate"),
-        col("height").as("channels"), col("n_frames"),
-        round(element_at(col("features"), 1) * 32768).cast("long").as("rms_amp"),
-        round((array_max(col("features")) - array_min(col("features")))
-          * 1e6).cast("long").as("f_spread"))
-      .orderBy("id")
-  }
+      (1000 + id % 20000).toInt, stereo = id % 3 == 0)))
 
   val mmDecodeFlacSql: String =
     """SELECT doc_id AS id,
@@ -647,8 +638,8 @@ object TextQueries {
     * seeing any bytes. A fallback to the stub or a wrong table cell
     * breaks the hash.
     */
-  def mmDecodeG711(s: SparkSession, dir: String): DataFrame = {
-    val wav = udf((id: Long) => {
+  def mmDecodeG711(s: SparkSession, dir: String): DataFrame =
+    decodedAudioStats(s, dir, udf((id: Long) => {
       val exp = (id % 8).toInt
       val mant = ((id * 3) % 16).toInt
       if (id % 2 == 0)
@@ -657,18 +648,7 @@ object TextQueries {
       else
         Multimodal.g711Wav((200 + id % 100).toInt, 8000, law = 6,
           codeword = ((exp << 4) | mant) ^ 0x55) // A-law code, sign bit 0
-    })
-    val media = t(s, dir, "documents")
-      .select(col("doc_id").as("id"), lit("audio").as("modality"),
-        wav(col("doc_id").cast("long")).as("data"))
-    Multimodal.decode(media)
-      .select(col("id"), col("width").as("sample_rate"),
-        col("height").as("channels"), col("n_frames"),
-        round(element_at(col("features"), 1) * 32768).cast("long").as("rms_amp"),
-        round((array_max(col("features")) - array_min(col("features")))
-          * 1e6).cast("long").as("f_spread"))
-      .orderBy("id")
-  }
+    }))
 
   val mmDecodeG711Sql: String =
     """WITH p AS (SELECT doc_id, CAST(doc_id % 8 AS INTEGER) AS seg,
@@ -692,24 +672,13 @@ object TextQueries {
     * while the decoder still walks real headers, nibbles, and block
     * bounds.
     */
-  def mmDecodeAdpcm(s: SparkSession, dir: String): DataFrame = {
-    val wav = udf((id: Long) => {
+  def mmDecodeAdpcm(s: SparkSession, dir: String): DataFrame =
+    decodedAudioStats(s, dir, udf((id: Long) => {
       val p = (500 + id % 30000).toInt
       val blocks = (2 + id % 4).toInt
       Multimodal.imaAdpcmWav(8000, 32,
         Seq.tabulate(blocks)(b => if (b % 2 == 0) p else -p))
-    })
-    val media = t(s, dir, "documents")
-      .select(col("doc_id").as("id"), lit("audio").as("modality"),
-        wav(col("doc_id").cast("long")).as("data"))
-    Multimodal.decode(media)
-      .select(col("id"), col("width").as("sample_rate"),
-        col("height").as("channels"), col("n_frames"),
-        round(element_at(col("features"), 1) * 32768).cast("long").as("rms_amp"),
-        round((array_max(col("features")) - array_min(col("features")))
-          * 1e6).cast("long").as("f_spread"))
-      .orderBy("id")
-  }
+    }))
 
   val mmDecodeAdpcmSql: String =
     """SELECT doc_id AS id, 8000 AS sample_rate, 1 AS channels,
@@ -945,13 +914,7 @@ object TextQueries {
   }
 
   val decontaminateSql: String =
-    """WITH sh AS (
-      |  SELECT id, list_distinct(list_transform(range(len(w) - 2),
-      |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS sh
-      |  FROM (SELECT doc_id AS id,
-      |          regexp_extract_all(lower(text), '[a-z0-9_]{2,}') AS w
-      |        FROM documents)
-      |  WHERE len(w) >= 3),
+    s"""WITH $shingleCte,
       |t AS (SELECT id, unnest(sh) AS s FROM sh WHERE id % 97 <> 0),
       |e AS (SELECT id, unnest(sh) AS s FROM sh WHERE id % 97 = 0),
       |sizes AS (SELECT id, len(sh) AS l FROM sh),
@@ -1219,43 +1182,24 @@ object TextQueries {
        |cov AS (SELECT DISTINCT doc_id, p
        |        FROM (SELECT doc_id, UNNEST(generate_series(pos, pos+2)) AS p
        |              FROM g WHERE g.g IN (SELECT g FROM b)) e),
-       |tp AS (SELECT doc_id, i AS p, toks[i+1] AS tok
-       |       FROM d, UNNEST(range(len(toks))) AS u(i)),
-       |kept AS (SELECT tp.doc_id, tp.p, tp.tok FROM tp
-       |         LEFT JOIN cov ON tp.doc_id = cov.doc_id AND tp.p = cov.p
-       |         WHERE cov.p IS NULL),
-       |c AS (SELECT doc_id, count(*) AS kept_tokens,
-       |        string_agg(tok, ' ' ORDER BY p) AS cleaned
-       |      FROM kept GROUP BY doc_id)
-       |SELECT d.doc_id, len(d.toks) AS tok_len,
-       |       coalesce(c.kept_tokens, 0) AS kept_tokens,
-       |       coalesce(c.cleaned, '') AS cleaned
-       |FROM d LEFT JOIN c USING (doc_id)
-       |ORDER BY d.doc_id""".stripMargin
+       |$spanStripSql""".stripMargin
 
-  /** Token-budget mixture fill per language (Mixture.tokenBudgetFill,
-    * threshold form) under the greedy-definition oracle: keep docs in
-    * (quality DESC, doc_id) order while the per-lang running token sum
-    * stays within budget. The oracle IS the naive window form — hash
-    * equality proves the scalable two-level implementation is exact.
-    */
-  def mixtureBudget(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+  /** The budget-fill input: (id, group = lang, 6-digit quality score, tokens). */
+  private def budgetDocs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
       .select(col("doc_id").as("id"), col("lang").as("group"), col("text"),
         TextFunctions.tokens(col("text")).as("__toks"))
       .select(col("id"), col("group"),
         round(TextFunctions.qualityScoreFromToks(col("text"), col("__toks")), 6)
           .as("quality"),
         size(col("__toks")).cast("long").as("tokens"))
-    graft.operators.Mixture.tokenBudgetFill(docs, budget = 2000L)
-      .select(col("group").as("lang"), col("id").as("doc_id"),
-        col("quality"), col("tokens"))
-      .orderBy("lang", "doc_id")
-  }
 
-  val mixtureBudgetSql: String = {
+  /** Its DuckDB replay through `c`: the quality score of every document
+    * and its running per-language token sum `cum` in fill order.
+    */
+  private val budgetFillCtes: String = {
     val stops = TextFunctions.EnglishStopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH d AS (SELECT doc_id, lang, text, $toksD AS toks FROM documents),
+    s"""d AS (SELECT doc_id, lang, text, $toksD AS toks FROM documents),
        |m AS (SELECT doc_id, lang,
        |        CAST(len(toks) AS DOUBLE) AS ntok,
        |        CAST(len(toks) AS BIGINT) AS tokens,
@@ -1278,10 +1222,25 @@ object TextQueries {
        |c AS (SELECT lang, doc_id, quality, tokens,
        |        sum(tokens) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id
        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |      FROM q)
+       |      FROM q)""".stripMargin
+  }
+
+  /** Token-budget mixture fill per language (Mixture.tokenBudgetFill,
+    * threshold form) under the greedy-definition oracle: keep docs in
+    * (quality DESC, doc_id) order while the per-lang running token sum
+    * stays within budget. The oracle IS the naive window form — hash
+    * equality proves the scalable two-level implementation is exact.
+    */
+  def mixtureBudget(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Mixture.tokenBudgetFill(budgetDocs(s, dir), budget = 2000L)
+      .select(col("group").as("lang"), col("id").as("doc_id"),
+        col("quality"), col("tokens"))
+      .orderBy("lang", "doc_id")
+
+  val mixtureBudgetSql: String =
+    s"""WITH $budgetFillCtes
        |SELECT lang, doc_id, quality, tokens FROM c WHERE cum <= 2000
        |ORDER BY lang, doc_id""".stripMargin
-  }
 
   /** Deterministic export sharding (Mixture.exportShards): md5-derived
     * shard + stable pseudo-random within-shard position, oracle-replayed
@@ -1311,14 +1270,7 @@ object TextQueries {
     * one bin aggregate + tiny windows, then a shard-keyed bounded window.
     */
   def pipelineCurate3(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id").as("id"), col("lang").as("group"), col("text"),
-        TextFunctions.tokens(col("text")).as("__toks"))
-      .select(col("id"), col("group"),
-        round(TextFunctions.qualityScoreFromToks(col("text"), col("__toks")), 6)
-          .as("quality"),
-        size(col("__toks")).cast("long").as("tokens"))
-    val kept = graft.operators.Mixture.tokenBudgetFill(docs, budget = 2000L)
+    val kept = graft.operators.Mixture.tokenBudgetFill(budgetDocs(s, dir), budget = 2000L)
     graft.operators.Mixture.exportShards(kept, col("id"), 4)
       .select(col("shard"), col("pos"), col("id").as("doc_id"),
         col("group").as("lang"), col("quality"), col("tokens"))
@@ -1326,31 +1278,7 @@ object TextQueries {
   }
 
   val pipelineCurate3Sql: String = {
-    val stops = TextFunctions.EnglishStopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH d AS (SELECT doc_id, lang, text, $toksD AS toks FROM documents),
-       |m AS (SELECT doc_id, lang,
-       |        CAST(len(toks) AS DOUBLE) AS ntok,
-       |        CAST(len(toks) AS BIGINT) AS tokens,
-       |        CAST(length(text) AS DOUBLE) AS nchar,
-       |        CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) AS alpha,
-       |        CASE WHEN len(toks) = 0 THEN 0.0
-       |             ELSE list_reduce(list_prepend(0.0,
-       |                    list_transform(toks, t -> CAST(length(t) AS DOUBLE))),
-       |                  (a, b) -> a + b) / len(toks) END AS meanlen,
-       |        CASE WHEN len(toks) = 0 THEN 0.0
-       |             ELSE CAST(len(list_filter(toks, x -> list_contains([$stops], x))) AS DOUBLE)
-       |                  / len(toks) END AS stopratio
-       |      FROM d),
-       |q AS (SELECT doc_id, lang, tokens, round(
-       |        least(ntok / 50.0, 1.0) * 0.4 +
-       |        (CASE WHEN nchar = 0 THEN 0.0 ELSE alpha / nchar END) * 0.3 +
-       |        (CASE WHEN meanlen >= 3 AND meanlen <= 10 THEN 1.0 ELSE 0.5 END) * 0.2 +
-       |        least(stopratio * 10.0, 1.0) * 0.1, 6) AS quality
-       |      FROM m),
-       |c AS (SELECT lang, doc_id, quality, tokens,
-       |        sum(tokens) OVER (PARTITION BY lang ORDER BY quality DESC, doc_id
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |      FROM q),
+    s"""WITH $budgetFillCtes,
        |k AS (SELECT lang, doc_id, quality, tokens FROM c WHERE cum <= 2000),
        |h AS (SELECT k.*,
        |        CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h1,
@@ -1472,30 +1400,12 @@ object TextQueries {
        |rp AS (SELECT toks[i+1] AS w1, toks[i+2] AS w2
        |       FROM d, UNNEST(range(greatest(len(toks)-1, 0))) AS u(i)
        |       WHERE source = 'src0'),
-       |big AS (SELECT w1, w2, count(*) AS c12 FROM rp GROUP BY w1, w2),
-       |ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1, count(*) AS n1r
-       |        FROM big GROUP BY w1),
-       |cont AS (SELECT w2, count(*) AS nl FROM big GROUP BY w2),
-       |tot AS (SELECT (SELECT count(*) FROM big) AS b_types,
-       |               (SELECT count(*) FROM cont) AS w_types),
+       |$knModelCtes,
        |occ AS (SELECT doc_id, toks[i+1] AS w1, toks[i+2] AS w2, count(*) AS occ
        |        FROM d, UNNEST(range(greatest(len(toks)-1, 0))) AS u(i)
        |        GROUP BY doc_id, w1, w2),
        |s AS (SELECT occ.doc_id, occ.occ,
-       |        CAST(floor(-ln(
-       |          CASE WHEN ctx.c1 IS NULL
-       |            THEN CAST(coalesce(cont.nl, 0) + 1 AS DOUBLE)
-       |                 / CAST(tot.b_types + tot.w_types + 1 AS DOUBLE)
-       |            ELSE greatest(CAST(coalesce(big.c12, 0) AS DOUBLE) - 0.75, 0.0)
-       |                   / CAST(ctx.c1 AS DOUBLE)
-       |                 + 0.75 * CAST(ctx.n1r AS DOUBLE) / CAST(ctx.c1 AS DOUBLE)
-       |                   * (CAST(coalesce(cont.nl, 0) + 1 AS DOUBLE)
-       |                      / CAST(tot.b_types + tot.w_types + 1 AS DOUBLE))
-       |          END) * 1e6) AS BIGINT) AS t_micro
-       |      FROM occ LEFT JOIN big ON occ.w1 = big.w1 AND occ.w2 = big.w2
-       |               LEFT JOIN ctx ON occ.w1 = ctx.w1
-       |               LEFT JOIN cont ON occ.w2 = cont.w2
-       |               CROSS JOIN tot),
+       |$knNllFrom,
        |a AS (SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_bigrams,
        |        CAST(sum(occ * t_micro) AS BIGINT) AS nll_micro
        |      FROM s GROUP BY doc_id),
@@ -1630,6 +1540,25 @@ object TextQueries {
       .orderBy(col("key_micro").desc, col("doc_id"))
   }
 
+  /** DSIR importance weights over hashed features `feats(id, source, bucket)`:
+    * target (src0) and raw bucket counts, the smoothed log-ratio table `tab`
+    * in micro units, and per-document bucket occurrences `occ`.
+    */
+  private val dsirCtes: String =
+    """tc AS (SELECT bucket, count(*) AS ct FROM feats WHERE source = 'src0' GROUP BY 1),
+      |rc AS (SELECT bucket, count(*) AS cr FROM feats GROUP BY 1),
+      |nt AS (SELECT count(*) AS n FROM feats WHERE source = 'src0'),
+      |nr AS (SELECT count(*) AS n FROM feats),
+      |tab AS (
+      |  SELECT b.bucket,
+      |         CAST(floor((ln((COALESCE(tc.ct, 0) + 1)::DOUBLE / (nt.n + 4096))
+      |                   - ln((COALESCE(rc.cr, 0) + 1)::DOUBLE / (nr.n + 4096))) * 1e6)
+      |           AS BIGINT) AS r_micro
+      |  FROM (SELECT unnest(range(4096)) AS bucket) b
+      |  LEFT JOIN tc USING (bucket) LEFT JOIN rc USING (bucket)
+      |  CROSS JOIN nt CROSS JOIN nr),
+      |occ AS (SELECT id, bucket, count(*) AS occ FROM feats GROUP BY 1, 2)""".stripMargin
+
   val dsirSelectSql: String =
     s"""WITH d AS (SELECT doc_id AS id, source, $toksD AS toks FROM documents),
        |feats AS (
@@ -1641,19 +1570,7 @@ object TextQueries {
        |    SELECT id, source, unnest(list_transform(range(len(toks) - 1),
        |             i -> toks[i+1] || ' ' || toks[i+2])) AS t
        |    FROM d WHERE len(toks) >= 2)),
-       |tc AS (SELECT bucket, count(*) AS ct FROM feats WHERE source = 'src0' GROUP BY 1),
-       |rc AS (SELECT bucket, count(*) AS cr FROM feats GROUP BY 1),
-       |nt AS (SELECT count(*) AS n FROM feats WHERE source = 'src0'),
-       |nr AS (SELECT count(*) AS n FROM feats),
-       |tab AS (
-       |  SELECT b.bucket,
-       |         CAST(floor((ln((COALESCE(tc.ct, 0) + 1)::DOUBLE / (nt.n + 4096))
-       |                   - ln((COALESCE(rc.cr, 0) + 1)::DOUBLE / (nr.n + 4096))) * 1e6)
-       |           AS BIGINT) AS r_micro
-       |  FROM (SELECT unnest(range(4096)) AS bucket) b
-       |  LEFT JOIN tc USING (bucket) LEFT JOIN rc USING (bucket)
-       |  CROSS JOIN nt CROSS JOIN nr),
-       |occ AS (SELECT id, bucket, count(*) AS occ FROM feats GROUP BY 1, 2),
+       |$dsirCtes,
        |w AS (SELECT id, CAST(sum(occ) AS BIGINT) AS n_feats,
        |        CAST(sum(occ * r_micro) AS BIGINT) AS w_micro
        |      FROM occ JOIN tab USING (bucket) GROUP BY id),
@@ -1710,19 +1627,7 @@ object TextQueries {
        |    SELECT id, source, unnest(list_transform(range(len(toks) - 1),
        |             i -> toks[i+1] || ' ' || toks[i+2])) AS t
        |    FROM el WHERE len(toks) >= 2)),
-       |tc AS (SELECT bucket, count(*) AS ct FROM feats WHERE source = 'src0' GROUP BY 1),
-       |rc AS (SELECT bucket, count(*) AS cr FROM feats GROUP BY 1),
-       |nt AS (SELECT count(*) AS n FROM feats WHERE source = 'src0'),
-       |nr AS (SELECT count(*) AS n FROM feats),
-       |tab AS (
-       |  SELECT b.bucket,
-       |         CAST(floor((ln((COALESCE(tc.ct, 0) + 1)::DOUBLE / (nt.n + 4096))
-       |                   - ln((COALESCE(rc.cr, 0) + 1)::DOUBLE / (nr.n + 4096))) * 1e6)
-       |           AS BIGINT) AS r_micro
-       |  FROM (SELECT unnest(range(4096)) AS bucket) b
-       |  LEFT JOIN tc USING (bucket) LEFT JOIN rc USING (bucket)
-       |  CROSS JOIN nt CROSS JOIN nr),
-       |occ AS (SELECT id, bucket, count(*) AS occ FROM feats GROUP BY 1, 2),
+       |$dsirCtes,
        |w AS (SELECT id, CAST(sum(occ * r_micro) AS BIGINT) AS w_micro
        |      FROM occ JOIN tab USING (bucket) GROUP BY id),
        |picked AS (
@@ -1777,82 +1682,11 @@ object TextQueries {
     * separable/imbalanced corpora prove the model actually learns.
     */
   def qualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id").as("id"),
-        when(col("source") === "src0", 1).otherwise(0).as("label"),
-        TextFunctions.tokens(col("text")).as("toks"))
-    // featurize once: training does 2 passes + the scoring pass
-    val feats = graft.operators.QualityClassifier.features(docs, 64)
-      .localCheckpoint()
-    val model = graft.operators.QualityClassifier.train(feats, buckets = 64, iters = 2)
-    graft.operators.QualityClassifier.score(feats, model)
+    classifierScores(s, dir)
       .select(col("id").as("doc_id"), col("label"),
         col("margin_micro"), round(col("p"), 6).as("p"))
       .orderBy("doc_id")
   }
-
-  /** Shared CTE chain replaying 2 training rounds of the mean-pooled
-    * biased model (eta = 4): feats → per-doc feature counts → round-0
-    * gradients at p = 0.5 → (bias1, w1) → margins → round-1 gradients →
-    * (bias2, w2) → final margins `m2`.
-    */
-  private[entry] val clfTrainCtes: String =
-    s"""d AS (SELECT doc_id AS id, lang, source,
-       |        CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS label,
-       |        $toksD AS toks, CAST(len($toksD) AS BIGINT) AS tokens
-       |      FROM documents),
-       |feats AS (SELECT DISTINCT id, label, bucket FROM (
-       |  SELECT id, label, ('0x' || substr(md5(t), 1, 8))::BIGINT % 64 AS bucket
-       |  FROM (
-       |    SELECT id, label, unnest(toks) AS t FROM d
-       |    UNION ALL
-       |    SELECT id, label, unnest(list_transform(range(len(toks) - 1),
-       |             i -> toks[i+1] || ' ' || toks[i+2])) AS t
-       |    FROM d WHERE len(toks) >= 2))),
-       |lbl AS (SELECT DISTINCT id, label FROM feats),
-       |nb AS (SELECT id, CAST(count(*) AS BIGINT) AS nf FROM feats GROUP BY id),
-       |n AS (SELECT count(*) AS n FROM nb),
-       |pd0 AS (SELECT nb.id, lbl.label, nb.nf,
-       |         CAST(round((0.5 - lbl.label) * 1e6, 0) AS BIGINT) AS dm,
-       |         CAST(round((0.5 - lbl.label) * 1e6 / nb.nf, 0) AS BIGINT) AS cm
-       |       FROM nb JOIN lbl USING (id)),
-       |g0 AS (SELECT f.bucket, CAST(sum(pd0.cm) AS BIGINT) AS g
-       |       FROM feats f JOIN pd0 USING (id) GROUP BY 1),
-       |b1 AS (SELECT CAST(-round(4.0 * CAST(sum(pd0.dm) AS DOUBLE) / n.n, 0)
-       |           AS BIGINT) AS bias
-       |       FROM pd0 CROSS JOIN n GROUP BY n.n),
-       |w1 AS (SELECT b.bucket,
-       |         CAST(-round(4.0 * CAST(COALESCE(g0.g, 0) AS DOUBLE) / n.n, 0)
-       |           AS BIGINT) AS w
-       |       FROM (SELECT unnest(range(64)) AS bucket) b
-       |       LEFT JOIN g0 USING (bucket) CROSS JOIN n),
-       |m1 AS (SELECT f.id,
-       |         CAST(b1.bias + round(CAST(sum(w1.w) AS DOUBLE) / nb.nf, 0)
-       |           AS BIGINT) AS margin
-       |       FROM feats f JOIN w1 USING (bucket) JOIN nb USING (id) CROSS JOIN b1
-       |       GROUP BY f.id, nb.nf, b1.bias),
-       |pd1 AS (SELECT m1.id, lbl.label, nb.nf,
-       |         1.0 / (1.0 + exp(-m1.margin / 1e6)) AS p
-       |       FROM m1 JOIN lbl USING (id) JOIN nb USING (id)),
-       |pd1q AS (SELECT id, nf,
-       |          CAST(round((p - label) * 1e6, 0) AS BIGINT) AS dm,
-       |          CAST(round((p - label) * 1e6 / nf, 0) AS BIGINT) AS cm
-       |        FROM pd1),
-       |g1 AS (SELECT f.bucket, CAST(sum(pd1q.cm) AS BIGINT) AS g
-       |       FROM feats f JOIN pd1q USING (id) GROUP BY 1),
-       |b2 AS (SELECT CAST(b1.bias -
-       |           round(4.0 * CAST(sum(pd1q.dm) AS DOUBLE) / n.n, 0) AS BIGINT) AS bias
-       |       FROM pd1q CROSS JOIN n CROSS JOIN b1 GROUP BY n.n, b1.bias),
-       |w2 AS (SELECT w1.bucket,
-       |         CAST(w1.w - round(4.0 * CAST(COALESCE(g1.g, 0) AS DOUBLE) / n.n, 0)
-       |           AS BIGINT) AS w
-       |       FROM w1 LEFT JOIN g1 USING (bucket) CROSS JOIN n),
-       |m2 AS (SELECT f.id, lbl.label,
-       |         CAST(b2.bias + round(CAST(sum(w2.w) AS DOUBLE) / nb.nf, 0)
-       |           AS BIGINT) AS margin_micro
-       |       FROM feats f JOIN w2 USING (bucket) JOIN nb USING (id)
-       |         JOIN lbl USING (id) CROSS JOIN b2
-       |       GROUP BY f.id, lbl.label, nb.nf, b2.bias)""".stripMargin
 
   val qualityClassifierSql: String =
     s"""WITH $clfTrainCtes
@@ -1875,14 +1709,7 @@ object TextQueries {
     * tiny min/max agg plus one |bins|-sized keyed aggregate.
     */
   def classifierCalibration(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id").as("id"),
-        when(col("source") === "src0", 1).otherwise(0).as("label"),
-        TextFunctions.tokens(col("text")).as("toks"))
-    val feats = graft.operators.QualityClassifier.features(docs, 64)
-      .localCheckpoint()
-    val model = graft.operators.QualityClassifier.train(feats, buckets = 64, iters = 2)
-    val scored = graft.operators.QualityClassifier.score(feats, model)
+    val scored = classifierScores(s, dir)
       .select(col("margin_micro"), col("label").cast("long").as("pos"),
         round(col("p") * lit(1e6), 0).cast("long").as("p_micro"))
       .localCheckpoint()
@@ -1935,14 +1762,7 @@ object TextQueries {
     * the exchange.
     */
   def classifierPr(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .select(col("doc_id").as("id"),
-        when(col("source") === "src0", 1).otherwise(0).as("label"),
-        TextFunctions.tokens(col("text")).as("toks"))
-    val feats = graft.operators.QualityClassifier.features(docs, 64)
-      .localCheckpoint()
-    val model = graft.operators.QualityClassifier.train(feats, buckets = 64, iters = 2)
-    val scored = graft.operators.QualityClassifier.score(feats, model)
+    val scored = classifierScores(s, dir)
       .select(col("margin_micro"), col("label").cast("long").as("pos"))
       .localCheckpoint()
     val r = scored.agg(min("margin_micro"), max("margin_micro")).head()
@@ -2155,111 +1975,107 @@ object TextQueries {
       |SELECT doc_id, normalized, length(normalized) AS n_chars
       |FROM n ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sample_fixed" -> (sampleFixed _),
-    "q_sample_fixed_group" -> (sampleFixedGroup _),
-    "q_text_normalize" -> (textNormalize _),
-    "q_text_normalize_nfc" -> (textNormalizeNfc _),
-    "q_pipeline_curate5" -> (pipelineCurate5 _),
-    "q_vocab_coverage" -> (vocabCoverage _),
-    "q_quality_classifier" -> (qualityClassifier _),
-    "q_classifier_calibration" -> (classifierCalibration _),
-    "q_classifier_pr" -> (classifierPr _),
-    "q_corpus_profile" -> (corpusProfile _),
-    "q_pipeline_curate4" -> (pipelineCurate4 _),
-    "q_dsir_select" -> (dsirSelect _),
-    "q_pack_offsets" -> (packOffsetsQ _),
-    "q_pack_manifest" -> (packManifestQ _),
-    "q_text_perplexity" -> (textPerplexity _),
-    "q_text_perplexity_kn" -> (textPerplexityKn _),
-    "q_mixture_temperature" -> (mixtureTemperature _),
-    "q_mixture_budget" -> (mixtureBudget _),
-    "q_export_shards" -> (exportShardsQ _),
-    "q_pipeline_curate3" -> (pipelineCurate3 _),
-    "q_domain_cap" -> (domainCap _),
-    "q_text_boilerplate_strip" -> (textBoilerplateStrip _),
-    "q_pipeline_curate2" -> (pipelineCurate2 _),
-    "q_text_repetition" -> (textRepetition _),
-    "q_text_boilerplate" -> (textBoilerplate _),
-    "q_text_percentiles" -> (textPercentiles _),
-    "q_mm_similarity" -> (mmSimilarity _),
-    "q_mm_similarity_real" -> (mmSimilarityReal _),
-    "q_pipeline_curate" -> (pipelineCurate _),
-    "q_sample_stratified" -> (sampleStratified _),
-    "q_decontaminate" -> (decontaminate _),
-    "q_text_langid" -> (textLangid _),
-    "q_text_quality" -> (textQuality _),
-    "q_text_tokens" -> (textTokens _),
-    "q_text_fingerprint" -> (textFingerprint _),
-    "q_bpe_train" -> (bpeTrain _),
-    "q_bpe_segment" -> (bpeSegment _),
-    "q_dedup_paragraph" -> (textParagraphDedup _),
-    "q_pipeline_curate6" -> (pipelineCurate6 _),
-    "q_pipeline_curate7" -> (pipelineCurate7 _),
-    "q_mm_decode" -> (mmDecode _),
-    "q_mm_decode_image" -> (mmDecodeImage _),
-    "q_mm_resize_real" -> (mmResizeReal _),
-    "q_mm_decode_audio" -> (mmDecodeAudio _),
-    "q_mm_decode_flac" -> (mmDecodeFlac _),
-    "q_mm_decode_g711" -> (mmDecodeG711 _),
-    "q_mm_decode_adpcm" -> (mmDecodeAdpcm _),
-    "q_mm_decode_formats" -> (mmDecodeFormats _),
-    "q_mm_decode_video" -> (mmDecodeVideo _),
-    "q_mm_frames" -> (mmFrames _),
-    "q_mm_resize" -> (mmResize _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_sample_fixed" -> sampleFixedSql,
-    "q_sample_fixed_group" -> sampleFixedGroupSql,
-    "q_text_normalize" -> textNormalizeSql,
-    "q_text_normalize_nfc" -> textNormalizeNfcSql,
-    "q_pipeline_curate5" -> pipelineCurate5Sql,
-    "q_vocab_coverage" -> vocabCoverageSql,
-    "q_quality_classifier" -> qualityClassifierSql,
-    "q_classifier_calibration" -> classifierCalibrationSql,
-    "q_classifier_pr" -> classifierPrSql,
-    "q_corpus_profile" -> corpusProfileSql,
-    "q_pipeline_curate4" -> pipelineCurate4Sql,
-    "q_dsir_select" -> dsirSelectSql,
-    "q_pack_offsets" -> packOffsetsSql,
-    "q_pack_manifest" -> packManifestSql,
-    "q_text_perplexity" -> textPerplexitySql,
-    "q_text_perplexity_kn" -> textPerplexityKnSql,
-    "q_mixture_temperature" -> mixtureTemperatureSql,
-    "q_mixture_budget" -> mixtureBudgetSql,
-    "q_export_shards" -> exportShardsSql,
-    "q_pipeline_curate3" -> pipelineCurate3Sql,
-    "q_domain_cap" -> domainCapSql,
-    "q_text_boilerplate_strip" -> textBoilerplateStripSql,
-    "q_pipeline_curate2" -> pipelineCurate2Sql,
-    "q_text_repetition" -> textRepetitionSql,
-    "q_text_boilerplate" -> textBoilerplateSql,
-    "q_text_percentiles" -> textPercentilesSql,
-    "q_mm_similarity" -> mmSimilaritySql,
-    "q_mm_similarity_real" -> mmSimilarityRealSql,
-    "q_pipeline_curate" -> pipelineCurateSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_decontaminate" -> decontaminateSql,
-    "q_text_langid" -> textLangidSql,
-    "q_text_quality" -> textQualitySql,
-    "q_text_tokens" -> textTokensSql,
-    "q_text_fingerprint" -> textFingerprintSql,
-    "q_bpe_train" -> bpeTrainSql,
-    "q_bpe_segment" -> bpeSegmentSql,
-    "q_dedup_paragraph" -> textParagraphDedupSql,
-    "q_pipeline_curate6" -> pipelineCurate6Sql,
-    "q_pipeline_curate7" -> pipelineCurate7Sql,
-    "q_mm_decode" -> mmDecodeSql,
-    "q_mm_decode_image" -> mmDecodeImageSql,
-    "q_mm_resize_real" -> mmResizeRealSql,
-    "q_mm_decode_audio" -> mmDecodeAudioSql,
-    "q_mm_decode_flac" -> mmDecodeFlacSql,
-    "q_mm_decode_g711" -> mmDecodeG711Sql,
-    "q_mm_decode_adpcm" -> mmDecodeAdpcmSql,
-    "q_mm_decode_formats" -> mmDecodeFormatsSql,
-    "q_mm_decode_video" -> mmDecodeVideoSql,
-    "q_mm_frames" -> mmFramesSql,
-    "q_mm_resize" -> mmResizeSql
-  )
+  val graded: Seq[Graded] = Seq(
+    Graded("q_sample_fixed", sampleFixed, sampleFixedSql,
+      "fixed-size sample: hash order + TakeOrderedAndProject heap"),
+    Graded("q_sample_fixed_group", sampleFixedGroup, sampleFixedGroupSql,
+      "per-group fixed sample: group-keyed bounded window (WindowGroupLimit)"),
+    Graded("q_text_normalize", textNormalize, textNormalizeSql,
+      "normalization: control-char/whitespace canon in a single narrow projection"),
+    Graded("q_text_normalize_nfc", textNormalizeNfc, textNormalizeNfcSql,
+      "NFC normalization: per-row canonical composition, zero shuffle"),
+    Graded("q_pipeline_curate5", pipelineCurate5, pipelineCurate5Sql,
+      "curation v5: train classifier on the trusted slice -> gate at p>=0.5 -> per-lang fill, composed"),
+    Graded("q_vocab_coverage", vocabCoverage, vocabCoverageSql,
+      "vocab coverage: count-of-counts agg + block-exact cumulative mass — no full sort"),
+    Graded("q_quality_classifier", qualityClassifier, qualityClassifierSql,
+      "trained quality filter: literal weight array, narrow scoring pass, integer-exact gradient sums"),
+    Graded("q_classifier_calibration", classifierCalibration, classifierCalibrationSql,
+      "calibration: trained margins -> literal bin edges -> 10-key agg"),
+    Graded("q_classifier_pr", classifierPr, classifierPrSql,
+      "PR curve: distinct-margin agg + bucket-sliced prefix sums, window PARTITIONED by bucket (no global sort)"),
+    Graded("q_corpus_profile", corpusProfile, corpusProfileSql,
+      "corpus profile: ONE combiner-collapsed aggregate over pruned columns"),
+    Graded("q_pipeline_curate4", pipelineCurate4, pipelineCurate4Sql,
+      "curation v4: length gate -> DSIR selection -> sequence packing, one plan"),
+    Graded("q_dsir_select", dsirSelect, dsirSelectSql,
+      "DSIR: hashed n-gram bucket importance weights, per-row micro-nat score + Gumbel top-k heap"),
+    Graded("q_pack_offsets", packOffsetsQ, packOffsetsSql,
+      "sequence packing: bucket-sliced distributed prefix sum, ONE corpus shuffle"),
+    Graded("q_pack_manifest", packManifestQ, packManifestSql,
+      "packing manifest: window->doc slice join frame, output window-sized"),
+    Graded("q_text_perplexity", textPerplexity, textPerplexitySql,
+      "CCNet bigram LM: reference-slice model frame joined onto doc bigrams, micro-nat integer sums"),
+    Graded("q_text_perplexity_kn", textPerplexityKn, textPerplexityKnSql,
+      "Kneser-Ney LM: checkpointed type table feeds context/continuation legs, keyed joins"),
+    Graded("q_mixture_temperature", mixtureTemperature, mixtureTemperatureSql,
+      "temperature mixture: source-count agg + 1-row total broadcast, integer micro-weight split"),
+    Graded("q_mixture_budget", mixtureBudget, mixtureBudgetSql,
+      "token-budget fill: bin aggregate + tiny window, boundary fill as range-sliced prefix sum"),
+    Graded("q_export_shards", exportShardsQ, exportShardsSql,
+      "export sharding: hash-derived shard, per-shard bounded row_number"),
+    Graded("q_pipeline_curate3", pipelineCurate3, pipelineCurate3Sql,
+      "curation v3: quality -> per-lang token-budget fill -> shard layout, ONE composed plan"),
+    Graded("q_domain_cap", domainCap, domainCapSql,
+      "per-source token cap: source-keyed running-sum window in (hash, doc) order, one exchange"),
+    Graded("q_text_boilerplate_strip", textBoilerplateStrip, textBoilerplateStripSql,
+      "boilerplate strip: corpus-frequent 3-gram spans cut via df-frame probe, docs rebuilt"),
+    Graded("q_pipeline_curate2", pipelineCurate2, pipelineCurate2Sql,
+      "curation v2: repetition + boilerplate gates -> dedup -> rollup, keyed only"),
+    Graded("q_text_repetition", textRepetition, textRepetitionSql,
+      "repetition gates: dup-line/paragraph + top-ngram shares per row, keyed only by doc"),
+    Graded("q_text_boilerplate", textBoilerplate, textBoilerplateSql,
+      "boilerplate coverage: combiner-collapsed df + semi-join probe"),
+    Graded("q_text_percentiles", textPercentiles, textPercentilesSql,
+      "length percentiles: exact percentile agg over one exchange"),
+    Graded("q_mm_similarity", mmSimilarity, mmSimilaritySql,
+      "media similarity: decode -> per-partition feature extraction -> exact cosine top-k, narrow until the heap"),
+    Graded("q_mm_similarity_real", mmSimilarityReal, mmSimilarityRealSql,
+      "real-fixture media similarity: the same plan over decoded pixels"),
+    Graded("q_pipeline_curate", pipelineCurate, pipelineCurateSql,
+      "curation pipeline: quality -> langid -> dedup -> sample in one plan"),
+    Graded("q_sample_stratified", sampleStratified, sampleStratifiedSql,
+      "stratified sample: per-language hash-gate rates in one narrow filter pass"),
+    Graded("q_decontaminate", decontaminate, decontaminateSql,
+      "decontamination: eval-slice 3-gram frame probes train shingles at containment >= 0.05; leak rows output-sized"),
+    Graded("q_text_langid", textLangid, textLangidSql,
+      "language ID: native trigram profile scores vs broadcast profiles, per-row argmax"),
+    Graded("q_text_quality", textQuality, textQualitySql,
+      "quality scoring: length/punct/stopword ratios in ONE native stats pass"),
+    Graded("q_text_tokens", textTokens, textTokensSql,
+      "token counting: whitespace + BPE-ish regex in a narrow projection"),
+    Graded("q_text_fingerprint", textFingerprint, textFingerprintSql,
+      "rolling polynomial fingerprint: order-sensitive per-row fold, narrow"),
+    Graded("q_bpe_train", bpeTrain, bpeTrainSql,
+      "BPE training: per-round pair-count keyed agg + broadcast merge application; state stays vocab-sized"),
+    Graded("q_bpe_segment", bpeSegment, bpeSegmentSql,
+      "BPE segmentation: broadcast merge ranks, per-row fold — zero shuffle"),
+    Graded("q_dedup_paragraph", textParagraphDedup, textParagraphDedupSql,
+      "paragraph dedup: paragraph explode -> hash-keyed first-occurrence, docs rebuilt by position"),
+    Graded("q_pipeline_curate6", pipelineCurate6, pipelineCurate6Sql,
+      "curation v6: paragraph dedup feeds the quality scorer over CLEANED text, composed"),
+    Graded("q_pipeline_curate7", pipelineCurate7, pipelineCurate7Sql,
+      "curation v7: gopher gate -> langid -> KN terciles -> fill, ONE composed plan"),
+    Graded("q_mm_decode", mmDecode, mmDecodeSql,
+      "multimodal decode: opaque binary -> typed metadata in a per-partition narrow map"),
+    Graded("q_mm_decode_image", mmDecodeImage, mmDecodeImageSql,
+      "image decode (PNG/JPEG/GIF/BMP/TIFF): pure-JVM per-partition map, no shuffle"),
+    Graded("q_mm_resize_real", mmResizeReal, mmResizeRealSql,
+      "real-fixture resize: box-filter means with an exact integer oracle"),
+    Graded("q_mm_decode_audio", mmDecodeAudio, mmDecodeAudioSql,
+      "WAV PCM decode: header + frame stats per row, narrow"),
+    Graded("q_mm_decode_flac", mmDecodeFlac, mmDecodeFlacSql,
+      "FLAC decode: pure-JVM lossless decompress (Rice + LPC) in a per-partition narrow map"),
+    Graded("q_mm_decode_g711", mmDecodeG711, mmDecodeG711Sql,
+      "G.711 mu/A-law decode: table-driven expansion per row, narrow"),
+    Graded("q_mm_decode_adpcm", mmDecodeAdpcm, mmDecodeAdpcmSql,
+      "IMA ADPCM decode: per-row predictor replay, narrow — output metadata-sized"),
+    Graded("q_mm_decode_formats", mmDecodeFormats, mmDecodeFormatsSql,
+      "format router: magic-byte dispatch to the right pure-JVM decoder in one pass"),
+    Graded("q_mm_decode_video", mmDecodeVideo, mmDecodeVideoSql,
+      "MJPEG-AVI probe: container parse + frame index per row, narrow"),
+    Graded("q_mm_frames", mmFrames, mmFramesSql,
+      "frame sampling: per-row frame-index slice, output frames-sized"),
+    Graded("q_mm_resize", mmResize, mmResizeSql,
+      "resize plumbing: deterministic box filter over decoded pixels, per-partition batches"))
 }

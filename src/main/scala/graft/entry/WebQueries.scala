@@ -108,11 +108,9 @@ object WebQueries {
        |FROM agg JOIN lm ON agg.host = lm.host
        |ORDER BY agg.host""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_web_urlnorm" -> (webUrlnorm _),
-    "q_web_hosts" -> (webHosts _))
-
-  def oracles: Map[String, String] = Map(
-    "q_web_urlnorm" -> webUrlnormSql,
-    "q_web_hosts" -> webHostsSql)
+  val graded: Seq[Graded] = Seq(
+    Graded("q_web_urlnorm", webUrlnorm, webUrlnormSql,
+      "URL canonicalization: codegen'd string builtins only — zero shuffle, zero UDF"),
+    Graded("q_web_hosts", webHosts, webHostsSql,
+      "per-host rollup: ONE combiner-collapsed keyed agg, host-count-sized output"))
 }

@@ -25,4 +25,12 @@ class EntrySmokeSpec extends SparkSpec {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle.isEmpty, s"queries without oracle SQL: ${noOracle.mkString(", ")}")
   }
+
+  test("a query name listed twice in the graded table fails, naming it") {
+    val g = SparkEntry.table.head
+    val e = intercept[IllegalArgumentException](
+      graft.entry.Graded.byName(SparkEntry.table :+ g.copy(oracle = "SELECT 1")))
+    assert(e.getMessage.contains(g.name))
+    assert(SparkEntry.queries.size == SparkEntry.table.size)
+  }
 }

@@ -80,6 +80,21 @@ class PartitionSwapSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(path + ".delta")))
   }
 
+  test("the catalog: a crash between deleting a row and moving its replacement in loses no collection") {
+    val wh = Files.createTempDirectory("graft-catalog").toString
+    val catalog = new graft.catalog.Catalog(spark, wh)
+    Seq("a", "b").foreach(catalog.createCollection(_, 4))
+    // re-creating b at dimension 8 staged its row, deleted the live one and died
+    val b = catalog.tableName("b")
+    PartitionedTable.stage(Seq(graft.model.CollectionEntry("b", b, 8)).toDF(),
+      s"$wh/_catalog", Seq("table_name"), Nil, Seq(s"table_name=$b"))
+    PartitionedTable.deleteDir(Paths.get(wh, "_catalog", s"table_name=$b"))
+    catalog.createCollection("c", 4)
+    assert(catalog.listCollections() == Seq("a", "b", "c"))
+    assert(catalog.getCollection("b").dimension == 8)
+    assert(!Files.exists(Paths.get(wh, "_catalog.delta")))
+  }
+
   test("the documents table: the next write finishes an interrupted swap before it reads") {
     val api = new Api(spark, Files.createTempDirectory("graft-wh").toString,
       new DeterministicHashEmbedder(16))
