@@ -487,14 +487,38 @@ final class Api(
     * key (per-question counts vary, so a flat batch response cannot be
     * sliced by stride).
     */
-  private def respond(entry: Entry, hits: DataFrame, attribute: Boolean): SearchResponse = {
-    val metadata =
-      if (attribute) Api.withQueryIdx(col("d.metadata"), col("f.query_idx")) else col("d.metadata")
-    serialize(hits.alias("f")
-      .join(docs(entry).alias("d"), col("f.id") === col("d.id"), "left")
-      .select(col("f.query_idx"), col("f.id"), col("d.content"), metadata.as("metadata"),
-        col("f.score"))
-      .orderBy(col("f.query_idx"), col("f.score").desc, col("f.id").asc))
+  private def respond(entry: Entry, hits: DataFrame, attribute: Boolean): SearchResponse =
+    withPayload(entry, hits.orderBy(col("query_idx"), col("score").desc, col("id").asc), attribute)
+
+  /** Content and metadata for `ranked` (query_idx, id, score), kept in
+    * its order. The hits (at most k per question) are collected first and
+    * their documents read by a bucket-pruned point lookup, joined here on
+    * the driver: a request reads only its hits' buckets, and no hash
+    * table over the documents is built (a broadcast hash join on the
+    * string id allocates a whole memory page per request, whatever its
+    * size). Non-finite scores are dropped and the payload is sanitized,
+    * as [[serialize]] does.
+    */
+  private def withPayload(entry: Entry, ranked: DataFrame, attribute: Boolean): SearchResponse = {
+    val hits = ranked.select(col("query_idx"), col("id").cast("string"), col("score")).collect()
+      .filter(r => !r.isNullAt(2) && math.abs(r.getDouble(2)) < Double.MaxValue)
+    val ids = hits.map(_.getString(1)).distinct.toSeq
+    val payload: Map[String, (String, Map[String, String])] =
+      if (ids.isEmpty) Map.empty
+      else Ingest.getByIds(catalog.readDocumentsForIds(entry, ids), ids)
+        .select(col("id"), Sanitize.sanitizeText(col("content")),
+          Sanitize.sanitizeMetadata(col("metadata")))
+        .collect().map(r => r.getString(0) ->
+          (r.getString(1), Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty)))
+        .toMap
+    SearchResponse(hits.toSeq.map { r =>
+      val id = r.getString(1)
+      val (content, stored) = payload.getOrElse(id, (null, Map.empty[String, String]))
+      // "query_idx" is reserved (Api.withQueryIdx): a stored value never survives
+      val metadata =
+        if (attribute) stored - "query_idx" + ("query_idx" -> r.get(0).toString) else stored
+      HitRow(id, content, metadata, r.getDouble(2))
+    })
   }
 
   /** The semantic leg of `mode` ([[McpSurface.SemanticModes]]): (query_idx,
@@ -742,15 +766,10 @@ final class Api(
     request(name, Seq(question), nResults,
       require(oversample >= 1 && nResults.toLong * oversample <= 10000,
         s"oversample $oversample out of range for k=$nResults")) { (e, qs, k) =>
-      val d = docs(e)
-      val short = Semantic.search(scorable(d), embed(qs), k * oversample, payload = Seq("embedding"))
+      val short = Semantic.search(scorable(docs(e)), embed(qs), k * oversample, payload = Seq("embedding"))
         .select("id", "score", "embedding")
-      val payload = graft.search.Mmr.rerank(short, k, lambda).alias("f")
-        .join(d.alias("d"), col("f.id") === col("d.id"), "left")
-        .select(col("f.rank"), col("f.id"), col("d.content"), col("d.metadata"),
-          col("f.mmr").as("score"))
-        .orderBy(col("f.rank"))
-      serialize(payload.drop("rank"))
+      withPayload(e, graft.search.Mmr.rerank(short, k, lambda).orderBy(col("rank"))
+        .select(lit(0).as("query_idx"), col("id"), col("mmr").as("score")), attribute = false)
     }
 
   /** Build (or rebuild) the collection's persistent ANN index (IVF layout,

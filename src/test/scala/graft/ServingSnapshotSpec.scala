@@ -247,6 +247,35 @@ class ServingSnapshotSpec extends SparkSpec {
       desc.startsWith("Listing leaf files") || Derivations.exists(sites.contains)
     }
 
+  test("an index-served request joins its payload without a broadcast hash join") {
+    val api = newApi(newWarehouse())
+    val texts = (0 until 300).map(text)
+    api.createCollection(Name, documents = Some(frame(texts)))
+    api.buildAnnIndex(Name, nClusters = 40)
+    api.buildLexicalIndex(Name)
+    val byId = texts.map(t => idOf(t) -> t).toMap
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val approx = api.semanticSearchApprox(Name, Seq(text(5)), 10).results
+      val bm25 = api.searchIndexed(Name, "vector search item5", 10).results
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      assert(approx.head.id == idOf(text(5)) && bm25.nonEmpty)
+      assert((approx ++ bm25).forall(h => byId.get(h.id).contains(h.content)), "payload")
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "no plan was captured (else this guard is vacuous)")
+    // a hash table built per request over the documents costs a whole
+    // memory page each time, however few hits it serves
+    assert(!plans.asScala.exists(_.contains("BroadcastHashJoin")),
+      plans.asScala.filter(_.contains("BroadcastHashJoin")).mkString("\n----\n"))
+  }
+
   test("a repeated index-served request with no write in between re-derives nothing") {
     val api = newApi(newWarehouse())
     // enough documents and clusters that listing the table, the IVF index
